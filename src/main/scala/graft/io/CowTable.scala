@@ -78,9 +78,12 @@ import org.apache.spark.sql.functions._
   *     design as Delta deletion vectors / Iceberg position deletes.
   *   - CHANGE DATA FEED ([[changes]]): the row-level diff between two
   *     committed versions, computed from the files present in exactly
-  *     one manifest — O(changed files), never a two-snapshot scan. Rows
-  *     co-located in a rewritten file but untouched by the change
-  *     compare struct-equal pre/post and drop out as no-ops.
+  *     one manifest — never a two-snapshot scan. Its cost is the rows
+  *     of those files: a rewritten file, or one whose deletion vector
+  *     grew, is read whole on both sides. Rows co-located in such a
+  *     file but untouched by the change compare struct-equal pre/post
+  *     and drop out as no-ops. A compaction or z-order version changes
+  *     no row, so its diff against its parent reads nothing.
   *
   * Commits can carry an idempotence TXN stamp (stream id → batch id,
   * carried forward across versions) so a Structured Streaming
@@ -241,18 +244,18 @@ object CowTable {
 
   private def norm(s: String): String = new Path(s).toUri.getPath
 
-  /** `input_file_name()` with the scheme stripped, matching the manifest's
-    * stored form. */
-  private def fileCol: Column =
-    regexp_replace(input_file_name(), "^file:/+", "/")
-
   /** Write `df` as `numFiles` range-partitioned, key-sorted pool files;
     * returns their manifest entries — row count, key min/max, and
-    * per-file min/max for each declared stats column — from one scan of
-    * the NEW files only. Stats are aggregated on the column's NATURAL
-    * type (lexical min of a stringified numeric would be wrong) and
-    * stored as strings; [[StatsPrune]] casts them back to the
-    * predicate literal's type at prune time. */
+    * per-file min/max for each declared stats column — computed INSIDE
+    * the write job, per output file, as each row is written
+    * ([[StatsWrite]]): nothing is read back, so a statement commits
+    * after its data job alone. Stats are aggregated on the column's
+    * NATURAL type (lexical min of a stringified numeric would be wrong)
+    * and stored as strings; [[StatsPrune]] casts them back to the
+    * predicate literal's type at prune time. Files are staged under
+    * `base/.data-<token>/` and enter `files/` only once the whole write
+    * succeeded and every key is non-null; the staging directory is
+    * removed either way. */
   /** `colMap` (logical → physical) renames columns on the way INTO the
     * pool: files always carry PHYSICAL names, so a later logical
     * RENAME/DROP is metadata-only and old files stay valid. */
@@ -413,72 +416,57 @@ object CowTable {
       case None => df.repartitionByRange(math.max(1, numFiles), ks.map(col): _*)
         .sortWithinPartitions(ks.head, ks.tail: _*)
     }
-    parted
-      .select(df.columns.map(c => col(c).as(ph(c))).toIndexedSeq: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val pool = new Path(base, "files")
-    fs.mkdirs(pool)
-    val moved = fs.listStatus(tmp).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
-      .sortBy(_.getName).zipWithIndex.map { case (p, i) =>
-        val dst = new Path(pool, s"$token-$i.parquet")
-        require(fs.rename(p, dst), s"pool move failed: $p -> $dst")
-        norm(dst.toString)
-      }
-    fs.delete(tmp, true)
-    if (moved.isEmpty) Seq.empty
-    else {
-      val kDt = keyType(df, key)
-      // the stats scan reads the MOVED files, whose columns carry
-      // PHYSICAL names; stats-map keys are physical too (stable across
-      // logical renames)
-      val ke = KeyEnc.of(col(ph(ks.head)), kDt)
-      // a STRING leading key's natural (exact, full-string) min/max
-      // always rides in the stats maps — discovery and predicate pruning
-      // compare strings exactly there; the long kmin/kmax carry the
-      // lossy order-preserving encoding for the bucket join. NON-LEADING
-      // key columns always get stats too: the sort makes them locally
-      // clustered within each leading range, so predicates on the rest
-      // of the tuple (the SCD2 `effective_from`) prune for free.
-      val sCols = (statsCols ++ (if (isStringKey(kDt)) Seq(ks.head) else Nil)
-        ++ ks.tail)
-        .distinct.filter(df.columns.contains)
-      val sminE =
-        if (sCols.isEmpty) typedLit(Map.empty[String, String])
-        else map(sCols.flatMap(c =>
-          Seq(lit(ph(c)), min(col(ph(c))).cast("string"))): _*)
-      val smaxE =
-        if (sCols.isEmpty) typedLit(Map.empty[String, String])
-        else map(sCols.flatMap(c =>
-          Seq(lit(ph(c)), max(col(ph(c))).cast("string"))): _*)
-      val stats = spark.read.parquet(moved: _*)
-        .groupBy(fileCol.as("file"))
-        .agg(count(lit(1)).as("rows"),
-          min(ke).as("kmin"),
-          max(ke).as("kmax"),
-          sminE.as("smin"), smaxE.as("smax"),
+    val kDt = keyType(df, key)
+    // the stats are taken on the WRITTEN rows, whose columns carry
+    // PHYSICAL names; stats-map keys are physical too (stable across
+    // logical renames)
+    val ke = KeyEnc.of(col(ph(ks.head)), kDt)
+    // a STRING leading key's natural (exact, full-string) min/max
+    // always rides in the stats maps — discovery and predicate pruning
+    // compare strings exactly there; the long kmin/kmax carry the
+    // lossy order-preserving encoding for the bucket join. NON-LEADING
+    // key columns always get stats too: the sort makes them locally
+    // clustered within each leading range, so predicates on the rest
+    // of the tuple (the SCD2 `effective_from`) prune for free.
+    val sCols = (statsCols ++ (if (isStringKey(kDt)) Seq(ks.head) else Nil)
+      ++ ks.tail)
+      .distinct.filter(df.columns.contains)
+    def statsMap(agg: Column => Column): Column =
+      if (sCols.isEmpty) typedLit(Map.empty[String, String])
+      else map(sCols.flatMap(c =>
+        Seq(lit(ph(c)), agg(col(ph(c))).cast("string"))): _*)
+    try {
+      val stats = StatsWrite.parquet(
+        parted.select(df.columns.map(c => col(c).as(ph(c))).toIndexedSeq: _*),
+        tmp.toString,
+        Seq(count(lit(1)), min(ke), max(ke), statsMap(min), statsMap(max),
           count(when(ks.map(k => col(ph(k)).isNull).reduce(_ || _) ||
-            ke.isNull, 1)).as("_gf_nullk"))
-        .collect() // NEW-file-count bounded
-        .map { r =>
-          // the clustering key is the row IDENTITY (manifest pruning,
-          // SQL rowId): a null or non-encodable key would be silently
-          // unaddressable — refuse the write instead
-          require(r.getLong(6) == 0L,
-            s"cow table key `$key` must be non-null" +
-              (if (isStringKey(kDt)) "" else
-                " (and the leading column castable to long)") +
-              s"; ${r.getLong(6)} violating rows in ${r.getString(0)}")
-          Entry(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            smin = Option(r.getMap[String, String](4)).map(_.toMap)
-              .getOrElse(Map.empty),
-            smax = Option(r.getMap[String, String](5)).map(_.toMap)
-              .getOrElse(Map.empty))
-        }
-      // a range partition that received no rows produces no part file;
-      // nothing to reconcile — `moved` and `stats` agree by construction
-      stats.sortBy(_.kmin).toSeq
-    }
+            ke.isNull, 1))))
+        // a write of no rows still leaves one zero-row file (Spark's
+        // first task always writes one); it holds nothing to reference
+        .filter { case (_, r) => r.getLong(0) > 0L }
+      // the clustering key is the row IDENTITY (manifest pruning, SQL
+      // rowId): a null or non-encodable key would be silently
+      // unaddressable — refuse the write before any file enters the pool
+      val nullKeys = stats.values.map(_.getLong(5)).sum
+      require(nullKeys == 0L,
+        s"cow table key `$key` must be non-null" +
+          (if (isStringKey(kDt)) "" else
+            " (and the leading column castable to long)") +
+          s"; $nullKeys violating rows")
+      val pool = new Path(base, "files")
+      fs.mkdirs(pool)
+      stats.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, r), i) =>
+        val dst = new Path(pool, s"$token-$i.parquet")
+        require(fs.rename(new Path(tmp, name), dst),
+          s"pool move failed: $name -> $dst")
+        Entry(norm(dst.toString), r.getLong(0), r.getLong(1), r.getLong(2),
+          smin = Option(r.getMap[String, String](3)).map(_.toMap)
+            .getOrElse(Map.empty),
+          smax = Option(r.getMap[String, String](4)).map(_.toMap)
+            .getOrElse(Map.empty))
+      }.sortBy(_.kmin)
+    } finally fs.delete(tmp, true) // also on a failed or refused write
   }
 
   private def entriesDf(spark: SparkSession, entries: Seq[Entry]): DataFrame = {
@@ -1915,24 +1903,36 @@ object CowTable {
 
   /** CHANGE DATA FEED: the row-level diff between two committed
     * versions, computed from the files present in exactly one manifest
-    * — O(changed files + their vectors), never a two-snapshot scan. A
-    * file is "same" only as (file, dv): a vector added to an untouched
-    * file IS a change and both sides read through their own vectors.
-    * Rows co-located in a rewritten file but themselves untouched
-    * compare struct-equal across the key join and drop out as no-ops.
-    * Output: the data columns (post-image; pre-image for deletes) plus
-    * `_change_type` ∈ insert / update / delete. Requires both versions
-    * readable (`retain` ≥ the travel distance). */
+    * — never a two-snapshot scan. A file is "same" only as (file, dv): a
+    * vector added to an untouched file IS a change, so that file is read
+    * WHOLE on both sides (each through its own vector) and the cost is
+    * O(rows of every changed or vector-touched file). Rows co-located in
+    * a rewritten file but themselves untouched compare struct-equal
+    * across the key join and drop out as no-ops. A LAYOUT-ONLY version
+    * (`COMPACT` / `ZORDER`, which rewrite live rows and nothing else)
+    * diffed against the committed version just before it is free: the
+    * same empty frame, no data file read. Output: the data columns
+    * (post-image; pre-image for deletes) plus `_change_type` ∈ insert /
+    * update / delete. Requires both versions readable (`retain` ≥ the
+    * travel distance). */
   def changes(spark: SparkSession, base: String, fromV: Long, toV: Long,
               key: String): DataFrame = {
     require(fromV <= toV, s"changes: from $fromV > to $toV")
-    val from = entriesAt(spark, base, fromV)
     val to = entriesAt(spark, base, toV)
+    // (a non-empty `to` also supplies the schema-only scan below)
+    val layoutOnly = to.nonEmpty &&
+      AtomicPublish.commitOp(spark, base, toV).exists(Set("COMPACT", "ZORDER")) &&
+        AtomicPublish.versions(spark, base).filter(_ < toV).lastOption
+          .contains(fromV)
+    val from = if (layoutOnly) Nil else entriesAt(spark, base, fromV)
     def id(e: Entry) = (e.file, e.dv)
     val toIds = to.map(id).toSet
     val fromIds = from.map(id).toSet
     val preEntries = from.filterNot(e => toIds.contains(id(e)))
-    val postEntries = to.filterNot(e => fromIds.contains(id(e)))
+    // layout-only: both sides empty, so the frame below is planned over
+    // two empty relations and collapses without a job
+    val postEntries =
+      if (layoutOnly) Nil else to.filterNot(e => fromIds.contains(id(e)))
     val anyEntry = (preEntries ++ postEntries ++ to ++ from).headOption
       .getOrElse(sys.error(s"changes: no entries in either version of $base"))
     // BOTH sides read with the TO-version's schema: under additive

@@ -265,14 +265,22 @@ class GraftCatalogSpec extends SparkSpec {
       Seq((201L, "m", 7.0, false)).toDF("id", "nm", "amt", "_delete"), "id")
 
     // violating writes fail the STATEMENT on each path: SQL INSERT,
-    // SQL UPDATE (delta route), API merge, API append
+    // SQL UPDATE (delta route), API merge, API append — and leave
+    // nothing behind: no staging directory, no new pool file
+    def listed(dir: String): Set[String] =
+      Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
     def violates(f: => Unit): Unit = {
+      val pool = listed(s"$base/files")
       val e = intercept[Exception](f)
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
         else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(e).exists(_.contains("amt_pos")),
         s"the failure must name the constraint: ${msgs(e).mkString(" | ")}")
+      assert(!listed(base).exists(_.startsWith(".data-")),
+        "a rejected write must remove its staging directory")
+      assert(listed(s"$base/files") === pool,
+        "a rejected write must not add a pool file")
     }
     violates(spark.sql(s"INSERT INTO graft.`$base` VALUES (300, 'bad', -1.0)"))
     violates(spark.sql(s"UPDATE graft.`$base` SET amt = -5.0 WHERE id = 2"))
@@ -280,6 +288,20 @@ class GraftCatalogSpec extends SparkSpec {
       Seq((301L, "bm", -2.0, false)).toDF("id", "nm", "amt", "_delete"), "id"))
     violates(CowTable.append(spark, base,
       Seq((302L, "ba", -3.0)).toDF("id", "nm", "amt")))
+    // rows from local data fail while the plan is optimized; rows Spark
+    // must compute fail in a job — without AQE, inside the write job
+    // itself, after its output directory exists
+    def computed(id: Long): org.apache.spark.sql.DataFrame =
+      spark.range(id, id + 1).select(col("id"), lit("c").as("nm"),
+        (col("id") - lit(id + 3)).cast("double").as("amt"))
+    for (aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        violates(CowTable.append(spark, base, computed(305L)))
+        violates(CowTable.merge(spark, base,
+          computed(306L).withColumn("_delete", lit(false)), "id"))
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
     // nothing landed: the table still aggregates clean
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$base` WHERE amt < 0")
       .head().getLong(0) === 0L)

@@ -57,11 +57,17 @@ object LocalParquet {
     * metadata, snappy). */
   def write(spark: SparkSession, file: Path, schema: StructType,
             rows: Seq[InternalRow]): Unit = {
-    val conf = new Configuration(spark.sessionState.newHadoopConf())
-    ParquetWriteSupport.setSchema(schema, conf)
-    // the keys ParquetWriteSupport.init asserts on — normally injected
-    // by ParquetFileFormat.prepareWrite; stated here with the session's
-    // effective values
+    val w = writer(file, schema, writeConf(spark))
+    try rows.foreach(w.write) finally w.close()
+  }
+
+  /** The session's Hadoop conf plus the keys [[ParquetWriteSupport]]'s
+    * `init` asserts on — normally injected by
+    * `ParquetFileFormat.prepareWrite`; stated here with the session's
+    * effective values. Built on the driver; [[writer]] may run on an
+    * executor with it. */
+  def writeConf(spark: SparkSession): Configuration = {
+    val conf = spark.sessionState.newHadoopConf()
     val sc = spark.sessionState.conf
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sc.getConf(SQLConf.PARQUET_WRITE_LEGACY_FORMAT).toString)
@@ -73,15 +79,23 @@ object LocalParquet {
       sc.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
     conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    conf
+  }
+
+  /** An open snappy parquet writer of `schema` rows at `file`, with a
+    * conf from [[writeConf]]. */
+  def writer(file: Path, schema: StructType,
+             conf: Configuration): ParquetWriter[InternalRow] = {
+    val c = new Configuration(conf)
+    ParquetWriteSupport.setSchema(schema, c)
     class B(p: Path) extends ParquetWriter.Builder[InternalRow, B](p) {
       override def self(): B = this
       override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
         new ParquetWriteSupport
     }
-    val w = new B(file)
-      .withConf(conf)
+    new B(file)
+      .withConf(c)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-    try rows.foreach(w.write) finally w.close()
   }
 }

@@ -1,13 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -16,8 +10,9 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.io.{AtomicPublish, CowTable}
+import graft.io.{AtomicPublish, CowTable, LocalParquet}
 
 /** DELTA-BASED row-level SQL over a [[graft.io.CowTable]] — the
   * merge-on-read half of the SQL DML surface, serving `UPDATE` and
@@ -37,8 +32,10 @@ import graft.io.{AtomicPublish, CowTable}
   *     copy-row-forward semantics the API [[graft.io.CowTable.merge]]
   *     has.
   *
-  * Executors stage actions as plain parquet under `base/.delta-<query>`
-  * (task-attempt-unique file names, only COMMITTED tasks' files are
+  * Executors stage actions as parquet under `base/.delta-<query>`,
+  * encoded by Spark's own `ParquetWriteSupport` (so every Catalyst type
+  * the table holds stages and reads back exactly) with
+  * task-attempt-unique file names (only COMMITTED tasks' files are
   * read — a retried task's partial file is never picked up); the driver
   * commit turns them into one [[graft.io.CowTable.applyDelta]] version,
   * whose CAS loop REDISCOVERS key positions against the current
@@ -190,9 +187,8 @@ private[sources] class CowReplaceBatchWrite(base: String,
   private val stagedSchema = info.schema()
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
-    new CowReplaceWriterFactory(staging, stagedSchema.json,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
+    new CowReplaceWriterFactory(staging, stagedSchema,
+      new SerializableConfiguration(LocalParquet.writeConf(SparkSession.active)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -236,36 +232,31 @@ private[sources] class CowReplaceBatchWrite(base: String,
 }
 
 private[sources] class CowReplaceWriterFactory(staging: String,
-                                               schemaJson: String,
-                                               conf: SerializableHadoopConf)
+                                               schema: StructType,
+                                               conf: SerializableConfiguration)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CowReplaceTaskWriter(staging,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], conf,
-      partitionId, taskId)
+    new CowReplaceTaskWriter(staging, schema, conf, partitionId, taskId)
 }
 
 /** Executor-side replacement-row writer: rows stream into a
-  * task-attempt-unique parquet file via parquet-mr, opened lazily so an
-  * empty task stages nothing; only COMMITTED tasks' files are read. */
+  * task-attempt-unique parquet file through Spark's own
+  * `ParquetWriteSupport` ([[graft.io.LocalParquet.writer]]), opened
+  * lazily so an empty task stages nothing; only COMMITTED tasks' files
+  * are read. */
 private[sources] class CowReplaceTaskWriter(staging: String,
                                             schema: StructType,
-                                            conf: SerializableHadoopConf,
+                                            conf: SerializableConfiguration,
                                             partitionId: Int, taskId: Long)
   extends DataWriter[InternalRow] {
 
-  import CowDeltaTaskWriter._
-
   private val path = s"$staging/rows/part-$partitionId-$taskId.parquet"
-  private val tpe = toMessageType("rows", schema)
-  private val factory = new SimpleGroupFactory(tpe)
-  private var writer: ParquetWriter[Group] = _
+  private var writer: ParquetWriter[InternalRow] = _
 
   override def write(row: InternalRow): Unit = {
-    if (writer == null) writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(path), conf.value))
-      .withType(tpe).withConf(conf.value).build()
-    writer.write(toGroup(factory.newGroup(), row, schema))
+    if (writer == null)
+      writer = LocalParquet.writer(new Path(path), schema, conf.value)
+    writer.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -298,9 +289,8 @@ private[sources] class CowDeltaBatchWrite(base: String, key: String,
       .foldLeft(new StructType())((s, k) => s.add(k, LongType))
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory =
-    new CowDeltaWriterFactory(staging, dataSchema.json, rowIdSchema.json,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
+    new CowDeltaWriterFactory(staging, dataSchema, rowIdSchema,
+      new SerializableConfiguration(LocalParquet.writeConf(SparkSession.active)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -338,52 +328,42 @@ private[sources] class CowDeltaBatchWrite(base: String, key: String,
 }
 
 private[sources] class CowDeltaWriterFactory(staging: String,
-                                             dataSchemaJson: String,
-                                             rowIdSchemaJson: String,
-                                             conf: SerializableHadoopConf)
+                                             dataSchema: StructType,
+                                             rowIdSchema: StructType,
+                                             conf: SerializableConfiguration)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new CowDeltaTaskWriter(staging,
-      DataType.fromJson(dataSchemaJson).asInstanceOf[StructType],
-      DataType.fromJson(rowIdSchemaJson).asInstanceOf[StructType],
-      conf, partitionId, taskId)
+    new CowDeltaTaskWriter(staging, dataSchema, rowIdSchema, conf,
+      partitionId, taskId)
 }
 
 /** Executor-side action writer: inserts and deleted row ids stream into
-  * task-attempt-unique parquet files via parquet-mr (no Spark write job
-  * inside a write job), opened lazily so a task with no actions stages
-  * nothing. */
+  * task-attempt-unique parquet files through Spark's own
+  * `ParquetWriteSupport` ([[graft.io.LocalParquet.writer]]; no Spark
+  * write job inside a write job), opened lazily so a task with no
+  * actions stages nothing. */
 private[sources] class CowDeltaTaskWriter(staging: String,
                                           dataSchema: StructType,
                                           rowIdSchema: StructType,
-                                          conf: SerializableHadoopConf,
+                                          conf: SerializableConfiguration,
                                           partitionId: Int, taskId: Long)
   extends DeltaWriter[InternalRow] {
 
-  import CowDeltaTaskWriter._
-
   private val insertPath = s"$staging/inserts/part-$partitionId-$taskId.parquet"
   private val deletePath = s"$staging/deletes/part-$partitionId-$taskId.parquet"
-  private val insertType = toMessageType("inserts", dataSchema)
-  private val deleteType = toMessageType("deletes", rowIdSchema)
-  private var insertWriter: ParquetWriter[Group] = _
-  private var deleteWriter: ParquetWriter[Group] = _
-  private val insertFactory = new SimpleGroupFactory(insertType)
-  private val deleteFactory = new SimpleGroupFactory(deleteType)
-
-  private def open(path: String, tpe: MessageType): ParquetWriter[Group] =
-    ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(path), conf.value))
-      .withType(tpe).withConf(conf.value).build()
+  private var insertWriter: ParquetWriter[InternalRow] = _
+  private var deleteWriter: ParquetWriter[InternalRow] = _
 
   override def insert(row: InternalRow): Unit = {
-    if (insertWriter == null) insertWriter = open(insertPath, insertType)
-    insertWriter.write(toGroup(insertFactory.newGroup(), row, dataSchema))
+    if (insertWriter == null)
+      insertWriter = LocalParquet.writer(new Path(insertPath), dataSchema, conf.value)
+    insertWriter.write(row)
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    if (deleteWriter == null) deleteWriter = open(deletePath, deleteType)
-    deleteWriter.write(toGroup(deleteFactory.newGroup(), id, rowIdSchema))
+    if (deleteWriter == null)
+      deleteWriter = LocalParquet.writer(new Path(deletePath), rowIdSchema, conf.value)
+    deleteWriter.write(id)
   }
 
   /** Unreachable with `representUpdateAsDeleteAndInsert = true`; kept
@@ -406,63 +386,5 @@ private[sources] class CowDeltaTaskWriter(staging: String,
   override def close(): Unit = {
     if (insertWriter != null) insertWriter.close()
     if (deleteWriter != null) deleteWriter.close()
-  }
-}
-
-private[sources] object CowDeltaTaskWriter {
-
-  /** Catalyst → parquet-mr schema for the staged action files. Scalar
-    * columns only — the cow-table DML surface is relational rows; a
-    * nested/array column fails loudly here rather than staging
-    * something the commit can't read back. */
-  def toMessageType(name: String, schema: StructType): MessageType = {
-    val fields = schema.fields.map { f =>
-      val b = f.dataType match {
-        case LongType => Types.optional(INT64)
-        case IntegerType => Types.optional(INT32)
-        case DoubleType => Types.optional(DOUBLE)
-        case FloatType => Types.optional(FLOAT)
-        case BooleanType => Types.optional(BOOLEAN)
-        case StringType =>
-          Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
-        case DateType =>
-          Types.optional(INT32).as(LogicalTypeAnnotation.dateType())
-        case TimestampType => Types.optional(INT64).as(
-          LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType => Types.optional(INT64).as(
-          LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case other => throw new UnsupportedOperationException(
-          s"cow-delta staging: unsupported column type ${other.sql} " +
-            s"for field ${f.name}")
-      }
-      b.named(f.name)
-    }
-    new MessageType(name, fields: _*)
-  }
-
-  def toGroup(g: Group, row: InternalRow, schema: StructType): Group = {
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        val f = schema.fields(i)
-        f.dataType match {
-          case LongType => g.add(f.name, row.getLong(i))
-          case IntegerType => g.add(f.name, row.getInt(i))
-          case DoubleType => g.add(f.name, row.getDouble(i))
-          case FloatType => g.add(f.name, row.getFloat(i))
-          case BooleanType => g.add(f.name, row.getBoolean(i))
-          case StringType => g.add(f.name, row.getUTF8String(i).toString)
-          case DateType => g.add(f.name, row.getInt(i)) // days since epoch
-          case TimestampType | TimestampNTZType =>
-            g.add(f.name, row.getLong(i)) // micros since epoch
-          case other => throw new UnsupportedOperationException(
-            s"cow-delta staging: unsupported column type ${other.sql}")
-        }
-      }
-      i += 1
-    }
-    g
   }
 }

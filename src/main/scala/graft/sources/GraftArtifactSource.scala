@@ -2,23 +2,19 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,13 +37,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * committed snapshot. The scan supports COLUMN PRUNING and FILTER
   * PUSHDOWN: comparison/IN filters on primitive columns prune whole
   * files via footer min/max statistics on the driver, then ride into
-  * parquet-mr as row-group + record predicates on the executors — for
-  * the range-laid-out inverted lists (`assignments` sorted by
-  * `centroid_id`), a probe-set IN filter reads only the files holding
-  * the probed lists, which at 100 TB is the difference between a
-  * point lookup and a full index scan. Filters are also RE-APPLIED by
-  * Spark above the scan (pushdown here is pruning, not truth), so a
-  * stats edge case can never change results.
+  * Spark's own parquet reader ([[ArtifactReaderFactory]]) as row-group
+  * predicates on the executors — for the range-laid-out inverted lists
+  * (`assignments` sorted by `centroid_id`), a probe-set IN filter reads
+  * only the files holding the probed lists, which at 100 TB is the
+  * difference between a point lookup and a full index scan. Filters are
+  * also RE-APPLIED by Spark above the scan (pushdown here is pruning,
+  * not truth), so a stats edge case can never change results.
   */
 class GraftArtifactSource extends TableProvider with DataSourceRegister {
 
@@ -181,10 +177,12 @@ private[sources] class ArtifactScanBuilder(base: String, dataset: String,
       dir, full, required, pushed, skipChangeCommits)
 }
 
-/** One pool file; `dv` (optional) is the deletion-vector directory the
-  * manifest points this file at — the reader subtracts those row
-  * positions (merge-on-read). */
-private[sources] case class ArtifactPartition(path: String, dv: String = "")
+/** One pool file; `dvParts` are the parquet parts of the deletion-vector
+  * directory the manifest points this file at (listed once per
+  * directory on the driver) — the reader subtracts those row positions
+  * (merge-on-read). */
+private[sources] case class ArtifactPartition(path: String,
+                                              dvParts: Seq[String] = Nil)
   extends InputPartition
 
 private[sources] class ArtifactScan(base: String, dataset: String,
@@ -221,7 +219,8 @@ private[sources] class ArtifactScan(base: String, dataset: String,
   private def physName(n: String): String = physRename.getOrElse(n, n)
 
   /** Pushed filters with attribute names translated to PHYSICAL — what
-    * footer pruning and parquet record predicates compare against. */
+    * footer pruning and the parquet reader's row-group predicates
+    * compare against. */
   private lazy val pushedPhys: Array[Filter] =
     if (physRename.isEmpty) pushed
     else pushed.map {
@@ -429,7 +428,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    resolvedFiles.map { case (p, dv) => ArtifactPartition(p, dv) }.toArray
+    ArtifactScan.partitions(resolvedFiles).toArray
 
   /** POST-PRUNING statistics from metadata the prune pass already holds
     * (manifest live-row counts minus deletion vectors, footer block
@@ -458,9 +457,8 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     val requiredPhys = StructType(required.fields.map(f =>
       if (f.name == ArtifactScan.FileCol) f
       else f.copy(name = physName(f.name))))
-    new ArtifactReaderFactory(requiredPhys.json, pushedPhys,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
+    ArtifactReaderFactory(requiredPhys, pushedPhys.toSeq,
+      vectored = keptFiles.exists(_.dv.nonEmpty))
   }
 
   override def description(): String =
@@ -522,8 +520,7 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArtifactReaderFactory(required.json, Array.empty,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    ArtifactReaderFactory(required, Nil, vectored = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -629,8 +626,7 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArtifactReaderFactory(required.json, Array.empty,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    ArtifactReaderFactory(required, Nil, vectored = false)
 
   /** Reclaim materialized diff directories for batches at or below the
     * committed offset — same O(in-flight) checkpoint-storage contract as
@@ -722,8 +718,8 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
           // same entries (fail-fast if retention pruned them). Mapped
           // tables (logical ≠ physical names) fall through to the
           // materialized path below, which writes logical names.
-          graft.io.CowTable.entriesAtVersion(spark, base, v)
-            .map(en => ArtifactPartition(en.file, en.dv))
+          ArtifactScan.partitions(graft.io.CowTable
+            .entriesAtVersion(spark, base, v).map(en => (en.file, en.dv)))
         case _ =>
           val out = new Path(checkpointLocation, s"_graft_feed/v$v")
           if (!fs.exists(new Path(out, "_SUCCESS"))) {
@@ -763,8 +759,7 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArtifactReaderFactory(required.json, Array.empty,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    ArtifactReaderFactory(required, Nil, vectored = true)
 
   /** Batches at or below the committed offset are never replanned —
     * reclaim their materialized directories (a long-lived subscriber's
@@ -794,6 +789,19 @@ private[sources] object ArtifactScan {
     * pass read for free: LIVE rows (footer row count minus the
     * manifest's deletion-vector count) and compressed bytes. */
   case class Kept(path: String, dv: String, rows: Long, bytes: Long)
+
+  /** One partition per (file, deletion-vector directory), each
+    * directory's parquet parts listed once. */
+  def partitions(files: Seq[(String, String)]): Seq[ArtifactPartition] = {
+    val parts = files.map(_._2).filter(_.nonEmpty).distinct.map { dv =>
+      val p = new Path(dv)
+      dv -> p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+        .listStatus(p).toSeq.map(_.getPath)
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+        .map(_.toString)
+    }.toMap
+    files.map { case (f, dv) => ArtifactPartition(f, parts.getOrElse(dv, Nil)) }
+  }
 
   def filterColumn(f: Filter): String = f match {
     case EqualTo(a, _) => a
@@ -849,271 +857,119 @@ private[sources] object ArtifactScan {
     case LessThanOrEqual(_, v) => cmp(min, v) <= 0
     case _ => true
   }
-
-  /** Spark filter → parquet-mr predicate (row-group + record skipping on
-    * the executor). Only long/int columns — others prune by footer stats
-    * alone. */
-  def toParquet(f: Filter, schema: StructType): Option[FilterPredicate] = {
-    val dt = schema.fields.find(_.name == filterColumn(f)).map(_.dataType)
-    def longCol(a: String) = FilterApi.longColumn(a)
-    def intCol(a: String) = FilterApi.intColumn(a)
-    (f, dt) match {
-      case (EqualTo(a, v: Number), Some(LongType)) =>
-        Some(FilterApi.eq(longCol(a), java.lang.Long.valueOf(v.longValue())))
-      case (EqualTo(a, v: Number), Some(IntegerType)) =>
-        Some(FilterApi.eq(intCol(a), java.lang.Integer.valueOf(v.intValue())))
-      case (In(a, vs), Some(LongType)) if vs.nonEmpty =>
-        Some(vs.map(v => FilterApi.eq(longCol(a),
-          java.lang.Long.valueOf(v.asInstanceOf[Number].longValue())))
-          .reduce[FilterPredicate](FilterApi.or))
-      case (In(a, vs), Some(IntegerType)) if vs.nonEmpty =>
-        Some(vs.map(v => FilterApi.eq(intCol(a),
-          java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue())))
-          .reduce[FilterPredicate](FilterApi.or))
-      case _ => None
-    }
-  }
 }
 
-/** Java-serializable carrier for the DRIVER's Hadoop configuration — a
-  * fresh `new Configuration()` on the executor would ignore any
-  * non-default filesystem settings (object-store credentials,
-  * endpoints), so reads would only work for default-FS local paths. */
-private[sources] class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-private[sources] class ArtifactReaderFactory(requiredJson: String,
-                                             pushed: Array[Filter],
-                                             hadoopConf: SerializableHadoopConf)
+/** Spark's own parquet reader (`ParquetFileFormat`, vectorized where
+  * the schema allows) serving every `graft-artifact` partition. The read
+  * functions are built ONCE per scan on the driver — building broadcasts
+  * a fresh session Hadoop conf, so executors see the driver's
+  * filesystem settings — and each partition applies them to its file:
+  *
+  *   - the data read projects the PHYSICAL required columns plus Spark's
+  *     row-index column, with the pushed filters as row-group
+  *     predicates; a column a file predates fills its `EXISTS_DEFAULT`
+  *     (else NULL), and the virtual `_file` column rides in as the
+  *     file's constant partition value;
+  *   - with `vectored`, a second read of `(file, pos)` serves the
+  *     deletion-vector parts. Positions are Spark's row index, which
+  *     stays the file position however many row groups the pushed
+  *     filters skip, so vectored files keep their pushdown. */
+private[sources] class ArtifactReaderFactory(required: StructType,
+                                             read: ArtifactReaderFactory.Read,
+                                             readDv: Option[ArtifactReaderFactory.Read])
   extends PartitionReaderFactory {
 
-  /** The (row positions) this partition's deletion vector voids for its
-    * file: the vector directory's parts are read through a parquet-mr
-    * record filter on `file = <this file>`, so only this file's share of
-    * the (shared, cumulative) vector is materialized. Vector content
-    * references files by BASENAME (relocatable tables); legacy vectors
-    * stored the full write-time path — matched as the OR of both (a
+  import ArtifactReaderFactory._
+
+  /** The row positions `file`'s deletion vector voids: every `(file,
+    * pos)` row of the vector's parts that names this file. Vector
+    * content references files by BASENAME (relocatable tables); legacy
+    * vectors stored the full write-time path — both match (a
     * legacy-vectored table cannot have moved, so its write-time path IS
     * the current one). */
-  private def deletedPositions(conf: Configuration, dvDir: String,
+  private def deletedPositions(parts: Seq[String],
                                file: String): java.util.HashSet[java.lang.Long] = {
+    val dv = readDv.getOrElse(sys.error(
+      s"graft-artifact: $file has a deletion vector but the scan built no vector reader"))
+    val base = UTF8String.fromString(file.substring(file.lastIndexOf('/') + 1))
+    val full = UTF8String.fromString(file)
     val set = new java.util.HashSet[java.lang.Long]()
-    // own conf copy WITHOUT the data file's column projection (the
-    // vector files carry (file, pos), not the table's columns)
-    val dvConf = new Configuration(conf)
-    dvConf.unset(ReadSupport.PARQUET_READ_SCHEMA)
-    val p = new Path(dvDir)
-    val fs = p.getFileSystem(dvConf)
-    val pred = FilterApi.or(
-      FilterApi.eq(FilterApi.binaryColumn("file"),
-        org.apache.parquet.io.api.Binary.fromString(
-          file.substring(file.lastIndexOf('/') + 1))),
-      FilterApi.eq(FilterApi.binaryColumn("file"),
-        org.apache.parquet.io.api.Binary.fromString(file)))
-    fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .foreach { part =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new GroupReadSupport(), part)
-          .withConf(dvConf)
-          .withFilter(FilterCompat.get(pred)).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            set.add(g.getLong(g.getType.getFieldIndex("pos"), 0))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+    parts.foreach(part => dv(partitioned(part, InternalRow.empty)).foreach { r =>
+      val f = r.getUTF8String(0)
+      if (f == base || f == full) set.add(r.getLong(1))
+    })
     set
   }
 
+  /** Applies the scan's read to this partition's file. A read row is
+    * the data fields, the row index, then `_file`; rows whose index the
+    * file's deletion vector names are dropped, and the rest are
+    * projected to `required`. */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArtifactPartition]
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val conf = new Configuration(hadoopConf.value)
-    val path = new Path(part.path)
-    // column projection is built PER FILE from the file's OWN footer:
-    // pool files written by different commits can disagree on field
-    // repetition (a create writes `required`, a merge's join output
-    // writes `optional`), and parquet-mr's checkContains rejects a
-    // projection lifted from another file's footer. A required column
-    // ABSENT from the file (written before an additive schema
-    // evolution) is skipped here and null-filled row-side.
-    val in = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    val fileSchema = try in.getFooter.getFileMetaData.getSchema
-    finally in.close()
-    // `_file` is VIRTUAL (the partition knows its path) — never part of
-    // the parquet projection; toRow fills it from the partition
-    val projection = new MessageType(fileSchema.getName,
-      required.fields.filter(f0 => f0.name != ArtifactScan.FileCol &&
-        fileSchema.containsField(f0.name))
-        .map(f0 =>
-          fileSchema.getType(fileSchema.getFieldIndex(f0.name))): _*)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    // a deletion-vectored file is read WITHOUT the pushed record filter:
-    // the vector addresses rows by file POSITION, and any row-group or
-    // record skipping would desynchronize the position counter. Spark
-    // re-applies every filter above the scan, so this costs I/O on the
-    // vectored files only, never correctness.
-    val predicate =
-      if (part.dv.nonEmpty) None
-      else pushed
-        // a filter on a column this FILE predates (additive evolution /
-        // ADD COLUMN DEFAULT) must not reach parquet-mr: the record
-        // filter treats the missing column as NULL and silently drops
-        // every row that should fill the exists-default. Spark
-        // re-applies all filters above the scan, so skipping the
-        // pushdown for this file costs I/O only, never correctness.
-        .filter(_.references.forall(fileSchema.containsField))
-        .flatMap(ArtifactScan.toParquet(_, required))
-        .reduceOption[FilterPredicate](FilterApi.and)
-    val builder = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), path)
-      .withConf(conf)
-    val reader = predicate
-      .map(pr => builder.withFilter(FilterCompat.get(pr)).build())
-      .getOrElse(builder.build())
-    val fileVal = UTF8String.fromString(part.path)
-    val fills = ArtifactRows.existsDefaults(required)
-    if (part.dv.isEmpty)
-      new PartitionReader[InternalRow] {
-        private var current: Group = _
-        override def next(): Boolean = {
-          current = reader.read()
-          current != null
-        }
-        override def get(): InternalRow =
-          ArtifactRows.toRow(current, required, fileVal, fills)
-        override def close(): Unit = reader.close()
+    val data = required.fields.filter(_.name != ArtifactScan.FileCol)
+    var ord = -1
+    val out = UnsafeProjection.create(required.fields.toSeq.map { f =>
+      if (f.name == ArtifactScan.FileCol)
+        BoundReference(data.length + 1, StringType, nullable = false)
+      else {
+        ord += 1
+        BoundReference(ord, f.dataType, nullable = true)
       }
-    else {
-      val deleted = deletedPositions(conf, part.dv, part.path)
-      new PartitionReader[InternalRow] {
-        private var current: Group = _
-        private var pos = -1L
-        override def next(): Boolean = {
-          current = reader.read()
-          pos += 1
-          while (current != null && deleted.contains(pos)) {
-            current = reader.read()
-            pos += 1
-          }
-          current != null
-        }
-        override def get(): InternalRow =
-          ArtifactRows.toRow(current, required, fileVal, fills)
-        override def close(): Unit = reader.close()
+    })
+    val rows = read(partitioned(part.path,
+      InternalRow(UTF8String.fromString(part.path))))
+    val live =
+      if (part.dvParts.isEmpty) rows
+      else {
+        val deleted = deletedPositions(part.dvParts, part.path)
+        rows.filter(r => !deleted.contains(r.getLong(data.length)))
+      }
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = live.hasNext && {
+        current = out(live.next())
+        true
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
       }
     }
   }
 }
 
-private[sources] object ArtifactRows {
+private[sources] object ArtifactReaderFactory {
 
-  /** Per-field EXISTS_DEFAULT fill values for files that physically lack
-    * a column (written before the column existed): the column's recorded
-    * constant, evaluated ONCE per partition — the same contract Spark's
-    * own parquet reader honors from read-schema metadata. Fields without
-    * a default fill NULL (additive evolution's contract). */
-  def existsDefaults(schema: StructType): Array[Any] =
-    schema.fields.map { f =>
-      if (!f.metadata.contains("EXISTS_DEFAULT")) null
-      else {
-        val sql = f.metadata.getString("EXISTS_DEFAULT")
-        val e = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-          .parseExpression(sql)
-        org.apache.spark.sql.catalyst.expressions
-          .Cast(e, f.dataType, Some("UTC")).eval(null)
-      }
-    }
+  type Read = PartitionedFile => Iterator[InternalRow]
 
-  def toRow(g: Group, schema: StructType,
-            file: UTF8String = null,
-            fills: Array[Any] = null): InternalRow = {
-    val out = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema.fields(i)
-      out(i) =
-        // the virtual `_file` column comes from the partition, not the file
-        if (f.name == ArtifactScan.FileCol && file != null) file
-        // absent field = written before an additive evolution: the
-        // column's exists-default if recorded, else NULL
-        else if (!g.getType.containsField(f.name))
-          (if (fills != null) fills(i) else null)
-        else {
-          val idx = g.getType.getFieldIndex(f.name)
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else value(g, idx, f.dataType)
-        }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+  /** Built on the driver. `required` carries PHYSICAL names (the `_file`
+    * column excepted); `filters` are pushed on physical names too. */
+  def apply(required: StructType, filters: Seq[Filter],
+            vectored: Boolean): ArtifactReaderFactory = {
+    val data = StructType(required.fields.filter(_.name != ArtifactScan.FileCol))
+    val rowIndex = StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+      LongType)
+    val file = StructType(Seq(StructField(ArtifactScan.FileCol, StringType,
+      nullable = false)))
+    val dv = StructType(Seq(StructField("file", StringType),
+      StructField("pos", LongType)))
+    new ArtifactReaderFactory(required,
+      build(data.add(rowIndex), file, filters),
+      if (vectored) Some(build(dv, new StructType(), Nil)) else None)
   }
 
-  private def value(g: Group, idx: Int, dt: DataType): Any = dt match {
-    case LongType => g.getLong(idx, 0)
-    case IntegerType => g.getInteger(idx, 0)
-    case DoubleType => g.getDouble(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case BooleanType => g.getBoolean(idx, 0)
-    case DateType => g.getInteger(idx, 0) // parquet DATE = days since epoch
-    case TimestampType | TimestampNTZType =>
-      // catalyst timestamp (tz'd or NTZ) = micros since epoch; parquet
-      // stores INT64 (MICROS or MILLIS per the logical annotation) or
-      // legacy INT96 (nanos-of-day little-endian + julian day)
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val prim = g.getType.getType(idx).asPrimitiveType()
-      prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT64 =>
-          val micros = prim.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
-              Math.multiplyExact(g.getLong(idx, 0), 1000L)
-            case _ => g.getLong(idx, 0) // MICROS (Spark's default)
-          }
-          micros
-        case PrimitiveTypeName.INT96 =>
-          val buf = java.nio.ByteBuffer
-            .wrap(g.getInt96(idx, 0).getBytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanosOfDay = buf.getLong
-          val julianDay = buf.getInt
-          (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-        case other =>
-          throw new UnsupportedOperationException(
-            s"graft-artifact: timestamp stored as $other")
-      }
-    case StringType => UTF8String.fromString(g.getString(idx, 0))
-    case ArrayType(et, _) =>
-      // Spark's 3-level list encoding: field -> repeated `list` group ->
-      // `element`
-      val list = g.getGroup(idx, 0)
-      val n = list.getFieldRepetitionCount(0)
-      val arr = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val el = list.getGroup(0, i)
-        arr(i) =
-          if (el.getFieldRepetitionCount(0) == 0) null
-          else value(el, 0, et)
-        i += 1
-      }
-      new GenericArrayData(arr)
-    case other =>
-      throw new UnsupportedOperationException(
-        s"graft-artifact: unsupported type ${other.sql}")
+  private def build(schema: StructType, partitionSchema: StructType,
+                    filters: Seq[Filter]): Read = {
+    val spark = SparkSession.active
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      partitionSchema, schema, filters,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
   }
+
+  /** The whole of `path` as one split. */
+  private def partitioned(path: String, values: InternalRow): PartitionedFile =
+    PartitionedFile(values, SparkPath.fromPathString(path), 0L, Long.MaxValue)
 }

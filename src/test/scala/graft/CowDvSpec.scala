@@ -78,14 +78,50 @@ class CowDvSpec extends SparkSpec {
       "the reader must subtract vectored row positions")
     assert(served.filter(col("id") === 5L || col("id") % 10 === 0)
       .count() === 0L, "no dead row may resurrect through DSv2")
-    // a pushed filter on a vectored file must stay correct even though
-    // the record-level parquet predicate is disabled to keep positions
-    // aligned (Spark re-applies the filter above the scan)
+    // a pushed filter on a vectored file stays correct: vectored
+    // positions are matched against Spark's row index, which row-group
+    // skipping leaves aligned (Spark re-applies the filter above the scan)
     assert(served.filter(col("id") <= 20L).count() === 17L)
     val moR = served.orderBy("id").collect().toSeq
     CowTable.compact(spark, base, targetRows = 1000L, "id")
     assert(served.orderBy("id").collect().toSeq === moR,
       "materialized and merge-on-read serving must agree bit-for-bit")
+  }
+
+  test("DSv2 keeps filter pushdown on vectored files: skipped row groups " +
+    "leave the vectored positions aligned") {
+    val base = Files.createTempDirectory("cow_dvrg").toString + "/t"
+    // a tiny row-group target: each file gets several row groups
+    spark.conf.set("parquet.block.size", "1024")
+    spark.conf.set("parquet.block.size.row.check.min", "50")
+    spark.conf.set("parquet.block.size.row.check.max", "50")
+    try CowTable.create(spark, base, table(1000), "id", numFiles = 2)
+    finally Seq("parquet.block.size", "parquet.block.size.row.check.min",
+      "parquet.block.size.row.check.max").foreach(spark.conf.unset)
+    val conf = spark.sparkContext.hadoopConfiguration
+    CowTable.manifest(spark, base).foreach { e =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(e.file), conf))
+      try assert(in.getRowGroups.size >= 3, s"${e.file}: too few row groups")
+      finally in.close()
+    }
+    // vectors in every row group, the later ones included
+    CowTable.dvDelete(spark, base, col("id") % 7 === 0)
+    CowTable.dvDelete(spark, base, col("id") > 300L && col("id") % 5 === 0)
+    val pred = col("id") > 120L
+    val served = spark.read.format("graft-artifact")
+      .option("base", base).option("cow", "true").load().filter(pred)
+    // collect `served` itself: its executed plan carries the scan metric
+    val got = served.collect().sortBy(_.getLong(0)).toSeq
+    assert(got === CowTable.read(spark, base).filter(pred).orderBy("id")
+      .collect().toSeq)
+    val scanned = served.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        s.metrics("numOutputRows").value
+    }.sum
+    assert(scanned < CowTable.read(spark, base).count(),
+      "the pushed filter must skip the first row group of a vectored file")
   }
 
   test("changes: row-level diff from changed files only, no-ops dropped") {

@@ -159,6 +159,44 @@ class GraftCatalogSpec extends SparkSpec {
       .head().getDouble(0) === (1 to 9).map(_ * 10.0).sum)
   }
 
+  test("decimal, short, byte, binary, struct and map columns read and " +
+    "write exactly through SQL") {
+    val base = Files.createTempDirectory("gcat_types").toString + "/t"
+    val df = (1 to 40).map { i =>
+      (i.toLong, BigDecimal(i) + BigDecimal("0.125"), i.toShort, i.toByte,
+        Array[Byte](i.toByte, 7), (i, s"s$i"), Map(s"k$i" -> i * 0.5))
+    }.toDF("id", "dec", "sh", "by", "bin", "st", "mp")
+      .withColumn("dec", col("dec").cast("decimal(12,3)"))
+    CowTable.create(spark, base, df, "id", numFiles = 2)
+    // binary values compare by content, not by array identity
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect()
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).toSeq
+    def sqlRows = rows(spark.sql(s"SELECT * FROM graft.`$base`"))
+    assert(sqlRows === rows(CowTable.read(spark, base)))
+
+    spark.sql(s"UPDATE graft.`$base` SET dec = dec + 1.001 WHERE id <= 5")
+    spark.sql(s"INSERT INTO graft.`$base` SELECT 100L, " +
+      "CAST(12345.678 AS DECIMAL(12,3)), CAST(1 AS SMALLINT), " +
+      "CAST(2 AS TINYINT), X'0A0B', named_struct('_1', 3, '_2', 'x'), " +
+      "map('k', 1.5D)")
+    spark.sql(s"MERGE INTO graft.`$base` t USING (SELECT 6L AS id, " +
+      "CAST(-0.5 AS DECIMAL(12,3)) AS dec) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET dec = s.dec")
+    spark.sql(s"DELETE FROM graft.`$base` WHERE dec = 7.125")
+    val decs = spark.sql(s"SELECT id, dec FROM graft.`$base`").collect()
+      .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
+    val want = ((1 to 40).filter(_ != 7).map { i =>
+      i.toLong -> (BigDecimal(i) + BigDecimal("0.125") +
+        (if (i <= 5) BigDecimal("1.001") else BigDecimal(0)))
+    } ++ Seq(6L -> BigDecimal("-0.5"), 100L -> BigDecimal("12345.678"))).toMap
+    assert(decs.keySet === want.keySet)
+    want.foreach { case (k, v) =>
+      assert(BigDecimal(decs(k)) === v, s"id $k")
+      assert(decs(k).scale === 3, s"id $k keeps DECIMAL(12,3)")
+    }
+    assert(sqlRows === rows(CowTable.read(spark, base)))
+  }
+
   test("a non-cow path is NoSuchTable, not a crash") {
     intercept[AnalysisException] {
       spark.sql("SELECT * FROM graft.`/nonexistent/nowhere`").collect()

@@ -113,19 +113,18 @@ class PoolStatsSpec extends SparkSpec {
   }
 
   test("SQL INSERT / UPDATE / MERGE entries equal the re-read reference") {
-    // the row-level SQL route stages relational types only: no decimal
     val base = Files.createTempDirectory("pstats_sql").toString + "/t"
-    CowTable.create(spark, base, wide(1, 400).drop("dec"), "id", numFiles = 4,
+    CowTable.create(spark, base, wide(1, 400), "id", numFiles = 4,
       retain = 30, statsCols = wideStats)
     spark.sql(s"INSERT INTO graft.`$base` SELECT * FROM VALUES " +
       "(2000L, 1, 'ins', DATE'2025-05-05', TIMESTAMP'2025-05-05 01:02:03', " +
-      "CAST('NaN' AS DOUBLE))")
+      "CAST(2.5 AS DECIMAL(12,3)), CAST('NaN' AS DOUBLE))")
     assert(checkHead(base, "sql insert") === 1)
     spark.sql(s"UPDATE graft.`$base` SET dbl = -0.0, s = NULL " +
       "WHERE id BETWEEN 200 AND 210")
     assert(checkHead(base, "sql update") > 0)
     wide(300, 305).withColumn("dbl", lit(Double.NaN))
-      .union(wide(3000, 3002)).drop("dec").createOrReplaceTempView("pstats_src")
+      .union(wide(3000, 3002)).createOrReplaceTempView("pstats_src")
     spark.sql(s"MERGE INTO graft.`$base` t USING pstats_src s ON t.id = s.id " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
     assert(checkHead(base, "sql merge") > 0)

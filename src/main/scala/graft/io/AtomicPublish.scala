@@ -38,6 +38,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * to the largest version carrying a `_PUBLISHED` marker (a partial
   * crash write has no marker and is invisible). Superseded versions are
   * pruned after each successful swap, so storage stays O(1) versions.
+  *
+  * Claim lease: a claimed version carries a `_CLAIM` file (the claim
+  * instant, epoch millis) from the claim rename until its writer's
+  * commit marker exists. A sealed, unmarked version whose lease is
+  * younger than [[ClaimLeaseMs]] belongs to a writer still between its
+  * claim and its marker, so no other writer collects or prunes it and
+  * no reader treats it as an orphan. Only an unleased or expired claim
+  * is a dead writer's orphan.
   */
 object AtomicPublish {
 
@@ -57,6 +65,28 @@ object AtomicPublish {
           case _ => None
         }
     }.flatten
+  }
+
+  /** How long a claimed but uncommitted version is presumed to belong
+    * to a live writer. The claim-to-marker step is a few metadata
+    * operations; a writer that takes longer is treated as dead. */
+  private val ClaimLeaseMs = 60000L
+
+  /** True iff `dir` holds an unexpired claim lease. A lease removed
+    * while it is read was released by a commit. Callers that act on a
+    * `false` must re-check the commit marker afterwards: the writer
+    * writes its marker before it releases the lease. */
+  private def claimLive(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: Path): Boolean = {
+    val f = new Path(dir, "_CLAIM")
+    try {
+      val in = fs.open(f)
+      val since =
+        try scala.io.Source.fromInputStream(in, "UTF-8")
+          .getLines().nextOption().flatMap(_.trim.toLongOption)
+        finally in.close()
+      since.exists(System.currentTimeMillis() - _ < ClaimLeaseMs)
+    } catch { case _: java.io.FileNotFoundException => false }
   }
 
   private def legacyPointer(fs: org.apache.hadoop.fs.FileSystem,
@@ -100,9 +130,10 @@ object AtomicPublish {
 
   /** True iff `v` is a sealed-or-GC-tombstoned ORPHAN: claimed by a
     * writer that crashed before its commit marker (or a tombstone left
-    * when the orphan's directory was collected). Iterating readers skip
-    * these; an id that is neither committed, orphaned, nor beyond the
-    * head must have been PRUNED and is a fail-fast. */
+    * when the orphan's directory was collected). A claim under a live
+    * lease is not an orphan: its writer may still commit it. Iterating
+    * readers skip orphans; an id that is neither committed, orphaned,
+    * nor beyond the head must have been PRUNED and is a fail-fast. */
   def isOrphan(spark: SparkSession, base: String, v: Long): Boolean = {
     val b = new Path(base)
     val fs = fsOf(spark, b)
@@ -110,7 +141,7 @@ object AtomicPublish {
     val tomb = new Path(b, s"_commits/.orphan-v$v")
     if (fs.exists(tomb)) true
     else if (!fs.exists(dir)) false
-    else !isCommitted(spark, base, v) &&
+    else !claimLive(fs, dir) && !isCommitted(spark, base, v) &&
       committed(spark, base) > v // a later commit proves the claim dead
   }
 
@@ -134,6 +165,20 @@ object AtomicPublish {
       val vs = publishedVersions(spark, b)
       if (vs.isEmpty) -1L else vs.max
     }
+  }
+
+  /** The head an ITERATING reader may advance to: [[committed]],
+    * lowered to just below the oldest version a live writer has claimed
+    * but not yet committed. Advancing past such an id would force the
+    * reader to skip it (losing its rows once it commits) or to fail. */
+  def settledHead(spark: SparkSession, base: String): Long = {
+    val b = new Path(base)
+    val fs = fsOf(spark, b)
+    val head = committed(spark, base)
+    val done = committedVersions(spark, b).toSet
+    val inFlight = publishedVersions(spark, b).filter(v =>
+      v < head && !done.contains(v) && claimLive(fs, new Path(b, s"v$v")))
+    if (inFlight.isEmpty) head else inFlight.min - 1
   }
 
   /** True once any version has been committed. */
@@ -306,9 +351,16 @@ object AtomicPublish {
         v += 1
       }
     }
+    afterClaim(base, v)
     commitAndPrune(spark, b, token, v, retain, op)
     v
   }
+
+  /** Runs in [[publish]] between the claim of `v<N>` and its commit
+    * marker, with (base, N). A no-op; tests set it to hold a writer
+    * inside that window. */
+  @volatile private[graft] var afterClaim: (String, Long) => Unit =
+    (_, _) => ()
 
   /** Compare-and-swap publish: stage `datasets`, then commit ONLY if the
     * version lands at exactly `parent + 1` — i.e. no other writer
@@ -383,6 +435,10 @@ object AtomicPublish {
     try marker.write((token +: datasets.map(_._1)).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally marker.close()
+    val lease = fs.create(new Path(stage, "_CLAIM"), true)
+    try lease.write(String.valueOf(System.currentTimeMillis())
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally lease.close()
     stage
   }
 
@@ -408,7 +464,8 @@ object AtomicPublish {
     }
   }
 
-  /** Commit: a per-version marker made visible by rename. Markers are
+  /** Commit: a per-version marker made visible by rename, then the
+    * claim lease is released. Markers are
     * append-only and version-named, so concurrent publishers each
     * commit their own version and [[committed]] (the max) moves
     * monotonically — no pointer clobber. Then prune versions (and
@@ -416,7 +473,7 @@ object AtomicPublish {
     * now-committed maximum; unsealed version dirs at or below the
     * committed id are garbage (pre-claim-protocol partial writes) and
     * are collected so a crashed legacy writer can't park on an id
-    * forever.
+    * forever. Neither step touches another writer's leased claim.
     */
   private def commitAndPrune(spark: SparkSession, b: Path, token: String,
                              v: Long, retain: Int,
@@ -440,9 +497,11 @@ object AtomicPublish {
     finally out.close()
     if (!fs.rename(ctmp, new Path(b, s"_commits/v$v")) && fs.exists(ctmp))
       fs.delete(ctmp, false) // marker already present (crash-retry)
+    fs.delete(new Path(b, s"v$v/_CLAIM"), false)
 
     val cur = committed(spark, b.toString)
-    publishedVersions(spark, b).filter(_ <= cur - retain).foreach { n =>
+    publishedVersions(spark, b).filter(n => n <= cur - retain &&
+      !claimLive(fs, new Path(b, s"v$n"))).foreach { n =>
       fs.delete(new Path(b, s"v$n"), true)
       fs.delete(new Path(b, s"_commits/v$n"), false)
       fs.delete(new Path(b, s"_commits/.orphan-v$n"), false)
@@ -456,11 +515,16 @@ object AtomicPublish {
           // pre-claim-protocol partial write parked on an id: garbage
           fs.delete(st.getPath, true)
         case VDir(n) if st.isDirectory && n.toLong < cur &&
-          n.toLong > legacy && !committedNow.contains(n.toLong) =>
-          // sealed ORPHAN: claimed, never committed, and a LATER commit
-          // exists — the claiming writer is provably dead (tryPublish
-          // deletes its stage on a lost race; only a crash between claim
-          // and marker leaves this). A tombstone keeps the id
+          n.toLong > legacy && !committedNow.contains(n.toLong) &&
+          !claimLive(fs, st.getPath) &&
+          !fs.exists(new Path(b, s"_commits/v$n")) =>
+          // sealed ORPHAN: claimed, never committed, a LATER commit
+          // exists and the claim's lease is gone or expired — the
+          // claiming writer is dead (tryPublish deletes its stage on a
+          // lost race; only a crash between claim and marker leaves
+          // this). The marker is re-checked after the lease because a
+          // committing writer releases its lease only once its marker
+          // exists. A tombstone keeps the id
           // distinguishable from a PRUNED committed version for
           // iterating readers (skip vs fail-fast). Ids <= the legacy
           // pointer are committed without markers and are never touched.

@@ -490,8 +490,10 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
       if (vs.isEmpty) -1L else vs.min - 1
     })
 
+  /** Stops below a version a live publisher has claimed but not yet
+    * committed, so planning never skips it as an orphan. */
   override def latestOffset(): Offset =
-    VersionOffset(graft.io.AtomicPublish.committed(spark, base))
+    VersionOffset(graft.io.AtomicPublish.settledHead(spark, base))
 
   override def deserializeOffset(json: String): Offset =
     VersionOffset("""-?\d+""".r.findFirstIn(json)

@@ -80,6 +80,84 @@ class AtomicPublishSpec extends SparkSpec {
     assert(strays.isEmpty, s"unclaimed stages: ${strays.mkString(",")}")
   }
 
+  test("a writer held between its claim and its commit marker survives " +
+    "another writer's commit") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val base = Files.createTempDirectory("atomic_window").toString + "/t"
+    AtomicPublish.publish(spark, base, Seq("d" -> Seq(0).toDF("x")), retain = 8)
+    val claimed = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    // hold the FIRST writer that claims under this base
+    AtomicPublish.afterClaim = (b, _) =>
+      if (b == base && armed.compareAndSet(true, false)) {
+        claimed.countDown()
+        release.await(120, TimeUnit.SECONDS)
+      }
+    try {
+      var heldV = -1L
+      val held = new Thread(() => heldV = AtomicPublish.publish(spark, base,
+        Seq("d" -> Seq(1, 1).toDF("x")), retain = 8))
+      held.start()
+      assert(claimed.await(120, TimeUnit.SECONDS), "the held writer never claimed")
+      assert(AtomicPublish.committed(spark, base) === 0L)
+
+      // a second writer commits PAST the held claim and runs its GC
+      val v2 = AtomicPublish.publish(spark, base,
+        Seq("d" -> Seq(2, 2, 2).toDF("x")), retain = 8)
+      assert(v2 === 2L)
+      assert(new java.io.File(s"$base/v1/_PUBLISHED").exists(),
+        "another writer's commit must not collect a live claim")
+      assert(!AtomicPublish.isOrphan(spark, base, 1L))
+      assert(AtomicPublish.versions(spark, base) === Seq(0L, 2L))
+      assert(AtomicPublish.settledHead(spark, base) === 0L,
+        "iterating readers must wait below the live claim")
+
+      release.countDown()
+      held.join(120000)
+      assert(heldV === 1L)
+      assert(AtomicPublish.readVersion(spark, base, "d", 1L)
+        .collect().map(_.getInt(0)).toSeq === Seq(1, 1))
+      assert(AtomicPublish.versions(spark, base) === Seq(0L, 1L, 2L))
+      assert(AtomicPublish.committed(spark, base) === 2L)
+      assert(AtomicPublish.settledHead(spark, base) === 2L)
+      assert(!new java.io.File(s"$base/v1/_CLAIM").exists(),
+        "a committed claim releases its lease")
+    } finally {
+      release.countDown()
+      AtomicPublish.afterClaim = (_, _) => ()
+    }
+  }
+
+  test("an expired claim lease is collected as an orphan; a live one is kept") {
+    val base = Files.createTempDirectory("atomic_lease").toString + "/t"
+    AtomicPublish.publish(spark, base, Seq("d" -> Seq(1).toDF("x")), 8)
+    def write(path: String, body: String): Unit = {
+      val w = new java.io.FileWriter(path)
+      try w.write(body) finally w.close()
+    }
+    // sealed, unmarked claims as a writer leaves them after the claim
+    // rename: one from an hour ago (its writer died), one from now
+    def fakeClaim(v: Long, since: Long): java.io.File = {
+      val dir = new java.io.File(s"$base/v$v")
+      dir.mkdirs()
+      write(s"$base/v$v/_PUBLISHED", s"token-$v\nd")
+      write(s"$base/v$v/_CLAIM", since.toString)
+      dir
+    }
+    val dead = fakeClaim(1L, System.currentTimeMillis() - 3600000L)
+    val live = fakeClaim(2L, System.currentTimeMillis())
+
+    val v = AtomicPublish.publish(spark, base, Seq("d" -> Seq(3).toDF("x")), 8)
+    assert(v === 3L)
+    assert(!dead.exists(), "an expired claim is a dead writer's orphan")
+    assert(AtomicPublish.isOrphan(spark, base, 1L))
+    assert(live.exists(), "a live claim must not be collected")
+    assert(!AtomicPublish.isOrphan(spark, base, 2L))
+    assert(AtomicPublish.versions(spark, base) === Seq(0L, 3L))
+    assert(AtomicPublish.settledHead(spark, base) === 1L)
+  }
+
   test("pointer loss recovers from the newest _PUBLISHED version") {
     val base = Files.createTempDirectory("atomic_pub2").toString + "/star"
     AtomicPublish.publish(spark, base, Seq("d" -> Seq(1).toDF("x")))

@@ -61,9 +61,11 @@ import org.apache.spark.sql.functions._
   * spread across buckets) with EXACT string containment as the
   * post-condition. Overlapping key ranges after many merges degrade
   * pruning, never correctness ([[compact]] restores tight ranges by
-  * re-sorting). For SQL row-level DML the key is the ROW IDENTITY and
-  * must be unique; [[applyDelta]] refuses a delete whose key addresses
-  * more live rows than the statement matched.
+  * re-sorting). SQL `UPDATE` and `DELETE` address rows by POSITION
+  * (file, row index), so they need no unique key; only when a commit
+  * lands between their scan and their commit does [[applyDelta]] fall
+  * back to the key, and then it refuses a key that addresses more live
+  * rows than the statement matched.
   *
   * Two merge-on-read extensions complete the row-level story:
   *   - DELETION VECTORS ([[dvDelete]]): a scattered DELETE (GDPR purge,
@@ -1017,6 +1019,48 @@ object CowTable {
     norm(dst.toString)
   }
 
+  /** The cumulative-vector half of every deletion-vector commit: `hits`
+    * carries (file, pos) of newly deleted LIVE rows, `perFile` their
+    * count per file and `touched` the parent entries of those files.
+    * One vector holds the new positions plus each touched file's old
+    * ones, and each touched entry points at it — a driver map over the
+    * cached entry list when the manifest is small, else a join against
+    * the (touched-file-count bounded) per-file delta, so the manifest is
+    * never materialized on the driver. Returns (vector path, manifest,
+    * entry list when cached). */
+  private def vectorManifest(spark: SparkSession, base: String,
+                             mDf: DataFrame, parentEntries: Option[Seq[Entry]],
+                             touched: Seq[Entry], hits: DataFrame,
+                             perFile: Map[String, Long]
+                            ): (String, DataFrame, Option[Seq[Entry]]) = {
+    import spark.implicits._
+    // the touched files' old positions: [[writeVector]] keeps only
+    // basenames, so each old vector is filtered by basename (no join)
+    // and read with its fixed schema (no schema-inference job)
+    val old = touched.filter(_.dv.nonEmpty).groupBy(_.dv).toSeq.map {
+      case (path, es) => spark.read.schema("file STRING, pos BIGINT").parquet(path)
+        .filter(regexp_extract(col("file"), "[^/]+$", 0)
+          .isin(es.map(e => baseName(e.file)): _*))
+    }
+    val dvPath = writeVector(spark, base, old.foldLeft(hits)(_ unionByName _))
+    parentEntries match {
+      case Some(es) =>
+        val all = es.map(e => perFile.get(e.file) match {
+          case Some(n) => e.copy(dv = dvPath, dvRows = e.dvRows + n)
+          case None => e
+        })
+        (dvPath, entriesDf(spark, all), Some(all))
+      case None =>
+        val deltas = perFile.toSeq.toDF("file", "_gf_n")
+        (dvPath, mDf.join(deltas, Seq("file"), "left")
+          .withColumn("dv",
+            when(col("_gf_n").isNotNull, lit(dvPath)).otherwise(col("dv")))
+          .withColumn("dvRows",
+            col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
+          .select(ManifestCols.map(col): _*), None)
+    }
+  }
+
   /** Live rows of `entries`: the raw pool scan minus each file's
     * deletion vector. The anti-join side is broadcast exactly when the
     * manifest's own dvRows total proves it bounded — metadata, not a
@@ -1840,7 +1884,6 @@ object CowTable {
     */
   def dvDelete(spark: SparkSession, base: String, pred: Column,
                retain: Int = 1): Long = {
-    import spark.implicits._
     var result = -1L
     while (result < 0) {
       val parent = AtomicPublish.committed(spark, base)
@@ -1865,33 +1908,8 @@ object CowTable {
       val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // cand-bounded
       if (perFile.isEmpty) return parent // no-op: nothing matches
-      // cumulative vector per affected file: prior positions + new hits
-      val oldDv = cand
-        .filter(e => perFile.contains(e.file) && e.dv.nonEmpty)
-      val allRows =
-        if (oldDv.isEmpty) hits
-        else hits.unionByName(vectorRows(spark, oldDv))
-      val dvPath = writeVector(spark, base, allRows)
-      // cumulative manifest update: a driver map over the cached entry
-      // list when the manifest is small, else a DataFrame join against
-      // the (affected-file-count bounded) per-file delta — the manifest
-      // is never materialized on the driver on the large path
-      val (cum, allEntries) = parentEntries match {
-        case Some(es) =>
-          val all = es.map(e => perFile.get(e.file) match {
-            case Some(n) => e.copy(dv = dvPath, dvRows = e.dvRows + n)
-            case None => e
-          })
-          (entriesDf(spark, all), Some(all))
-        case None =>
-          val deltas = perFile.toSeq.toDF("file", "_gf_n")
-          (mDf.join(deltas, Seq("file"), "left")
-            .withColumn("dv",
-              when(col("_gf_n").isNotNull, lit(dvPath)).otherwise(col("dv")))
-            .withColumn("dvRows",
-              col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
-            .select(ManifestCols.map(col): _*), None)
-      }
+      val (_, cum, allEntries) = vectorManifest(spark, base, mDf,
+        parentEntries, cand.filter(e => perFile.contains(e.file)), hits, perFile)
       casCommit(spark, base, parent, cum, allEntries, None, None,
         retain, "DELETE") match {
         case Some(v) => result = v
@@ -2027,28 +2045,44 @@ object CowTable {
     }
   }
 
-  /** MERGE-ON-READ delta commit: apply a set of key-level DELETES (as
+  /** Deletes addressed by POSITION: the (`file`, `pos`) rows a
+    * row-level scan of committed version `scanVersion` staged, and how
+    * many per file. */
+  case class Positions(scanVersion: Long, rows: DataFrame,
+                       perFile: Map[String, Long])
+
+  /** MERGE-ON-READ delta commit: apply a set of DELETES (as
     * deletion-vector entries — zero data files rewritten) plus a set of
     * INSERT rows (new pool files — nothing read) in ONE committed
-    * version. This is the commit half of the SQL row-level surface
-    * ([[graft.sources.GraftCatalog]]'s `MERGE INTO` / `UPDATE` /
-    * row-level `DELETE`): Spark's delta-based rewrite identifies rows by
-    * the clustering key (`SupportsDelta.rowId`), an UPDATE arrives as
-    * delete+insert, and this method turns the two sets into vectors +
-    * appends. Deleted keys are REDISCOVERED against the current manifest
-    * inside the CAS retry loop — positions are never carried across a
-    * conflicting commit, so a concurrent rewrite of an affected file
-    * cannot misaddress a row (the same recompute-on-conflict discipline
-    * as [[merge]], at key granularity).
+    * version. This is the commit half of the SQL delta-based `UPDATE` /
+    * row-level `DELETE` ([[graft.sources.GraftCatalog]]): Spark's
+    * rewrite identifies each row by its position (`_file`, `_pos`) plus
+    * its clustering key, an UPDATE arrives as delete+insert, and this
+    * method turns the two sets into vectors + appends.
     *
-    * Cost: O(inserts) write + O(files containing a deleted key) scan for
-    * positions + O(deleted rows) vector bytes. Nothing else is read.
+    * With `positions`, while the head is still the version the
+    * statement scanned, the staged positions are unioned with each
+    * touched file's old vector and committed as they are — pool files
+    * are immutable and the scan subtracted every vector, so each names
+    * one live row; nothing is looked up again. Once any commit has
+    * landed after the scan (that attempt and every retry), or without
+    * `positions` (the API callers), `deleteKeys` is the delete set: the
+    * keys' live rows are REDISCOVERED against the current manifest
+    * inside the CAS retry loop, and a key tuple addressing more live
+    * rows than it has delete actions is refused as not unique. A
+    * per-file split would be wrong: a concurrent key update can leave a
+    * staged row's file in the manifest with that row vectored and its
+    * replacement in another file.
+    *
+    * Cost: O(inserts) write + O(deleted rows) vector bytes; the key path
+    * adds a scan of the files that may hold a deleted key.
     */
   def applyDelta(spark: SparkSession, base: String, deleteKeys: DataFrame,
                  inserts: Option[DataFrame], retain: Int = 1,
                  txn: Option[(String, Long)] = None,
                  beforeCommit: () => Unit = () => (),
-                 op: String = "WRITE DELTA"): Long = {
+                 op: String = "WRITE DELTA",
+                 positions: Option[Positions] = None): Long = {
     import spark.implicits._
     val m = meta(spark, base).getOrElse(sys.error(
       s"no table meta under $base — applyDelta needs a created cow table"))
@@ -2066,7 +2100,7 @@ object CowTable {
       tblSchema.fields.find(_.name == k).map(_.dataType)
         .getOrElse(org.apache.spark.sql.types.LongType)
     val kDt = dtOf(ks.head)
-    // the delete-key frame carries the FULL rowId tuple: by name for a
+    // the delete-key frame carries the FULL key tuple: by name for a
     // composite key (Spark's rowIdSchema), positionally for the
     // single-column legacy callers
     val gfk = ks.indices.map(i => s"_gfk_$i")
@@ -2081,24 +2115,23 @@ object CowTable {
       }
     // per-key-TUPLE delete-ACTION counts: Spark emits one delete action
     // per target ROW, so for a key-unique table every tuple carries
-    // count 1, and an UPDATE touching all n duplicates carries n
-    // LAZY checkpoint + one count(): the count materializes the
-    // checkpoint (evaluated once across retries) AND answers the
-    // any-deletes probe — the eager-checkpoint-then-limit(1).count()
-    // form paid two jobs for the same information
-    val keyActions = deleteKeys
+    // count 1, and an UPDATE touching all n duplicates carries n.
+    // LAZY, like everything the key path needs: a position commit never
+    // evaluates it. The checkpoint is evaluated once across retries.
+    lazy val keyActions = deleteKeys
       .select(keyedCols: _*)
       .groupBy(gfk.map(col): _*).agg(count(lit(1)).as("_gf_actions"))
       .localCheckpoint(eager = false)
-    val anyDeletes = keyActions.count() > 0
-    val keys = keyActions.select(col(gfk.head)).distinct()
+    // positions know their delete count from the writers' reports; the
+    // key path's count() also materializes the checkpoint
+    val anyDeletes = positions.fold(keyActions.count() > 0)(_.perFile.nonEmpty)
+    lazy val keys = keyActions.select(col(gfk.head)).distinct()
     // the delete set's tail-column hull — same discovery narrowing as
     // [[merge]] (position rediscovery scans only files that can hold a
     // deleted tuple)
-    val tailBounds =
-      if (!anyDeletes) Nil
-      else tailBoundsOf(keyActions, ks, k => gfk(ks.indexOf(k)), dtOf, m.phys)
-    // pure no-op delta (MERGE whose every action filtered out): nothing
+    lazy val tailBounds =
+      tailBoundsOf(keyActions, ks, k => gfk(ks.indexOf(k)), dtOf, m.phys)
+    // pure no-op delta (nothing deleted, nothing inserted): nothing
     // to write, nothing to commit — the parent version IS the result
     // (a txn-stamped no-op still commits, to record its batch id)
     if (!anyDeletes && newEntries.isEmpty && txn.isEmpty)
@@ -2117,6 +2150,23 @@ object CowTable {
       val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
       val (cum, cumEntries) =
         if (!anyDeletes) (mDf, parentEntries)
+        else if (positions.exists(_.scanVersion == parent)) {
+          // the head is the scanned snapshot: every staged position
+          // names a live row of a file still in this manifest
+          val p = positions.get
+          val touched = parentEntries match {
+            case Some(es) => es.filter(e => p.perFile.contains(e.file))
+            case None => collectEntries(mDf.join(
+              p.perFile.keys.toSeq.toDF("file"), Seq("file")))
+          }
+          require(touched.size == p.perFile.size,
+            s"staged delete positions name files missing from v$parent " +
+              s"of $base: ${p.perFile.keySet -- touched.map(_.file)}")
+          val (dvPath, c, ce) = vectorManifest(spark, base, mDf,
+            parentEntries, touched, p.rows, p.perFile)
+          staleDv = Some(dvPath)
+          (c, ce)
+        }
         else {
           val cand = collectEntries(discoverCandidates(mDf, keys,
             m.phys(ks.head), kDt).filter(tailMayIntersect(tailBounds)))
@@ -2139,13 +2189,12 @@ object CowTable {
               .select(col("_gf_file").as("file") +: col("_gf_pos").as("pos")
                 +: gfk.map(col): _*)
               .localCheckpoint(eager = false)
-            // ROW-IDENTITY GUARD: the delta protocol deletes by key
-            // tuple, so a tuple matching MORE live rows than it has
-            // delete actions would silently vector out rows the
-            // statement never touched (the duplicate-key UPDATE
-            // data-loss anomaly). Refuse — the table violates the
-            // clustering-key-as-row-identity contract the SQL row-level
-            // surface requires.
+            // ROW-IDENTITY GUARD: this path deletes by key tuple, so a
+            // tuple matching MORE live rows than it has delete actions
+            // would silently vector out rows the statement never
+            // touched (the duplicate-key UPDATE data-loss anomaly).
+            // Refuse — the table violates the clustering-key-as-row-
+            // identity contract the key path requires.
             val over = hitRows.groupBy(gfk.map(col): _*)
               .agg(count(lit(1)).as("n"))
               .join(keyActions, gfk)
@@ -2159,7 +2208,7 @@ object CowTable {
                 s"${r.getLong(gfk.size + 1)} delete action(s) address " +
                 "it — a key-identified delete would drop rows the " +
                 "statement never matched; deduplicate the table (or " +
-                "merge by key) before using SQL row-level DML"
+                "merge by key) before deleting by key"
             })
             val hits = hitRows.select(col("file"), col("pos"))
             val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
@@ -2167,30 +2216,11 @@ object CowTable {
               .toMap // candidate-file-count bounded
             if (perFile.isEmpty) (mDf, parentEntries)
             else {
-              val oldDv = cand
-                .filter(e => perFile.contains(e.file) && e.dv.nonEmpty)
-              val allRows =
-                if (oldDv.isEmpty) hits
-                else hits.unionByName(vectorRows(spark, oldDv))
-              val dvPath = writeVector(spark, base, allRows)
+              val (dvPath, c, ce) = vectorManifest(spark, base, mDf,
+                parentEntries, cand.filter(e => perFile.contains(e.file)),
+                hits, perFile)
               staleDv = Some(dvPath)
-              parentEntries match {
-                case Some(es) =>
-                  val all = es.map(e => perFile.get(e.file) match {
-                    case Some(n) => e.copy(dv = dvPath, dvRows = e.dvRows + n)
-                    case None => e
-                  })
-                  (entriesDf(spark, all), Some(all))
-                case None =>
-                  val deltas = perFile.toSeq.toDF("file", "_gf_n")
-                  (mDf.join(deltas, Seq("file"), "left")
-                    .withColumn("dv",
-                      when(col("_gf_n").isNotNull, lit(dvPath))
-                        .otherwise(col("dv")))
-                    .withColumn("dvRows",
-                      col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
-                    .select(ManifestCols.map(col): _*), None)
-              }
+              (c, ce)
             }
           }
         }

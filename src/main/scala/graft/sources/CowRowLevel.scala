@@ -21,10 +21,13 @@ import graft.io.{AtomicPublish, CowTable, LocalParquet}
   * Spark's runtime target-file pruning). Spark's row-level framework
   * rewrites the statement against a [[SupportsDelta]] operation into a
   * stream of per-row actions identified by `rowId`; here the row id is
-  * the table's CLUSTERING KEY, so:
+  * the row's POSITION — the virtual (`_file`, `_pos`) metadata columns
+  * the scan already reads, as in Iceberg's position deltas — followed
+  * by the clustering-key columns, so:
   *
-  *   - a DELETE action is a doomed key → committed as deletion-vector
-  *     entries (O(deleted rows) bytes, ZERO data files rewritten);
+  *   - a DELETE action is a doomed (file, position) → committed as
+  *     deletion-vector entries (O(deleted rows) bytes, ZERO data files
+  *     rewritten);
   *   - an INSERT action is a new row → staged once, committed as new
   *     pool files (nothing read);
   *   - an UPDATE is represented as DELETE + INSERT
@@ -36,25 +39,31 @@ import graft.io.{AtomicPublish, CowTable, LocalParquet}
   * encoded by Spark's own `ParquetWriteSupport` (so every Catalyst type
   * the table holds stages and reads back exactly) with
   * task-attempt-unique file names (only COMMITTED tasks' files are
-  * read — a retried task's partial file is never picked up); the driver
-  * commit turns them into one [[graft.io.CowTable.applyDelta]] version,
-  * whose CAS loop REDISCOVERS key positions against the current
-  * manifest on conflict — positions never carry across a competing
-  * commit.
+  * read — a retried task's partial file is never picked up), and each
+  * task reports how many positions it staged per file. The driver
+  * commit turns them into one [[graft.io.CowTable.applyDelta]] version.
+  * While the table's head is still the version the scan read, the
+  * staged positions are unioned into each file's vector as they are —
+  * no row is looked up again, so a duplicate-key table updates exactly
+  * the matched rows. Once any commit has landed after the scan, a
+  * position may name a row that commit already replaced, so the
+  * commit falls back to the staged KEYS: it rediscovers their live
+  * rows against the current manifest and refuses (loudly, pre-commit)
+  * a key that addresses more live rows than the statement matched.
   *
   * Scale note (read side): row-level `UPDATE`/`DELETE` predicates push
   * into this scan at planning, so their target read is footer-pruned to
   * the files that may match, and the write is O(deleted rows) in vector
-  * bytes — the right trade for scattered predicates. Key-identity
-  * contract: the key is the row identity and must be unique across the
-  * addressed rows; [[graft.io.CowTable.applyDelta]] refuses (loudly,
-  * pre-commit) when a delete key addresses more live rows than the
-  * statement matched.
+  * bytes — the right trade for scattered predicates.
   */
 private[sources] class CowRowLevelOperation(base: String, key: String,
                                             tableSchema: StructType,
                                             cmd: RowLevelOperation.Command)
   extends RowLevelOperation with SupportsDelta {
+
+  /** The committed version the target scan planned against: the
+    * staged positions address rows of exactly this snapshot. */
+  @volatile private[sources] var scanVersion: Option[Long] = None
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -64,31 +73,34 @@ private[sources] class CowRowLevelOperation(base: String, key: String,
     val spark = SparkSession.active
     val v = AtomicPublish.committed(spark, base)
     require(v >= 0, s"no committed version under $base")
+    scanVersion = Some(v)
     new ArtifactScanBuilder(base, "manifest", None, cow = true,
       s"$base/v$v/manifest", tableSchema)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new CowDeltaWrite(base, key, info, cmd)
+      override def build(): DeltaWrite =
+        new CowDeltaWrite(base, info, CowRowLevelOperation.this)
     }
 
-  /** The row identity: EVERY clustering-key column (composite keys —
-    * the reference's SCD2/fact grains — delete by the full tuple). */
+  /** The row identity: the row's position (`_file`, `_pos`), then EVERY
+    * clustering-key column — the keys serve only the commit's fallback
+    * when another commit landed after the scan. */
   override def rowId(): Array[NamedReference] =
-    CowTable.splitKeys(key).map(Expressions.column).toArray
+    (Seq(ArtifactScan.FileCol, ArtifactScan.PosCol) ++ CowTable.splitKeys(key))
+      .map(Expressions.column).toArray
 
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
-  override def description(): String = s"cow-delta $cmd on $base (rowId=$key)"
+  override def description(): String =
+    s"cow-delta $cmd on $base (rowId=_file, _pos, $key)"
 }
 
-private[sources] class CowDeltaWrite(base: String, key: String,
-                                     info: LogicalWriteInfo,
-                                     cmd: RowLevelOperation.Command)
+private[sources] class CowDeltaWrite(base: String, info: LogicalWriteInfo,
+                                     op: CowRowLevelOperation)
   extends DeltaWrite {
-  override def toBatch: DeltaBatchWrite =
-    new CowDeltaBatchWrite(base, key, info, cmd)
+  override def toBatch: DeltaBatchWrite = new CowDeltaBatchWrite(base, info, op)
   override def description(): String = s"cow-delta write to $base"
 }
 
@@ -271,22 +283,28 @@ private[sources] class CowReplaceTaskWriter(staging: String,
 
 /** Per-task staged files, listed EXPLICITLY (never by directory scan):
   * a failed/retried task attempt's partial files are simply never
-  * referenced. */
+  * referenced. `deleteCounts` is the number of staged delete positions
+  * per pool file, so the commit needs no job to count them. */
 private[sources] case class CowDeltaMessage(insertFiles: Seq[String],
-                                            deleteFiles: Seq[String])
+                                            deleteFiles: Seq[String],
+                                            deleteCounts: Map[String, Long])
   extends WriterCommitMessage
 
-private[sources] class CowDeltaBatchWrite(base: String, key: String,
+private[graft] object CowDeltaBatchWrite {
+  /** Runs in [[CowDeltaBatchWrite.commit]] between staging and
+    * [[graft.io.CowTable.applyDelta]], with the table's base. A no-op;
+    * tests set it to land a competing commit after the scan. */
+  @volatile private[graft] var afterStage: String => Unit = _ => ()
+}
+
+private[sources] class CowDeltaBatchWrite(base: String,
                                           info: LogicalWriteInfo,
-                                          cmd: RowLevelOperation.Command)
+                                          op: CowRowLevelOperation)
   extends DeltaBatchWrite {
 
   private val staging = s"$base/.delta-${info.queryId()}"
   private val dataSchema = info.schema()
-  private val rowIdSchema: StructType =
-    if (info.rowIdSchema().isPresent) info.rowIdSchema().get()
-    else CowTable.splitKeys(key)
-      .foldLeft(new StructType())((s, k) => s.add(k, LongType))
+  private val rowIdSchema: StructType = info.rowIdSchema().get()
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory =
     new CowDeltaWriterFactory(staging, dataSchema, rowIdSchema,
@@ -297,21 +315,27 @@ private[sources] class CowDeltaBatchWrite(base: String, key: String,
     val msgs = messages.collect { case m: CowDeltaMessage => m }
     val ins = msgs.flatMap(_.insertFiles).toSeq
     val dels = msgs.flatMap(_.deleteFiles).toSeq
+    val perFile = msgs.toSeq.flatMap(_.deleteCounts)
+      .groupMapReduce(_._1)(_._2)(_ + _)
     try {
+      CowDeltaBatchWrite.afterStage(base)
       if (ins.nonEmpty || dels.nonEmpty) {
         val inserts =
           if (ins.isEmpty) None
           else Some(spark.read.schema(dataSchema).parquet(ins: _*))
-        val deleteKeys =
+        val staged = {
+          val schema = StructType(rowIdSchema.fields.map(_.copy(nullable = true)))
           if (dels.isEmpty)
             spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              StructType(rowIdSchema.fields.map(_.copy(nullable = true))))
-          else spark.read.schema(
-            StructType(rowIdSchema.fields.map(_.copy(nullable = true))))
-            .parquet(dels: _*)
-        CowTable.applyDelta(spark, base, deleteKeys, inserts,
-          op = cmd.toString) // DELETE / UPDATE / MERGE, as issued
+              java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+          else spark.read.schema(schema).parquet(dels: _*)
+        }
+        CowTable.applyDelta(spark, base,
+          staged.drop(ArtifactScan.FileCol, ArtifactScan.PosCol), inserts,
+          op = op.command().toString, // DELETE / UPDATE, as issued
+          positions = op.scanVersion.map(v => CowTable.Positions(v,
+            staged.select(col(ArtifactScan.FileCol).as("file"),
+              col(ArtifactScan.PosCol).as("pos")), perFile)))
       }
     } finally cleanup()
   }
@@ -341,7 +365,8 @@ private[sources] class CowDeltaWriterFactory(staging: String,
   * task-attempt-unique parquet files through Spark's own
   * `ParquetWriteSupport` ([[graft.io.LocalParquet.writer]]; no Spark
   * write job inside a write job), opened lazily so a task with no
-  * actions stages nothing. */
+  * actions stages nothing. Deleted positions are counted per file as
+  * they stream past. */
 private[sources] class CowDeltaTaskWriter(staging: String,
                                           dataSchema: StructType,
                                           rowIdSchema: StructType,
@@ -351,6 +376,8 @@ private[sources] class CowDeltaTaskWriter(staging: String,
 
   private val insertPath = s"$staging/inserts/part-$partitionId-$taskId.parquet"
   private val deletePath = s"$staging/deletes/part-$partitionId-$taskId.parquet"
+  private val fileOrd = rowIdSchema.fieldIndex(ArtifactScan.FileCol)
+  private val deleteCounts = scala.collection.mutable.HashMap.empty[String, Long]
   private var insertWriter: ParquetWriter[InternalRow] = _
   private var deleteWriter: ParquetWriter[InternalRow] = _
 
@@ -364,6 +391,8 @@ private[sources] class CowDeltaTaskWriter(staging: String,
     if (deleteWriter == null)
       deleteWriter = LocalParquet.writer(new Path(deletePath), rowIdSchema, conf.value)
     deleteWriter.write(id)
+    val f = id.getUTF8String(fileOrd).toString
+    deleteCounts(f) = deleteCounts.getOrElse(f, 0L) + 1L
   }
 
   /** Unreachable with `representUpdateAsDeleteAndInsert = true`; kept
@@ -378,7 +407,7 @@ private[sources] class CowDeltaTaskWriter(staging: String,
               else Seq.empty
     val del = if (deleteWriter != null) { deleteWriter.close(); Seq(deletePath) }
               else Seq.empty
-    CowDeltaMessage(ins, del)
+    CowDeltaMessage(ins, del, deleteCounts.toMap)
   }
 
   override def abort(): Unit = close()

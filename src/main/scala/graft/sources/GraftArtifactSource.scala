@@ -450,16 +450,16 @@ private[sources] class ArtifactScan(base: String, dataset: String,
       java.util.OptionalLong.of(keptFiles.map(_.rows).sum)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  override def createReaderFactory(): PartitionReaderFactory =
     // the reader projects by PHYSICAL field name; output rows are
     // positional, so Spark still sees the logical `required` schema.
-    // `_file` is virtual and never mapped.
-    val requiredPhys = StructType(required.fields.map(f =>
-      if (f.name == ArtifactScan.FileCol) f
-      else f.copy(name = physName(f.name))))
-    ArtifactReaderFactory(requiredPhys, pushedPhys.toSeq,
-      vectored = keptFiles.exists(_.dv.nonEmpty))
-  }
+    // `_file` and `_pos` are never mapped, and are data, not virtual,
+    // when the table has a column of that name (which then hides the
+    // metadata column from Spark).
+    ArtifactReaderFactory(
+      StructType(required.fields.map(f => f.copy(name = physName(f.name)))),
+      pushedPhys.toSeq, vectored = keptFiles.exists(_.dv.nonEmpty),
+      dataCols = full.fieldNames.map(physName).toSet)
 
   override def description(): String =
     s"graft-artifact $dir pushed=[${pushed.mkString(", ")}] " +
@@ -787,6 +787,12 @@ private[sources] object ArtifactScan {
     * runtime group filtering prunes row-level rewrites on. */
   val FileCol = "_file"
 
+  /** The virtual metadata column giving each row's position in its file
+    * (the parquet row index, counted over the whole file whatever row
+    * groups a pushed filter skips) — with `_file`, the row id of SQL
+    * `UPDATE` and `DELETE`, and the address a deletion vector stores. */
+  val PosCol = "_pos"
+
   /** A file surviving footer pruning, with the statistics the prune
     * pass read for free: LIVE rows (footer row count minus the
     * manifest's deletion-vector count) and compressed bytes. */
@@ -870,13 +876,15 @@ private[sources] object ArtifactScan {
   *   - the data read projects the PHYSICAL required columns plus Spark's
   *     row-index column, with the pushed filters as row-group
   *     predicates; a column a file predates fills its `EXISTS_DEFAULT`
-  *     (else NULL), and the virtual `_file` column rides in as the
-  *     file's constant partition value;
+  *     (else NULL), the virtual `_file` column rides in as the file's
+  *     constant partition value, and the virtual `_pos` column is the
+  *     row index;
   *   - with `vectored`, a second read of `(file, pos)` serves the
   *     deletion-vector parts. Positions are Spark's row index, which
   *     stays the file position however many row groups the pushed
   *     filters skip, so vectored files keep their pushdown. */
 private[sources] class ArtifactReaderFactory(required: StructType,
+                                             virtual: Set[String],
                                              read: ArtifactReaderFactory.Read,
                                              readDv: Option[ArtifactReaderFactory.Read])
   extends PartitionReaderFactory {
@@ -906,17 +914,20 @@ private[sources] class ArtifactReaderFactory(required: StructType,
   /** Applies the scan's read to this partition's file. A read row is
     * the data fields, the row index, then `_file`; rows whose index the
     * file's deletion vector names are dropped, and the rest are
-    * projected to `required`. */
+    * projected to `required` (`_pos` is the row index). */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArtifactPartition]
-    val data = required.fields.filter(_.name != ArtifactScan.FileCol)
+    val data = required.fields.filterNot(f => virtual(f.name))
     var ord = -1
     val out = UnsafeProjection.create(required.fields.toSeq.map { f =>
-      if (f.name == ArtifactScan.FileCol)
-        BoundReference(data.length + 1, StringType, nullable = false)
-      else {
-        ord += 1
-        BoundReference(ord, f.dataType, nullable = true)
+      f.name match {
+        case ArtifactScan.FileCol if virtual(f.name) =>
+          BoundReference(data.length + 1, StringType, nullable = false)
+        case ArtifactScan.PosCol if virtual(f.name) =>
+          BoundReference(data.length, LongType, nullable = false)
+        case _ =>
+          ord += 1
+          BoundReference(ord, f.dataType, nullable = true)
       }
     })
     val rows = read(partitioned(part.path,
@@ -946,18 +957,21 @@ private[sources] object ArtifactReaderFactory {
 
   type Read = PartitionedFile => Iterator[InternalRow]
 
-  /** Built on the driver. `required` carries PHYSICAL names (the `_file`
-    * column excepted); `filters` are pushed on physical names too. */
-  def apply(required: StructType, filters: Seq[Filter],
-            vectored: Boolean): ArtifactReaderFactory = {
-    val data = StructType(required.fields.filter(_.name != ArtifactScan.FileCol))
+  /** Built on the driver. `required` and `filters` carry PHYSICAL
+    * names; `dataCols` are the table's columns, so a `_file` or `_pos`
+    * among them is read as data. */
+  def apply(required: StructType, filters: Seq[Filter], vectored: Boolean,
+            dataCols: Set[String] = Set.empty): ArtifactReaderFactory = {
+    val virtual = Set(ArtifactScan.FileCol, ArtifactScan.PosCol)
+      .filter(n => required.fieldNames.contains(n) && !dataCols(n))
+    val data = StructType(required.fields.filterNot(f => virtual(f.name)))
     val rowIndex = StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
       LongType)
     val file = StructType(Seq(StructField(ArtifactScan.FileCol, StringType,
       nullable = false)))
     val dv = StructType(Seq(StructField("file", StringType),
       StructField("pos", LongType)))
-    new ArtifactReaderFactory(required,
+    new ArtifactReaderFactory(required, virtual,
       build(data.add(rowIndex), file, filters),
       if (vectored) Some(build(dv, new StructType(), Nil)) else None)
   }

@@ -1335,9 +1335,9 @@ object GraftCatalog {
     *     no vectors, i.e. runtime pruning works off the leading key's
     *     ranges);
     *   - a SQL `UPDATE` whose predicate selects SOME orders of
-    *     multi-order customers (delta route; rowId = the full tuple — a
-    *     single-column identity would be refused by the row-identity
-    *     guard, which CowTableSpec pins) landing as deletion vectors;
+    *     multi-order customers (delta route; rows are addressed by
+    *     position, with the full key tuple riding along for the
+    *     commit's key fallback) landing as deletion vectors;
     *   - the catalog read and API read agree.
     *
     * The oracle replays all three statements relationally. */
@@ -1388,8 +1388,8 @@ object GraftCatalog {
       require(m.map(_.dvRows).sum == 0L,
         "a group-based SQL MERGE is copy-on-write: no deletion vectors")
 
-      // SOME orders of multi-order customers: tuple-grain row identity
-      // on the delta route (the leading key alone addresses ~10 rows)
+      // SOME orders of multi-order customers on the delta route (the
+      // leading key alone addresses ~10 rows)
       spark.sql(s"UPDATE graft.`$base` SET o_totalprice = o_totalprice * 2 " +
         "WHERE o_orderkey % 5 = 1")
       require(CowTable.manifest(spark, base).exists(_.dvRows > 0),
@@ -1534,8 +1534,9 @@ private[sources] class CowSqlTable(base: String,
     s"graft.`$base`" + pinned.fold("")(v => s"@v$v")
 
   /** The meta schema with every clustering-key column marked NON-NULL —
-    * the key tuple is the row identity ([[CowRowLevelOperation.rowId]]
-    * requires non-nullable attributes), and [[CowTable]]'s pool writer
+    * the key columns ride in [[CowRowLevelOperation.rowId]] (after
+    * `_file` and `_pos`, for the commit's key fallback), Spark requires
+    * non-nullable row-id attributes, and [[CowTable]]'s pool writer
     * enforces the invariant on every write. */
   override def schema(): StructType = {
     val m = tableMeta
@@ -1609,18 +1610,24 @@ private[sources] class CowSqlTable(base: String,
     ()
   }
 
-  /** The virtual `_file` metadata column: selectable from SQL, and the
-    * grouping attribute runtime group filtering prunes the group-based
-    * MERGE's target scan on. */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = ArtifactScan.FileCol
-      override def dataType(): DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String =
-        "physical pool file serving this row (manifest-stored form)"
-    })
+  /** The virtual `_file` and `_pos` metadata columns: selectable from
+    * SQL; `_file` is the grouping attribute runtime group filtering
+    * prunes the group-based MERGE's target scan on, and (`_file`,
+    * `_pos`) is the row id of the delta-based UPDATE and DELETE. */
+  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
+    def column(n: String, dt: DataType, doc: String) =
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = n
+        override def dataType(): DataType = dt
+        override def isNullable: Boolean = false
+        override def comment(): String = doc
+      }
+    Array(
+      column(ArtifactScan.FileCol, org.apache.spark.sql.types.StringType,
+        "physical pool file serving this row (manifest-stored form)"),
+      column(ArtifactScan.PosCol, org.apache.spark.sql.types.LongType,
+        "position of this row in its pool file (parquet row index)"))
+  }
 
   // ---- MERGE INTO / UPDATE / row-level DELETE ----------------------
   /** MERGE takes the GROUP-BASED route (runtime file pruning + whole-

@@ -124,6 +124,51 @@ class CowDvSpec extends SparkSpec {
       "the pushed filter must skip the first row group of a vectored file")
   }
 
+  test("_pos is each row's position in its file, with or without a " +
+    "pushed filter, and never names a vectored row") {
+    val base = Files.createTempDirectory("cow_pos").toString + "/t"
+    spark.conf.set("parquet.block.size", "1024")
+    spark.conf.set("parquet.block.size.row.check.min", "50")
+    spark.conf.set("parquet.block.size.row.check.max", "50")
+    try CowTable.create(spark, base, table(1000), "id", numFiles = 2)
+    finally Seq("parquet.block.size", "parquet.block.size.row.check.min",
+      "parquet.block.size.row.check.max").foreach(spark.conf.unset)
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // pool files are written key-sorted, so a row's position is its
+    // rank among its file's ids
+    val truth = CowTable.manifest(spark, base).flatMap { e =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(e.file), conf))
+      try assert(in.getRowGroups.size >= 3, s"${e.file}: too few row groups")
+      finally in.close()
+      spark.read.parquet(e.file).select("id").as[Long].collect().sorted
+        .zipWithIndex.map { case (id, i) => (e.file, i.toLong, id) }
+    }
+    CowTable.dvDelete(spark, base, col("id") % 7 === 0)
+    val live = truth.filter(_._3 % 7 != 0).toSet
+    def positions(where: String) =
+      spark.sql(s"SELECT _file, _pos, id FROM graft.`$base` $where")
+        .as[(String, Long, Long)]
+    assert(positions("").collect().toSet === live)
+    val pushed = positions("WHERE id > 120")
+    assert(pushed.collect().toSet === live.filter(_._3 > 120))
+    val scanned = pushed.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        s.metrics("numOutputRows").value
+    }.sum
+    assert(scanned < live.size,
+      "the pushed filter must skip the first row group of a vectored file")
+    // a table column named `_pos` hides the metadata column: it is data
+    val own = Files.createTempDirectory("cow_posdata").toString + "/t"
+    CowTable.create(spark, own, Seq((1L, 7L), (2L, 9L)).toDF("id", "_pos"),
+      "id", numFiles = 1)
+    assert(spark.sql(s"SELECT id, _pos FROM graft.`$own`").as[(Long, Long)]
+      .collect().toSet === Set((1L, 7L), (2L, 9L)))
+  }
+
   test("changes: row-level diff from changed files only, no-ops dropped") {
     val base = Files.createTempDirectory("cow_cdf").toString + "/t"
     val v0 = CowTable.create(spark, base, table(100), "id",

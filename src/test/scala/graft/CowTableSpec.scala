@@ -428,13 +428,19 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "WHERE user_name = 'user_0007'")
     assert(CowTable.read(spark, base)
       .filter(col("user_name") === "user_0007").head().getDouble(1) === 107.0)
-    // duplicate-name table: partial UPDATE refuses (row-identity guard)
+    // duplicate-name table: a partial UPDATE addresses rows by position
+    // and changes only its match; a delete by name refuses
+    // (row-identity guard)
     val dup = Files.createTempDirectory("cow_strdup").toString + "/t"
     CowTable.create(spark, dup,
       Seq(("a", 1.0, "x"), ("a", 2.0, "y"), ("b", 3.0, "z"))
         .toDF("user_name", "v", "tag"), "user_name", numFiles = 1)
+    spark.sql(s"UPDATE graft.`$dup` SET v = 0.0 WHERE tag = 'x'")
+    assert(CowTable.read(spark, dup).as[(String, Double, String)].collect()
+      .sortBy(_._3).toSeq === Seq(("a", 0.0, "x"), ("a", 2.0, "y"),
+        ("b", 3.0, "z")))
     val e = intercept[Exception] {
-      spark.sql(s"UPDATE graft.`$dup` SET v = 0.0 WHERE tag = 'x'")
+      CowTable.applyDelta(spark, dup, Seq("a").toDF("user_name"), None)
     }
     assert(e.getMessage.contains("not unique"))
   }
@@ -501,9 +507,8 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(feed === Map("update" -> 1L, "delete" -> 1L, "insert" -> 1L))
 
-    // SQL row-level DML by tuple through the catalog: rowId = both
-    // columns, so updating one version of a multi-version user passes
-    // the row-identity guard (a user_id-only identity would refuse)
+    // SQL row-level DML through the catalog updates one version of a
+    // multi-version user
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.GraftCatalog].getName)
     spark.sql(s"UPDATE graft.`$base` SET status = 'Z' " +
@@ -513,15 +518,18 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(CowTable.manifest(spark, base).exists(_.dvRows > 0),
       "the tuple-identified UPDATE must land as deletion vectors")
 
-    // the SAME data keyed on user_id alone violates row identity: the
-    // guard refuses instead of vectoring rows the statement never hit
+    // the SAME data keyed on user_id alone violates row identity: SQL
+    // addresses rows by position and updates only the matched version,
+    // while a delete by key refuses instead of vectoring rows the
+    // statement never hit
     val single = Files.createTempDirectory("cow_comp1").toString + "/t"
     CowTable.create(spark, single, scd, "user_id", numFiles = 1)
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.GraftCatalog].getName)
+    spark.sql(s"UPDATE graft.`$single` SET status = 'Z' " +
+      "WHERE user_id = 1 AND effective_from = DATE '2023-06-01'")
+    assert(CowTable.read(spark, single).filter(col("user_id") === 1L)
+      .select("status").as[String].collect().sorted.toSeq === Seq("A", "Z"))
     val e = intercept[Exception] {
-      spark.sql(s"UPDATE graft.`$single` SET status = 'Z' " +
-        "WHERE user_id = 1 AND effective_from = DATE '2023-06-01'")
+      CowTable.applyDelta(spark, single, Seq(1L).toDF("user_id"), None)
     }
     assert(e.getMessage.contains("not unique"))
 

@@ -584,23 +584,80 @@ class GraftCatalogSpec extends SparkSpec {
     assert(got.filter(col("id") === 200).count() === 1L)
   }
 
-  test("a key-identified UPDATE on a duplicate-key table refuses instead " +
-    "of silently dropping the unmatched duplicate") {
+  test("SQL UPDATE on a duplicate-key table changes only its match") {
     val base = Files.createTempDirectory("gcat_dupk").toString + "/t"
-    // key 1 appears twice — legal for the API (merge replaces by key),
-    // fatal for SQL row-level DML, whose rowId IS the key
+    // key 1 appears twice — legal for the API (merge replaces by key);
+    // SQL UPDATE and DELETE address rows by position, not by key
     CowTable.create(spark, base,
       Seq((1L, "a", 1.0), (1L, "b", 2.0), (2L, "c", 3.0))
         .toDF("id", "nm", "amt"), "id", numFiles = 1)
+    spark.sql(s"UPDATE graft.`$base` SET amt = 9.0 WHERE nm = 'a'")
+    def rows = CowTable.read(spark, base).as[(Long, String, Double)]
+      .collect().sortBy(_._2).toSeq
+    assert(rows === Seq((1L, "a", 9.0), (1L, "b", 2.0), (2L, "c", 3.0)))
+    // the key path (the API, and SQL's fallback after a competing
+    // commit) keeps its row-identity guard
     val e = intercept[Exception] {
-      spark.sql(s"UPDATE graft.`$base` SET amt = 9.0 WHERE nm = 'a'")
+      CowTable.applyDelta(spark, base, Seq(1L).toDF("id"), inserts = None)
     }
     assert(e.getMessage.contains("not unique"),
       s"expected the row-identity guard, got: ${e.getMessage}")
-    // nothing was lost OR changed: the statement failed atomically
-    assert(CowTable.read(spark, base).count() === 3L)
-    assert(CowTable.read(spark, base)
-      .agg(sum("amt")).head().getDouble(0) === 6.0)
+    assert(rows === Seq((1L, "a", 9.0), (1L, "b", 2.0), (2L, "c", 3.0)),
+      "the refused delete changed nothing")
+  }
+
+  /** Runs `stmt` with `race` committed between its staging and its
+    * commit, so the commit sees a head past the scanned version. */
+  private def racing(race: => Unit)(stmt: => Unit): Unit = {
+    var fired = false
+    graft.sources.CowDeltaBatchWrite.afterStage = _ =>
+      if (!fired) { fired = true; race }
+    try stmt finally graft.sources.CowDeltaBatchWrite.afterStage = _ => ()
+    assert(fired, "the statement never reached its commit")
+  }
+
+  test("SQL DELETE and UPDATE racing a merge that rewrites a staged row's " +
+    "file fall back to keys: both changes land") {
+    Seq("DELETE", "UPDATE").foreach { stmt =>
+      val base = Files.createTempDirectory("gcat_fbm").toString + "/t"
+      CowTable.create(spark, base, table(100), "id", numFiles = 4)
+      // the statement addresses ids 5 and 55; the merge rewrites the
+      // file holding id 5, so its staged position names a dead file
+      racing(CowTable.merge(spark, base,
+        table(100).filter(col("id") <= 10)
+          .withColumn("amt", col("amt") + 1000.0), "id")) {
+        if (stmt == "DELETE")
+          spark.sql(s"DELETE FROM graft.`$base` WHERE id % 50 = 5")
+        else spark.sql(s"UPDATE graft.`$base` SET nm = 'upd' WHERE id % 50 = 5")
+      }
+      val got = CowTable.read(spark, base).as[(Long, String, Double)]
+        .collect().toSeq
+      val hit = got.filter(r => r._1 == 5L || r._1 == 55L)
+      if (stmt == "DELETE") assert(hit.isEmpty, s"$stmt: $hit")
+      else assert(hit.map(_._2) === Seq("upd", "upd"), s"$stmt: $hit")
+      assert(got.size === (if (stmt == "DELETE") 98 else 100), stmt)
+      assert(got.map(_._1).distinct.size === got.size,
+        s"$stmt: one live row per key")
+      assert(got.find(_._1 == 7L).get._3 === 1070.0,
+        s"$stmt: the competing merge's update must survive")
+    }
+  }
+
+  test("a SQL UPDATE racing a key-path update of the same key equals the " +
+    "two run one after the other") {
+    val base = Files.createTempDirectory("gcat_fbk").toString + "/t"
+    CowTable.create(spark, base, table(100), "id", numFiles = 4)
+    // the key update vectors id 5 in its file (which stays in the
+    // manifest) and inserts its new row into a new file
+    racing(CowTable.applyDelta(spark, base, Seq(5L).toDF("id"),
+      inserts = Some(Seq((5L, "key", 500.0)).toDF("id", "nm", "amt")))) {
+      spark.sql(s"UPDATE graft.`$base` SET nm = 'sql', amt = 1.0 WHERE id = 5")
+    }
+    val got = CowTable.read(spark, base).as[(Long, String, Double)]
+      .collect().sortBy(_._1).toSeq
+    val serial = table(100).as[(Long, String, Double)].collect().toSeq
+      .map(r => if (r._1 == 5L) (5L, "sql", 1.0) else r)
+    assert(got === serial)
   }
 
   test("an UPDATE addressing ALL duplicates of a key commits (actions " +

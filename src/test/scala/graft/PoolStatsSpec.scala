@@ -266,6 +266,25 @@ class PoolStatsSpec extends SparkSpec {
         "extra scan) crept back into the write path")
   }
 
+  test("job budget: SQL DELETE and UPDATE commit their staged positions " +
+    "without a second scan") {
+    val base = Files.createTempDirectory("pstats_sqljobs").toString + "/t"
+    CowTable.create(spark, base, wide(1, 200), "id", numFiles = 4, retain = 10,
+      statsCols = Seq("d"))
+    // scattered over all four files; then one file's key range
+    val del = jobsOf(spark.sql(s"DELETE FROM graft.`$base` WHERE id % 7 = 3"))
+    val upd = jobsOf(spark.sql(
+      s"UPDATE graft.`$base` SET n = n + 100 WHERE id BETWEEN 5 AND 9"))
+    assert(checkHead(base, "SQL UPDATE") === 1)
+    val got = spark.sql(s"SELECT id, n FROM graft.`$base`").as[(Long, Int)]
+      .collect().toMap
+    assert(got === (1 to 200).filter(_ % 7 != 3)
+      .map(i => i.toLong -> (i % 23 + (if (i >= 5 && i <= 9) 100 else 0))).toMap)
+    assert(del <= 3 && upd <= 5,
+      s"SQL DELETE took $del jobs (budget 3), UPDATE $upd (budget 5): the " +
+        "commit looked its rows up again")
+  }
+
   test("a layout-only version's change feed is empty, launches no job, and " +
     "equals the full diff") {
     val base = Files.createTempDirectory("pstats_cdf").toString + "/t"

@@ -51,6 +51,11 @@ import graft.io.{AtomicPublish, CowTable, LocalParquet}
   * rows against the current manifest and refuses (loudly, pre-commit)
   * a key that addresses more live rows than the statement matched.
   *
+  * A table with a column named `_file` or `_pos` hides that metadata
+  * column from Spark, which would bind the row id to the user's column
+  * instead; such a table keeps the key-only row id and always commits
+  * through the key path.
+  *
   * Scale note (read side): row-level `UPDATE`/`DELETE` predicates push
   * into this scan at planning, so their target read is footer-pruned to
   * the files that may match, and the write is O(deleted rows) in vector
@@ -64,6 +69,14 @@ private[sources] class CowRowLevelOperation(base: String, key: String,
   /** The committed version the target scan planned against: the
     * staged positions address rows of exactly this snapshot. */
   @volatile private[sources] var scanVersion: Option[Long] = None
+
+  /** Whether rows are addressed by position: only when no table column
+    * shadows `_file` or `_pos` (compared case-insensitively, as Spark's
+    * default resolver does). */
+  private[sources] val byPosition: Boolean =
+    !tableSchema.fieldNames.exists(n =>
+      ArtifactScan.FileCol.equalsIgnoreCase(n) ||
+        ArtifactScan.PosCol.equalsIgnoreCase(n))
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -86,15 +99,19 @@ private[sources] class CowRowLevelOperation(base: String, key: String,
 
   /** The row identity: the row's position (`_file`, `_pos`), then EVERY
     * clustering-key column — the keys serve only the commit's fallback
-    * when another commit landed after the scan. */
-  override def rowId(): Array[NamedReference] =
-    (Seq(ArtifactScan.FileCol, ArtifactScan.PosCol) ++ CowTable.splitKeys(key))
-      .map(Expressions.column).toArray
+    * when another commit landed after the scan. Without [[byPosition]],
+    * the key columns alone. */
+  override def rowId(): Array[NamedReference] = {
+    val pos =
+      if (byPosition) Seq(ArtifactScan.FileCol, ArtifactScan.PosCol)
+      else Seq.empty
+    (pos ++ CowTable.splitKeys(key)).map(Expressions.column).toArray
+  }
 
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
   override def description(): String =
-    s"cow-delta $cmd on $base (rowId=_file, _pos, $key)"
+    s"cow-delta $cmd on $base (rowId=${rowId().mkString(", ")})"
 }
 
 private[sources] class CowDeltaWrite(base: String, info: LogicalWriteInfo,
@@ -308,6 +325,8 @@ private[sources] class CowDeltaBatchWrite(base: String,
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory =
     new CowDeltaWriterFactory(staging, dataSchema, rowIdSchema,
+      if (op.byPosition) Some(rowIdSchema.fieldIndex(ArtifactScan.FileCol))
+      else None,
       new SerializableConfiguration(LocalParquet.writeConf(SparkSession.active)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -330,12 +349,15 @@ private[sources] class CowDeltaBatchWrite(base: String,
               java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
           else spark.read.schema(schema).parquet(dels: _*)
         }
-        CowTable.applyDelta(spark, base,
-          staged.drop(ArtifactScan.FileCol, ArtifactScan.PosCol), inserts,
+        val (keys, positions) =
+          if (!op.byPosition) (staged, None)
+          else (staged.drop(ArtifactScan.FileCol, ArtifactScan.PosCol),
+            op.scanVersion.map(v => CowTable.Positions(v,
+              staged.select(col(ArtifactScan.FileCol).as("file"),
+                col(ArtifactScan.PosCol).as("pos")), perFile)))
+        CowTable.applyDelta(spark, base, keys, inserts,
           op = op.command().toString, // DELETE / UPDATE, as issued
-          positions = op.scanVersion.map(v => CowTable.Positions(v,
-            staged.select(col(ArtifactScan.FileCol).as("file"),
-              col(ArtifactScan.PosCol).as("pos")), perFile)))
+          positions = positions)
       }
     } finally cleanup()
   }
@@ -354,10 +376,11 @@ private[sources] class CowDeltaBatchWrite(base: String,
 private[sources] class CowDeltaWriterFactory(staging: String,
                                              dataSchema: StructType,
                                              rowIdSchema: StructType,
+                                             fileOrd: Option[Int],
                                              conf: SerializableConfiguration)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new CowDeltaTaskWriter(staging, dataSchema, rowIdSchema, conf,
+    new CowDeltaTaskWriter(staging, dataSchema, rowIdSchema, fileOrd, conf,
       partitionId, taskId)
 }
 
@@ -365,18 +388,19 @@ private[sources] class CowDeltaWriterFactory(staging: String,
   * task-attempt-unique parquet files through Spark's own
   * `ParquetWriteSupport` ([[graft.io.LocalParquet.writer]]; no Spark
   * write job inside a write job), opened lazily so a task with no
-  * actions stages nothing. Deleted positions are counted per file as
-  * they stream past. */
+  * actions stages nothing. Deleted positions are counted per file (the
+  * row id's `_file`, at `fileOrd` when rows are addressed by position)
+  * as they stream past. */
 private[sources] class CowDeltaTaskWriter(staging: String,
                                           dataSchema: StructType,
                                           rowIdSchema: StructType,
+                                          fileOrd: Option[Int],
                                           conf: SerializableConfiguration,
                                           partitionId: Int, taskId: Long)
   extends DeltaWriter[InternalRow] {
 
   private val insertPath = s"$staging/inserts/part-$partitionId-$taskId.parquet"
   private val deletePath = s"$staging/deletes/part-$partitionId-$taskId.parquet"
-  private val fileOrd = rowIdSchema.fieldIndex(ArtifactScan.FileCol)
   private val deleteCounts = scala.collection.mutable.HashMap.empty[String, Long]
   private var insertWriter: ParquetWriter[InternalRow] = _
   private var deleteWriter: ParquetWriter[InternalRow] = _
@@ -391,8 +415,10 @@ private[sources] class CowDeltaTaskWriter(staging: String,
     if (deleteWriter == null)
       deleteWriter = LocalParquet.writer(new Path(deletePath), rowIdSchema, conf.value)
     deleteWriter.write(id)
-    val f = id.getUTF8String(fileOrd).toString
-    deleteCounts(f) = deleteCounts.getOrElse(f, 0L) + 1L
+    fileOrd.foreach { o =>
+      val f = id.getUTF8String(o).toString
+      deleteCounts(f) = deleteCounts.getOrElse(f, 0L) + 1L
+    }
   }
 
   /** Unreachable with `representUpdateAsDeleteAndInsert = true`; kept

@@ -241,13 +241,14 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     * construction: an unrecognized predicate filters nothing. */
   private var runtimeKept: Option[Set[String]] = None
 
-  /** Only a scan that actually READS `_file` (a row-level rewrite that
-    * declared it via requiredMetadataAttributes) is runtime-filterable
+  /** Only a scan that actually READS the `_file` metadata column (a
+    * row-level rewrite that declared it via requiredMetadataAttributes,
+    * on a table with no `_file` column of its own) is runtime-filterable
     * on it: Spark's generic dynamic-pruning rules probe filterAttributes
     * on EVERY join over the scan and fail resolving an attribute the
     * pruned relation doesn't carry. */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (required.fieldNames.contains(ArtifactScan.FileCol))
+    if (isVirtual(ArtifactScan.FileCol))
       Array(org.apache.spark.sql.connector.expressions.Expressions.column(
         ArtifactScan.FileCol))
     else Array.empty
@@ -450,16 +451,21 @@ private[sources] class ArtifactScan(base: String, dataset: String,
       java.util.OptionalLong.of(keptFiles.map(_.rows).sum)
   }
 
+  /** Whether `n` is a required METADATA column. A table column of that
+    * name hides the metadata column from Spark, so `n` is then data. */
+  private def isVirtual(n: String): Boolean =
+    ArtifactScan.MetaCols(n) && required.fieldNames.contains(n) &&
+      !full.fieldNames.contains(n)
+
   override def createReaderFactory(): PartitionReaderFactory =
     // the reader projects by PHYSICAL field name; output rows are
     // positional, so Spark still sees the logical `required` schema.
-    // `_file` and `_pos` are never mapped, and are data, not virtual,
-    // when the table has a column of that name (which then hides the
-    // metadata column from Spark).
+    // Metadata columns are marked by position, since a renamed data
+    // column may carry `_file` or `_pos` as its physical name.
     ArtifactReaderFactory(
       StructType(required.fields.map(f => f.copy(name = physName(f.name)))),
-      pushedPhys.toSeq, vectored = keptFiles.exists(_.dv.nonEmpty),
-      dataCols = full.fieldNames.map(physName).toSet)
+      required.fieldNames.indices.filter(i => isVirtual(required(i).name)).toSet,
+      pushedPhys.toSeq, vectored = keptFiles.exists(_.dv.nonEmpty))
 
   override def description(): String =
     s"graft-artifact $dir pushed=[${pushed.mkString(", ")}] " +
@@ -522,7 +528,7 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Nil, vectored = false)
+    ArtifactReaderFactory(required, Set.empty, Nil, vectored = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -628,7 +634,7 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Nil, vectored = false)
+    ArtifactReaderFactory(required, Set.empty, Nil, vectored = false)
 
   /** Reclaim materialized diff directories for batches at or below the
     * committed offset — same O(in-flight) checkpoint-storage contract as
@@ -761,7 +767,7 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Nil, vectored = true)
+    ArtifactReaderFactory(required, Set.empty, Nil, vectored = true)
 
   /** Batches at or below the committed offset are never replanned —
     * reclaim their materialized directories (a long-lived subscriber's
@@ -792,6 +798,9 @@ private[sources] object ArtifactScan {
     * groups a pushed filter skips) — with `_file`, the row id of SQL
     * `UPDATE` and `DELETE`, and the address a deletion vector stores. */
   val PosCol = "_pos"
+
+  /** The metadata columns a cow-table scan serves. */
+  val MetaCols: Set[String] = Set(FileCol, PosCol)
 
   /** A file surviving footer pruning, with the statistics the prune
     * pass read for free: LIVE rows (footer row count minus the
@@ -876,15 +885,16 @@ private[sources] object ArtifactScan {
   *   - the data read projects the PHYSICAL required columns plus Spark's
   *     row-index column, with the pushed filters as row-group
   *     predicates; a column a file predates fills its `EXISTS_DEFAULT`
-  *     (else NULL), the virtual `_file` column rides in as the file's
-  *     constant partition value, and the virtual `_pos` column is the
-  *     row index;
+  *     (else NULL). The required fields at the `virtual` positions are
+  *     metadata columns: `_file` rides in as the file's constant
+  *     partition value, and `_pos` is the row index. Streams read no
+  *     metadata column;
   *   - with `vectored`, a second read of `(file, pos)` serves the
   *     deletion-vector parts. Positions are Spark's row index, which
   *     stays the file position however many row groups the pushed
   *     filters skip, so vectored files keep their pushdown. */
 private[sources] class ArtifactReaderFactory(required: StructType,
-                                             virtual: Set[String],
+                                             virtual: Set[Int],
                                              read: ArtifactReaderFactory.Read,
                                              readDv: Option[ArtifactReaderFactory.Read])
   extends PartitionReaderFactory {
@@ -917,18 +927,16 @@ private[sources] class ArtifactReaderFactory(required: StructType,
     * projected to `required` (`_pos` is the row index). */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArtifactPartition]
-    val data = required.fields.filterNot(f => virtual(f.name))
+    val nData = required.length - virtual.size
     var ord = -1
-    val out = UnsafeProjection.create(required.fields.toSeq.map { f =>
-      f.name match {
-        case ArtifactScan.FileCol if virtual(f.name) =>
-          BoundReference(data.length + 1, StringType, nullable = false)
-        case ArtifactScan.PosCol if virtual(f.name) =>
-          BoundReference(data.length, LongType, nullable = false)
-        case _ =>
-          ord += 1
-          BoundReference(ord, f.dataType, nullable = true)
-      }
+    val out = UnsafeProjection.create(required.fields.toSeq.zipWithIndex.map {
+      case (f, i) if virtual(i) && f.name == ArtifactScan.FileCol =>
+        BoundReference(nData + 1, StringType, nullable = false)
+      case (_, i) if virtual(i) =>
+        BoundReference(nData, LongType, nullable = false)
+      case (f, _) =>
+        ord += 1
+        BoundReference(ord, f.dataType, nullable = true)
     })
     val rows = read(partitioned(part.path,
       InternalRow(UTF8String.fromString(part.path))))
@@ -936,7 +944,7 @@ private[sources] class ArtifactReaderFactory(required: StructType,
       if (part.dvParts.isEmpty) rows
       else {
         val deleted = deletedPositions(part.dvParts, part.path)
-        rows.filter(r => !deleted.contains(r.getLong(data.length)))
+        rows.filter(r => !deleted.contains(r.getLong(nData)))
       }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
@@ -958,13 +966,12 @@ private[sources] object ArtifactReaderFactory {
   type Read = PartitionedFile => Iterator[InternalRow]
 
   /** Built on the driver. `required` and `filters` carry PHYSICAL
-    * names; `dataCols` are the table's columns, so a `_file` or `_pos`
-    * among them is read as data. */
-  def apply(required: StructType, filters: Seq[Filter], vectored: Boolean,
-            dataCols: Set[String] = Set.empty): ArtifactReaderFactory = {
-    val virtual = Set(ArtifactScan.FileCol, ArtifactScan.PosCol)
-      .filter(n => required.fieldNames.contains(n) && !dataCols(n))
-    val data = StructType(required.fields.filterNot(f => virtual(f.name)))
+    * names; `virtual` are the positions of `required`'s metadata
+    * columns (`_file`, `_pos`), every other field is data. */
+  def apply(required: StructType, virtual: Set[Int], filters: Seq[Filter],
+            vectored: Boolean): ArtifactReaderFactory = {
+    val data = StructType(required.fields.indices.filterNot(virtual)
+      .map(required(_)))
     val rowIndex = StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
       LongType)
     val file = StructType(Seq(StructField(ArtifactScan.FileCol, StringType,

@@ -108,6 +108,36 @@ class ArtifactStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("every stream reads a `_pos` column as data, not as the row " +
+    "position") {
+    // a plain artifact dataset
+    val art = Files.createTempDirectory("afeed_pos").toString + "/t"
+    AtomicPublish.publish(spark, art,
+      Seq("d" -> Seq((1L, 70L), (2L, 90L)).toDF("id", "_pos")), 10)
+    // a cow table: its table feed and its change feed
+    val cow = Files.createTempDirectory("cfeed_pos").toString + "/t"
+    val v0 = graft.io.CowTable.create(spark, cow,
+      Seq((1L, 70L), (2L, 90L)).toDF("id", "_pos"), "id", numFiles = 1,
+      retain = 4)
+    graft.io.CowTable.append(spark, cow, Seq((3L, 110L)).toDF("id", "_pos"),
+      retain = 4)
+    def drain(name: String, r: org.apache.spark.sql.streaming.DataStreamReader) = {
+      val q = r.load().writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).select("id", "_pos").as[(Long, Long)].collect().toSet
+    }
+    assert(drain("afeed_pos", spark.readStream.format("graft-artifact")
+      .option("base", art).option("dataset", "d")) === Set((1L, 70L), (2L, 90L)))
+    assert(drain("tfeed_pos", spark.readStream.format("graft-artifact")
+      .option("base", cow).option("cow", "true").option("key", "id")) ===
+      Set((1L, 70L), (2L, 90L), (3L, 110L)))
+    assert(drain("cfeed_pos", spark.readStream.format("graft-artifact")
+      .option("base", cow).option("cow", "true").option("key", "id")
+      .option("changeFeed", "true").option("startVersion", (v0 + 1).toString)) ===
+      Set((3L, 110L)))
+  }
+
   test("readStream.table: checkpoint restart resumes after the last " +
     "version; a pruned base fails fast instead of re-bootstrapping") {
     val wh = Files.createTempDirectory("tfeed_wh").toString

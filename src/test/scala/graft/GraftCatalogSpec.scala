@@ -660,6 +660,35 @@ class GraftCatalogSpec extends SparkSpec {
     assert(got === serial)
   }
 
+  test("a table with a `_pos` or `_file` column keeps key row ids: " +
+    "SQL UPDATE, DELETE and MERGE change exactly their matches") {
+    // `_pos` non-null (it would pass for a position), `_file` nullable
+    // (it could not be a row id at all); each hides its metadata column
+    Seq("_pos" -> (lit(1000L) + col("id")),
+      "_file" -> concat(lit("f"), col("id").cast("string"))).foreach {
+      case (c, value) =>
+        val base = Files.createTempDirectory("gcat_shadow").toString + "/t"
+        CowTable.create(spark, base, table(40).withColumn(c, value), "id",
+          numFiles = 4)
+        spark.sql(s"UPDATE graft.`$base` SET nm = 'upd' WHERE id % 10 = 3")
+        spark.sql(s"DELETE FROM graft.`$base` WHERE id % 10 = 7")
+        spark.sql(s"MERGE INTO graft.`$base` t USING (SELECT 5L AS id) s " +
+          "ON t.id = s.id WHEN MATCHED THEN UPDATE SET amt = -1.0")
+        val want = table(40).withColumn(c, value.cast("string"))
+          .as[(Long, String, Double, String)]
+          .collect().toSeq.filter(_._1 % 10 != 7).map {
+            case (i, _, a, v) if i % 10 == 3 => (i, "upd", a, v)
+            case (5L, n, _, v) => (5L, n, -1.0, v)
+            case r => r
+          }.sortBy(_._1)
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select(col("id"), col("nm"), col("amt"), col(c).cast("string"))
+            .as[(Long, String, Double, String)].collect().toSeq.sortBy(_._1)
+        assert(rows(CowTable.read(spark, base)) === want, c)
+        assert(rows(spark.sql(s"SELECT * FROM graft.`$base`")) === want, c)
+    }
+  }
+
   test("an UPDATE addressing ALL duplicates of a key commits (actions " +
     "cover every live hit)") {
     val base = Files.createTempDirectory("gcat_dupall").toString + "/t"

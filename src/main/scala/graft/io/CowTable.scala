@@ -79,13 +79,16 @@ import org.apache.spark.sql.functions._
   *     [[compact]] materializes them back to clean files. The same
   *     design as Delta deletion vectors / Iceberg position deletes.
   *   - CHANGE DATA FEED ([[changes]]): the row-level diff between two
-  *     committed versions, computed from the files present in exactly
-  *     one manifest — never a two-snapshot scan. Its cost is the rows
-  *     of those files: a rewritten file, or one whose deletion vector
-  *     grew, is read whole on both sides. Rows co-located in such a
-  *     file but untouched by the change compare struct-equal pre/post
-  *     and drop out as no-ops. A compaction or z-order version changes
-  *     no row, so its diff against its parent reads nothing.
+  *     committed versions, served from commit structure — never a
+  *     two-snapshot scan. [[changeSet]] classifies each pool file by
+  *     its two manifest entries: added files hold inserts, removed
+  *     files deletes, and a changed deletion vector names its deleted
+  *     (or, after a restore, revived) positions. Inserts-only and
+  *     deletes-only versions need no join; only versions with both
+  *     sides join them on the key, and rows co-located in a rewritten
+  *     file but untouched compare struct-equal and drop out as no-ops.
+  *     A compaction or z-order version changes no row, so its diff
+  *     against its parent reads nothing.
   *
   * Commits can carry an idempotence TXN stamp (stream id → batch id,
   * carried forward across versions) so a Structured Streaming
@@ -971,6 +974,9 @@ object CowTable {
 
   private def baseName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
+  /** The fixed schema of a deletion vector's (file, pos) parts. */
+  private val VectorSchema = "file STRING, pos BIGINT"
+
   /** The (file, pos) rows of the deletion vectors `dvd` references,
     * restricted PER VECTOR FILE to the entries that point at THAT
     * vector. A global `file IN (all dvd files)` over all vector files
@@ -980,25 +986,38 @@ object CowTable {
     * — those rows pass a global IN filter, silently exceeding the
     * manifest's dvRows total (breaking the proven broadcast bound) and
     * duplicating positions into any new cumulative vector built from
-    * the result. The per-(dv → its files) join makes the scanned row
+    * the result. The per-vector basename filter makes the scanned row
     * count EXACTLY the manifest's dvRows sum.
     *
     * Vector CONTENT references files by BASENAME (the durable identity
     * — what makes a live-DV table relocatable); legacy vectors stored
     * the full write-time path. Both shapes are matched by basename and
     * emitted re-rooted to the entries' CURRENT full paths, so callers
-    * join against the live manifest's file column either way. */
+    * join against the live manifest's file column either way. Each
+    * vector is read with its fixed schema (no schema-inference job) and
+    * filtered by an `isin` over its entries' basenames (no join). */
   private def vectorRows(spark: SparkSession, dvd: Seq[Entry]): DataFrame =
     dvd.groupBy(_.dv).map { case (path, es) =>
-      import spark.implicits._
-      val current = es.map(e => (baseName(e.file), e.file)).distinct
-        .toDF("_gf_b", "_gf_cur")
-      spark.read.parquet(path)
-        .withColumn("_gf_b", regexp_extract(col("file"), "[^/]+$", 0))
-        .join(graft.Bcast.ifBounded(current, es.size.toLong),
-          Seq("_gf_b")) // file-count bounded
-        .select(col("_gf_cur").as("file"), col("pos"))
+      val current = es.map(e => baseName(e.file) -> e.file).toMap
+      val b = regexp_extract(col("file"), "[^/]+$", 0)
+      spark.read.schema(VectorSchema).parquet(path)
+        .filter(b.isin(current.keys.toSeq: _*))
+        .select(element_at(typedLit(current), b).as("file"), col("pos"))
     }.reduce(_ unionByName _)
+
+  /** Each file's positions in deletion vector `dv`, by file BASENAME —
+    * read on the driver ([[LocalParquet.foreachRow]]), so it launches no
+    * job. A vector holds O(deleted rows) positions. */
+  private def vectorPositions(spark: SparkSession,
+                              dv: String): Map[String, Set[Long]] = {
+    val by = scala.collection.mutable.Map.empty[String, Set[Long]]
+    LocalParquet.foreachRow(spark, new Path(dv),
+      org.apache.spark.sql.types.StructType.fromDDL(VectorSchema)) { r =>
+      val f = baseName(r.getUTF8String(0).toString)
+      by(f) = by.getOrElse(f, Set.empty[Long]) + r.getLong(1)
+    }
+    by.toMap
+  }
 
   /** Stage-and-commit a deletion vector: `rows` carries (file, pos)
     * with CURRENT full paths; content is written with BASENAME refs
@@ -1038,7 +1057,7 @@ object CowTable {
     // basenames, so each old vector is filtered by basename (no join)
     // and read with its fixed schema (no schema-inference job)
     val old = touched.filter(_.dv.nonEmpty).groupBy(_.dv).toSeq.map {
-      case (path, es) => spark.read.schema("file STRING, pos BIGINT").parquet(path)
+      case (path, es) => spark.read.schema(VectorSchema).parquet(path)
         .filter(regexp_extract(col("file"), "[^/]+$", 0)
           .isin(es.map(e => baseName(e.file)): _*))
     }
@@ -1919,72 +1938,156 @@ object CowTable {
     result
   }
 
-  /** CHANGE DATA FEED: the row-level diff between two committed
-    * versions, computed from the files present in exactly one manifest
-    * — never a two-snapshot scan. A file is "same" only as (file, dv): a
-    * vector added to an untouched file IS a change, so that file is read
-    * WHOLE on both sides (each through its own vector) and the cost is
-    * O(rows of every changed or vector-touched file). Rows co-located in
-    * a rewritten file but themselves untouched compare struct-equal
-    * across the key join and drop out as no-ops. A LAYOUT-ONLY version
-    * (`COMPACT` / `ZORDER`, which rewrite live rows and nothing else)
-    * diffed against the committed version just before it is free: the
-    * same empty frame, no data file read. Output: the data columns
-    * (post-image; pre-image for deletes) plus `_change_type` ∈ insert /
-    * update / delete. Requires both versions readable (`retain` ≥ the
-    * travel distance). */
-  def changes(spark: SparkSession, base: String, fromV: Long, toV: Long,
-              key: String): DataFrame = {
+  /** One side's share of a version pair's changed rows in one pool
+    * file: every live row of `entry` (under its own vector) when
+    * `positions` is None, else exactly the rows at those sorted
+    * positions, read without the vector (they are live on this side
+    * and voided on the other). */
+  private[graft] case class ChangePart(entry: Entry,
+                                       positions: Option[Array[Long]])
+
+  /** A version pair's changed rows by where they live: `pre` parts hold
+    * the rows only `from` sees, `post` parts the rows only `to` sees.
+    * `probe` is any entry of either version, to plan an empty side. */
+  private[graft] case class ChangeSet(pre: Seq[ChangePart],
+                                      post: Seq[ChangePart], probe: Entry) {
+    /** The only side and its change type when every changed row is a
+      * delete or every one an insert — no join; None = both sides. */
+    def oneSide: Option[(Seq[ChangePart], String)] =
+      if (post.isEmpty) Some((pre, "delete"))
+      else if (pre.isEmpty) Some((post, "insert"))
+      else None
+  }
+
+  /** Classify the version pair (`fromV`, `toV`) from commit structure,
+    * per pool file, with no job and no data file read:
+    *   - a file only in `to`: its live rows are post-images;
+    *   - a file only in `from`: its live rows are pre-images;
+    *   - a file in both whose vector differs: the rows at positions in
+    *     the new vector but not the old are pre-images (deletes), those
+    *     in the old but not the new are post-images (a `restore`
+    *     revives them). Both vectors are read on the driver.
+    * A LAYOUT-ONLY version (`COMPACT` / `ZORDER`, which rewrite live
+    * rows and nothing else) against the committed version just before
+    * it changes no row: both sides are empty. */
+  private[graft] def changeSet(spark: SparkSession, base: String, fromV: Long,
+                               toV: Long): ChangeSet = {
     require(fromV <= toV, s"changes: from $fromV > to $toV")
     val to = entriesAt(spark, base, toV)
-    // (a non-empty `to` also supplies the schema-only scan below)
     val layoutOnly = to.nonEmpty &&
       AtomicPublish.commitOp(spark, base, toV).exists(Set("COMPACT", "ZORDER")) &&
         AtomicPublish.versions(spark, base).filter(_ < toV).lastOption
           .contains(fromV)
     val from = if (layoutOnly) Nil else entriesAt(spark, base, fromV)
-    def id(e: Entry) = (e.file, e.dv)
-    val toIds = to.map(id).toSet
-    val fromIds = from.map(id).toSet
-    val preEntries = from.filterNot(e => toIds.contains(id(e)))
-    // layout-only: both sides empty, so the frame below is planned over
-    // two empty relations and collapses without a job
-    val postEntries =
-      if (layoutOnly) Nil else to.filterNot(e => fromIds.contains(id(e)))
-    val anyEntry = (preEntries ++ postEntries ++ to ++ from).headOption
+    val probe = (to ++ from).headOption
       .getOrElse(sys.error(s"changes: no entries in either version of $base"))
-    // BOTH sides read with the TO-version's schema: under additive
-    // evolution the pre-image null-fills the new columns, so untouched
-    // co-located rows still compare struct-equal and drop as no-ops
+      .copy(dv = "", dvRows = 0L)
+    if (layoutOnly) return ChangeSet(Nil, Nil, probe)
+    val fromBy = from.map(e => e.file -> e).toMap
+    val toFiles = to.map(_.file).toSet
+    val vectors = scala.collection.mutable.Map.empty[String, Map[String, Set[Long]]]
+    def voided(e: Entry): Set[Long] =
+      if (e.dv.isEmpty) Set.empty
+      else vectors.getOrElseUpdate(e.dv, vectorPositions(spark, e.dv))
+        .getOrElse(baseName(e.file), Set.empty)
+    val moved = to.flatMap(t => fromBy.get(t.file).filter(_.dv != t.dv).map {
+      f => (f, t, voided(f), voided(t))
+    })
+    def whole(es: Seq[Entry]) =
+      es.filter(e => e.rows > e.dvRows).map(ChangePart(_, None))
+    def at(e: Entry, ps: Set[Long]) =
+      if (ps.isEmpty) None else Some(ChangePart(e, Some(ps.toArray.sorted)))
+    ChangeSet(
+      whole(from.filterNot(e => toFiles(e.file))) ++
+        moved.flatMap { case (f, _, was, is) => at(f, is -- was) },
+      whole(to.filterNot(e => fromBy.contains(e.file))) ++
+        moved.flatMap { case (_, t, was, is) => at(t, was -- is) },
+      probe)
+  }
+
+  /** CHANGE DATA FEED: the row-level diff between two committed
+    * versions, served from commit structure ([[changeSet]]) — never a
+    * two-snapshot scan. When every changed row is on one side (an
+    * `append` or SQL `INSERT`: inserts only; a [[dvDelete]] or SQL
+    * `DELETE`: deletes only) the rows are read and tagged, with no
+    * join. Otherwise (`merge`, [[deleteWhere]], SQL `UPDATE`/`MERGE`,
+    * [[restore]]) the two sides full-outer-join on the key: a key on
+    * both sides is an `update`, and a row co-located in a rewritten
+    * file but itself untouched compares struct-equal and drops out as
+    * a no-op. Cost is O(rows of the rewritten files + rows a vector
+    * change names): a vector change reads its file's named rows only.
+    * A layout-only version diffed against its parent reads nothing.
+    *
+    * Output: the data columns (post-image; pre-image for deletes) plus
+    * `_change_type` ∈ insert / update / delete. Both sides are read
+    * with the TO-version's schema, so under additive evolution a
+    * pre-image null-fills the new columns. The key identifies a row
+    * only where the two sides are joined: on a table with duplicate
+    * keys a one-sided version emits each vectored or appended row
+    * exactly, while a joined version pairs every pre and post row of
+    * a key. Requires both versions readable (`retain` ≥ the travel
+    * distance). */
+  def changes(spark: SparkSession, base: String, fromV: Long, toV: Long,
+              key: String): DataFrame =
+    changesOf(spark, base, toV, key, changeSet(spark, base, fromV, toV))
+
+  /** Whether version `v`'s changed rows can be served from its pool
+    * files as written, by a reader projecting `cols`: the version maps
+    * no column (pool files carry physical names), and its schema has
+    * every one of `cols` (a dropped column's stale values stay in the
+    * files). */
+  private[graft] def servesInPlace(spark: SparkSession, base: String, v: Long,
+                                   cols: Seq[String]): Boolean =
+    metaAt(spark, base, v).forall(m => m.physMap.isEmpty &&
+      dataSchemaAt(spark, base, v).forall(sc => cols.forall(sc.fieldNames.contains)))
+
+  /** The change rows of `cs`, a classification ending at `toV`. */
+  private[graft] def changesOf(spark: SparkSession, base: String, toV: Long,
+                               key: String, cs: ChangeSet): DataFrame = {
     val schema = dataSchemaAt(spark, base, toV)
     val cm = colMapAt(spark, base, toV)
     val dataCols = schema.map(_.fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(anyEntry.file).columns.toSeq)
-    val ks = splitKeys(key)
-    def side(entries: Seq[Entry], name: String): DataFrame = {
-      val df =
-        if (entries.isEmpty)
-          scanEntries(spark, Seq(anyEntry), schema = schema,
-            colMap = cm).limit(0)
-        else scanEntries(spark, entries, schema = schema, colMap = cm)
-      // NATURAL key type (both sides read with the TO-schema, so the
-      // join type always agrees; string keys diff the same way). A
-      // composite key joins as the full tuple — the row identity.
-      df.select(struct(ks.map(col): _*).as("_gf_k"),
-        struct(dataCols.map(col): _*).as(name))
+      .getOrElse(spark.read.parquet(cs.probe.file).columns.toSeq)
+    def side(parts: Seq[ChangePart]): DataFrame = {
+      val (whole, at) = parts.partition(_.positions.isEmpty)
+      val wholeRows = Some(whole.map(_.entry)).filter(_.nonEmpty)
+        .map(scanEntries(spark, _, schema = schema, colMap = cm))
+      val atRows = Some(at).filter(_.nonEmpty).map { ps =>
+        import spark.implicits._
+        val keep = ps.flatMap(p => p.positions.get.toSeq.map(p.entry.file -> _))
+          .toDF("_gf_file", "_gf_pos")
+        scanEntries(spark, ps.map(_.entry.copy(dv = "", dvRows = 0L)),
+          lineage = true, schema = schema, colMap = cm)
+          .join(graft.Bcast.ifBounded(keep, ps.map(_.positions.get.length.toLong).sum),
+            Seq("_gf_file", "_gf_pos"), "left_semi")
+          .drop("_gf_file", "_gf_pos")
+      }
+      (wholeRows ++ atRows).reduceOption(_ unionByName _)
+        .getOrElse(scanEntries(spark, Seq(cs.probe), schema = schema,
+          colMap = cm).limit(0)) // an empty side plans without a job
+        .select(dataCols.map(col): _*)
     }
-    val pre = side(preEntries, "_pre")
-    val post = side(postEntries, "_post")
-    val img = coalesce(col("_post"), col("_pre"))
-    pre.join(post, Seq("_gf_k"), "full_outer")
-      .withColumn("_change_type",
-        when(col("_pre").isNull, "insert")
-          .when(col("_post").isNull, "delete")
-          .when(!(col("_pre") <=> col("_post")), "update")
-          .otherwise("noop"))
-      .filter(col("_change_type") =!= "noop")
-      .select(dataCols.map(c => img.getField(c).as(c)) :+
-        col("_change_type"): _*)
+    cs.oneSide match {
+      case Some((rows, kind)) => side(rows).withColumn("_change_type", lit(kind))
+      case None =>
+        // NATURAL key type (both sides read with the TO-schema, so the
+        // join type always agrees; string keys diff the same way). A
+        // composite key joins as the full tuple — the row identity.
+        val ks = splitKeys(key)
+        def keyed(parts: Seq[ChangePart], name: String) = side(parts)
+          .select(struct(ks.map(col): _*).as("_gf_k"),
+            struct(dataCols.map(col): _*).as(name))
+        val img = coalesce(col("_post"), col("_pre"))
+        keyed(cs.pre, "_pre").join(keyed(cs.post, "_post"), Seq("_gf_k"), "full_outer")
+          .withColumn("_change_type",
+            when(col("_pre").isNull, "insert")
+              .when(col("_post").isNull, "delete")
+              .when(!(col("_pre") <=> col("_post")), "update")
+              .otherwise("noop"))
+          .filter(col("_change_type") =!= "noop")
+          .select(dataCols.map(c => img.getField(c).as(c)) :+
+            col("_change_type"): _*)
+    }
   }
 
   /** CDC CURSOR: every row-level change committed AFTER `sinceV`, each

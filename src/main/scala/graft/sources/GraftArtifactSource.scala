@@ -91,7 +91,8 @@ class GraftArtifactSource extends TableProvider with DataSourceRegister {
         }
       } else spark.read.parquet(resolveDir(options)).schema
     if (changeFeed(options))
-      data.add("_change_type", StringType).add("_commit_version", LongType)
+      data.add(ArtifactScan.ChangeTypeCol, StringType)
+        .add(ArtifactScan.CommitVersionCol, LongType)
     else data
   }
 
@@ -180,9 +181,13 @@ private[sources] class ArtifactScanBuilder(base: String, dataset: String,
 /** One pool file; `dvParts` are the parquet parts of the deletion-vector
   * directory the manifest points this file at (listed once per
   * directory on the driver) — the reader subtracts those row positions
-  * (merge-on-read). */
+  * (merge-on-read). A change-feed part served in place may instead
+  * `keep` only the rows at its sorted positions, and carries its
+  * `change` (change type, commit version) as constant columns. */
 private[sources] case class ArtifactPartition(path: String,
-                                              dvParts: Seq[String] = Nil)
+                                              dvParts: Seq[String] = Nil,
+                                              keep: Option[Array[Long]] = None,
+                                              change: Option[(String, Long)] = None)
   extends InputPartition
 
 private[sources] class ArtifactScan(base: String, dataset: String,
@@ -519,10 +524,8 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
         require(graft.io.AtomicPublish.isCommitted(spark, base, v),
           s"version $v under $base is not readable (pruned?); " +
             "increase the publisher's retain window for streaming readers")
-        val d = new Path(base, s"v$v/$dataset")
-        fs.listStatus(d).toSeq.map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
-          .map(p => ArtifactPartition(p.toString))
+        ArtifactScan.parquetParts(new Path(base, s"v$v/$dataset"))
+          .map(ArtifactPartition(_))
       }
     }.toArray
   }
@@ -539,13 +542,26 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
   * I/U/D changes (the data columns plus `_change_type` and
   * `_commit_version`) — how a downstream consumer (replica, index,
   * cache) actually subscribes to a lakehouse table. Offsets are version
-  * ids; each batch's diff is [[graft.io.CowTable.changes]] between
-  * CONSECUTIVE COMMITTED versions (orphan ids are invisible, a pruned
-  * base fails fast — pruning is prefix-by-id, so a readable base proves
-  * the span complete), materialized ONCE under the stream's checkpoint
-  * (`_graft_cdf/`) so a replayed batch re-serves identical files
-  * instead of recomputing. Cost per batch is O(changed files + their
-  * vectors), never a snapshot scan. */
+  * ids; each batch serves the changes between CONSECUTIVE COMMITTED
+  * versions (orphan ids are invisible, a pruned base fails fast —
+  * pruning is prefix-by-id, so a readable base proves the span
+  * complete), classified from commit structure by
+  * [[graft.io.CowTable.changeSet]]:
+  *   - a version whose changed rows are all inserts (`append`, SQL
+  *     `INSERT`) or all deletes ([[graft.io.CowTable.dvDelete]], SQL
+  *     `DELETE`) is served IN PLACE: its partitions read the pool files
+  *     (whole, or only the rows its vector change names), and
+  *     `_change_type` and `_commit_version` ride in as constant
+  *     partition values. Planning launches no job and writes nothing;
+  *     a replay re-derives the same partitions, since pool files and
+  *     vectors are immutable;
+  *   - a version with both sides (`merge`, `deleteWhere`, SQL
+  *     `UPDATE`/`MERGE`, `restore`) is key-joined over its changed rows
+  *     only ([[graft.io.CowTable.changesOf]]) and materialized ONCE
+  *     under the stream's checkpoint (`_graft_cdf/`), so a replayed
+  *     batch re-serves identical files instead of recomputing.
+  * A table with column mapping keeps the materialized path for every
+  * version: its pool files carry physical names. */
 private[sources] class CdfMicroBatchStream(base: String, key: String,
                                            startVersion: Option[Long],
                                            required: StructType,
@@ -575,6 +591,8 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
     VersionOffset("""-?\d+""".r.findFirstIn(json)
       .getOrElse(sys.error(s"bad offset: $json")).toLong)
 
+  private val cdfCols = Set(ArtifactScan.ChangeTypeCol, ArtifactScan.CommitVersionCol)
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VersionOffset].version
     val e = end.asInstanceOf[VersionOffset].version
@@ -585,56 +603,78 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
         "committed; increase the publisher's retain window for " +
         "streaming readers")
     val span = committed.filter(v => v > s && v <= e)
-    val pairs = (s +: span).zip(span)
     def outDir(prev: Long, v: Long) =
       new Path(checkpointLocation, s"_graft_cdf/v$v-from-$prev")
+    val dataCols = required.fieldNames.filterNot(cdfCols).toSeq
+    // per span: Left = its one side, served in place; Right = its
+    // materialized dir, already sealed by an earlier plan of this batch
+    // (None) or to be joined and written below
+    val plans = (s +: span).zip(span).map { case (p, v) =>
+      val done = fs.exists(new Path(outDir(p, v), "_SUCCESS"))
+      (p, v, (if (done) None
+      else Some(graft.io.CowTable.changeSet(spark, base, p, v))) match {
+        case Some(cs) if cs.oneSide.isDefined &&
+          graft.io.CowTable.servesInPlace(spark, base, v, dataCols) =>
+          Left(cs.oneSide.get)
+        case other => Right(other)
+      })
+    }
     import org.apache.spark.sql.functions.lit
-    pairs.filterNot { case (p, v) =>
-      fs.exists(new Path(outDir(p, v), "_SUCCESS"))
-    } match {
-      case Seq() => () // full replay: every span already materialized
-      case Seq((p, v)) =>
-        graft.io.CowTable.changes(spark, base, p, v, key)
-          .withColumn("_commit_version", lit(v))
+    plans.collect { case (p, v, Right(Some(cs))) => (p, v, cs) } match {
+      case Seq() => () // every joined span already materialized
+      case Seq((p, v, cs)) =>
+        graft.io.CowTable.changesOf(spark, base, v, key, cs)
+          .withColumn(ArtifactScan.CommitVersionCol, lit(v))
           .write.mode("overwrite").parquet(outDir(p, v).toString)
       case missing =>
-        // a micro-batch spanning several committed versions used to pay
-        // one write JOB per version diff; the diffs are independent, so
-        // union them (each tagged with a span label) and materialize
-        // every missing span in ONE job, partitioned by the label, then
-        // move each partition dir to its per-span location and seal it
-        // with the _SUCCESS marker the replay path checks. Per-span dirs
-        // (not one batch dir) stay the on-disk unit so replay and
+        // independent diffs: union them (each tagged with a span label)
+        // and materialize every missing span in ONE job, partitioned by
+        // the label, then move each partition dir to its per-span
+        // location and seal it with the _SUCCESS marker the replay path
+        // checks. Per-span dirs stay the on-disk unit so replay and
         // [[commit]]'s cleanup are unchanged.
         val tmp = new Path(checkpointLocation, s"_graft_cdf/.span-$s-$e")
         fs.delete(tmp, true)
-        missing.map { case (p, v) =>
-          graft.io.CowTable.changes(spark, base, p, v, key)
-            .withColumn("_commit_version", lit(v))
+        missing.map { case (p, v, cs) =>
+          graft.io.CowTable.changesOf(spark, base, v, key, cs)
+            .withColumn(ArtifactScan.CommitVersionCol, lit(v))
             .withColumn("_gf_span", lit(s"v$v-from-$p"))
         }.reduce(_ unionByName _)
           .write.mode("overwrite").partitionBy("_gf_span")
           .parquet(tmp.toString)
-        missing.foreach { case (p, v) =>
+        missing.foreach { case (p, v, _) =>
           val dst = outDir(p, v)
           fs.delete(dst, true)
           val src = new Path(tmp, s"_gf_span=v$v-from-$p")
-          // a layout-only version (compaction) diffs to zero rows and
-          // gets no partition dir — seal an empty span dir instead
+          // a span whose rows all join away as no-ops gets no
+          // partition dir — seal an empty span dir instead
           if (!fs.exists(src) || !fs.rename(src, dst)) fs.mkdirs(dst)
           fs.create(new Path(dst, "_SUCCESS"), true).close()
         }
         fs.delete(tmp, true)
     }
-    pairs.flatMap { case (p, v) =>
-      fs.listStatus(outDir(p, v)).toSeq.map(_.getPath)
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .map(f => ArtifactPartition(f.toString))
+    plans.flatMap {
+      case (_, v, Left((parts, kind))) =>
+        ArtifactScan.changePartitions(parts, Some((kind, v)))
+      case (p, v, Right(_)) =>
+        ArtifactScan.parquetParts(outDir(p, v)).map(ArtifactPartition(_))
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Set.empty, Nil, vectored = false)
+  /** Materialized spans hold `_change_type` and `_commit_version` as
+    * data; in-place parts take them as constant partition values. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val inPlace = ArtifactReaderFactory(required,
+      required.fieldNames.indices.filter(i => cdfCols(required(i).name)).toSet,
+      Nil, vectored = true)
+    val materialized = ArtifactReaderFactory(required, Set.empty, Nil,
+      vectored = false)
+    new PartitionReaderFactory {
+      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+        (if (p.asInstanceOf[ArtifactPartition].change.isDefined) inPlace
+        else materialized).createReader(p)
+    }
+  }
 
   /** Reclaim materialized diff directories for batches at or below the
     * committed offset — same O(in-flight) checkpoint-storage contract as
@@ -654,11 +694,22 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
 
 /** `spark.readStream.table("graft.t")` — the TABLE-SCHEMA subscription
   * to a [[graft.io.CowTable]]: the first batch is the earliest retained
-  * snapshot (bootstrap — served DIRECTLY from that version's immutable
-  * pool files, never copied, whenever the version carries no column
-  * mapping), every later committed version becomes one exactly-once
-  * micro-batch of its row-level insert POST-IMAGES (cost O(changed
-  * files), never a re-scan).
+  * snapshot (bootstrap), every later committed version becomes one
+  * exactly-once micro-batch of its row-level insert POST-IMAGES, never
+  * a re-scan. Versions are classified from commit structure
+  * ([[graft.io.CowTable.changeSet]]):
+  *   - the bootstrap and an insert-only version are served DIRECTLY
+  *     from their immutable pool files (vectors applied by the reader),
+  *     never copied; a replay re-derives the same partitions;
+  *   - a delete-only version needs no row at all: it fails its guard
+  *     (below) or, with `skipChangeCommits`, contributes nothing;
+  *   - a version with both sides is key-joined over its changed rows
+  *     and materialized once under the stream's checkpoint
+  *     (`_graft_feed/`), so a replayed batch re-serves identical files;
+  *     [[commit]] prunes those directories at or below the committed
+  *     offset, so checkpoint storage is O(in-flight batches).
+  * A table with column mapping keeps the materialized path: its pool
+  * files carry physical names.
   *
   * DELETE- or UPDATE-bearing versions FAIL FAST by default: a delete
   * has no representation in the table schema and an update's post-image
@@ -669,12 +720,7 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
   * `changeFeed=true` (the [[CdfMicroBatchStream]] twin, full I/U/D
   * fidelity) or the explicit `skipChangeCommits=true` opt-out, which
   * restores post-images-only (inserts + update post-images, deletes
-  * omitted).
-  *
-  * Diff batches are materialized once under the stream's checkpoint so
-  * a replayed batch re-serves identical files; [[commit]] prunes the
-  * materialized directories at or below the committed offset, so
-  * checkpoint storage is O(in-flight batches), not O(table history). */
+  * omitted). */
 private[sources] class TableFeedMicroBatchStream(base: String, key: String,
                                                  startVersion: Option[Long],
                                                  required: StructType,
@@ -699,6 +745,18 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
     VersionOffset("""-?\d+""".r.findFirstIn(json)
       .getOrElse(sys.error(s"bad offset: $json")).toLong)
 
+  /** Fails version `v` unless `kinds` is empty or the subscriber opted
+    * out with `skipChangeCommits`. */
+  private def guard(v: Long, kinds: Seq[String]): Unit =
+    require(skipChangeCommits || kinds.isEmpty,
+      s"version $v of $base carries ${kinds.mkString("/")} " +
+        "changes, which the table-schema stream cannot " +
+        "represent faithfully (deletes vanish, update " +
+        "post-images double-count in append sinks): " +
+        "subscribe with changeFeed=true for full I/U/D " +
+        "fidelity, or set skipChangeCommits=true to " +
+        "receive insert/update post-images only")
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VersionOffset].version
     val e = end.asInstanceOf[VersionOffset].version
@@ -714,8 +772,13 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
         "readers")
     val span = committed.filter(v => v > s && v <= e)
     span.flatMap { v =>
-      val prev = committed.filter(_ < v).lastOption
-      prev match {
+      val out = new Path(checkpointLocation, s"_graft_feed/v$v")
+      val sealedOut = fs.exists(new Path(out, "_SUCCESS"))
+      def materialized(batch: => org.apache.spark.sql.DataFrame) = {
+        if (!sealedOut) batch.write.mode("overwrite").parquet(out.toString)
+        ArtifactScan.parquetParts(out).map(ArtifactPartition(_))
+      }
+      committed.filter(_ < v).lastOption match {
         case None
           if graft.io.CowTable.metaAt(spark, base, v)
             .forall(_.physMap.isEmpty) =>
@@ -723,45 +786,31 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
           // IS its immutable pool files (DVs subtracted by the reader),
           // so serve them in place — a copy under the checkpoint would
           // be O(table) storage for nothing. A replay re-resolves the
-          // same entries (fail-fast if retention pruned them). Mapped
-          // tables (logical ≠ physical names) fall through to the
-          // materialized path below, which writes logical names.
+          // same entries (fail-fast if retention pruned them).
           ArtifactScan.partitions(graft.io.CowTable
             .entriesAtVersion(spark, base, v).map(en => (en.file, en.dv)))
-        case _ =>
-          val out = new Path(checkpointLocation, s"_graft_feed/v$v")
-          if (!fs.exists(new Path(out, "_SUCCESS"))) {
-            val batch = prev match {
-              case None => // mapped-table bootstrap: materialize once
-                graft.io.CowTable.readAt(spark, base, v)
-              case Some(p) =>
-                val ch = graft.io.CowTable.changes(spark, base, p, v, key)
-                  .localCheckpoint() // one diff: guard check + the write
-                if (!skipChangeCommits) {
-                  val kinds = ch
-                    .filter(org.apache.spark.sql.functions
-                      .col("_change_type").isin("delete", "update"))
-                    .select("_change_type").distinct()
-                    .collect().map(_.getString(0)).sorted
-                  require(kinds.isEmpty,
-                    s"version $v of $base carries ${kinds.mkString("/")} " +
-                      "changes, which the table-schema stream cannot " +
-                      "represent faithfully (deletes vanish, update " +
-                      "post-images double-count in append sinks): " +
-                      "subscribe with changeFeed=true for full I/U/D " +
-                      "fidelity, or set skipChangeCommits=true to " +
-                      "receive insert/update post-images only")
-                }
-                ch.filter(org.apache.spark.sql.functions
-                    .col("_change_type") =!= "delete")
-                  .drop("_change_type")
-            }
-            batch.write.mode("overwrite").parquet(out.toString)
+        case None => // mapped-table bootstrap: materialize once
+          materialized(graft.io.CowTable.readAt(spark, base, v))
+        case Some(p) if !sealedOut =>
+          val cs = graft.io.CowTable.changeSet(spark, base, p, v)
+          if (cs.post.isEmpty) {
+            guard(v, if (cs.pre.isEmpty) Nil else Seq("delete"))
+            Nil
+          } else if (cs.pre.isEmpty && graft.io.CowTable.servesInPlace(
+            spark, base, v, required.fieldNames.toSeq))
+            ArtifactScan.changePartitions(cs.post, None)
+          else materialized {
+            import org.apache.spark.sql.functions.col
+            val ch = graft.io.CowTable.changesOf(spark, base, v, key, cs)
+              .localCheckpoint() // one diff: guard check + the write
+            if (!skipChangeCommits)
+              guard(v, ch.filter(col("_change_type").isin("delete", "update"))
+                .select("_change_type").distinct()
+                .collect().map(_.getString(0)).sorted.toSeq)
+            ch.filter(col("_change_type") =!= "delete").drop("_change_type")
           }
-          fs.listStatus(out).toSeq.map(_.getPath)
-            .filter(p => p.getName.endsWith(".parquet") &&
-              !p.getName.startsWith("."))
-            .map(p => ArtifactPartition(p.toString))
+        case Some(_) => // a replay of a joined version
+          ArtifactScan.parquetParts(out).map(ArtifactPartition(_))
       }
     }.toArray
   }
@@ -802,22 +851,41 @@ private[sources] object ArtifactScan {
   /** The metadata columns a cow-table scan serves. */
   val MetaCols: Set[String] = Set(FileCol, PosCol)
 
+  /** The change feed's columns beside the data: what a row's version
+    * did to it, and that version. */
+  val ChangeTypeCol = "_change_type"
+  val CommitVersionCol = "_commit_version"
+
   /** A file surviving footer pruning, with the statistics the prune
     * pass read for free: LIVE rows (footer row count minus the
     * manifest's deletion-vector count) and compressed bytes. */
   case class Kept(path: String, dv: String, rows: Long, bytes: Long)
 
+  /** The parquet parts of directory `dir`. */
+  def parquetParts(dir: Path): Seq[String] =
+    dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      .listStatus(dir).toSeq.map(_.getPath)
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .map(_.toString)
+
   /** One partition per (file, deletion-vector directory), each
     * directory's parquet parts listed once. */
   def partitions(files: Seq[(String, String)]): Seq[ArtifactPartition] = {
-    val parts = files.map(_._2).filter(_.nonEmpty).distinct.map { dv =>
-      val p = new Path(dv)
-      dv -> p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-        .listStatus(p).toSeq.map(_.getPath)
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .map(_.toString)
-    }.toMap
+    val parts = files.map(_._2).filter(_.nonEmpty).distinct
+      .map(dv => dv -> parquetParts(new Path(dv))).toMap
     files.map { case (f, dv) => ArtifactPartition(f, parts.getOrElse(dv, Nil)) }
+  }
+
+  /** Change parts served in place from their pool files: a whole part
+    * under its vector, a positional part keeping only its rows. Each
+    * partition carries `change` as its constant columns. */
+  def changePartitions(parts: Seq[graft.io.CowTable.ChangePart],
+                       change: Option[(String, Long)]): Seq[ArtifactPartition] = {
+    val (whole, at) = parts.partition(_.positions.isEmpty)
+    partitions(whole.map(p => (p.entry.file, p.entry.dv)))
+      .map(_.copy(change = change)) ++
+      at.map(p => ArtifactPartition(p.entry.file, keep = p.positions,
+        change = change))
   }
 
   def filterColumn(f: Filter): String = f match {
@@ -886,15 +954,18 @@ private[sources] object ArtifactScan {
   *     row-index column, with the pushed filters as row-group
   *     predicates; a column a file predates fills its `EXISTS_DEFAULT`
   *     (else NULL). The required fields at the `virtual` positions are
-  *     metadata columns: `_file` rides in as the file's constant
-  *     partition value, and `_pos` is the row index. Streams read no
-  *     metadata column;
+  *     metadata columns: `_pos` is the row index, and the others ride
+  *     in as constant partition values — `_file` the file, and for a
+  *     change-feed part served in place `_change_type` and
+  *     `_commit_version` its change;
+  *   - a partition that `keep`s positions serves only those rows;
   *   - with `vectored`, a second read of `(file, pos)` serves the
   *     deletion-vector parts. Positions are Spark's row index, which
   *     stays the file position however many row groups the pushed
   *     filters skip, so vectored files keep their pushdown. */
 private[sources] class ArtifactReaderFactory(required: StructType,
                                              virtual: Set[Int],
+                                             constants: Seq[String],
                                              read: ArtifactReaderFactory.Read,
                                              readDv: Option[ArtifactReaderFactory.Read])
   extends PartitionReaderFactory {
@@ -922,29 +993,36 @@ private[sources] class ArtifactReaderFactory(required: StructType,
   }
 
   /** Applies the scan's read to this partition's file. A read row is
-    * the data fields, the row index, then `_file`; rows whose index the
-    * file's deletion vector names are dropped, and the rest are
-    * projected to `required` (`_pos` is the row index). */
+    * the data fields, the row index, then the constant columns; rows
+    * outside the partition's `keep` positions or named by the file's
+    * deletion vector are dropped, and the rest are projected to
+    * `required` (`_pos` is the row index). */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArtifactPartition]
     val nData = required.length - virtual.size
     var ord = -1
     val out = UnsafeProjection.create(required.fields.toSeq.zipWithIndex.map {
-      case (f, i) if virtual(i) && f.name == ArtifactScan.FileCol =>
-        BoundReference(nData + 1, StringType, nullable = false)
-      case (_, i) if virtual(i) =>
+      case (f, i) if virtual(i) && f.name == ArtifactScan.PosCol =>
         BoundReference(nData, LongType, nullable = false)
+      case (f, i) if virtual(i) =>
+        BoundReference(nData + 1 + constants.indexOf(f.name), f.dataType,
+          nullable = false)
       case (f, _) =>
         ord += 1
         BoundReference(ord, f.dataType, nullable = true)
     })
-    val rows = read(partitioned(part.path,
-      InternalRow(UTF8String.fromString(part.path))))
+    val rows = read(partitioned(part.path, InternalRow.fromSeq(constants.map {
+      case ArtifactScan.FileCol => UTF8String.fromString(part.path)
+      case ArtifactScan.ChangeTypeCol => UTF8String.fromString(part.change.get._1)
+      case _ => part.change.get._2 // the commit version
+    })))
+    val kept = part.keep.fold(rows)(k =>
+      rows.filter(r => java.util.Arrays.binarySearch(k, r.getLong(nData)) >= 0))
     val live =
-      if (part.dvParts.isEmpty) rows
+      if (part.dvParts.isEmpty) kept
       else {
         val deleted = deletedPositions(part.dvParts, part.path)
-        rows.filter(r => !deleted.contains(r.getLong(nData)))
+        kept.filter(r => !deleted.contains(r.getLong(nData)))
       }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
@@ -967,19 +1045,20 @@ private[sources] object ArtifactReaderFactory {
 
   /** Built on the driver. `required` and `filters` carry PHYSICAL
     * names; `virtual` are the positions of `required`'s metadata
-    * columns (`_file`, `_pos`), every other field is data. */
+    * columns (`_file`, `_pos`, and a change-feed part's `_change_type`
+    * and `_commit_version`), every other field is data. */
   def apply(required: StructType, virtual: Set[Int], filters: Seq[Filter],
             vectored: Boolean): ArtifactReaderFactory = {
     val data = StructType(required.fields.indices.filterNot(virtual)
       .map(required(_)))
     val rowIndex = StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
       LongType)
-    val file = StructType(Seq(StructField(ArtifactScan.FileCol, StringType,
-      nullable = false)))
+    val constants = StructType(virtual.toSeq.sorted.map(required(_))
+      .filter(_.name != ArtifactScan.PosCol).map(_.copy(nullable = false)))
     val dv = StructType(Seq(StructField("file", StringType),
       StructField("pos", LongType)))
-    new ArtifactReaderFactory(required, virtual,
-      build(data.add(rowIndex), file, filters),
+    new ArtifactReaderFactory(required, virtual, constants.fieldNames.toSeq,
+      build(data.add(rowIndex), constants, filters),
       if (vectored) Some(build(dv, new StructType(), Nil)) else None)
   }
 

@@ -77,8 +77,10 @@ object CdfStream {
   /** MUTATING-TABLE CDC FIDELITY — the consumer the table-schema feed's
     * delete guard points users at, proven end-to-end: a cow table
     * mutated through the SQL surface (row-level `UPDATE` → deletion
-    * vectors, `DELETE FROM` → copy-on-write rewrite, `CALL compact` →
-    * layout-only commit) is subscribed with `changeFeed=true` and folded
+    * vectors plus a new file, so a key-joined version; `DELETE FROM` →
+    * a position delete that only writes vectors, so a deletes-only
+    * version served in place; `CALL compact` → layout-only commit) is
+    * subscribed with `changeFeed=true` and folded
     * version by version into a REPLICA cow table via [[CowTable.merge]]
     * (delete rows as `_delete`, insert/update post-images as upserts —
     * the stream_cow_merge keyed-state sink pattern; each version slice
@@ -100,10 +102,10 @@ object CdfStream {
       spark.conf.set("spark.sql.catalog.graft",
         classOf[graft.sources.GraftCatalog].getName)
       spark.sql(s"UPDATE graft.`$base` SET o_totalprice = o_totalprice * 2 " +
-        "WHERE o_orderkey % 5 = 1") // v1: delta route (vectors)
+        "WHERE o_orderkey % 5 = 1") // v1: vectors + new rows
       val vUpdate = AtomicPublish.committed(spark, base)
       spark.sql(s"DELETE FROM graft.`$base` " +
-        "WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 3") // v2: COW delete
+        "WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 3") // v2: vectors only
       val vDelete = AtomicPublish.committed(spark, base)
       val live = CowTable.manifest(spark, base)
         .map(e => e.rows - e.dvRows).sum
@@ -136,7 +138,8 @@ object CdfStream {
           // change counts the in-band requires need (was a distinct()
           // job plus a localCheckpoint + count() pair per version; the
           // per-version merge re-reads its slice straight from the
-          // materialized span files and checkpoints it itself)
+          // batch's files — pool files or materialized spans — and
+          // checkpoints it itself)
           val counts = batch.groupBy("_commit_version").count()
             .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
           counts.foreach { case (v, n) =>

@@ -284,4 +284,90 @@ class ArtifactStreamSpec extends SparkSpec {
           feedDirs.map(_.getName).mkString(", "))
     } finally spark.conf.unset("spark.sql.catalog.graft.warehouse")
   }
+
+  /** Drain the change feed of `base` from its checkpoint `ck` once
+    * (`Trigger.AvailableNow`). Each micro-batch's rows are collected —
+    * the drain's only job per batch — and returned by batch id. */
+  private def drainCdf(base: String, ck: String, from: Long): Map[Long, Seq[String]] = {
+    val got = scala.collection.mutable.Map.empty[Long, Seq[String]]
+    spark.readStream.format("graft-artifact")
+      .option("base", base).option("cow", "true").option("key", "id")
+      .option("changeFeed", "true").option("startVersion", from.toString)
+      .load().writeStream
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        got(id) = b.collect().map(_.toString).toSeq.sorted)
+      .option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    got.toMap
+  }
+
+  private def referenceRows(base: String, v: Long): Seq[String] =
+    ChangeFeedSpec.reference(spark, base, v - 1, v, "id")
+      .withColumn("_commit_version", lit(v))
+      .collect().map(_.toString).toSeq.sorted
+
+  private def cdfDirs(ck: String): Seq[String] = {
+    val d = new java.io.File(ck, "sources/0/_graft_cdf")
+    Option(d.listFiles()).toSeq.flatten.map(_.getName)
+  }
+
+  test("change feed: an append and a dvDelete version are served in place " +
+    "— planning launches no job and writes nothing under _graft_cdf/") {
+    val base = Files.createTempDirectory("cfeed_inplace").toString + "/t"
+    val v0 = graft.io.CowTable.create(spark, base,
+      (1 to 200).map(i => (i.toLong, i * 1.5)).toDF("id", "v"), "id",
+      numFiles = 4, retain = 10)
+    val ck = Files.createTempDirectory("cfeed_inplace_ck").toString
+    val appended = graft.io.CowTable.append(spark, base,
+      (201 to 220).map(i => (i.toLong, i * 1.5)).toDF("id", "v"), retain = 10)
+    var got = Map.empty[Long, Seq[String]]
+    // one job per batch: the collect in the sink; none in planning
+    assert(jobsOf { got = drainCdf(base, ck, v0 + 1) } === 1)
+    assert(got.values.toSeq === Seq(referenceRows(base, appended)))
+    val deleted = graft.io.CowTable.dvDelete(spark, base, col("id") % 7 === 0,
+      retain = 10)
+    assert(jobsOf { got = drainCdf(base, ck, v0 + 1) } === 1)
+    assert(got.values.toSeq === Seq(referenceRows(base, deleted)))
+    assert(got.values.head.size === 31 && got.values.head.forall(_.contains("delete")))
+    assert(cdfDirs(ck).isEmpty, "an in-place batch must not be materialized")
+    // a joined version (a merge) is still materialized, and equal too
+    val merged = graft.io.CowTable.merge(spark, base, Seq((3L, 0.0)).toDF("id", "v")
+      .withColumn("_delete", lit(false)), "id", retain = 10)
+    got = drainCdf(base, ck, v0 + 1)
+    assert(got.values.toSeq === Seq(referenceRows(base, merged)))
+    assert(got.values.head.exists(_.contains("update")))
+  }
+
+  test("change feed: a replayed in-place batch returns identical rows; " +
+    "after vacuum removes its files it fails with the retain-window message") {
+    val base = Files.createTempDirectory("cfeed_replay").toString + "/t"
+    val v0 = graft.io.CowTable.create(spark, base,
+      (1 to 100).map(i => (i.toLong, i * 1.5)).toDF("id", "v"), "id",
+      numFiles = 2, retain = 3)
+    val ck = Files.createTempDirectory("cfeed_replay_ck").toString
+    graft.io.CowTable.append(spark, base, Seq((500L, 1.0)).toDF("id", "v"))
+    graft.io.CowTable.dvDelete(spark, base, col("id") % 3 === 0)
+    val first = drainCdf(base, ck, v0 + 1)
+    val last = first.keys.max
+    // forget that the last batch committed: a restart replays it from
+    // the offset log
+    def uncommit(): Unit = Seq(s"$last", s".$last.crc")
+      .foreach(n => new java.io.File(ck, s"commits/$n").delete())
+    uncommit()
+    assert(drainCdf(base, ck, v0 + 1) === Map(last -> first(last)),
+      "a replayed batch must return the same rows")
+    val served = graft.io.CowTable.manifest(spark, base).map(_.file)
+    uncommit()
+    // rewrite every file, then prune all but the head and reclaim
+    graft.io.CowTable.compact(spark, base, targetRows = 1000, key = "id")
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.sql(s"CALL graft.vacuum('$base', 0, ${System.currentTimeMillis() + 3600000L})")
+    assert(served.forall(f => !new java.io.File(f).exists()),
+      "vacuum must have removed the batch's files")
+    val ms = chainedMsgs(intercept[Exception](drainCdf(base, ck, v0 + 1)))
+    assert(ms.exists(_.contains("retain window")),
+      s"expected the retain-window message, got: ${ms.mkString(" | ")}")
+  }
 }

@@ -225,31 +225,6 @@ class PoolStatsSpec extends SparkSpec {
       "a refused write must remove its staging directory")
   }
 
-  /** Spark jobs started by `body`, counted between two marker jobs so
-    * asynchronous listener delivery cannot blur the edges. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marks = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.job.description") == "pstats-mark")
-          marks.incrementAndGet()
-        else if (marks.get() == 1) jobs.incrementAndGet()
-    }
-    def mark(n: Int): Unit = {
-      sc.setJobDescription("pstats-mark")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (marks.get() < n && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(marks.get() === n, "marker job never reached the listener")
-    }
-    sc.addSparkListener(l)
-    try { mark(1); body; mark(2) } finally sc.removeSparkListener(l)
-    jobs.get()
-  }
-
   test("job budget: append, one-file merge and compact commit after their " +
     "data job alone") {
     val base = Files.createTempDirectory("pstats_jobs").toString + "/t"

@@ -3,6 +3,12 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** A version that is not readable: pruned by retention, or never sealed.
+  * Typed so a writer whose parent was pruned under it by a competing
+  * commit can tell that race from a fault. */
+class VersionNotPublishedException(message: String)
+  extends IllegalArgumentException(message)
+
 /** Atomic MULTI-dataset publish — the [[graft.streaming.VersionedState]]
   * marker protocol extended from one state table to a SET of datasets
   * exposed as one unit, with OPTIMISTIC MULTI-WRITER concurrency. All
@@ -289,14 +295,23 @@ object AtomicPublish {
 
   /** Time-travel read: dataset `name` AS OF `version`. Only versions a
     * `retain` window kept are readable; a pruned or never-sealed
-    * version fails fast rather than returning a partial directory.
+    * version fails fast ([[VersionNotPublishedException]]) rather than
+    * returning a partial directory.
     */
   def readVersion(spark: SparkSession, base: String, name: String,
                   version: Long): DataFrame = {
-    val b = new Path(base)
-    require(fsOf(spark, b).exists(new Path(b, s"v$version/_PUBLISHED")),
-      s"version $version under $base is not published (pruned or partial)")
+    requirePublished(spark, base, version)
     spark.read.parquet(s"$base/v$version/$name")
+  }
+
+  /** Fails with [[VersionNotPublishedException]] unless `version` is
+    * sealed under `base`. */
+  private[io] def requirePublished(spark: SparkSession, base: String,
+                                   version: Long): Unit = {
+    val b = new Path(base)
+    if (!fsOf(spark, b).exists(new Path(b, s"v$version/_PUBLISHED")))
+      throw new VersionNotPublishedException(
+        s"version $version under $base is not published (pruned or partial)")
   }
 
   /** All readable COMMITTED version ids under `base`, ascending. Sealed

@@ -28,12 +28,15 @@ import org.apache.spark.sql.functions._
   *     file-count ceiling) — and REFERENCES every other file unchanged
   *     in the new manifest via anti-join. Merge cost is O(affected
   *     files + source), not O(table).
-  *   - serializability comes from [[AtomicPublish.tryPublish]]: a merge
-  *     computed against parent version P commits only if it lands at
-  *     P+1. A concurrent writer winning the slot forces a recompute
-  *     against the new state, so no committed row change is ever
-  *     silently dropped (the lost-update anomaly plain `publish` would
-  *     allow). Orphaned pool files from the losing attempt are garbage,
+  *   - serializability comes from ONE commit loop, [[commitChange]],
+  *     that every writer goes through: an attempt computed against
+  *     parent version P returns only what it changes, and the loop
+  *     commits it through [[AtomicPublish.tryPublish]] only if it lands
+  *     at P+1. A concurrent writer winning the slot — or pruning P under
+  *     the attempt — forces a recompute against the new state, so no
+  *     committed row change is ever silently dropped (the lost-update
+  *     anomaly plain `publish` would allow). The losing attempt's
+  *     deletion vector is deleted at once; its pool files are garbage,
   *     reclaimed by [[vacuum]].
   *   - compaction is the same COW discipline applied to layout health:
   *     bin-pack undersized neighbors (by manifest row counts alone)
@@ -600,12 +603,7 @@ object CowTable {
     * job; large ones keep the distributed parquet scan. */
   private def manifestDfAt(spark: SparkSession, base: String,
                            version: Long): DataFrame =
-    cachedEntriesAt(spark, base, version) match {
-      case Some(es) => entriesDf(spark, es)
-      case None =>
-        reroot(pad(AtomicPublish.readVersion(spark, base, "manifest", version)),
-          base)
-    }
+    new Snapshot(spark, base, version).frame
 
   /** RENAME/relocation precondition. Deletion vectors written by this
     * version of the engine reference files by BASENAME (the `_RELOC`
@@ -639,8 +637,7 @@ object CowTable {
 
   private def entriesAt(spark: SparkSession, base: String,
                         version: Long): Seq[Entry] =
-    cachedEntriesAt(spark, base, version)
-      .getOrElse(collectEntries(manifestDfAt(spark, base, version)))
+    new Snapshot(spark, base, version).entries
 
   /** Manifest entries of version `v` — what lets the table-feed stream
     * serve a bootstrap batch DIRECTLY from the version's immutable pool
@@ -1038,21 +1035,14 @@ object CowTable {
     norm(dst.toString)
   }
 
-  /** The cumulative-vector half of every deletion-vector commit: `hits`
-    * carries (file, pos) of newly deleted LIVE rows, `perFile` their
-    * count per file and `touched` the parent entries of those files.
-    * One vector holds the new positions plus each touched file's old
-    * ones, and each touched entry points at it — a driver map over the
-    * cached entry list when the manifest is small, else a join against
-    * the (touched-file-count bounded) per-file delta, so the manifest is
-    * never materialized on the driver. Returns (vector path, manifest,
-    * entry list when cached). */
-  private def vectorManifest(spark: SparkSession, base: String,
-                             mDf: DataFrame, parentEntries: Option[Seq[Entry]],
-                             touched: Seq[Entry], hits: DataFrame,
-                             perFile: Map[String, Long]
-                            ): (String, DataFrame, Option[Seq[Entry]]) = {
-    import spark.implicits._
+  /** Write the cumulative deletion vector of a vector commit: `hits`
+    * carries (file, pos) of newly deleted LIVE rows and `touched` the
+    * parent entries of those files. The vector holds the new positions
+    * plus each touched file's old ones, so it replaces their vectors
+    * ([[commitChange]] points each touched entry at it). Returns its pool
+    * path. */
+  private def cumulativeVector(spark: SparkSession, base: String,
+                               touched: Seq[Entry], hits: DataFrame): String = {
     // the touched files' old positions: [[writeVector]] keeps only
     // basenames, so each old vector is filtered by basename (no join)
     // and read with its fixed schema (no schema-inference job)
@@ -1061,23 +1051,7 @@ object CowTable {
         .filter(regexp_extract(col("file"), "[^/]+$", 0)
           .isin(es.map(e => baseName(e.file)): _*))
     }
-    val dvPath = writeVector(spark, base, old.foldLeft(hits)(_ unionByName _))
-    parentEntries match {
-      case Some(es) =>
-        val all = es.map(e => perFile.get(e.file) match {
-          case Some(n) => e.copy(dv = dvPath, dvRows = e.dvRows + n)
-          case None => e
-        })
-        (dvPath, entriesDf(spark, all), Some(all))
-      case None =>
-        val deltas = perFile.toSeq.toDF("file", "_gf_n")
-        (dvPath, mDf.join(deltas, Seq("file"), "left")
-          .withColumn("dv",
-            when(col("_gf_n").isNotNull, lit(dvPath)).otherwise(col("dv")))
-          .withColumn("dvRows",
-            col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
-          .select(ManifestCols.map(col): _*), None)
-    }
+    writeVector(spark, base, old.foldLeft(hits)(_ unionByName _))
   }
 
   /** Live rows of `entries`: the raw pool scan minus each file's
@@ -1136,12 +1110,8 @@ object CowTable {
     // the separator guard applies at BIRTH, not just when entries mint
     df.schema.fieldNames.foreach(requireMappableName)
     val entries = writePool(spark, base, df, key, numFiles, statsCols)
-    val m = Meta(df.schema.json, key, statsCols, retain = retain)
-    val v = AtomicPublish.publish(spark, base,
-      payload(spark, base, -1L, entriesDf(spark, entries), None,
-        Some(m)), retain, op = Some("CREATE"))
-    primeVersionCaches(spark, base, v, Some(entries), Some(m), Seq.empty)
-    v
+    publishFirst(spark, base, entries,
+      Meta(df.schema.json, key, statsCols, retain = retain), Nil, "CREATE")
   }
 
   /** DDL-style creation of an EMPTY table: version 0 is a zero-entry
@@ -1157,12 +1127,8 @@ object CowTable {
     schema.fieldNames.foreach(requireMappableName) // see create
     require(!AtomicPublish.exists(spark, base),
       s"cow table already exists under $base")
-    val m = Meta(schema.json, key, statsCols, retain = retain)
-    val v = AtomicPublish.publish(spark, base,
-      payload(spark, base, -1L, entriesDf(spark, Seq.empty), None,
-        Some(m)), retain, op = Some("CREATE"))
-    primeVersionCaches(spark, base, v, Some(Seq.empty), Some(m), Seq.empty)
-    v
+    publishFirst(spark, base, Nil,
+      Meta(schema.json, key, statsCols, retain = retain), Nil, "CREATE")
   }
 
   /** An empty frame with the table's DATA schema — the version's `meta`
@@ -1252,8 +1218,8 @@ object CowTable {
   /** Txn-stamp cache — same immutable-version identity as [[metaCache]]
     * (writer token), same reason: every commit re-reads the PARENT's txn
     * table to carry the stamps forward, a parquet job per commit that
-    * the committing JVM already holds in memory ([[casCommit]] primes
-    * the version it just wrote). */
+    * the committing JVM already holds in memory ([[commitChange]]
+    * primes the version it just wrote). */
   private val txnCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), Seq[(String, Long)]]()
 
@@ -1287,28 +1253,30 @@ object CowTable {
       .collect { case (s, b) if s == stream => b }
       .foldLeft(-1L)(math.max)
 
-  /** Version payload: the manifest (a DataFrame — never materialized on
-    * the driver) plus the meta table (parent's, unless a new one is
-    * supplied) plus the txn table — the PARENT's stamps carried forward
-    * on every commit (compaction or another stream's merge must never
-    * erase a writer's idempotence marker), updated when this commit is
-    * itself stamped. The txn table is O(streams): collected and
-    * rewritten wholesale each version. */
-  private def payload(spark: SparkSession, base: String, parent: Long,
-                      manifest: DataFrame, txn: Option[(String, Long)],
-                      newMeta: Option[Meta] = None
-                     ): Seq[(String, DataFrame)] = {
+  /** The datasets of one version: the manifest (a DataFrame — never
+    * materialized on the driver), the meta table and, once any stream
+    * has stamped the table, the txn table. The txn table is O(streams):
+    * collected and rewritten wholesale each version. */
+  private def versionDatasets(spark: SparkSession, manifest: DataFrame,
+                              meta: Option[Meta], txns: Seq[(String, Long)]
+                             ): Seq[(String, DataFrame)] = {
     import spark.implicits._
-    val carried = txnsAt(spark, base, parent)
-    val updated = txn match {
-      case None => carried
-      case Some((s, b)) => carried.filterNot(_._1 == s) :+ ((s, b))
-    }
     Seq("manifest" -> manifest) ++
-      newMeta.orElse(metaAt(spark, base, parent))
-        .map(m => "meta" -> metaDf(spark, m)).toSeq ++
-      (if (updated.isEmpty) Seq.empty
-       else Seq("txn" -> updated.toDF("stream", "batch")))
+      meta.map(m => "meta" -> metaDf(spark, m)).toSeq ++
+      (if (txns.isEmpty) Seq.empty
+       else Seq("txn" -> txns.toDF("stream", "batch")))
+  }
+
+  /** Publish a new table's version 0 and prime its caches — the
+    * bootstrap of [[create]], [[createEmpty]] and [[exactlyOnceMerge]]. */
+  private def publishFirst(spark: SparkSession, base: String,
+                           entries: Seq[Entry], m: Meta,
+                           txns: Seq[(String, Long)], op: String): Long = {
+    val v = AtomicPublish.publish(spark, base,
+      versionDatasets(spark, entriesDf(spark, entries), Some(m), txns),
+      m.retain, op = Some(op))
+    primeVersionCaches(spark, base, v, Some(entries), Some(m), txns)
+    v
   }
 
   /** WRITE-THROUGH cache priming for a version this JVM just committed:
@@ -1338,54 +1306,187 @@ object CowTable {
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** One CAS commit: build the version payload (manifest + carried or
-    * replaced meta + carried/stamped txn table), attempt the publish,
-    * and on success prime the version caches. `entries` is the
-    * manifest's row list when the caller built the manifest as a LOCAL
-    * list (the small-table fast paths) — it must be exactly the rows of
-    * `manifest`, and is what makes every later read of this version
-    * job-free in this JVM. Large-table paths pass None and keep the
-    * populate-on-read behavior. */
-  private def casCommit(spark: SparkSession, base: String, parent: Long,
-                        manifest: DataFrame, entries: Option[Seq[Entry]],
-                        txn: Option[(String, Long)], newMeta: Option[Meta],
-                        retain: Int, op: String): Option[Long] = {
-    import spark.implicits._
-    val carried = txnsAt(spark, base, parent)
-    val updated = txn match {
-      case None => carried
-      case Some((s, b)) => carried.filterNot(_._1 == s) :+ ((s, b))
+  /** One committed version as a commit attempt reads it. Each part is
+    * resolved lazily and at most once, so a writer pays only for what it
+    * reads. `cached` is the entry list when the manifest is small
+    * enough to cache ([[cachedEntriesAt]]); `frame` is the manifest as a
+    * DataFrame either way — a local relation over `cached`, else the
+    * distributed parquet scan, never enumerated on the driver. */
+  private final class Snapshot(spark: SparkSession, base: String,
+                               val version: Long) {
+    lazy val cached: Option[Seq[Entry]] = cachedEntriesAt(spark, base, version)
+    lazy val frame: DataFrame = cached match {
+      case Some(es) => entriesDf(spark, es)
+      case None => reroot(pad(
+        AtomicPublish.readVersion(spark, base, "manifest", version)), base)
     }
-    val effMeta = newMeta.orElse(metaAt(spark, base, parent))
-    val datasets = Seq("manifest" -> manifest) ++
-      effMeta.map(m => "meta" -> metaDf(spark, m)).toSeq ++
-      (if (updated.isEmpty) Seq.empty
-       else Seq("txn" -> updated.toDF("stream", "batch")))
-    val v = AtomicPublish.tryPublish(spark, base, datasets,
-      effRetain(effMeta, retain), parent, op = Some(op))
-    v.foreach(primeVersionCaches(spark, base, _, entries, effMeta, updated))
-    v
+    lazy val entries: Seq[Entry] = cached.getOrElse(collectEntries(frame))
+    /** None only for a table without meta: a version pruned under the
+      * attempt fails with [[VersionNotPublishedException]]. */
+    lazy val meta: Option[Meta] = {
+      val m = metaAt(spark, base, version)
+      if (m.isEmpty) AtomicPublish.requirePublished(spark, base, version)
+      m
+    }
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      meta.map(m => org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    lazy val colMap: Map[String, String] =
+      meta.map(_.physMap).getOrElse(Map.empty)
   }
 
-  /** The committed manifest BOTH as a frame and, when small, as the
-    * entry list ([[cachedEntriesAt]]) — the list powers the local
-    * (zero-job) untouched-file carry-over and the commit-time cache
-    * prime; a manifest too large to cache returns (distributed frame,
-    * None) and every consumer keeps the executors-only path. */
-  private def manifestWithEntries(spark: SparkSession, base: String,
-                                  v: Long): (DataFrame, Option[Seq[Entry]]) =
-    cachedEntriesAt(spark, base, v) match {
-      case Some(es) => (entriesDf(spark, es), Some(es))
+  /** A deletion vector one attempt wrote ([[cumulativeVector]]) and how
+    * many rows it newly deletes from each pool file it covers. */
+  private case class NewVector(path: String, perFile: Map[String, Long])
+
+  /** What one commit attempt changes against its parent. */
+  private sealed trait Change
+
+  /** Nothing: the statement's result is the parent version. */
+  private case object Unchanged extends Change
+
+  /** The parent's entries without the `removed` files, with `vector`
+    * applied to the files it covers, plus `added`. `meta` replaces the
+    * parent's meta; `txn` stamps the commit. */
+  private case class Edit(removed: Set[String] = Set.empty,
+                          added: Seq[Entry] = Nil,
+                          vector: Option[NewVector] = None,
+                          meta: Option[Meta] = None,
+                          txn: Option[(String, Long)] = None) extends Change
+
+  /** A whole replacement manifest (`entries` when it is a local list);
+    * `meta` replaces the parent's meta. */
+  private case class Replace(manifest: DataFrame, entries: Option[Seq[Entry]],
+                             meta: Option[Meta]) extends Change
+
+  /** Runs in [[commitChange]] once per attempt, right after the parent is
+    * resolved, with (base, parent). A no-op; tests set it to land a
+    * competing commit inside an attempt. */
+  @volatile private[graft] var afterParent: (String, Long) => Unit =
+    (_, _) => ()
+
+  /** The commit loop of every cow writer: optimistic concurrency over
+    * [[AtomicPublish.tryPublish]]. Each attempt takes the committed head
+    * as its parent and runs `attempt` against it, which returns only what
+    * it changes. The loop then carries the untouched entries over
+    * ([[carryOver]]), carries the parent's txn stamps forward (a
+    * compaction or another stream's merge must never erase a writer's
+    * idempotence marker), publishes at exactly parent + 1 and primes the
+    * new version's caches. A lost CAS re-runs `attempt` against the new
+    * head, so no committed change is ever silently dropped; the lost
+    * attempt's deletion vector is deleted at once, its pool files are
+    * left to [[vacuum]].
+    *
+    * A PRUNE RACE is a conflict too: with `retain = 1` the winner's commit
+    * prunes the parent out from under the loser's reads, which then fail
+    * before the CAS could report the conflict. Such a failure — a
+    * version or file that vanished, told by type ([[vanished]]) — retries
+    * when the head has moved past the parent. Any other failure (a CHECK
+    * or identity `require`, a [[ConcurrentWriteException]]) propagates at
+    * once, so a failing statement never retries forever. Returns the
+    * committed version, or the parent when `attempt` changes nothing. */
+  @annotation.tailrec
+  private def commitChange(spark: SparkSession, base: String, op: String,
+                           retain: Int)(attempt: Snapshot => Change): Long = {
+    val parent = AtomicPublish.committed(spark, base)
+    require(parent >= 0, s"no committed version under $base")
+    afterParent(base, parent)
+    val p = new Snapshot(spark, base, parent)
+    def publish(manifest: DataFrame, entries: Option[Seq[Entry]],
+                newMeta: Option[Meta],
+                txn: Option[(String, Long)]): Option[Long] = {
+      val carried = txnsAt(spark, base, parent)
+      val txns = txn.fold(carried) { case (s, b) =>
+        carried.filterNot(_._1 == s) :+ ((s, b))
+      }
+      val meta = newMeta.orElse(p.meta)
+      val v = AtomicPublish.tryPublish(spark, base,
+        versionDatasets(spark, manifest, meta, txns),
+        effRetain(meta, retain), parent, op = Some(op))
+      v.foreach(primeVersionCaches(spark, base, _, entries, meta, txns))
+      v
+    }
+    var change: Change = Unchanged
+    val committed =
+      try {
+        change = attempt(p)
+        change match {
+          case Unchanged => Some(parent)
+          case e: Edit =>
+            val (manifest, entries) = carryOver(spark, p, e)
+            publish(manifest, entries, e.meta, e.txn)
+          case r: Replace => publish(r.manifest, r.entries, r.meta, None)
+        }
+      } catch {
+        case scala.util.control.NonFatal(e)
+            if vanished(e) && AtomicPublish.committed(spark, base) != parent =>
+          None
+      }
+    committed match {
+      case Some(v) => v
       case None =>
-        (reroot(pad(AtomicPublish.readVersion(spark, base, "manifest", v)),
-          base), None)
+        change match {
+          case Edit(_, _, Some(dv), _, _) =>
+            fsOf(spark, base).delete(new Path(dv.path), true)
+          case _ => ()
+        }
+        commitChange(spark, base, op, retain)(attempt)
+    }
+  }
+
+  /** The parent's entries under `e`: the removed files dropped, the new
+    * vector applied to the files it covers, the added entries appended.
+    * A cached entry list makes this a driver pass and the result an
+    * entry list (which primes the new version's cache); a manifest too
+    * large to cache is carried by joins, never enumerated on the
+    * driver. */
+  private def carryOver(spark: SparkSession, p: Snapshot,
+                        e: Edit): (DataFrame, Option[Seq[Entry]]) = {
+    import spark.implicits._
+    p.cached match {
+      case Some(es) =>
+        val all = es.filterNot(x => e.removed.contains(x.file)).map(x =>
+          e.vector.flatMap(v => v.perFile.get(x.file).map(n =>
+            x.copy(dv = v.path, dvRows = x.dvRows + n))).getOrElse(x)) ++
+          e.added
+        (entriesDf(spark, all), Some(all))
+      case None =>
+        val kept =
+          if (e.removed.isEmpty) p.frame
+          else p.frame.join(e.removed.toSeq.toDF("file"), Seq("file"),
+            "left_anti")
+        val vectored = e.vector.fold(kept) { v =>
+          kept.join(v.perFile.toSeq.toDF("file", "_gf_n"), Seq("file"), "left")
+            .withColumn("dv",
+              when(col("_gf_n").isNotNull, lit(v.path)).otherwise(col("dv")))
+            .withColumn("dvRows",
+              col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
+            .select(ManifestCols.map(col): _*)
+        }
+        (if (e.added.isEmpty) vectored
+         else vectored.unionByName(entriesDf(spark, e.added)), None)
+    }
+  }
+
+  /** Whether `e`, or one of its causes, says a version or a file
+    * vanished — the shape of a retention prune race. Told by type only:
+    * [[VersionNotPublishedException]], `FileNotFoundException`, or
+    * Spark's `PATH_NOT_FOUND` condition. */
+  private def vanished(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+      case _: VersionNotPublishedException |
+           _: java.io.FileNotFoundException => true
+      case t: org.apache.spark.SparkThrowable =>
+        t.getCondition == "PATH_NOT_FOUND"
+      case _ => false
     }
 
   /** MERGE: `source` carries full-width rows plus a boolean `_delete`
     * column (absent ⇒ all upserts). Matched keys are replaced by their
     * source row (or dropped when `_delete`), unmatched upserts are
     * inserted. Only files whose key range intersects a source key are
-    * rewritten; commits retry against fresh state on conflict.
+    * rewritten; each attempt of [[commitChange]] removes them and adds
+    * their rewrite, and a lost commit recomputes against the new head.
     *
     * `beforeCommit` is a test seam (fires once per attempt, before the
     * CAS) — production callers leave the default no-op.
@@ -1400,27 +1501,21 @@ object CowTable {
       // attempt's discovery (a full shuffle over the source keys)
       // materializes it, so no separate eager-checkpoint job is paid
       .localCheckpoint(eager = false)
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
+    commitChange(spark, base, "MERGE", retain) { p =>
       // the manifest stays a DataFrame end to end: discovery is the
       // distributed interval-bucket join (no broadcast, no SafeRows
       // ceiling — a 100k-file table merges the same way an 8-file one
       // does) and the untouched files are carried into the new manifest
-      // by anti-join, never enumerated on the driver. Only the AFFECTED
-      // entries — the merge's own rewrite footprint, which must be
-      // listed to be scanned at all — are collected. (Small manifests
-      // additionally come back as a local entry list, which makes the
-      // carry-over a driver filter and the commit cache-primable.)
-      val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
+      // by [[carryOver]], never enumerated on the driver. Only the
+      // AFFECTED entries — the merge's own rewrite footprint, which must
+      // be listed to be scanned at all — are collected.
       // ADDITIVE schema evolution: a source carrying columns the table
       // lacks widens the schema — old pool files stay untouched and
       // read back NULL for the new columns (the scan is meta-schema
       // driven), new files carry them, and the committed meta records
       // the widened shape. A source MISSING table columns is rejected
       // (a full-row MERGE replace would silently null existing data).
-      val tblSchema = dataSchemaAt(spark, base, parent)
+      val tblSchema = p.schema
       val srcSchema = org.apache.spark.sql.types.StructType(
         src.schema.fields.filterNot(_.name == "_delete"))
       tblSchema.foreach { ts =>
@@ -1429,7 +1524,7 @@ object CowTable {
           s"merge source is missing table columns ${missing.mkString(", ")}" +
             " — schema evolution only ADDS columns")
       }
-      val parentMeta = metaAt(spark, base, parent)
+      val parentMeta = p.meta
       val evolved = tblSchema.map { ts =>
         val extra = srcSchema.fields
           .filterNot(f => ts.fieldNames.contains(f.name))
@@ -1472,11 +1567,10 @@ object CowTable {
       // (it must be, to be scanned) and everything downstream — the
       // rewrite scan and the untouched carry-over — works off the local
       // list, so no localCheckpoint job pins a second copy
-      val affected = collectEntries(discoverCandidates(mDf, srcKeys,
+      val affected = collectEntries(discoverCandidates(p.frame, srcKeys,
         mergeMap.getOrElse(ks.head, ks.head), kDt)
         .filter(tailMayIntersect(tailBoundsOf(src, ks, identity, colDt,
           k => mergeMap.getOrElse(k, k))))) // merge-footprint bounded
-      val affectedFiles = affected.map(_.file).toSet
       val upserts = src.filter(!col("_delete")).drop("_delete")
       val survivors =
         if (affected.isEmpty) upserts
@@ -1496,61 +1590,10 @@ object CowTable {
         gens = parentMeta.map(gensOf).getOrElse(Nil),
         idNotNull = parentMeta.flatMap(identityOf).map(_._1))
       beforeCommit()
-      val (manifest, allEntries) = parentEntries match {
-        case Some(es) =>
-          val all = es.filterNot(e => affectedFiles.contains(e.file)) ++
-            newEntries
-          (entriesDf(spark, all), Some(all))
-        case None =>
-          (mDf.join(entriesDf(spark, affected).select("file"), Seq("file"),
-            "left_anti").unionByName(entriesDf(spark, newEntries)), None)
-      }
-      casCommit(spark, base, parent, manifest, allEntries, txn, evolvedMeta,
-        retain, "MERGE") match {
-        case Some(v) => result = v
-        case None => () // conflict: recompute against the new committed
-      }
+      Edit(removed = affected.map(_.file).toSet, added = newEntries,
+        meta = evolvedMeta, txn = txn)
     }
-    result
   }
-
-  /** One OPTIMISTIC ATTEMPT of a retrying writer: run `body` (the reads
-    * pinned to `parent` plus the CAS) and classify a failure as a
-    * CONFLICT — not an error — when another writer has committed past
-    * `parent` meanwhile. The hole this closes: with `retain = 1` the
-    * winning writer's commit PRUNES the parent version out from under
-    * the loser's in-flight reads (meta / manifest at `parent`), which
-    * then fail "not published" BEFORE reaching the CAS that would have
-    * reported the conflict — observed as the racing-appends spec flake.
-    * Re-deriving against the new head is exactly what the loser must do
-    * anyway. Only failures SHAPED like the prune race classify — a
-    * vanished version/path ([[isPruneRace]]); a deterministic fault (a
-    * CHECK-constraint or identity require inside the write) propagates
-    * immediately even when another commit happens to land concurrently,
-    * so a permanently failing statement can never retry forever (and
-    * never orphans more than one attempt's pool files). */
-  private def isPruneRace(e: Throwable): Boolean = {
-    var t: Throwable = e
-    var depth = 0
-    while (t != null && depth < 16) {
-      if (t.isInstanceOf[java.io.FileNotFoundException]) return true
-      val m = t.getMessage
-      if (m != null && (m.contains("is not published") ||
-        m.contains("Path does not exist") || m.contains("PATH_NOT_FOUND")))
-        return true
-      t = t.getCause
-      depth += 1
-    }
-    false
-  }
-
-  private def attemptAt[T](spark: SparkSession, base: String, parent: Long)(
-      body: => Option[T]): Option[T] =
-    try body catch {
-      case scala.util.control.NonFatal(e)
-          if isPruneRace(e) &&
-            AtomicPublish.committed(spark, base) != parent => None
-    }
 
   /** INSERT-style append: `df` becomes `numFiles` new pool files added
     * to the manifest; no existing file is read or touched, and the pool
@@ -1566,33 +1609,13 @@ object CowTable {
       return appendWithIdentity(spark, base, df, numFiles, retain)
     val newEntries = writePool(spark, base, df, m.key, numFiles, m.statsCols,
       colMap = m.physMap, checks = m.checks, gens = gensOf(m))
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      attemptAt(spark, base, parent) {
-        val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-        val (manifest, allEntries) = parentEntries match {
-          case Some(es) =>
-            val all = es ++ newEntries
-            (entriesDf(spark, all), Some(all))
-          case None =>
-            (mDf.unionByName(entriesDf(spark, newEntries)), None)
-        }
-        casCommit(spark, base, parent, manifest, allEntries, None, None,
-          retain, "APPEND")
-      } match {
-        case Some(v) => result = v
-        case None => () // conflict: re-commit against the new manifest
-      }
-    }
-    result
+    commitChange(spark, base, "APPEND", retain)(_ => Edit(added = newEntries))
   }
 
   /** Append to a table with an IDENTITY column: generated values derive
     * from the committed meta's high-water mark, so — unlike the plain
-    * append, whose pool files are written once outside the CAS loop —
-    * assignment AND the pool write live INSIDE the loop: a concurrent
+    * append, whose pool files are written once outside the commit loop —
+    * assignment AND the pool write are part of each attempt: a concurrent
     * commit invalidates the reserved range (two writers reading the same
     * hwm would mint the same ids), the loser re-reads the new mark and
     * re-assigns. A lost attempt's pool files are unreferenced and
@@ -1603,34 +1626,15 @@ object CowTable {
                                  df: DataFrame, numFiles: Int,
                                  retain: Int): Long = {
     val src = df.localCheckpoint() // one evaluation across retries
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      attemptAt(spark, base, parent) {
-        val m = metaAt(spark, base, parent).getOrElse(sys.error(
-          s"no table meta under $base"))
-        val id = identityOf(m).get
-        val (assigned, newHwm) = assignIdentity(spark, src, id, m.idHwm)
-        val newEntries = writePool(spark, base, assigned, m.key, numFiles,
-          m.statsCols, colMap = m.physMap, checks = m.checks,
-          gens = gensOf(m))
-        val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-        val (manifest, allEntries) = parentEntries match {
-          case Some(es) =>
-            val all = es ++ newEntries
-            (entriesDf(spark, all), Some(all))
-          case None =>
-            (mDf.unionByName(entriesDf(spark, newEntries)), None)
-        }
-        casCommit(spark, base, parent, manifest, allEntries, None,
-          Some(m.copy(idHwm = newHwm)), retain, "APPEND")
-      } match {
-        case Some(v) => result = v
-        case None => () // conflict: the hwm moved — re-assign, re-write
-      }
+    commitChange(spark, base, "APPEND", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(s"no table meta under $base"))
+      val id = identityOf(m).get
+      val (assigned, newHwm) = assignIdentity(spark, src, id, m.idHwm)
+      val newEntries = writePool(spark, base, assigned, m.key, numFiles,
+        m.statsCols, colMap = m.physMap, checks = m.checks,
+        gens = gensOf(m))
+      Edit(added = newEntries, meta = Some(m.copy(idHwm = newHwm)))
     }
-    result
   }
 
   /** DELETE WHERE: rewrites only the files that CONTAIN a matching row,
@@ -1645,56 +1649,37 @@ object CowTable {
     * observability hook). */
   def deleteWhere(spark: SparkSession, base: String, pred: Column,
                   key: String, retain: Int = 1,
-                  onDiscovery: (Long, Long) => Unit = (_, _) => ()): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-      val pMeta = metaAt(spark, base, parent)
-      val cm = pMeta.map(_.physMap).getOrElse(Map.empty)
-      val keyName = splitKeys(pMeta.map(_.key).getOrElse(key)).head
-      val sk = dataSchemaAt(spark, base, parent)
-        .flatMap(_.fields.find(_.name == keyName))
+                  onDiscovery: (Long, Long) => Unit = (_, _) => ()): Long =
+    commitChange(spark, base, "DELETE", retain) { p =>
+      val cm = p.colMap
+      val keyName = splitKeys(p.meta.map(_.key).getOrElse(key)).head
+      val sk = p.schema.flatMap(_.fields.find(_.name == keyName))
         .exists(f => isStringKey(f.dataType))
       val cand = collectEntries(
-        mDf.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
+        p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
       onDiscovery(cand.size.toLong,
-        parentEntries.map(_.size.toLong).getOrElse(mDf.count()))
-      if (cand.isEmpty) return parent // stats prove nothing matches
-      val schema = dataSchemaAt(spark, base, parent)
-      val data = scanEntries(spark, cand, lineage = true, schema = schema,
-        colMap = cm)
-      val hit = data.filter(pred).select(col("_gf_file"))
-        .distinct().collect().map(_.getString(0)).toSet // candidate-bounded
-      if (hit.isEmpty) return parent // no-op: nothing matches
-      val hitEntries = cand.filter(e => hit.contains(e.file))
-      // SQL DELETE semantics: a row is deleted iff the predicate is
-      // TRUE — a NULL-evaluating row (e.g. an evolution-null column)
-      // SURVIVES; a bare `!pred` would silently drop it
-      val survivors = scanEntries(spark, hitEntries, schema = schema,
-        colMap = cm)
-        .filter(!coalesce(pred, lit(false)))
-      val statsCols = pMeta.map(_.statsCols).getOrElse(Nil)
-      val newEntries = writePool(spark, base, survivors, key, hit.size,
-        statsCols, colMap = cm)
-      val (manifest, allEntries) = parentEntries match {
-        case Some(es) =>
-          val all = es.filterNot(e => hit.contains(e.file)) ++ newEntries
-          (entriesDf(spark, all), Some(all))
-        case None =>
-          (mDf.join(entriesDf(spark, hitEntries).select("file"),
-            Seq("file"), "left_anti")
-            .unionByName(entriesDf(spark, newEntries)), None)
-      }
-      casCommit(spark, base, parent, manifest, allEntries, None, None,
-        retain, "DELETE") match {
-        case Some(v) => result = v
-        case None => ()
+        p.cached.map(_.size.toLong).getOrElse(p.frame.count()))
+      // empty when the stats prove nothing matches
+      val hit =
+        if (cand.isEmpty) Set.empty[String]
+        else scanEntries(spark, cand, lineage = true, schema = p.schema,
+          colMap = cm)
+          .filter(pred).select(col("_gf_file"))
+          .distinct().collect().map(_.getString(0)).toSet // candidate-bounded
+      if (hit.isEmpty) Unchanged
+      else {
+        // SQL DELETE semantics: a row is deleted iff the predicate is
+        // TRUE — a NULL-evaluating row (e.g. an evolution-null column)
+        // SURVIVES; a bare `!pred` would silently drop it
+        val hitEntries = cand.filter(e => hit(e.file))
+        val survivors = scanEntries(spark, hitEntries, schema = p.schema,
+          colMap = cm)
+          .filter(!coalesce(pred, lit(false)))
+        Edit(removed = hitEntries.map(_.file).toSet,
+          added = writePool(spark, base, survivors, key, hit.size,
+            p.meta.map(_.statsCols).getOrElse(Nil), colMap = cm))
       }
     }
-    result
-  }
 
   /** OPTIMIZE: bin-pack adjacent (by key range) undersized files into
     * ~`targetRows` files. Files already at target — and any group of
@@ -1720,16 +1705,13 @@ object CowTable {
               zorder: Seq[String] = Nil): Long = {
     if (zorder.nonEmpty) return compactZorder(spark, base, targetRows, key,
       retain, zorder)
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
+    commitChange(spark, base, "COMPACT", retain) { p =>
       // compaction PLANNING is global bin-packing over the sorted entry
       // list — inherently a driver-side pass over O(files) manifest
       // rows (the same metadata every lakehouse OPTIMIZE planner holds;
       // ~100 bytes/entry, so even a 1M-file table plans in ~100 MB).
       // The DOING reads only the rewritten groups.
-      val entries = entriesAt(spark, base, parent).sortBy(e => (e.kmin, e.file))
+      val entries = p.entries.sortBy(e => (e.kmin, e.file))
       def liveRows(e: Entry): Long = e.rows - e.dvRows // logical size
       val groups = entries.foldLeft(List.empty[List[Entry]]) {
         case (acc, e) if acc.nonEmpty &&
@@ -1742,29 +1724,24 @@ object CowTable {
       // surviving file vector-free (the DSv2 serving contract)
       val (rewrite, keep) = groups.partition(g =>
         g.size > 1 || g.exists(_.dvRows > 0))
-      if (rewrite.isEmpty) return parent // already compact: no-op
-      // one range-partitioned job over every rewritten group: the write
-      // parallelizes across the output files (a per-group loop would
-      // serialize on the biggest group) and the re-sort restores tight,
-      // non-overlapping key ranges for future manifest pruning
-      // meta-schema-driven scan: compaction also MATERIALIZES schema
-      // evolution, rewriting old-shape files into the current shape
-      val newEntries = writePool(spark, base,
-        scanEntries(spark, rewrite.flatten,
-          schema = dataSchemaAt(spark, base, parent),
-          colMap = colMapAt(spark, base, parent)), key,
-        numFiles = rewrite.size,
-        statsCols = metaAt(spark, base, parent).map(_.statsCols)
-          .getOrElse(Nil),
-        colMap = colMapAt(spark, base, parent))
-      val all = keep.flatten ++ newEntries
-      casCommit(spark, base, parent, entriesDf(spark, all), Some(all),
-        None, None, retain, "COMPACT") match {
-        case Some(v) => result = v
-        case None => ()
+      if (rewrite.isEmpty) Unchanged // already compact
+      else {
+        // one range-partitioned job over every rewritten group: the write
+        // parallelizes across the output files (a per-group loop would
+        // serialize on the biggest group) and the re-sort restores tight,
+        // non-overlapping key ranges for future manifest pruning
+        // meta-schema-driven scan: compaction also MATERIALIZES schema
+        // evolution, rewriting old-shape files into the current shape
+        val newEntries = writePool(spark, base,
+          scanEntries(spark, rewrite.flatten, schema = p.schema,
+            colMap = p.colMap), key,
+          numFiles = rewrite.size,
+          statsCols = p.meta.map(_.statsCols).getOrElse(Nil),
+          colMap = p.colMap)
+        val all = keep.flatten ++ newEntries
+        Replace(entriesDf(spark, all), Some(all), None)
       }
     }
-    result
   }
 
   /** OPTIMIZE ZORDER BY: rewrite the WHOLE table (re-clustering is
@@ -1774,50 +1751,42 @@ object CowTable {
     * conflicts recompute against the new state. */
   private def compactZorder(spark: SparkSession, base: String,
                             targetRows: Long, key: String, retain: Int,
-                            zorder: Seq[String]): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val schema = dataSchemaAt(spark, base, parent)
+                            zorder: Seq[String]): Long =
+    commitChange(spark, base, "ZORDER", retain) { p =>
       zorder.foreach(c => require(
-        schema.forall(_.fieldNames.contains(c)),
+        p.schema.forall(_.fieldNames.contains(c)),
         s"zorder column `$c` is not a column of the table"))
-      val entries = entriesAt(spark, base, parent)
-      if (entries.isEmpty) return parent // nothing to lay out
-      val cm = colMapAt(spark, base, parent)
-      val data = scanEntries(spark, entries, schema = schema, colMap = cm)
-        .localCheckpoint() // one scan: bounds + the rewrite
-      // exact integer bounds per z-column (one tiny aggregate) — the
-      // normalization every production z-order does first
-      val aggExprs = zorder.flatMap(c =>
-        Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-      val bRow = data.agg(aggExprs.head, aggExprs.tail: _*).head()
-      val bounds = zorder.indices.map { i =>
-        require(!bRow.isNullAt(2 * i),
-          s"zorder column `${zorder(i)}` is all-null or not castable " +
-            "to long: nothing to cluster on")
-        (bRow.getLong(2 * i), bRow.getLong(2 * i + 1))
-      }
-      val z = graft.ops.Layout.morton(zorder.map(col), bounds)
-      val liveRows = entries.map(e => e.rows - e.dvRows).sum
-      val nFiles = math.max(1L,
-        (liveRows + targetRows - 1) / math.max(1L, targetRows)).toInt
-      val m = metaAt(spark, base, parent)
-      val statsCols = (m.map(_.statsCols).getOrElse(Nil) ++ zorder).distinct
-      val newEntries = writePool(spark, base, data, key, nFiles,
-        statsCols, colMap = cm, layout = Some(z))
-      // the widened stats set becomes table metadata: every LATER write
-      // keeps recording the z-columns' per-file ranges
-      val newMeta = m.map(_.copy(statsCols = statsCols))
-      casCommit(spark, base, parent, entriesDf(spark, newEntries),
-        Some(newEntries), None, newMeta, retain, "ZORDER") match {
-        case Some(v) => result = v
-        case None => ()
+      val entries = p.entries
+      if (entries.isEmpty) Unchanged // nothing to lay out
+      else {
+        val data = scanEntries(spark, entries, schema = p.schema,
+          colMap = p.colMap)
+          .localCheckpoint() // one scan: bounds + the rewrite
+        // exact integer bounds per z-column (one tiny aggregate) — the
+        // normalization every production z-order does first
+        val aggExprs = zorder.flatMap(c =>
+          Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
+        val bRow = data.agg(aggExprs.head, aggExprs.tail: _*).head()
+        val bounds = zorder.indices.map { i =>
+          require(!bRow.isNullAt(2 * i),
+            s"zorder column `${zorder(i)}` is all-null or not castable " +
+              "to long: nothing to cluster on")
+          (bRow.getLong(2 * i), bRow.getLong(2 * i + 1))
+        }
+        val z = graft.ops.Layout.morton(zorder.map(col), bounds)
+        val liveRows = entries.map(e => e.rows - e.dvRows).sum
+        val nFiles = math.max(1L,
+          (liveRows + targetRows - 1) / math.max(1L, targetRows)).toInt
+        val statsCols =
+          (p.meta.map(_.statsCols).getOrElse(Nil) ++ zorder).distinct
+        val newEntries = writePool(spark, base, data, key, nFiles,
+          statsCols, colMap = p.colMap, layout = Some(z))
+        // the widened stats set becomes table metadata: every LATER write
+        // keeps recording the z-columns' per-file ranges
+        Replace(entriesDf(spark, newEntries), Some(newEntries),
+          p.meta.map(_.copy(statsCols = statsCols)))
       }
     }
-    result
-  }
 
   /** Reclaim pool files referenced by NO retained version's manifest
     * (superseded rewrites, losers of commit races). Returns the number
@@ -1867,30 +1836,22 @@ object CowTable {
     * written, whatever the table size — and carries `toVersion`'s meta,
     * so schema changes (added/renamed/dropped columns) roll back with
     * the rows and the column mapping stays consistent with the restored
-    * schema. Serializable via the same CAS retry as every row-level
+    * schema. Serializable via the same commit loop as every row-level
     * commit. No-op (parent returned) when the head already equals the
     * restored state's manifest version. */
   def restore(spark: SparkSession, base: String, toVersion: Long,
-              retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      if (parent == toVersion) return parent
-      require(AtomicPublish.isCommitted(spark, base, toVersion),
-        s"cannot RESTORE $base to v$toVersion: not a readable committed " +
-          "version (pruned by retention, an orphan, or never committed) " +
-          "— raise the table's `retain` property to keep deeper history")
-      val m = metaAt(spark, base, toVersion)
-      val (mDf, restoredEntries) = manifestWithEntries(spark, base, toVersion)
-      casCommit(spark, base, parent, mDf, restoredEntries, None, m,
-        retain, s"RESTORE v$toVersion") match {
-        case Some(v) => result = v
-        case None => () // concurrent commit: re-validate against new head
+              retain: Int = 1): Long =
+    commitChange(spark, base, s"RESTORE v$toVersion", retain) { p =>
+      if (p.version == toVersion) Unchanged
+      else {
+        require(AtomicPublish.isCommitted(spark, base, toVersion),
+          s"cannot RESTORE $base to v$toVersion: not a readable committed " +
+            "version (pruned by retention, an orphan, or never committed) " +
+            "— raise the table's `retain` property to keep deeper history")
+        val target = new Snapshot(spark, base, toVersion)
+        Replace(target.frame, target.cached, target.meta)
       }
     }
-    result
-  }
 
   /** DELETE by DELETION VECTOR (merge-on-read): writes only the (file,
     * row position) pairs of the matching LIVE rows — O(deleted rows)
@@ -1902,41 +1863,32 @@ object CowTable {
     * Returns the committed version (the parent when nothing matched).
     */
   def dvDelete(spark: SparkSession, base: String, pred: Column,
-               retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-      val cm = colMapAt(spark, base, parent)
-      val keyName = metaAt(spark, base, parent).map(_.key)
-        .map(k => splitKeys(k).head).getOrElse("")
-      val sk = dataSchemaAt(spark, base, parent)
-        .flatMap(_.fields.find(_.name == keyName))
+               retain: Int = 1): Long =
+    commitChange(spark, base, "DELETE", retain) { p =>
+      val cm = p.colMap
+      val keyName = p.meta.map(_.key).map(k => splitKeys(k).head)
+        .getOrElse("")
+      val sk = p.schema.flatMap(_.fields.find(_.name == keyName))
         .exists(f => isStringKey(f.dataType))
       // stats-pruned discovery: only files whose statistics admit a
       // matching row are scanned for positions
       val cand = collectEntries(
-        mDf.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
-      if (cand.isEmpty) return parent // stats prove nothing matches
-      val hits = scanEntries(spark, cand, lineage = true,
-        schema = dataSchemaAt(spark, base, parent), colMap = cm)
-        .filter(pred)
-        .select(col("_gf_file").as("file"), col("_gf_pos").as("pos"))
-        .localCheckpoint() // evaluated once: counts, union, write
-      val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // cand-bounded
-      if (perFile.isEmpty) return parent // no-op: nothing matches
-      val (_, cum, allEntries) = vectorManifest(spark, base, mDf,
-        parentEntries, cand.filter(e => perFile.contains(e.file)), hits, perFile)
-      casCommit(spark, base, parent, cum, allEntries, None, None,
-        retain, "DELETE") match {
-        case Some(v) => result = v
-        case None => () // conflict: recompute against the new committed
+        p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
+      if (cand.isEmpty) Unchanged // stats prove nothing matches
+      else {
+        val hits = scanEntries(spark, cand, lineage = true,
+          schema = p.schema, colMap = cm)
+          .filter(pred)
+          .select(col("_gf_file").as("file"), col("_gf_pos").as("pos"))
+          .localCheckpoint() // evaluated once: counts, union, write
+        val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1))
+          .toMap // cand-bounded
+        if (perFile.isEmpty) Unchanged // no-op: nothing matches
+        else Edit(vector = Some(NewVector(cumulativeVector(spark, base,
+          cand.filter(e => perFile.contains(e.file)), hits), perFile)))
       }
     }
-    result
-  }
 
   /** One side's share of a version pair's changed rows in one pool
     * file: every live row of `entry` (under its own vector) when
@@ -2131,16 +2083,9 @@ object CowTable {
       val upserts = (if (source.columns.contains("_delete"))
         source.filter(!col("_delete")).drop("_delete") else source)
       val entries = writePool(spark, base, upserts, key, numFiles = 1)
-      import spark.implicits._
-      val m = Meta(upserts.schema.json, key, Nil, retain = retain)
-      val txns = Seq((stream, batchId))
-      val v = AtomicPublish.publish(spark, base,
-        Seq("manifest" -> entriesDf(spark, entries),
-          "meta" -> metaDf(spark, m),
-          "txn" -> txns.toDF("stream", "batch")), retain,
-        op = Some("MERGE"))
-      primeVersionCaches(spark, base, v, Some(entries), Some(m), txns)
-      v
+      publishFirst(spark, base, entries,
+        Meta(upserts.schema.json, key, Nil, retain = retain),
+        Seq((stream, batchId)), "MERGE")
     } else if (lastTxn(spark, base, stream) >= batchId) {
       AtomicPublish.committed(spark, base) // replay: already applied
     } else {
@@ -2170,8 +2115,8 @@ object CowTable {
     * one live row; nothing is looked up again. Once any commit has
     * landed after the scan (that attempt and every retry), or without
     * `positions` (the API callers), `deleteKeys` is the delete set: the
-    * keys' live rows are REDISCOVERED against the current manifest
-    * inside the CAS retry loop, and a key tuple addressing more live
+    * keys' live rows are REDISCOVERED against the parent of each
+    * [[commitChange]] attempt, and a key tuple addressing more live
     * rows than it has delete actions is refused as not unique. A
     * per-file split would be wrong: a concurrent key update can leave a
     * staged row's file in the manifest with that row vectored and its
@@ -2239,52 +2184,39 @@ object CowTable {
     // (a txn-stamped no-op still commits, to record its batch id)
     if (!anyDeletes && newEntries.isEmpty && txn.isEmpty)
       return AtomicPublish.committed(spark, base)
-    val fs = fsOf(spark, base)
-    var staleDv: Option[String] = None // losing attempt's vector, if any
-    var result = -1L
-    while (result < 0) {
-      // a previous attempt's vector lost its CAS: it is referenced by
-      // nothing and will be rediscovered fresh — reclaim it now instead
-      // of leaving an orphan per retry for vacuum
-      staleDv.foreach(p => fs.delete(new Path(p), true))
-      staleDv = None
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-      val (cum, cumEntries) =
-        if (!anyDeletes) (mDf, parentEntries)
-        else if (positions.exists(_.scanVersion == parent)) {
+    commitChange(spark, base, op, retain) { p =>
+      val vector: Option[NewVector] =
+        if (!anyDeletes) None
+        else if (positions.exists(_.scanVersion == p.version)) {
           // the head is the scanned snapshot: every staged position
           // names a live row of a file still in this manifest
-          val p = positions.get
-          val touched = parentEntries match {
-            case Some(es) => es.filter(e => p.perFile.contains(e.file))
-            case None => collectEntries(mDf.join(
-              p.perFile.keys.toSeq.toDF("file"), Seq("file")))
+          val pos = positions.get
+          val touched = p.cached match {
+            case Some(es) => es.filter(e => pos.perFile.contains(e.file))
+            case None => collectEntries(p.frame.join(
+              pos.perFile.keys.toSeq.toDF("file"), Seq("file")))
           }
-          require(touched.size == p.perFile.size,
-            s"staged delete positions name files missing from v$parent " +
-              s"of $base: ${p.perFile.keySet -- touched.map(_.file)}")
-          val (dvPath, c, ce) = vectorManifest(spark, base, mDf,
-            parentEntries, touched, p.rows, p.perFile)
-          staleDv = Some(dvPath)
-          (c, ce)
+          require(touched.size == pos.perFile.size,
+            s"staged delete positions name files missing from " +
+              s"v${p.version} of $base: " +
+              s"${pos.perFile.keySet -- touched.map(_.file)}")
+          Some(NewVector(cumulativeVector(spark, base, touched, pos.rows),
+            pos.perFile))
         }
         else {
-          val cand = collectEntries(discoverCandidates(mDf, keys,
+          val cand = collectEntries(discoverCandidates(p.frame, keys,
             m.phys(ks.head), kDt).filter(tailMayIntersect(tailBounds)))
-          if (cand.isEmpty) (mDf, parentEntries)
+          if (cand.isEmpty) None
           else {
             // positions of the doomed LIVE rows (the scan subtracts each
             // file's existing vector, so already-deleted rows never
             // duplicate into the new cumulative vector)
-            val schema = dataSchemaAt(spark, base, parent)
             // lazy: the row-identity guard below materializes the
             // checkpoint as part of its own (required) job, so the
             // position scan runs once without paying a separate
             // eager-checkpoint job
             val hitRows = scanEntries(spark, cand, lineage = true,
-              schema = schema, colMap = m.physMap)
+              schema = p.schema, colMap = m.physMap)
               .withColumns(ks.zipWithIndex.map { case (k, i) =>
                 gfk(i) -> col(k).cast(dtOf(k))
               }.toMap)
@@ -2317,39 +2249,18 @@ object CowTable {
             val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
               .collect().map(r => r.getString(0) -> r.getLong(1))
               .toMap // candidate-file-count bounded
-            if (perFile.isEmpty) (mDf, parentEntries)
-            else {
-              val (dvPath, c, ce) = vectorManifest(spark, base, mDf,
-                parentEntries, cand.filter(e => perFile.contains(e.file)),
-                hits, perFile)
-              staleDv = Some(dvPath)
-              (c, ce)
-            }
+            if (perFile.isEmpty) None
+            else Some(NewVector(cumulativeVector(spark, base,
+              cand.filter(e => perFile.contains(e.file)), hits), perFile))
           }
         }
       beforeCommit() // test seam (fires once per attempt, before the CAS)
       // deletes that hit nothing and no inserts: an identical manifest —
-      // short-circuit to the parent (dvDelete's no-op contract) instead
-      // of committing an empty version
-      if (staleDv.isEmpty && newEntries.isEmpty && txn.isEmpty) return parent
-      casCommit(spark, base, parent,
-        cum.unionByName(entriesDf(spark, newEntries)),
-        cumEntries.map(_ ++ newEntries), txn, None, retain, op) match {
-        case Some(v) => result = v; staleDv = None // committed: referenced
-        case None => () // conflict: rediscover positions against the new state
-      }
+      // the parent is the result (dvDelete's no-op contract) instead of
+      // an empty version
+      if (vector.isEmpty && newEntries.isEmpty && txn.isEmpty) Unchanged
+      else Edit(added = newEntries, vector = vector, txn = txn)
     }
-    result
-  }
-
-  /** METADATA-ONLY commit: the parent's manifest carried forward
-    * untouched under a replaced meta — the shared shape of every ALTER
-    * TABLE path (add/rename/drop column, defaults, constraints). */
-  private def metaOnlyCommit(spark: SparkSession, base: String, parent: Long,
-                             newMeta: Meta, retain: Int,
-                             op: String): Option[Long] = {
-    val (mDf, es) = manifestWithEntries(spark, base, parent)
-    casCommit(spark, base, parent, mDf, es, None, Some(newMeta), retain, op)
   }
 
   /** DDL-style ADDITIVE schema evolution: widen the committed data
@@ -2363,14 +2274,10 @@ object CowTable {
                  fields: Seq[org.apache.spark.sql.types.StructField],
                  retain: Int = 1): Long = {
     require(fields.nonEmpty, "addColumns: no columns given")
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    commitChange(spark, base, "ADD COLUMNS", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base — addColumns needs a created cow table"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val schema = p.schema.get
       fields.foreach { f =>
         require(!schema.fieldNames.contains(f.name),
           s"column `${f.name}` already exists under $base")
@@ -2389,13 +2296,8 @@ object CowTable {
                    else m2.colMap :+ (f.name -> p0),
           physUsed = (m2.physUsed :+ p0).distinct)
       }
-      metaOnlyCommit(spark, base, parent,
-        m2.copy(schemaJson = widened.json), retain, "ADD COLUMNS") match {
-        case Some(v) => result = v
-        case None => () // concurrent commit: re-widen against its schema
-      }
+      Edit(meta = Some(m2.copy(schemaJson = widened.json)))
     }
-    result
   }
 
   /** DDL `ALTER TABLE … RENAME COLUMN` as one metadata-only commit:
@@ -2405,14 +2307,10 @@ object CowTable {
     * identity: manifests, vectors and row ids are derived from it). */
   def renameColumn(spark: SparkSession, base: String, from: String,
                    to: String, retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    commitChange(spark, base, "RENAME COLUMN", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val schema = p.schema.get
       require(schema.fieldNames.contains(from),
         s"column `$from` does not exist under $base")
       require(!schema.fieldNames.contains(to),
@@ -2437,13 +2335,8 @@ object CowTable {
         colMap = m.colMap.filterNot(_._1 == from) :+ (to -> phys),
         physUsed = (m.physUsed :+ phys).distinct,
         statsCols = m.statsCols.map(c => if (c == from) to else c))
-      metaOnlyCommit(spark, base, parent, m2, retain,
-        "RENAME COLUMN") match {
-        case Some(v) => result = v
-        case None => ()
-      }
+      Edit(meta = Some(m2))
     }
-    result
   }
 
   /** DDL `ALTER TABLE … DROP COLUMN` as one metadata-only commit: the
@@ -2453,14 +2346,10 @@ object CowTable {
     * values. Key columns are refused. */
   def dropColumn(spark: SparkSession, base: String, name: String,
                  retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    commitChange(spark, base, "DROP COLUMN", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val schema = p.schema.get
       require(schema.fieldNames.contains(name),
         s"column `$name` does not exist under $base")
       require(!splitKeys(m.key).contains(name),
@@ -2485,13 +2374,8 @@ object CowTable {
         colMap = m.colMap.filterNot(_._1 == name),
         physUsed = (m.physUsed :+ phys).distinct,
         statsCols = m.statsCols.filterNot(_ == name))
-      metaOnlyCommit(spark, base, parent, m2, retain,
-        "DROP COLUMN") match {
-        case Some(v) => result = v
-        case None => ()
-      }
+      Edit(meta = Some(m2))
     }
-    result
   }
 
   /** `ALTER TABLE … ALTER COLUMN c SET DEFAULT v` / `DROP DEFAULT` as a
@@ -2505,14 +2389,11 @@ object CowTable {
   def setColumnDefault(spark: SparkSession, base: String, name: String,
                        newDefault: Option[String],
                        retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    val op = newDefault.fold(s"DROP DEFAULT $name")(_ => s"SET DEFAULT $name")
+    commitChange(spark, base, op, retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val schema = p.schema.get
       val f = schema.fields.find(_.name == name).getOrElse(sys.error(
         s"column `$name` does not exist under $base"))
       newDefault.foreach { sql =>
@@ -2537,14 +2418,8 @@ object CowTable {
       val m2 = m.copy(schemaJson = org.apache.spark.sql.types.StructType(
         schema.fields.map(x =>
           if (x.name == name) x.copy(metadata = md) else x)).json)
-      metaOnlyCommit(spark, base, parent, m2, retain,
-        newDefault.fold(s"DROP DEFAULT $name")(_ =>
-          s"SET DEFAULT $name")) match {
-        case Some(v) => result = v
-        case None => ()
-      }
+      Edit(meta = Some(m2))
     }
-    result
   }
 
   /** Whether CHECK predicate `p` references column `col` — parsed, not
@@ -2568,52 +2443,34 @@ object CowTable {
   def addCheck(spark: SparkSession, base: String, name: String,
                predicateSql: String, retain: Int = 1): Long = {
     require(name.nonEmpty, "constraint name must be non-empty")
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    commitChange(spark, base, s"ADD CONSTRAINT $name", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base"))
       require(!m.checks.exists(_._1 == name),
         s"a CHECK constraint named `$name` already exists under $base")
       // the predicate must resolve against the table schema AND hold on
       // every existing row — evaluated through the same snapshot scan
       // (DV-aware, column-mapped) every reader uses
-      val bad = readAt(spark, base, parent)
+      val bad = readAt(spark, base, p.version)
         .filter(!coalesce(expr(predicateSql).cast("boolean"), lit(true)))
         .limit(1).count()
       require(bad == 0L,
         s"cannot ADD CONSTRAINT `$name`: ($predicateSql) is violated by " +
           s"existing rows of $base — fix the data first")
-      metaOnlyCommit(spark, base, parent,
-        m.copy(checks = m.checks :+ ((name, predicateSql))), retain,
-        s"ADD CONSTRAINT $name") match {
-        case Some(v) => result = v
-        case None => () // concurrent commit: re-validate against new head
-      }
+      Edit(meta = Some(m.copy(checks = m.checks :+ ((name, predicateSql)))))
     }
-    result
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT name` — metadata-only. */
   def dropCheck(spark: SparkSession, base: String, name: String,
                 retain: Int = 1): Long = {
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
-      val m = metaAt(spark, base, parent).getOrElse(sys.error(
+    commitChange(spark, base, s"DROP CONSTRAINT $name", retain) { p =>
+      val m = p.meta.getOrElse(sys.error(
         s"no table meta under $base"))
       require(m.checks.exists(_._1 == name),
         s"no CHECK constraint named `$name` under $base")
-      metaOnlyCommit(spark, base, parent,
-        m.copy(checks = m.checks.filterNot(_._1 == name)), retain,
-        s"DROP CONSTRAINT $name") match {
-        case Some(v) => result = v
-        case None => ()
-      }
+      Edit(meta = Some(m.copy(checks = m.checks.filterNot(_._1 == name))))
     }
-    result
   }
 
   /** GROUP-REPLACE commit: swap an explicit set of (file, dv) entries
@@ -2657,27 +2514,23 @@ object CowTable {
       return AtomicPublish.committed(spark, base) // no-op
     // the replaced set is statement-bounded (the rewrite's own file
     // group list) — as a Scala map for the cached-manifest fast path,
-    // as a local frame for the large-manifest joins
+    // as a local frame for the large-manifest join
     val replacedDv = replaced.toMap
     lazy val replacedDf = replaced.toDF("file", "_gf_dv")
-    var result = -1L
-    while (result < 0) {
-      val parent = AtomicPublish.committed(spark, base)
-      require(parent >= 0, s"no committed version under $base")
+    commitChange(spark, base, opName, retain) { p =>
       // serializability: the statement's match set is a snapshot of
       // scanVersion — any later commit may hold newly-matched keys in
       // files OUTSIDE the replaced set, so it conflicts even if the
       // replaced entries themselves are untouched
-      scanVersion.foreach(sv => if (parent != sv)
+      scanVersion.foreach(sv => if (p.version != sv)
         throw new ConcurrentWriteException(
           s"concurrent update conflict under $base: the statement planned " +
-            s"against v$sv but v$parent has since committed — retry the " +
-            "statement against the new snapshot"))
-      val (mDf, parentEntries) = manifestWithEntries(spark, base, parent)
-      val live = parentEntries match {
+            s"against v$sv but v${p.version} has since committed — retry " +
+            "the statement against the new snapshot"))
+      val live = p.cached match {
         case Some(es) =>
           es.count(e => replacedDv.get(e.file).contains(e.dv)).toLong
-        case None => mDf.join(replacedDf, Seq("file"))
+        case None => p.frame.join(replacedDf, Seq("file"))
           .filter(col("dv") === col("_gf_dv")).count()
       }
       if (live != replaced.size)
@@ -2685,22 +2538,8 @@ object CowTable {
           s"concurrent update conflict under $base: ${replaced.size - live} " +
             s"of ${replaced.size} replaced files were rewritten or vectored " +
             "since the statement's scan — retry the statement")
-      val (manifest, allEntries) = parentEntries match {
-        case Some(es) =>
-          val all = es.filterNot(e => replacedDv.contains(e.file)) ++
-            newEntries
-          (entriesDf(spark, all), Some(all))
-        case None =>
-          (mDf.join(replacedDf.select("file"), Seq("file"), "left_anti")
-            .unionByName(entriesDf(spark, newEntries)), None)
-      }
-      casCommit(spark, base, parent, manifest, allEntries, None, None,
-        retain, opName) match {
-        case Some(v) => result = v
-        case None => () // unrelated commit won the slot: re-validate, re-land
-      }
+      Edit(removed = replacedDv.keySet, added = newEntries)
     }
-    result
   }
 
   // -------------------------------------------------------------------

@@ -79,6 +79,44 @@ class PlanLintSpec extends SparkSpec {
     assert(bare.isEmpty, s"unaudited broadcast() hints: ${bare.mkString(", ")}")
   }
 
+  /** Every cow writer commits through `CowTable.commitChange`: one CAS
+    * publish site, no hand-written retry loop beside it, and failures in
+    * the storage layer told apart by type, never by message text. */
+  test("CAS publishes only through CowTable.commitChange; io/ never " +
+    "classifies a failure by message") {
+    import scala.jdk.CollectionConverters._
+    def code(p: java.nio.file.Path): Seq[(String, Int)] =
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.toSeq
+        .filterNot { case (l, _) =>
+          l.trim.startsWith("*") || l.trim.startsWith("//") ||
+            l.trim.startsWith("/**")
+        }
+    val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    val TopDef = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    val publishers = main.flatMap { p =>
+      val lines = code(p)
+      lines.collect {
+        case (l, i) if l.contains("tryPublish(") && !l.contains("def tryPublish") =>
+          val owner = lines.takeWhile(_._2 < i).reverse.collectFirst {
+            case (TopDef(name), _) => name
+          }
+          s"${p.getFileName}:${owner.getOrElse("?")}"
+      }
+    }
+    assert(publishers === List("CowTable.scala:commitChange"),
+      "AtomicPublish.tryPublish must be called only from CowTable.commitChange")
+    val cow = java.nio.file.Paths.get("src/main/scala/graft/io/CowTable.scala")
+    assert(!code(cow).exists(_._1.contains("while (result < 0)")),
+      "a hand-written CAS retry loop in CowTable: use commitChange")
+    val byMessage = main.filter(_.toString.contains("/graft/io/")).flatMap { p =>
+      code(p).collect { case (l, i) if l.contains("getMessage") =>
+        s"${p.getFileName}:${i + 1}" }
+    }
+    assert(byMessage.isEmpty,
+      s"io/ classifies failures by message text: ${byMessage.mkString(", ")}")
+  }
+
   test("no unlisted query plans a cartesian or nested-loop join") {
     val offenders = SparkEntry.queries
       .filterNot(q => eager(q._1) || allowedNlj(q._1))

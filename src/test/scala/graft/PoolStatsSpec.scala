@@ -239,6 +239,17 @@ class PoolStatsSpec extends SparkSpec {
     assert((append, merge, compact) === ((2, 8, 2)),
       "a cow write's Spark job count moved: a stats re-read (or another " +
         "extra scan) crept back into the write path")
+    // the commit loop resolves its parent lazily: a vector delete, a
+    // metadata-only ALTER and a restore pay no job for what they skip
+    val dv = jobsOf(CowTable.dvDelete(spark, base, col("id") % 10 === 3,
+      retain = 10))
+    val add = jobsOf(CowTable.addColumns(spark, base,
+      Seq(org.apache.spark.sql.types.StructField("extra",
+        org.apache.spark.sql.types.IntegerType)), retain = 10))
+    val restore = jobsOf(CowTable.restore(spark, base, 0L, retain = 10))
+    assert((dv, add, restore) === ((4, 0, 0)),
+      "a commit's Spark job count moved: the commit loop resolved " +
+        "something its writer did not need")
   }
 
   test("job budget: SQL DELETE and UPDATE commit their staged positions " +

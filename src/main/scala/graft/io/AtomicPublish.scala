@@ -21,9 +21,10 @@ class VersionNotPublishedException(message: String)
   * writer token, which also defuses the local-filesystem rename corner
   * where `rename(src, existingDir)` nests `src` inside the winner's
   * directory instead of failing. Commit is a per-version marker file
-  * under `_commits/` — created empty, made visible by rename — so two
-  * concurrent publishers each end up with their own readable version
-  * and the committed pointer (max marker) moves monotonically: no
+  * under `_commits/` — written with its commit instant, made visible by
+  * rename — so two concurrent publishers each end up with their own
+  * readable version and the committed pointer (max marker) moves
+  * monotonically: no
   * last-writer-wins clobber is possible, the failure PostgreSQL
   * transactions prevent for free in the reference and naive
   * pointer-overwrite protocols reintroduce. Readers always resolve
@@ -40,10 +41,13 @@ class VersionNotPublishedException(message: String)
   * formats use (a version = a manifest, commit = pointer swap), applied
   * across datasets.
   *
-  * Recovery: if the pointer file is ever lost, [[committed]] falls back
-  * to the largest version carrying a `_PUBLISHED` marker (a partial
-  * crash write has no marker and is invisible). Superseded versions are
-  * pruned after each successful swap, so storage stays O(1) versions.
+  * The commit markers are the only record of what is committed: a
+  * version is committed iff its `_commits/v<N>` marker exists, and the
+  * head is the largest marked version (−1 when there is none). A sealed
+  * version without a marker — a writer between its claim and its
+  * marker, or one that died there — is never visible, not even as a
+  * base's first version. Superseded versions are pruned after each
+  * successful commit, so storage stays O(`retain`) versions.
   *
   * Claim lease: a claimed version carries a `_CLAIM` file (the claim
   * instant, epoch millis) from the claim rename until its writer's
@@ -95,39 +99,23 @@ object AtomicPublish {
     } catch { case _: java.io.FileNotFoundException => false }
   }
 
-  private def legacyPointer(fs: org.apache.hadoop.fs.FileSystem,
-                            b: Path): Long = {
-    val f = new Path(b, "_committed")
-    if (!fs.exists(f)) -1L
-    else {
-      val in = fs.open(f)
-      try in.readLong() finally in.close()
-    }
-  }
+  /** The version ids that carry a `_commits/v<N>` marker. */
+  private def markedVersions(fs: org.apache.hadoop.fs.FileSystem,
+                             b: Path): Seq[Long] =
+    try fs.listStatus(new Path(b, "_commits")).toSeq
+      .map(_.getPath.getName).collect { case VDir(n) => n.toLong }
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
-  /** Sealed versions that are also COMMITTED. A writer crashing between
-    * the `v<N>` claim rename and the `_commits` marker leaves a sealed
-    * but never-committed orphan; the next writer skips to N+1, so the
-    * orphan sits forever BETWEEN committed ids. It must be invisible to
-    * every consumer that iterates history (the CDC cursor, the
+  /** Sealed versions that are also COMMITTED (marked). A writer crashing
+    * between the `v<N>` claim rename and the `_commits` marker leaves a
+    * sealed but never-committed orphan; the next writer skips to N+1, so
+    * the orphan sits forever BETWEEN committed ids. It must be invisible
+    * to every consumer that iterates history (the CDC cursor, the
     * commit-log stream, vacuum's reference set) — emitting it would be
-    * exactly the dirty read the marker protocol exists to prevent.
-    * Committed = has a `_commits/v<N>` marker, or `<= legacy pointer`
-    * (pre-marker layouts), or — when NEITHER mechanism has any record —
-    * every sealed version (the crash-recovery fallback [[committed]]
-    * already uses). */
+    * exactly the dirty read the marker protocol exists to prevent. */
   private def committedVersions(spark: SparkSession, b: Path): Seq[Long] = {
-    val fs = fsOf(spark, b)
-    val sealedVs = publishedVersions(spark, b)
-    val commits = new Path(b, "_commits")
-    val marked: Set[Long] =
-      if (!fs.exists(commits)) Set.empty
-      else fs.listStatus(commits).toSeq.map(_.getPath.getName).collect {
-        case VDir(n) => n.toLong
-      }.toSet
-    val legacy = legacyPointer(fs, b)
-    if (marked.isEmpty && legacy < 0) sealedVs // recovery fallback
-    else sealedVs.filter(v => marked.contains(v) || v <= legacy)
+    val marked = markedVersions(fsOf(spark, b), b).toSet
+    publishedVersions(spark, b).filter(marked.contains)
   }
 
   /** True iff `v` is committed AND still readable (not pruned). */
@@ -151,26 +139,13 @@ object AtomicPublish {
       committed(spark, base) > v // a later commit proves the claim dead
   }
 
-  /** Last committed version under `base`, −1 if none: the max across
-    * the per-version commit markers, the legacy single-pointer file
-    * (pre-multi-writer layouts remain readable), and — if neither
-    * exists — the largest sealed version (crash-recovery fallback).
-    */
+  /** Last committed version under `base`: the largest `_commits/v<N>`
+    * marker, −1 if there is none. A sealed version without a marker is
+    * not committed, so a base's first version becomes visible only once
+    * its writer has written its marker. */
   def committed(spark: SparkSession, base: String): Long = {
     val b = new Path(base)
-    val fs = fsOf(spark, b)
-    val commits = new Path(b, "_commits")
-    val marker =
-      if (!fs.exists(commits)) -1L
-      else fs.listStatus(commits).toSeq.map(_.getPath.getName).collect {
-        case VDir(n) => n.toLong
-      }.foldLeft(-1L)(math.max)
-    val legacy = legacyPointer(fs, b)
-    if (marker >= 0 || legacy >= 0) math.max(marker, legacy)
-    else {
-      val vs = publishedVersions(spark, b)
-      if (vs.isEmpty) -1L else vs.max
-    }
+    markedVersions(fsOf(spark, b), b).foldLeft(-1L)(math.max)
   }
 
   /** The head an ITERATING reader may advance to: [[committed]],
@@ -191,67 +166,46 @@ object AtomicPublish {
   def exists(spark: SparkSession, base: String): Boolean =
     committed(spark, base) >= 0
 
+  /** The lines of version `v`'s commit marker, None when `v` has no
+    * marker. Every marker is written with its payload before the rename
+    * that makes it visible ([[commitAndPrune]]). */
+  private def markerLines(spark: SparkSession, base: String,
+                          v: Long): Option[Seq[String]] = {
+    val b = new Path(base)
+    try {
+      val in = fsOf(spark, b).open(new Path(b, s"_commits/v$v"))
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
   /** A version's COMMIT INSTANT (epoch millis): the timestamp persisted
     * INSIDE the marker payload at commit time — durable metadata that a
     * directory copy, an rsync'd relocation or a filesystem that rewrites
-    * mtimes cannot disturb. Markers written before the payload existed
-    * (empty files) fall back to the marker's mtime — legacy-correct as
-    * long as the table never moved. */
+    * mtimes cannot disturb. */
   def commitInstant(spark: SparkSession, base: String,
-                    v: Long): Option[Long] = {
-    val b = new Path(base)
-    val fs = fsOf(spark, b)
-    val m = new Path(b, s"_commits/v$v")
-    if (!fs.exists(m)) None
-    else {
-      val st = fs.getFileStatus(m)
-      val payload =
-        if (st.getLen == 0L) None
-        else {
-          val in = fs.open(m)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().nextOption().flatMap(_.trim.toLongOption)
-          finally in.close()
-        }
-      Some(payload.getOrElse(st.getModificationTime))
-    }
-  }
+                    v: Long): Option[Long] =
+    markerLines(spark, base, v).flatMap(_.headOption)
+      .flatMap(_.trim.toLongOption)
 
   /** The OPERATION recorded in version `v`'s commit marker (`op=` line
     * of the marker payload) — what `CALL graft.history` surfaces. None
-    * for legacy markers written before operations were recorded. */
-  def commitOp(spark: SparkSession, base: String, v: Long): Option[String] = {
-    val b = new Path(base)
-    val fs = fsOf(spark, b)
-    val m = new Path(b, s"_commits/v$v")
-    if (!fs.exists(m) || fs.getFileStatus(m).getLen == 0L) None
-    else {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .collectFirst { case l if l.startsWith("op=") => l.drop(3) }
-      finally in.close()
-    }
-  }
+    * for a commit made without an operation name. */
+  def commitOp(spark: SparkSession, base: String, v: Long): Option[String] =
+    markerLines(spark, base, v).flatMap(_.collectFirst {
+      case l if l.startsWith("op=") => l.drop(3)
+    })
 
   /** Latest version whose COMMIT INSTANT is at or before `tsMillis` —
     * the `TIMESTAMP AS OF` resolution. The instant is the epoch-millis
     * payload written into the per-version marker at commit time
-    * ([[commitInstant]]; mtime only as the pre-payload legacy fallback),
-    * so history survives a directory copy/move intact. −1 when nothing
-    * was committed by then or the table predates the marker protocol
-    * (legacy single-pointer layouts carry no per-version commit times).
+    * ([[commitInstant]]), so history survives a directory copy/move
+    * intact. −1 when nothing was committed by then.
     */
   def committedAsOf(spark: SparkSession, base: String,
                     tsMillis: Long): Long = {
     val b = new Path(base)
-    val fs = fsOf(spark, b)
-    val commits = new Path(b, "_commits")
-    if (!fs.exists(commits)) return -1L
-    fs.listStatus(commits).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case VDir(n) => Some(n.toLong)
-        case _ => None
-      })
+    markedVersions(fsOf(spark, b), b)
       .filter(v => commitInstant(spark, base, v).exists(_ <= tsMillis))
       .foldLeft(-1L)(math.max)
   }
@@ -263,9 +217,8 @@ object AtomicPublish {
     * sources rely on: a readable base version proves no committed
     * version inside a span was pruned): the cutoff is the LARGEST
     * non-head committed version with instant < ts, and every committed
-    * version at or below it goes, regardless of instant skew. Versions
-    * without a durable instant (legacy layouts) are never time-pruned.
-    * Returns the pruned ids, ascending. */
+    * version at or below it goes, regardless of instant skew. Returns
+    * the pruned ids, ascending. */
   def pruneOlderThan(spark: SparkSession, base: String,
                      tsMillis: Long): Seq[Long] = {
     val b = new Path(base)
@@ -300,18 +253,8 @@ object AtomicPublish {
     */
   def readVersion(spark: SparkSession, base: String, name: String,
                   version: Long): DataFrame = {
-    requirePublished(spark, base, version)
+    seal(spark, base, version)
     spark.read.parquet(s"$base/v$version/$name")
-  }
-
-  /** Fails with [[VersionNotPublishedException]] unless `version` is
-    * sealed under `base`. */
-  private[io] def requirePublished(spark: SparkSession, base: String,
-                                   version: Long): Unit = {
-    val b = new Path(base)
-    if (!fsOf(spark, b).exists(new Path(b, s"v$version/_PUBLISHED")))
-      throw new VersionNotPublishedException(
-        s"version $version under $base is not published (pruned or partial)")
   }
 
   /** All readable COMMITTED version ids under `base`, ascending. Sealed
@@ -336,42 +279,23 @@ object AtomicPublish {
     */
   def publish(spark: SparkSession, base: String,
               datasets: Seq[(String, DataFrame)], retain: Int,
-              op: Option[String] = None): Long = {
-    require(retain >= 1, s"retain must be >= 1, got $retain")
-    val b = new Path(base)
-    val fs = fsOf(spark, b)
-    val token = java.util.UUID.randomUUID().toString
-    val stage = stageDatasets(spark, b, token, datasets)
+              op: Option[String] = None): Long =
+    commitNew(spark, base, datasets, retain, op, newToken(), None).get
 
-    // 2. Claim: rename the stage to the next free version id. Rename
-    //    does NOT overwrite a populated directory, so the first writer
-    //    wins the id and the loser retries at N+1 — the data never
-    //    moves again, only this metadata rename repeats. The read-back
-    //    token check catches the local-FS corner where renaming onto an
-    //    existing directory NESTS the stage inside the winner's version
-    //    (the FileSystem#rename move-into-directory contract) instead
-    //    of failing: on a mismatch the nested stage is pulled back out
-    //    and the claim retries, so no `v<N>` ever holds two writers'
-    //    files.
-    var v = committed(spark, base) + 1
-    var claimed = false
-    while (!claimed) {
-      val dst = new Path(b, s"v$v")
-      if (fs.exists(dst)) v += 1
-      else if (!fs.rename(stage, dst)) v += 1
-      else if (tokenOf(fs, dst).contains(token)) claimed = true
-      else { // nested into another writer's version: recover and retry
-        val nested = new Path(dst, stage.getName)
-        if (fs.exists(nested)) fs.rename(nested, stage)
-        v += 1
-      }
-    }
-    afterClaim(base, v)
-    commitAndPrune(spark, b, token, v, retain, op)
-    v
-  }
+  /** As [[publish]], sealing the caller's `token` — so the caller knows
+    * the new version's identity ([[Seal.token]]) without reading it
+    * back. With `first` the version must be the base's FIRST: the claim
+    * is made at `v0` only, and None is returned (nothing committed) when
+    * a version is already committed or another writer holds the `v0`
+    * claim — even one that has not written its marker yet. */
+  private[graft] def publishAs(spark: SparkSession, base: String,
+                               datasets: Seq[(String, DataFrame)], retain: Int,
+                               op: Option[String], token: String,
+                               first: Boolean): Option[Long] =
+    commitNew(spark, base, datasets, retain, op, token,
+      if (first) Some(0L) else None)
 
-  /** Runs in [[publish]] between the claim of `v<N>` and its commit
+  /** Runs in every publish between the claim of `v<N>` and its commit
     * marker, with (base, N). A no-op; tests set it to hold a writer
     * inside that window. */
   @volatile private[graft] var afterClaim: (String, Long) => Unit =
@@ -395,32 +319,67 @@ object AtomicPublish {
     */
   def tryPublish(spark: SparkSession, base: String,
                  datasets: Seq[(String, DataFrame)], retain: Int,
-                 parent: Long, op: Option[String] = None): Option[Long] = {
+                 parent: Long, op: Option[String] = None): Option[Long] =
+    commitNew(spark, base, datasets, retain, op, newToken(), Some(parent + 1))
+
+  /** As the public `tryPublish`, sealing the caller's `token` (see
+    * [[publishAs]]). */
+  private[graft] def tryPublish(spark: SparkSession, base: String,
+                                datasets: Seq[(String, DataFrame)], retain: Int,
+                                parent: Long, op: Option[String],
+                                token: String): Option[Long] =
+    commitNew(spark, base, datasets, retain, op, token, Some(parent + 1))
+
+  private def newToken(): String = java.util.UUID.randomUUID().toString
+
+  /** Stage, claim and commit one version sealed with `token`. With
+    * `at = None` the claim takes the next free id: rename does NOT
+    * overwrite a populated directory, so the first writer wins an id and
+    * the loser retries at N+1 — the data never moves again, only this
+    * metadata rename repeats. With `at = Some(n)` the version must land
+    * at exactly `n`: the head must be `n − 1` (checked before anything
+    * is written) and a lost claim discards the stage and returns None. */
+  private def commitNew(spark: SparkSession, base: String,
+                        datasets: Seq[(String, DataFrame)], retain: Int,
+                        op: Option[String], token: String,
+                        at: Option[Long]): Option[Long] = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val b = new Path(base)
     val fs = fsOf(spark, b)
-    if (committed(spark, base) != parent) return None // fail fast, no write
-    val token = java.util.UUID.randomUUID().toString
+    val head = committed(spark, base)
+    if (at.exists(_ != head + 1)) return None // fail fast, no write
     val stage = stageDatasets(spark, b, token, datasets)
-    val v = parent + 1
-    val dst = new Path(b, s"v$v")
-    // single claim attempt at exactly parent+1: any failure mode means
-    // another writer won the slot → discard the stage and report conflict
-    val won =
-      if (fs.exists(dst)) false
-      else if (!fs.rename(stage, dst)) false
-      else if (tokenOf(fs, dst).contains(token)) true
-      else { // nested into the winner's version dir: pull back out
-        val nested = new Path(dst, stage.getName)
-        if (fs.exists(nested)) fs.rename(nested, stage)
-        false
-      }
-    if (!won) {
+    var v = at.getOrElse(head + 1)
+    var claimed = claim(fs, b, stage, token, v)
+    while (!claimed && at.isEmpty) {
+      v += 1
+      claimed = claim(fs, b, stage, token, v)
+    }
+    if (!claimed) {
       fs.delete(stage, true)
       None
     } else {
+      afterClaim(base, v)
       commitAndPrune(spark, b, token, v, retain, op)
       Some(v)
+    }
+  }
+
+  /** One claim attempt: rename the sealed `stage` to `v<v>`. True iff
+    * this writer now owns the id. The read-back token check catches the
+    * local-FS corner where renaming onto an existing directory NESTS the
+    * stage inside the winner's version (the FileSystem#rename
+    * move-into-directory contract) instead of failing: the nested stage
+    * is pulled back out, so no `v<N>` ever holds two writers' files. */
+  private def claim(fs: org.apache.hadoop.fs.FileSystem, b: Path, stage: Path,
+                    token: String, v: Long): Boolean = {
+    val dst = new Path(b, s"v$v")
+    if (fs.exists(dst) || !fs.rename(stage, dst)) false
+    else if (sealOf(fs, dst).exists(_.token == token)) true
+    else {
+      val nested = new Path(dst, stage.getName)
+      if (fs.exists(nested)) fs.rename(nested, stage)
+      false
     }
   }
 
@@ -457,27 +416,32 @@ object AtomicPublish {
     stage
   }
 
-  /** The writer token sealed into version `v`'s `_PUBLISHED` marker — a
-    * UUID unique per version CREATION (a dropped and re-created table
+  /** What a version's `_PUBLISHED` marker records: the writer `token`,
+    * a UUID unique per version CREATION (a dropped and re-created table
     * reuses version IDS, never tokens), so it is the durable identity
-    * immutable-version caches key on. One small FS read. */
-  private[io] def versionToken(spark: SparkSession, base: String,
-                               v: Long): Option[String] = {
+    * immutable-version caches key on; and the `members`, the datasets
+    * the version holds. */
+  private[graft] case class Seal(token: String, members: Set[String])
+
+  /** The seal of version `v` — one small FS read. Fails with
+    * [[VersionNotPublishedException]] unless `v` is sealed under `base`
+    * (pruned or never published). */
+  private[graft] def seal(spark: SparkSession, base: String, v: Long): Seal = {
     val b = new Path(base)
-    tokenOf(fsOf(spark, b), new Path(b, s"v$v"))
+    sealOf(fsOf(spark, b), new Path(b, s"v$v")).getOrElse(
+      throw new VersionNotPublishedException(
+        s"version $v under $base is not published (pruned or partial)"))
   }
 
-  private def tokenOf(fs: org.apache.hadoop.fs.FileSystem,
-                      dir: Path): Option[String] = {
-    val m = new Path(dir, "_PUBLISHED")
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().nextOption().getOrElse(""))
-      finally in.close()
-    }
-  }
+  private def sealOf(fs: org.apache.hadoop.fs.FileSystem,
+                     dir: Path): Option[Seal] =
+    try {
+      val in = fs.open(new Path(dir, "_PUBLISHED"))
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      Some(Seal(lines.headOption.getOrElse(""), lines.drop(1).toSet))
+    } catch { case _: java.io.FileNotFoundException => None }
 
   /** Commit: a per-version marker made visible by rename, then the
     * claim lease is released. Markers are
@@ -486,9 +450,10 @@ object AtomicPublish {
     * monotonically — no pointer clobber. Then prune versions (and
     * markers) older than the retention window, measured from the
     * now-committed maximum; unsealed version dirs at or below the
-    * committed id are garbage (pre-claim-protocol partial writes) and
-    * are collected so a crashed legacy writer can't park on an id
-    * forever. Neither step touches another writer's leased claim.
+    * committed id are garbage (a partial write outside the stage
+    * protocol, or a prune that stopped partway through deleting a
+    * directory) and are collected so nothing parks on an id forever.
+    * Neither step touches another writer's leased claim.
     */
   private def commitAndPrune(spark: SparkSession, b: Path, token: String,
                              v: Long, retain: Int,
@@ -503,8 +468,7 @@ object AtomicPublish {
     // truth. Later lines are `key=value` commit METADATA — today the
     // operation name ([[commitOp]], the history surface); the instant
     // parser reads only the first line, so the payload stays
-    // forward-extensible and legacy markers (instant-only or empty)
-    // remain valid.
+    // forward-extensible.
     val out = fs.create(ctmp, true)
     try out.write((String.valueOf(System.currentTimeMillis()) +
       op.map(o => "\nop=" + o.replace('\n', ' ')).getOrElse(""))
@@ -522,27 +486,25 @@ object AtomicPublish {
       fs.delete(new Path(b, s"_commits/.orphan-v$n"), false)
     }
     val committedNow = committedVersions(spark, b).toSet
-    val legacy = legacyPointer(fs, b)
     fs.listStatus(b).foreach { st =>
       st.getPath.getName match {
         case VDir(n) if st.isDirectory && n.toLong <= cur &&
           !fs.exists(new Path(st.getPath, "_PUBLISHED")) =>
-          // pre-claim-protocol partial write parked on an id: garbage
+          // unsealed directory parked on an id: garbage
           fs.delete(st.getPath, true)
         case VDir(n) if st.isDirectory && n.toLong < cur &&
-          n.toLong > legacy && !committedNow.contains(n.toLong) &&
+          !committedNow.contains(n.toLong) &&
           !claimLive(fs, st.getPath) &&
           !fs.exists(new Path(b, s"_commits/v$n")) =>
           // sealed ORPHAN: claimed, never committed, a LATER commit
           // exists and the claim's lease is gone or expired — the
-          // claiming writer is dead (tryPublish deletes its stage on a
-          // lost race; only a crash between claim and marker leaves
-          // this). The marker is re-checked after the lease because a
+          // claiming writer is dead (a lost exact claim deletes its
+          // stage; only a crash between claim and marker leaves this).
+          // The marker is re-checked after the lease because a
           // committing writer releases its lease only once its marker
-          // exists. A tombstone keeps the id
-          // distinguishable from a PRUNED committed version for
-          // iterating readers (skip vs fail-fast). Ids <= the legacy
-          // pointer are committed without markers and are never touched.
+          // exists. A tombstone keeps the id distinguishable from a
+          // PRUNED committed version for iterating readers (skip vs
+          // fail-fast).
           val tomb = new Path(b, s"_commits/.orphan-v$n")
           fs.create(tomb, true).close()
           fs.delete(st.getPath, true)

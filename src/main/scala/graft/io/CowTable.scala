@@ -192,10 +192,6 @@ object CowTable {
       .find(!taken.contains(_)).get
   }
 
-  private def colMapAt(spark: SparkSession, base: String,
-                       v: Long): Map[String, String] =
-    metaAt(spark, base, v).map(_.physMap).getOrElse(Map.empty)
-
   private val ManifestCols =
     Seq("file", "rows", "kmin", "kmax", "dv", "dvRows", "smin", "smax")
 
@@ -482,20 +478,6 @@ object CowTable {
     entries.toDF().select(ManifestCols.map(col): _*)
   }
 
-  /** Manifest columns padded to the current layout — pre-DV manifests
-    * lack the vector columns (absent = no deletions), pre-stats ones
-    * lack the stats maps (absent = prune nothing). */
-  private def pad(df0: DataFrame): DataFrame = {
-    var df = df0
-    if (!df.columns.contains("dv")) df = df.withColumn("dv", lit(""))
-    if (!df.columns.contains("dvRows")) df = df.withColumn("dvRows", lit(0L))
-    if (!df.columns.contains("smin"))
-      df = df.withColumn("smin", typedLit(Map.empty[String, String]))
-    if (!df.columns.contains("smax"))
-      df = df.withColumn("smax", typedLit(Map.empty[String, String]))
-    df.select(ManifestCols.map(col): _*)
-  }
-
   /** RE-ROOT stored paths to the CURRENT base: every pool file and
     * vector lives under `base/files/<globally-unique-name>`, so the
     * basename is the durable identity and the prefix is just where the
@@ -524,8 +506,8 @@ object CowTable {
     * rows after the one read) are cached — a 100 TB table's
     * million-file manifest stays on the executors-only DataFrame path
     * below, so no file-count ceiling is introduced; the cache is a
-    * fast path, never a requirement. Entries are stored POST-pad/
-    * reroot (the served form). */
+    * fast path, never a requirement. Entries are stored re-rooted (the
+    * served form). */
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), Seq[Entry]]()
   private val ManifestCacheMaxBytes = 8L << 20
@@ -546,93 +528,21 @@ object CowTable {
   private[graft] def primedEntriesForTest(spark: SparkSession,
                                           base: String): Option[Seq[Entry]] = {
     val v = AtomicPublish.committed(spark, base)
-    AtomicPublish.versionToken(spark, base, v)
-      .flatMap(t => Option(manifestCache.get((norm(base), v, t))))
-  }
-
-  /** The cached entries of (base, version), populating on miss when the
-    * manifest dataset is small enough; None = too large (or no token),
-    * callers stay on the distributed path. */
-  private def cachedEntriesAt(spark: SparkSession, base: String,
-                              version: Long): Option[Seq[Entry]] = {
-    val token = AtomicPublish.versionToken(spark, base, version)
-    val key = token.map(t => (norm(base), version, t))
-    key.flatMap(k => Option(manifestCache.get(k))) match {
-      case hit @ Some(_) => hit
-      case None =>
-        key.flatMap { k =>
-          val fs = fsOf(spark, base)
-          val dir = new Path(base, s"v$version/manifest")
-          val small = try {
-            fs.exists(dir) &&
-              fs.listStatus(dir).map(_.getLen).sum <= ManifestCacheMaxBytes
-          } catch { case scala.util.control.NonFatal(_) => false }
-          if (!small) None
-          else {
-            val es = collectEntries(reroot(pad(
-              AtomicPublish.readVersion(spark, base, "manifest", version)),
-              base))
-            if (es.size > ManifestCacheMaxEntries) None
-            else {
-              if (manifestCache.size > 1024) manifestCache.clear()
-              manifestCache.put(k, es)
-              Some(es)
-            }
-          }
-        }
-    }
+    Option(manifestCache.get(new Snapshot(spark, base, v).key))
   }
 
   /** The (file, dv, dvRows) triples of a version's manifest in served
-    * (padded, re-rooted) form — the DSv2 scan's candidate list, from
-    * the cache when the manifest is small; None = stay on the parquet
-    * read. */
+    * (re-rooted) form — the DSv2 scan's candidate list, from the cache
+    * when the manifest is small; None = stay on the parquet read. */
   private[graft] def manifestTriples(spark: SparkSession, base: String,
                                      version: Long): Option[Seq[(String, String, Long)]] =
-    cachedEntriesAt(spark, base, version)
+    new Snapshot(spark, base, version).cached
       .map(_.map(e => (e.file, e.dv, e.dvRows)))
-
-  /** The manifest AS A DATAFRAME — the scale-true form: every
-    * manifest-wide operation (discovery joins, untouched-file
-    * carry-over, stats pruning) composes on this without ever
-    * materializing the file list on the driver, so no file-count
-    * ceiling exists on the table itself. Only operation FOOTPRINTS
-    * (affected/candidate file lists, which must be enumerated to be
-    * scanned at all) are collected. Small manifests serve from
-    * [[manifestCache]] as a local relation — same rows, no parquet
-    * job; large ones keep the distributed parquet scan. */
-  private def manifestDfAt(spark: SparkSession, base: String,
-                           version: Long): DataFrame =
-    new Snapshot(spark, base, version).frame
-
-  /** RENAME/relocation precondition. Deletion vectors written by this
-    * version of the engine reference files by BASENAME (the `_RELOC`
-    * marker inside the vector directory names the convention) and are
-    * fully relocatable; LEGACY vectors addressed rows by the full
-    * write-time path, which a move would orphan. The check is
-    * metadata-bounded: the distinct vector paths across retained
-    * versions (never the vector contents), one marker existence test
-    * each. */
-  private[graft] def requireRelocatable(spark: SparkSession,
-                                        base: String): Unit = {
-    val fs = fsOf(spark, base)
-    AtomicPublish.versions(spark, base).foreach { v =>
-      val dvs = manifestDfAt(spark, base, v)
-        .filter(col("dv") =!= lit("")).select("dv").distinct()
-        .collect().map(_.getString(0)) // vector-count bounded
-      dvs.foreach { dv =>
-        require(fs.exists(new Path(dv, "_RELOC")),
-          s"version v$v under $base references a LEGACY deletion vector " +
-            s"($dv) that addresses rows by write-time path: CALL " +
-            "compact + vacuum before RENAME")
-      }
-    }
-  }
 
   private def collectEntries(df: DataFrame): Seq[Entry] = {
     val spark = df.sparkSession
     import spark.implicits._
-    pad(df).as[Entry].collect().toSeq
+    df.as[Entry].collect().toSeq
   }
 
   private def entriesAt(spark: SparkSession, base: String,
@@ -658,77 +568,53 @@ object CowTable {
   /** Parsed-Meta cache. A committed version's meta is IMMUTABLE, but a
     * (base, version) pair is not a durable identity — DROP TABLE +
     * re-CREATE reuses v0 — so entries key on the version's writer TOKEN
-    * ([[AtomicPublish.versionToken]]), unique per version creation. The
-    * hit path replaces a Spark parquet job with one tiny marker read;
-    * every SQL statement consults the meta several times (schema, key,
-    * mapping, retention), so the constant matters at statement cadence.
-    * Bounded by wholesale clear — the entries are a few hundred bytes,
-    * the bound is a leak guard, not an eviction policy. */
+    * ([[AtomicPublish.Seal]]), unique per version creation. The hit path
+    * replaces a Spark parquet job with the seal read the [[Snapshot]]
+    * makes anyway; every SQL statement consults the meta several times
+    * (schema, key, mapping, retention), so the constant matters at
+    * statement cadence. Bounded by wholesale clear — the entries are a
+    * few hundred bytes, the bound is a leak guard, not an eviction
+    * policy. */
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), Meta]()
 
-  private[graft] def metaAt(spark: SparkSession, base: String,
-                            v: Long): Option[Meta] = {
-    val token = if (v < 0) None
-                else AtomicPublish.versionToken(spark, base, v)
-    val cacheKey = token.map(t => (norm(base), v, t))
-    cacheKey.flatMap(k => Option(metaCache.get(k))) match {
-      case hit @ Some(_) => hit
-      case None =>
-        val loaded = metaAtUncached(spark, base, v)
-        for (m <- loaded; k <- cacheKey) {
-          if (metaCache.size > 4096) metaCache.clear()
-          metaCache.put(k, m)
-        }
-        loaded
-    }
-  }
+  /** The table metadata of committed version `v`. Fails with
+    * [[VersionNotPublishedException]] when `v` is pruned or was never
+    * sealed. */
+  private[graft] def metaAt(spark: SparkSession, base: String, v: Long): Meta =
+    new Snapshot(spark, base, v).meta
 
-  private def metaAtUncached(spark: SparkSession, base: String,
-                             v: Long): Option[Meta] = {
-    if (v < 0) return None
-    if (!fsOf(spark, base).exists(new Path(base, s"v$v/meta"))) None
-    else {
-      val df = AtomicPublish.readVersion(spark, base, "meta", v)
-      val mapped = df.columns.contains("colMap") // pre-mapping metas lack it
-      val r = df.head()
-      val m0 = Meta(r.getString(0), r.getString(1),
-        r.getString(2).split(",").filter(_.nonEmpty).toSeq)
-      val m1 =
-        if (!mapped) m0
-        else m0.copy(
-          colMap = r.getAs[String]("colMap").split(";").filter(_.contains("="))
-            .map { kv =>
-              val i = kv.indexOf('=')
-              (kv.substring(0, i), kv.substring(i + 1))
-            }.toSeq,
-          physUsed = r.getAs[String]("physUsed").split(";")
-            .filter(_.nonEmpty).toSeq)
-      val m2 =
-        if (!df.columns.contains("retain")) m1 // pre-retention metas
-        else m1.copy(retain = r.getAs[Int]("retain"))
-      val m3 =
-        if (!df.columns.contains("checks")) m2 // pre-constraint metas
-        else m2.copy(checks = decChecks(r.getAs[String]("checks")))
-      Some(if (!df.columns.contains("idHwm")) m3 // pre-identity metas
-      else m3.copy(idHwm = r.getAs[Long]("idHwm")))
-    }
+  private def readMeta(df: DataFrame): Meta = {
+    val r = df.head()
+    Meta(r.getAs[String]("schemaJson"), r.getAs[String]("key"),
+      r.getAs[String]("statsCols").split(",").filter(_.nonEmpty).toSeq,
+      colMap = r.getAs[String]("colMap").split(";").filter(_.contains("="))
+        .map { kv =>
+          val i = kv.indexOf('=')
+          (kv.substring(0, i), kv.substring(i + 1))
+        }.toSeq,
+      physUsed = r.getAs[String]("physUsed").split(";")
+        .filter(_.nonEmpty).toSeq,
+      retain = r.getAs[Int]("retain"),
+      checks = decChecks(r.getAs[String]("checks")),
+      idHwm = r.getAs[Long]("idHwm"))
   }
 
   /** The EFFECTIVE retention for a write: the per-call argument deepened
     * to the table-level floor ([[Meta.retain]]). */
-  private def effRetain(m: Option[Meta], retain: Int): Int =
-    math.max(retain, m.map(_.retain).getOrElse(1))
+  private def effRetain(m: Meta, retain: Int): Int = math.max(retain, m.retain)
 
-  /** The committed table metadata (schema / key / stats columns). */
-  private[graft] def meta(spark: SparkSession, base: String): Option[Meta] =
-    metaAt(spark, base, AtomicPublish.committed(spark, base))
-
-  private def dataSchemaAt(spark: SparkSession, base: String,
-                           v: Long): Option[org.apache.spark.sql.types.StructType] =
-    metaAt(spark, base, v).map(m =>
-      org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** The committed table metadata (schema / key / stats columns); None
+    * when nothing is committed under `base` or its head is not a cow
+    * table version (it holds no `meta`). */
+  private[graft] def meta(spark: SparkSession, base: String): Option[Meta] = {
+    val v = AtomicPublish.committed(spark, base)
+    if (v < 0) None
+    else {
+      val head = new Snapshot(spark, base, v)
+      if (head.seal.members.contains("meta")) Some(head.meta) else None
+    }
+  }
 
   /** Distributed interval-containment discovery: the manifest rows whose
     * [kmin, kmax] range MAY contain one of `keys` (a one-column frame,
@@ -756,8 +642,8 @@ object CowTable {
     * stripping it makes `user_000…`-shaped keys spread across buckets
     * instead of collapsing into one), with EXACT natural-string
     * containment against each file's stored min/max as the
-    * post-condition. Files without the key's stats entry (legacy) are
-    * kept unconditionally — spurious candidates cost a rewrite, never
+    * post-condition. Files without the key's stats entry are kept
+    * unconditionally — spurious candidates cost a rewrite, never
     * correctness. */
   private def stringCandidates(mDf: DataFrame, keys: DataFrame,
                                key: String): DataFrame = {
@@ -784,7 +670,7 @@ object CowTable {
         a.codePointCount(0, raw)
     }
     def encOf(c: Column): Column = KeyEnc.string(substring(c, lcp + 1, 7))
-    val legacy = mDf.filter(sLo.isNull || sHi.isNull)
+    val unstated = mDf.filter(sLo.isNull || sHi.isNull)
       .select(ManifestCols.map(col): _*)
     bucketCandidates(mDf.filter(sLo.isNotNull && sHi.isNotNull),
       encOf(sLo), encOf(sHi),
@@ -793,7 +679,7 @@ object CowTable {
         .withColumn("_gf_kb", encOf(col("_gf_kx"))),
       exact = (kx, lo, hi) => kx >= lo && kx <= hi,
       exactLo = sLo, exactHi = sHi)
-      .unionByName(legacy)
+      .unionByName(unstated)
       .dropDuplicates("file")
   }
 
@@ -817,8 +703,10 @@ object CowTable {
     * file whose tail range cannot intersect the SOURCE's tail hull
     * cannot hold a row matching any source tuple — the full-tuple row
     * identity proves it. Each entry is (physical stats-map name, natural
-    * type, source lo, source hi); a missing stats entry (legacy file)
-    * keeps the file — conservative, never correctness. */
+    * type, source lo, source hi); a missing stats entry keeps the file —
+    * conservative, never correctness. A current file can lack one: the
+    * stats set grows ([[compactZorder]] adds its columns, [[addColumns]]
+    * adds columns), and files written before keep their old maps. */
   private def tailMayIntersect(
       bounds: Seq[(String, org.apache.spark.sql.types.DataType, Any, Any)]): Column =
     bounds.collect { case (pn, dt, lo, hi) if lo != null && hi != null =>
@@ -987,10 +875,9 @@ object CowTable {
     * count EXACTLY the manifest's dvRows sum.
     *
     * Vector CONTENT references files by BASENAME (the durable identity
-    * — what makes a live-DV table relocatable); legacy vectors stored
-    * the full write-time path. Both shapes are matched by basename and
-    * emitted re-rooted to the entries' CURRENT full paths, so callers
-    * join against the live manifest's file column either way. Each
+    * — what makes a live-DV table relocatable); rows are matched by
+    * basename and emitted re-rooted to the entries' CURRENT full paths,
+    * so callers join against the live manifest's file column. Each
     * vector is read with its fixed schema (no schema-inference job) and
     * filtered by an `isin` over its entries' basenames (no join). */
   private def vectorRows(spark: SparkSession, dvd: Seq[Entry]): DataFrame =
@@ -1017,10 +904,9 @@ object CowTable {
   }
 
   /** Stage-and-commit a deletion vector: `rows` carries (file, pos)
-    * with CURRENT full paths; content is written with BASENAME refs
-    * (plus the `_RELOC` marker naming the convention) so the vector —
-    * and therefore the table — survives a rename/copy/move. Returns the
-    * vector's pool path. */
+    * with CURRENT full paths; content is written with BASENAME refs so
+    * the vector — and therefore the table — survives a rename/copy/move.
+    * Returns the vector's pool path. */
   private def writeVector(spark: SparkSession, base: String,
                           rows: DataFrame): String = {
     val fs = fsOf(spark, base)
@@ -1028,7 +914,6 @@ object CowTable {
     val tmp = new Path(base, s".dv-$token")
     rows.select(regexp_extract(col("file"), "[^/]+$", 0).as("file"),
       col("pos")).write.mode("overwrite").parquet(tmp.toString)
-    fs.create(new Path(tmp, "_RELOC"), true).close()
     val dst = new Path(base, s"files/$token-dv")
     fs.mkdirs(new Path(base, "files"))
     require(fs.rename(tmp, dst), s"dv move failed: $tmp -> $dst")
@@ -1062,27 +947,24 @@ object CowTable {
     * position) address columns are kept for callers that need to write
     * vectors or discover files. `schema` (the table meta's, made
     * nullable) makes the scan SCHEMA-EVOLUTION-aware: pool files
-    * written before a column was added simply yield NULL for it —
-    * without it, a mixed-schema file list would silently adopt one
-    * file's footer. */
+    * written before a column was added simply yield NULL for it — a
+    * footer-inferred read of a mixed-schema file list would silently
+    * adopt one file's footer. */
   private def scanEntries(spark: SparkSession, entries: Seq[Entry],
                           lineage: Boolean = false,
-                          schema: Option[org.apache.spark.sql.types.StructType] = None,
-                          colMap: Map[String, String] = Map.empty): DataFrame = {
+                          schema: org.apache.spark.sql.types.StructType,
+                          colMap: Map[String, String]): DataFrame = {
     require(entries.nonEmpty, "scanEntries on an empty manifest")
     // pool files carry PHYSICAL column names; the caller's schema is
     // LOGICAL — read physical, rename back (identity when unmapped)
-    val mapped = schema.exists(_.fields.exists(f => colMap.contains(f.name)))
-    val reader = schema match {
-      case Some(s) => spark.read.schema(
-        org.apache.spark.sql.types.StructType(s.fields.map(f =>
-          f.copy(name = colMap.getOrElse(f.name, f.name), nullable = true))))
-      case None => spark.read
-    }
+    val mapped = schema.fields.exists(f => colMap.contains(f.name))
+    val reader = spark.read.schema(
+      org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+        f.copy(name = colMap.getOrElse(f.name, f.name), nullable = true))))
     val raw0 = lineageCols(reader.parquet(entries.map(_.file): _*))
     val raw =
       if (!mapped) raw0
-      else raw0.select(schema.get.fields.map(f =>
+      else raw0.select(schema.fields.map(f =>
         col(colMap.getOrElse(f.name, f.name)).as(f.name)).toIndexedSeq ++
         Seq(col("_gf_file"), col("_gf_pos")): _*)
     val dvd = entries.filter(_.dv.nonEmpty)
@@ -1125,51 +1007,53 @@ object CowTable {
     splitKeys(key).foreach(k => require(schema.fieldNames.contains(k),
       s"clustering key column `$k` is not a column of the table schema"))
     schema.fieldNames.foreach(requireMappableName) // see create
-    require(!AtomicPublish.exists(spark, base),
-      s"cow table already exists under $base")
+    // exclusive: fails once another creator has committed or even just
+    // claimed v0, so two racing CREATE TABLEs cannot both succeed
     publishFirst(spark, base, Nil,
-      Meta(schema.json, key, statsCols, retain = retain), Nil, "CREATE")
+      Meta(schema.json, key, statsCols, retain = retain), Nil, "CREATE",
+      exclusive = true)
   }
 
-  /** An empty frame with the table's DATA schema — the version's `meta`
-    * payload preserves it even when every row (and so every pool file)
-    * is gone; legacy tables without meta fall back to the old
-    * manifest-schema frame. */
-  private def emptyWithSchema(spark: SparkSession, base: String,
-                              v: Long): DataFrame =
-    metaAt(spark, base, v) match {
-      case Some(m) =>
-        val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      case None => spark.read.parquet(s"$base/v$v/manifest").limit(0)
-    }
-
-  /** Scan of the committed snapshot (manifest-resolved file list). */
-  def read(spark: SparkSession, base: String): DataFrame = {
+  /** The committed head as a [[Snapshot]]. */
+  private def headSnapshot(spark: SparkSession, base: String): Snapshot = {
     val v = AtomicPublish.committed(spark, base)
     require(v >= 0, s"no committed version under $base")
-    val entries = entriesAt(spark, base, v)
-    if (entries.isEmpty) emptyWithSchema(spark, base, v)
-    else scanEntries(spark, entries, schema = dataSchemaAt(spark, base, v),
-      colMap = colMapAt(spark, base, v))
+    new Snapshot(spark, base, v)
   }
+
+  /** The live rows of `s` in its data schema — the version's `meta`
+    * preserves the schema even when every row (and so every pool file)
+    * is gone. */
+  private def scan(spark: SparkSession, s: Snapshot): DataFrame =
+    if (s.entries.isEmpty) spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), s.schema)
+    else scanEntries(spark, s.entries, schema = s.schema, colMap = s.colMap)
+
+  /** Scan of the committed snapshot (manifest-resolved file list). */
+  def read(spark: SparkSession, base: String): DataFrame =
+    scan(spark, headSnapshot(spark, base))
 
   /** Manifest of the committed snapshot. */
   def manifest(spark: SparkSession, base: String): Seq[Entry] =
     entriesAt(spark, base, AtomicPublish.committed(spark, base))
 
   /** Time-travel snapshot: the table AS OF `version`, read through that
-    * version's deletion vectors. Only retained versions are readable
-    * (pruned/partial versions fail fast in [[AtomicPublish.readVersion]]).
+    * version's deletion vectors. Only retained versions are readable: a
+    * pruned or partial version fails fast with
+    * [[VersionNotPublishedException]].
     */
-  def readAt(spark: SparkSession, base: String, version: Long): DataFrame = {
-    val entries = entriesAt(spark, base, version)
-    if (entries.isEmpty) emptyWithSchema(spark, base, version)
-    else scanEntries(spark, entries,
-      schema = dataSchemaAt(spark, base, version),
-      colMap = colMapAt(spark, base, version))
+  def readAt(spark: SparkSession, base: String, version: Long): DataFrame =
+    scan(spark, new Snapshot(spark, base, version))
+
+  /** The discovery join of `keys` (first column) against `s`'s manifest:
+    * the manifest entries whose key range MAY contain one of them. */
+  private def keyCandidates(s: Snapshot, keys: DataFrame,
+                            key: String): DataFrame = {
+    val lead = splitKeys(key).head
+    val kDt = s.schema.fields.find(_.name == lead).map(_.dataType)
+      .getOrElse(keyType(keys, keys.columns.head))
+    discoverCandidates(s.frame, keys.select(col(keys.columns.head).cast(kDt)),
+      s.colMap.getOrElse(lead, lead), kDt)
   }
 
   /** The DISCOVERY frame itself, un-collected — the exact subtree
@@ -1178,18 +1062,8 @@ object CowTable {
     * committed-manifest cache decides whether the plan is the broadcast
     * hash fast path (cache hit) or the distributed bucket join. */
   private[graft] def discoveryFrame(spark: SparkSession, base: String,
-                                    keys: DataFrame, key: String): DataFrame = {
-    val v = AtomicPublish.committed(spark, base)
-    require(v >= 0, s"no committed version under $base")
-    val lead = splitKeys(key).head
-    val mDf = manifestDfAt(spark, base, v)
-    val kDt = dataSchemaAt(spark, base, v)
-      .flatMap(_.fields.find(_.name == lead)).map(_.dataType)
-      .getOrElse(keyType(keys, keys.columns.head))
-    val cm = colMapAt(spark, base, v)
-    discoverCandidates(mDf, keys.select(col(keys.columns.head).cast(kDt)),
-      cm.getOrElse(lead, lead), kDt)
-  }
+                                    keys: DataFrame, key: String): DataFrame =
+    keyCandidates(headSnapshot(spark, base), keys, key)
 
   /** Point-lookup read: snapshot rows whose key range MAY contain one of
     * `keys` (first column, cast long) — the merge discovery reused as a
@@ -1198,21 +1072,10 @@ object CowTable {
     * driver-materializes the manifest). */
   def readForKeys(spark: SparkSession, base: String, keys: DataFrame,
                   key: String): DataFrame = {
-    val v = AtomicPublish.committed(spark, base)
-    require(v >= 0, s"no committed version under $base")
-    val lead = splitKeys(key).head
-    val mDf = manifestDfAt(spark, base, v)
-    val kDt = dataSchemaAt(spark, base, v)
-      .flatMap(_.fields.find(_.name == lead)).map(_.dataType)
-      .getOrElse(keyType(keys, keys.columns.head))
-    val cm = colMapAt(spark, base, v)
-    val hit = collectEntries(discoverCandidates(mDf,
-      keys.select(col(keys.columns.head).cast(kDt)),
-      cm.getOrElse(lead, lead),
-      kDt)) // probe footprint
-    if (hit.isEmpty) read(spark, base).limit(0) // schema-only frame
-    else scanEntries(spark, hit, schema = dataSchemaAt(spark, base, v),
-      colMap = cm)
+    val s = headSnapshot(spark, base)
+    val hit = collectEntries(keyCandidates(s, keys, key)) // probe footprint
+    if (hit.isEmpty) scan(spark, s).limit(0) // schema-only frame
+    else scanEntries(spark, hit, schema = s.schema, colMap = s.colMap)
   }
 
   /** Txn-stamp cache — same immutable-version identity as [[metaCache]]
@@ -1223,116 +1086,130 @@ object CowTable {
   private val txnCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), Seq[(String, Long)]]()
 
-  /** Txn stamps of version `v`: (stream id, last applied batch id). */
-  private def txnsAt(spark: SparkSession, base: String,
-                     v: Long): Seq[(String, Long)] = {
-    if (v < 0) return Seq.empty
-    val cacheKey = AtomicPublish.versionToken(spark, base, v)
-      .map(t => (norm(base), v, t))
-    cacheKey.flatMap(k => Option(txnCache.get(k))) match {
-      case Some(ts) => ts
-      case None =>
-        val p = new Path(base, s"v$v/txn")
-        val ts: Seq[(String, Long)] =
-          if (!fsOf(spark, base).exists(p)) Seq.empty
-          else AtomicPublish.readVersion(spark, base, "txn", v)
-            .select("stream", "batch").collect() // stream-count bounded
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-        cacheKey.foreach { k =>
-          if (txnCache.size > 4096) txnCache.clear()
-          txnCache.put(k, ts)
-        }
-        ts
-    }
+  /** Highest batch id the named stream committed into this table, −1 if
+    * none — the replay-idempotence stamp of [[exactlyOnceMerge]]. */
+  def lastTxn(spark: SparkSession, base: String, stream: String): Long = {
+    val v = AtomicPublish.committed(spark, base)
+    if (v < 0) -1L else stampOf(new Snapshot(spark, base, v), stream)
   }
 
-  /** Highest batch id the named stream committed into this table, −1 if
-    * none — the replay-idempotence test for [[exactlyOnceMerge]]. */
-  def lastTxn(spark: SparkSession, base: String, stream: String): Long =
-    txnsAt(spark, base, AtomicPublish.committed(spark, base))
-      .collect { case (s, b) if s == stream => b }
-      .foldLeft(-1L)(math.max)
+  private def stampOf(s: Snapshot, stream: String): Long =
+    s.txns.collect { case (x, b) if x == stream => b }.foldLeft(-1L)(math.max)
 
   /** The datasets of one version: the manifest (a DataFrame — never
     * materialized on the driver), the meta table and, once any stream
     * has stamped the table, the txn table. The txn table is O(streams):
     * collected and rewritten wholesale each version. */
   private def versionDatasets(spark: SparkSession, manifest: DataFrame,
-                              meta: Option[Meta], txns: Seq[(String, Long)]
+                              meta: Meta, txns: Seq[(String, Long)]
                              ): Seq[(String, DataFrame)] = {
     import spark.implicits._
-    Seq("manifest" -> manifest) ++
-      meta.map(m => "meta" -> metaDf(spark, m)).toSeq ++
+    Seq("manifest" -> manifest, "meta" -> metaDf(spark, meta)) ++
       (if (txns.isEmpty) Seq.empty
        else Seq("txn" -> txns.toDF("stream", "batch")))
   }
 
   /** Publish a new table's version 0 and prime its caches — the
-    * bootstrap of [[create]], [[createEmpty]] and [[exactlyOnceMerge]]. */
+    * bootstrap of [[create]], [[createEmpty]] and [[exactlyOnceMerge]].
+    * An `exclusive` bootstrap claims `v0` only, and fails when another
+    * writer has committed or claimed it. */
   private def publishFirst(spark: SparkSession, base: String,
                            entries: Seq[Entry], m: Meta,
-                           txns: Seq[(String, Long)], op: String): Long = {
-    val v = AtomicPublish.publish(spark, base,
-      versionDatasets(spark, entriesDf(spark, entries), Some(m), txns),
-      m.retain, op = Some(op))
-    primeVersionCaches(spark, base, v, Some(entries), Some(m), txns)
+                           txns: Seq[(String, Long)], op: String,
+                           exclusive: Boolean = false): Long = {
+    val token = java.util.UUID.randomUUID().toString
+    val v = AtomicPublish.publishAs(spark, base,
+      versionDatasets(spark, entriesDf(spark, entries), m, txns),
+      m.retain, Some(op), token, first = exclusive).getOrElse(
+      throw new IllegalArgumentException(s"cow table already exists under $base"))
+    prime(base, v, token, Some(entries), m, txns)
     v
   }
 
-  /** WRITE-THROUGH cache priming for a version this JVM just committed:
-    * the committing statement already holds the version's manifest
-    * entries (when it built them as a local list), its parsed meta and
-    * its txn stamps — re-reading any of them later as a parquet job is
-    * pure re-derivation of in-memory state (guide §1.2). Keys are the
-    * same durable (base, version, writer-token) identity the read-side
-    * caches populate on miss; priming failure just leaves the ordinary
-    * populate-on-read path. Entries stay bounded by the manifest-cache
-    * ceiling, so no driver-memory ceiling is introduced at 100 TB. */
-  private def primeVersionCaches(spark: SparkSession, base: String, v: Long,
-                                 entries: Option[Seq[Entry]],
-                                 meta: Option[Meta],
-                                 txns: Seq[(String, Long)]): Unit =
-    try AtomicPublish.versionToken(spark, base, v).foreach { t =>
-      val k = (norm(base), v, t)
-      meta.foreach { m =>
-        if (metaCache.size > 4096) metaCache.clear()
-        metaCache.put(k, m)
-      }
-      if (txnCache.size > 4096) txnCache.clear()
-      txnCache.put(k, txns)
-      entries.filter(_.size <= ManifestCacheMaxEntries).foreach { es =>
-        if (manifestCache.size > 1024) manifestCache.clear()
-        manifestCache.put(k, es)
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def putBounded[V](cache: java.util.concurrent.ConcurrentHashMap[(String, Long, String), V],
+                            k: (String, Long, String), v: V, max: Int): Unit = {
+    if (cache.size > max) cache.clear()
+    cache.put(k, v)
+  }
 
-  /** One committed version as a commit attempt reads it. Each part is
-    * resolved lazily and at most once, so a writer pays only for what it
-    * reads. `cached` is the entry list when the manifest is small
-    * enough to cache ([[cachedEntriesAt]]); `frame` is the manifest as a
+  /** WRITE-THROUGH cache priming for version `v`, which this JVM just
+    * committed sealed with `token`: the committing statement already
+    * holds the version's manifest entries (when it built them as a local
+    * list), its parsed meta and its txn stamps — re-reading any of them
+    * later as a parquet job is pure re-derivation of in-memory state
+    * (guide §1.2). Keys are the same durable (base, version,
+    * writer-token) identity the read-side caches populate on miss, and
+    * the writer minted the token, so priming reads nothing. Entries stay
+    * bounded by the manifest-cache ceiling, so no driver-memory ceiling
+    * is introduced at 100 TB. */
+  private def prime(base: String, v: Long, token: String,
+                    entries: Option[Seq[Entry]], meta: Meta,
+                    txns: Seq[(String, Long)]): Unit = {
+    val k = (norm(base), v, token)
+    putBounded(metaCache, k, meta, 4096)
+    putBounded(txnCache, k, txns, 4096)
+    entries.filter(_.size <= ManifestCacheMaxEntries)
+      .foreach(putBounded(manifestCache, k, _, 1024))
+  }
+
+  /** One committed version, resolved from its seal: the seal is read
+    * once and names the version's writer token (the key of the
+    * immutable-version caches) and its members. Each other part is
+    * resolved lazily and at most once, so a reader or writer pays only
+    * for what it reads. `cached` is the entry list when the manifest is
+    * small enough to cache ([[ManifestCacheMaxBytes]] on disk,
+    * [[ManifestCacheMaxEntries]] rows); `frame` is the manifest as a
     * DataFrame either way — a local relation over `cached`, else the
-    * distributed parquet scan, never enumerated on the driver. */
+    * distributed parquet scan, never enumerated on the driver. A
+    * version that is pruned or was never sealed fails on its first use
+    * with [[VersionNotPublishedException]]. */
   private final class Snapshot(spark: SparkSession, base: String,
                                val version: Long) {
-    lazy val cached: Option[Seq[Entry]] = cachedEntriesAt(spark, base, version)
+    lazy val seal: AtomicPublish.Seal = AtomicPublish.seal(spark, base, version)
+    def key: (String, Long, String) = (norm(base), version, seal.token)
+    private def member(name: String): DataFrame =
+      spark.read.parquet(s"$base/v$version/$name")
+    lazy val cached: Option[Seq[Entry]] =
+      Option(manifestCache.get(key)).orElse {
+        val small = try fsOf(spark, base)
+          .listStatus(new Path(base, s"v$version/manifest"))
+          .map(_.getLen).sum <= ManifestCacheMaxBytes
+        catch { case scala.util.control.NonFatal(_) => false }
+        if (!small) None
+        else {
+          val es = collectEntries(reroot(member("manifest"), base))
+          if (es.size > ManifestCacheMaxEntries) None
+          else {
+            putBounded(manifestCache, key, es, 1024)
+            Some(es)
+          }
+        }
+      }
     lazy val frame: DataFrame = cached match {
       case Some(es) => entriesDf(spark, es)
-      case None => reroot(pad(
-        AtomicPublish.readVersion(spark, base, "manifest", version)), base)
+      case None => reroot(member("manifest"), base)
     }
     lazy val entries: Seq[Entry] = cached.getOrElse(collectEntries(frame))
-    /** None only for a table without meta: a version pruned under the
-      * attempt fails with [[VersionNotPublishedException]]. */
-    lazy val meta: Option[Meta] = {
-      val m = metaAt(spark, base, version)
-      if (m.isEmpty) AtomicPublish.requirePublished(spark, base, version)
+    lazy val meta: Meta = Option(metaCache.get(key)).getOrElse {
+      val m = readMeta(member("meta"))
+      putBounded(metaCache, key, m, 4096)
       m
     }
-    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
-      meta.map(m => org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    lazy val colMap: Map[String, String] =
-      meta.map(_.physMap).getOrElse(Map.empty)
+    /** (stream id, last applied batch id) stamps; none unless the seal
+      * lists a `txn` member. */
+    lazy val txns: Seq[(String, Long)] =
+      if (!seal.members.contains("txn")) Nil
+      else Option(txnCache.get(key)).getOrElse {
+        val ts = member("txn").select("stream", "batch")
+          .collect() // stream-count bounded
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
+        putBounded(txnCache, key, ts, 4096)
+        ts
+      }
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(meta.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    def colMap: Map[String, String] = meta.physMap
   }
 
   /** A deletion vector one attempt wrote ([[cumulativeVector]]) and how
@@ -1388,22 +1265,21 @@ object CowTable {
   @annotation.tailrec
   private def commitChange(spark: SparkSession, base: String, op: String,
                            retain: Int)(attempt: Snapshot => Change): Long = {
-    val parent = AtomicPublish.committed(spark, base)
-    require(parent >= 0, s"no committed version under $base")
+    val p = headSnapshot(spark, base)
+    val parent = p.version
     afterParent(base, parent)
-    val p = new Snapshot(spark, base, parent)
     def publish(manifest: DataFrame, entries: Option[Seq[Entry]],
                 newMeta: Option[Meta],
                 txn: Option[(String, Long)]): Option[Long] = {
-      val carried = txnsAt(spark, base, parent)
-      val txns = txn.fold(carried) { case (s, b) =>
-        carried.filterNot(_._1 == s) :+ ((s, b))
+      val txns = txn.fold(p.txns) { case (s, b) =>
+        p.txns.filterNot(_._1 == s) :+ ((s, b))
       }
-      val meta = newMeta.orElse(p.meta)
+      val meta = newMeta.getOrElse(p.meta)
+      val token = java.util.UUID.randomUUID().toString
       val v = AtomicPublish.tryPublish(spark, base,
         versionDatasets(spark, manifest, meta, txns),
-        effRetain(meta, retain), parent, op = Some(op))
-      v.foreach(primeVersionCaches(spark, base, _, entries, meta, txns))
+        effRetain(meta, retain), parent, Some(op), token)
+      v.foreach(prime(base, _, token, entries, meta, txns))
       v
     }
     var change: Change = Unchanged
@@ -1502,96 +1378,89 @@ object CowTable {
       // materializes it, so no separate eager-checkpoint job is paid
       .localCheckpoint(eager = false)
     commitChange(spark, base, "MERGE", retain) { p =>
-      // the manifest stays a DataFrame end to end: discovery is the
-      // distributed interval-bucket join (no broadcast, no SafeRows
-      // ceiling — a 100k-file table merges the same way an 8-file one
-      // does) and the untouched files are carried into the new manifest
-      // by [[carryOver]], never enumerated on the driver. Only the
-      // AFFECTED entries — the merge's own rewrite footprint, which must
-      // be listed to be scanned at all — are collected.
-      // ADDITIVE schema evolution: a source carrying columns the table
-      // lacks widens the schema — old pool files stay untouched and
-      // read back NULL for the new columns (the scan is meta-schema
-      // driven), new files carry them, and the committed meta records
-      // the widened shape. A source MISSING table columns is rejected
-      // (a full-row MERGE replace would silently null existing data).
-      val tblSchema = p.schema
-      val srcSchema = org.apache.spark.sql.types.StructType(
-        src.schema.fields.filterNot(_.name == "_delete"))
-      tblSchema.foreach { ts =>
+      // a replayed batch — the parent already carries its stream's stamp
+      // at or past it — changes nothing; read inside the attempt, so a
+      // parent pruned under the read retries instead of reading no stamp
+      if (txn.exists { case (s, b) => stampOf(p, s) >= b }) Unchanged
+      else {
+        // the manifest stays a DataFrame end to end: discovery is the
+        // distributed interval-bucket join (no broadcast, no SafeRows
+        // ceiling — a 100k-file table merges the same way an 8-file one
+        // does) and the untouched files are carried into the new manifest
+        // by [[carryOver]], never enumerated on the driver. Only the
+        // AFFECTED entries — the merge's own rewrite footprint, which must
+        // be listed to be scanned at all — are collected.
+        // ADDITIVE schema evolution: a source carrying columns the table
+        // lacks widens the schema — old pool files stay untouched and
+        // read back NULL for the new columns (the scan is meta-schema
+        // driven), new files carry them, and the committed meta records
+        // the widened shape. A source MISSING table columns is rejected
+        // (a full-row MERGE replace would silently null existing data).
+        val ts = p.schema
+        val srcSchema = org.apache.spark.sql.types.StructType(
+          src.schema.fields.filterNot(_.name == "_delete"))
         val missing = ts.fieldNames.filterNot(srcSchema.fieldNames.contains)
         require(missing.isEmpty,
           s"merge source is missing table columns ${missing.mkString(", ")}" +
             " — schema evolution only ADDS columns")
-      }
-      val parentMeta = p.meta
-      val evolved = tblSchema.map { ts =>
+        val parentMeta = p.meta
         val extra = srcSchema.fields
           .filterNot(f => ts.fieldNames.contains(f.name))
-        if (extra.isEmpty) ts
-        else org.apache.spark.sql.types.StructType(
-          ts.fields ++ extra.map(_.copy(nullable = true)))
-      }
-      // evolution under column mapping: each NEW column gets a fresh
-      // PHYSICAL name (a dropped/renamed predecessor's physical name
-      // must not be resurrected from old files)
-      val evolvedMeta: Option[Meta] = (parentMeta, tblSchema, evolved) match {
-        case (Some(pm), Some(ts), Some(e)) if e.length != ts.length =>
-          val extra = e.fields.drop(ts.length)
-          var m2 = pm
-          extra.foreach { f =>
+          .map(_.copy(nullable = true))
+        val evolved = org.apache.spark.sql.types.StructType(ts.fields ++ extra)
+        // evolution under column mapping: each NEW column gets a fresh
+        // PHYSICAL name (a dropped/renamed predecessor's physical name
+        // must not be resurrected from old files)
+        val evolvedMeta: Option[Meta] =
+          if (extra.isEmpty) None
+          else Some(extra.foldLeft(parentMeta) { (m2, f) =>
             requireMappableName(f.name)
             val p0 = freshPhys(m2, ts, f.name)
-            m2 = m2.copy(
+            m2.copy(
               colMap = if (p0 == f.name) m2.colMap
                        else m2.colMap :+ (f.name -> p0),
               physUsed = (m2.physUsed :+ p0).distinct)
-          }
-          Some(m2.copy(schemaJson = e.json))
-        case _ => None
+          }.copy(schemaJson = evolved.json))
+        val mergeMap = evolvedMeta.getOrElse(parentMeta).physMap
+        val ks = splitKeys(key)
+        def colDt(name: String): org.apache.spark.sql.types.DataType =
+          ts.fields.find(_.name == name).map(_.dataType)
+            .getOrElse(src.schema(name).dataType)
+        val kDt = colDt(ks.head)
+        val srcKeys = src.select(col(ks.head).cast(kDt).as("_gf_k")).distinct()
+        // leading-range candidates, narrowed by the source's TAIL-column
+        // hull: for a low-cardinality leading key (the SCD2 grain) the
+        // leading ranges admit every file holding a touched user — the
+        // tail stats cut the rewrite to the files whose tail range can
+        // actually hold a matched tuple
+        // ONE evaluation of the discovery join: the footprint is collected
+        // (it must be, to be scanned) and everything downstream — the
+        // rewrite scan and the untouched carry-over — works off the local
+        // list, so no localCheckpoint job pins a second copy
+        val affected = collectEntries(discoverCandidates(p.frame, srcKeys,
+          mergeMap.getOrElse(ks.head, ks.head), kDt)
+          .filter(tailMayIntersect(tailBoundsOf(src, ks, identity, colDt,
+            k => mergeMap.getOrElse(k, k))))) // merge-footprint bounded
+        val upserts = src.filter(!col("_delete")).drop("_delete")
+        val survivors =
+          if (affected.isEmpty) upserts
+          // DV-aware: a rewritten file's vectored-out rows must not
+          // resurrect, so affected files are read through their vectors.
+          // The row identity is the FULL key tuple: only rows matching a
+          // source row on every key column are replaced.
+          else scanEntries(spark, affected, schema = evolved,
+            colMap = mergeMap)
+            .join(src.select(ks.map(k => col(k).cast(colDt(k)).as(k)): _*)
+              .distinct(), ks, "left_anti")
+            .unionByName(upserts, allowMissingColumns = false)
+        val newEntries = writePool(spark, base, survivors, key,
+          math.max(1, affected.size), parentMeta.statsCols, colMap = mergeMap,
+          checks = parentMeta.checks, gens = gensOf(parentMeta),
+          idNotNull = identityOf(parentMeta).map(_._1))
+        beforeCommit()
+        Edit(removed = affected.map(_.file).toSet, added = newEntries,
+          meta = evolvedMeta, txn = txn)
       }
-      val mergeMap = evolvedMeta.orElse(parentMeta).map(_.physMap)
-        .getOrElse(Map.empty)
-      val ks = splitKeys(key)
-      def colDt(name: String): org.apache.spark.sql.types.DataType =
-        tblSchema.flatMap(_.fields.find(_.name == name)).map(_.dataType)
-          .getOrElse(src.schema(name).dataType)
-      val kDt = colDt(ks.head)
-      val srcKeys = src.select(col(ks.head).cast(kDt).as("_gf_k")).distinct()
-      // leading-range candidates, narrowed by the source's TAIL-column
-      // hull: for a low-cardinality leading key (the SCD2 grain) the
-      // leading ranges admit every file holding a touched user — the
-      // tail stats cut the rewrite to the files whose tail range can
-      // actually hold a matched tuple
-      // ONE evaluation of the discovery join: the footprint is collected
-      // (it must be, to be scanned) and everything downstream — the
-      // rewrite scan and the untouched carry-over — works off the local
-      // list, so no localCheckpoint job pins a second copy
-      val affected = collectEntries(discoverCandidates(p.frame, srcKeys,
-        mergeMap.getOrElse(ks.head, ks.head), kDt)
-        .filter(tailMayIntersect(tailBoundsOf(src, ks, identity, colDt,
-          k => mergeMap.getOrElse(k, k))))) // merge-footprint bounded
-      val upserts = src.filter(!col("_delete")).drop("_delete")
-      val survivors =
-        if (affected.isEmpty) upserts
-        // DV-aware: a rewritten file's vectored-out rows must not
-        // resurrect, so affected files are read through their vectors.
-        // The row identity is the FULL key tuple: only rows matching a
-        // source row on every key column are replaced.
-        else scanEntries(spark, affected, schema = evolved,
-          colMap = mergeMap)
-          .join(src.select(ks.map(k => col(k).cast(colDt(k)).as(k)): _*)
-            .distinct(), ks, "left_anti")
-          .unionByName(upserts, allowMissingColumns = false)
-      val statsCols = parentMeta.map(_.statsCols).getOrElse(Nil)
-      val newEntries = writePool(spark, base, survivors, key,
-        math.max(1, affected.size), statsCols, colMap = mergeMap,
-        checks = parentMeta.map(_.checks).getOrElse(Nil),
-        gens = parentMeta.map(gensOf).getOrElse(Nil),
-        idNotNull = parentMeta.flatMap(identityOf).map(_._1))
-      beforeCommit()
-      Edit(removed = affected.map(_.file).toSet, added = newEntries,
-        meta = evolvedMeta, txn = txn)
     }
   }
 
@@ -1627,7 +1496,7 @@ object CowTable {
                                  retain: Int): Long = {
     val src = df.localCheckpoint() // one evaluation across retries
     commitChange(spark, base, "APPEND", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(s"no table meta under $base"))
+      val m = p.meta
       val id = identityOf(m).get
       val (assigned, newHwm) = assignIdentity(spark, src, id, m.idHwm)
       val newEntries = writePool(spark, base, assigned, m.key, numFiles,
@@ -1652,8 +1521,8 @@ object CowTable {
                   onDiscovery: (Long, Long) => Unit = (_, _) => ()): Long =
     commitChange(spark, base, "DELETE", retain) { p =>
       val cm = p.colMap
-      val keyName = splitKeys(p.meta.map(_.key).getOrElse(key)).head
-      val sk = p.schema.flatMap(_.fields.find(_.name == keyName))
+      val keyName = splitKeys(p.meta.key).head
+      val sk = p.schema.fields.find(_.name == keyName)
         .exists(f => isStringKey(f.dataType))
       val cand = collectEntries(
         p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
@@ -1677,7 +1546,7 @@ object CowTable {
           .filter(!coalesce(pred, lit(false)))
         Edit(removed = hitEntries.map(_.file).toSet,
           added = writePool(spark, base, survivors, key, hit.size,
-            p.meta.map(_.statsCols).getOrElse(Nil), colMap = cm))
+            p.meta.statsCols, colMap = cm))
       }
     }
 
@@ -1736,7 +1605,7 @@ object CowTable {
           scanEntries(spark, rewrite.flatten, schema = p.schema,
             colMap = p.colMap), key,
           numFiles = rewrite.size,
-          statsCols = p.meta.map(_.statsCols).getOrElse(Nil),
+          statsCols = p.meta.statsCols,
           colMap = p.colMap)
         val all = keep.flatten ++ newEntries
         Replace(entriesDf(spark, all), Some(all), None)
@@ -1754,7 +1623,7 @@ object CowTable {
                             zorder: Seq[String]): Long =
     commitChange(spark, base, "ZORDER", retain) { p =>
       zorder.foreach(c => require(
-        p.schema.forall(_.fieldNames.contains(c)),
+        p.schema.fieldNames.contains(c),
         s"zorder column `$c` is not a column of the table"))
       val entries = p.entries
       if (entries.isEmpty) Unchanged // nothing to lay out
@@ -1778,13 +1647,13 @@ object CowTable {
         val nFiles = math.max(1L,
           (liveRows + targetRows - 1) / math.max(1L, targetRows)).toInt
         val statsCols =
-          (p.meta.map(_.statsCols).getOrElse(Nil) ++ zorder).distinct
+          (p.meta.statsCols ++ zorder).distinct
         val newEntries = writePool(spark, base, data, key, nFiles,
           statsCols, colMap = p.colMap, layout = Some(z))
         // the widened stats set becomes table metadata: every LATER write
         // keeps recording the z-columns' per-file ranges
         Replace(entriesDf(spark, newEntries), Some(newEntries),
-          p.meta.map(_.copy(statsCols = statsCols)))
+          Some(p.meta.copy(statsCols = statsCols)))
       }
     }
 
@@ -1849,7 +1718,7 @@ object CowTable {
             "version (pruned by retention, an orphan, or never committed) " +
             "— raise the table's `retain` property to keep deeper history")
         val target = new Snapshot(spark, base, toVersion)
-        Replace(target.frame, target.cached, target.meta)
+        Replace(target.frame, target.cached, Some(target.meta))
       }
     }
 
@@ -1866,9 +1735,8 @@ object CowTable {
                retain: Int = 1): Long =
     commitChange(spark, base, "DELETE", retain) { p =>
       val cm = p.colMap
-      val keyName = p.meta.map(_.key).map(k => splitKeys(k).head)
-        .getOrElse("")
-      val sk = p.schema.flatMap(_.fields.find(_.name == keyName))
+      val keyName = splitKeys(p.meta.key).head
+      val sk = p.schema.fields.find(_.name == keyName)
         .exists(f => isStringKey(f.dataType))
       // stats-pruned discovery: only files whose statistics admit a
       // matching row are scanned for positions
@@ -1989,17 +1857,18 @@ object CowTable {
     * every one of `cols` (a dropped column's stale values stay in the
     * files). */
   private[graft] def servesInPlace(spark: SparkSession, base: String, v: Long,
-                                   cols: Seq[String]): Boolean =
-    metaAt(spark, base, v).forall(m => m.physMap.isEmpty &&
-      dataSchemaAt(spark, base, v).forall(sc => cols.forall(sc.fieldNames.contains)))
+                                   cols: Seq[String]): Boolean = {
+    val s = new Snapshot(spark, base, v)
+    s.colMap.isEmpty && cols.forall(s.schema.fieldNames.contains)
+  }
 
   /** The change rows of `cs`, a classification ending at `toV`. */
   private[graft] def changesOf(spark: SparkSession, base: String, toV: Long,
                                key: String, cs: ChangeSet): DataFrame = {
-    val schema = dataSchemaAt(spark, base, toV)
-    val cm = colMapAt(spark, base, toV)
-    val dataCols = schema.map(_.fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(cs.probe.file).columns.toSeq)
+    val to = new Snapshot(spark, base, toV)
+    val schema = to.schema
+    val cm = to.colMap
+    val dataCols = schema.fieldNames.toSeq
     def side(parts: Seq[ChangePart]): DataFrame = {
       val (whole, at) = parts.partition(_.positions.isEmpty)
       val wholeRows = Some(whole.map(_.entry)).filter(_.nonEmpty)
@@ -2086,9 +1955,7 @@ object CowTable {
       publishFirst(spark, base, entries,
         Meta(upserts.schema.json, key, Nil, retain = retain),
         Seq((stream, batchId)), "MERGE")
-    } else if (lastTxn(spark, base, stream) >= batchId) {
-      AtomicPublish.committed(spark, base) // replay: already applied
-    } else {
+    } else { // a replay is detected inside the merge's commit attempt
       merge(spark, base, source, key, retain, txn = Some((stream, batchId)))
     }
   }
@@ -2149,8 +2016,8 @@ object CowTable {
         .getOrElse(org.apache.spark.sql.types.LongType)
     val kDt = dtOf(ks.head)
     // the delete-key frame carries the FULL key tuple: by name for a
-    // composite key (Spark's rowIdSchema), positionally for the
-    // single-column legacy callers
+    // composite key (Spark's rowIdSchema), positionally for a
+    // single-column key
     val gfk = ks.indices.map(i => s"_gfk_$i")
     val keyedCols: Seq[Column] =
       if (ks.size == 1)
@@ -2275,9 +2142,8 @@ object CowTable {
                  retain: Int = 1): Long = {
     require(fields.nonEmpty, "addColumns: no columns given")
     commitChange(spark, base, "ADD COLUMNS", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base — addColumns needs a created cow table"))
-      val schema = p.schema.get
+      val m = p.meta
+      val schema = p.schema
       fields.foreach { f =>
         require(!schema.fieldNames.contains(f.name),
           s"column `${f.name}` already exists under $base")
@@ -2308,9 +2174,8 @@ object CowTable {
   def renameColumn(spark: SparkSession, base: String, from: String,
                    to: String, retain: Int = 1): Long = {
     commitChange(spark, base, "RENAME COLUMN", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base"))
-      val schema = p.schema.get
+      val m = p.meta
+      val schema = p.schema
       require(schema.fieldNames.contains(from),
         s"column `$from` does not exist under $base")
       require(!schema.fieldNames.contains(to),
@@ -2347,9 +2212,8 @@ object CowTable {
   def dropColumn(spark: SparkSession, base: String, name: String,
                  retain: Int = 1): Long = {
     commitChange(spark, base, "DROP COLUMN", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base"))
-      val schema = p.schema.get
+      val m = p.meta
+      val schema = p.schema
       require(schema.fieldNames.contains(name),
         s"column `$name` does not exist under $base")
       require(!splitKeys(m.key).contains(name),
@@ -2357,7 +2221,7 @@ object CowTable {
           "identity): key columns cannot be dropped")
       val phys = m.phys(name)
       // the physical name joins physUsed, whose serialization splits on
-      // ';' — a legacy (pre-guard) table could still carry one
+      // ';': refuse one carrying a separator rather than corrupt it
       requireMappableName(phys)
       m.checks.filter(c => checkReferences(spark, c._2, name)).foreach { c =>
         sys.error(s"column `$name` is referenced by CHECK constraint " +
@@ -2391,9 +2255,8 @@ object CowTable {
                        retain: Int = 1): Long = {
     val op = newDefault.fold(s"DROP DEFAULT $name")(_ => s"SET DEFAULT $name")
     commitChange(spark, base, op, retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base"))
-      val schema = p.schema.get
+      val m = p.meta
+      val schema = p.schema
       val f = schema.fields.find(_.name == name).getOrElse(sys.error(
         s"column `$name` does not exist under $base"))
       newDefault.foreach { sql =>
@@ -2444,8 +2307,7 @@ object CowTable {
                predicateSql: String, retain: Int = 1): Long = {
     require(name.nonEmpty, "constraint name must be non-empty")
     commitChange(spark, base, s"ADD CONSTRAINT $name", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base"))
+      val m = p.meta
       require(!m.checks.exists(_._1 == name),
         s"a CHECK constraint named `$name` already exists under $base")
       // the predicate must resolve against the table schema AND hold on
@@ -2465,8 +2327,7 @@ object CowTable {
   def dropCheck(spark: SparkSession, base: String, name: String,
                 retain: Int = 1): Long = {
     commitChange(spark, base, s"DROP CONSTRAINT $name", retain) { p =>
-      val m = p.meta.getOrElse(sys.error(
-        s"no table meta under $base"))
+      val m = p.meta
       require(m.checks.exists(_._1 == name),
         s"no CHECK constraint named `$name` under $base")
       Edit(meta = Some(m.copy(checks = m.checks.filterNot(_._1 == name))))

@@ -160,49 +160,40 @@ object WindowReload {
     .empty[(String, Long, String), Seq[(LocalDate, String)]]
   private val ManifestCacheMaxEntries = 16384
 
-  private def cacheKey(spark: SparkSession, mbase: String,
-                       v: Long): Option[(String, Long, String)] =
-    AtomicPublish.versionToken(spark, mbase, v)
-      .map(t => (new Path(mbase).toUri.getPath, v, t))
+  private def cacheKey(mbase: String, v: Long,
+                       token: String): (String, Long, String) =
+    (new Path(mbase).toUri.getPath, v, token)
 
   private def manifestAt(spark: SparkSession, target: String,
                          v: Long): Seq[(LocalDate, String)] = {
     val mbase = s"$target/$ManifestBase"
-    val k = cacheKey(spark, mbase, v)
-    k.flatMap(manifestCache.get) match {
-      case Some(es) => es
-      case None =>
-        val es = AtomicPublish.readVersion(spark, mbase, ManifestDs, v)
-          .collect().map(r => (r.getDate(0).toLocalDate, r.getString(1)))
-          .toSeq
-        k.foreach { key =>
-          if (manifestCache.size > 1024) manifestCache.clear()
-          if (es.size <= ManifestCacheMaxEntries) manifestCache.put(key, es)
-        }
-        es
-    }
+    val k = cacheKey(mbase, v, AtomicPublish.seal(spark, mbase, v).token)
+    manifestCache.getOrElse(k, {
+      val es = spark.read.parquet(s"$mbase/v$v/$ManifestDs")
+        .collect().map(r => (r.getDate(0).toLocalDate, r.getString(1)))
+        .toSeq
+      if (manifestCache.size > 1024) manifestCache.clear()
+      if (es.size <= ManifestCacheMaxEntries) manifestCache.put(k, es)
+      es
+    })
   }
 
-  /** The committed manifest, if this target uses the manifest layout:
-    * (partition date → tree dir relative to the target; "" = the legacy
-    * in-place tree rooted at the target itself).
-    */
+  /** The committed manifest: partition date → tree dir relative to the
+    * target. Empty when no reload has committed under `target`. */
   private def manifestOf(spark: SparkSession,
-                         target: String): Option[Seq[(LocalDate, String)]] = {
+                         target: String): Seq[(LocalDate, String)] = {
     val v = AtomicPublish.committed(spark, s"$target/$ManifestBase")
-    if (v < 0) None else Some(manifestAt(spark, target, v))
+    if (v < 0) Nil else manifestAt(spark, target, v)
   }
 
-  /** Legacy layout discovery: top-level `eff_part=` dirs as "" entries. */
-  private def legacyEntries(fs: org.apache.hadoop.fs.FileSystem,
-                            p: Path): Seq[(LocalDate, String)] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.flatMap { st =>
+  /** The partitions of the tree at `p`: its top-level `eff_part=` dirs. */
+  private def partitionsOf(fs: org.apache.hadoop.fs.FileSystem,
+                           p: Path): Seq[LocalDate] =
+    fs.listStatus(p).toSeq.flatMap { st =>
       val name = st.getPath.getName
       if (!name.startsWith(s"$PartCol=")) None
       else scala.util.Try(
         LocalDate.parse(name.stripPrefix(s"$PartCol="))).toOption
-        .map(_ -> "")
     }
 
   /** Assemble the committed table state: one partition-pruned scan per
@@ -210,13 +201,11 @@ object WindowReload {
     * only pointer read, so the returned frame is a consistent SNAPSHOT —
     * a reload committing concurrently cannot tear it.
     */
-  def read(spark: SparkSession, target: String): DataFrame =
-    manifestOf(spark, target) match {
-      case None => spark.read.parquet(target) // legacy in-place layout
-      case Some(entries) =>
-        require(entries.nonEmpty, s"manifest of $target references no partitions")
-        readEntries(spark, target, entries)
-    }
+  def read(spark: SparkSession, target: String): DataFrame = {
+    val entries = manifestOf(spark, target)
+    require(entries.nonEmpty, s"no partitions committed under $target")
+    readEntries(spark, target, entries)
+  }
 
   /** Exact row count of the committed table state, from parquet footer
     * metadata when the census is metadata-sized ([[FsUtil.footerRows]];
@@ -225,12 +214,8 @@ object WindowReload {
     * count for large targets.
     */
   def countRows(spark: SparkSession, target: String): Long = {
-    val dirs = manifestOf(spark, target) match {
-      case None => Seq(target)
-      case Some(entries) => entries.map { case (d, t) =>
-        val root = if (t.isEmpty) target else s"$target/$t"
-        s"$root/$PartCol=$d"
-      }
+    val dirs = manifestOf(spark, target).map { case (d, t) =>
+      s"$target/$t/$PartCol=$d"
     }
     FsUtil.footerRows(spark, dirs).getOrElse(read(spark, target).count())
   }
@@ -249,11 +234,7 @@ object WindowReload {
 
     val p = new Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed state: the manifest if present, else a legacy in-place
-    // tree adopted as tree "" (its partitions join the manifest and are
-    // carried forward untouched — migration without a rewrite)
     val entries = manifestOf(spark, targetPath)
-      .getOrElse(legacyEntries(fs, p))
     val existed = entries.nonEmpty
     // The layout on disk wins: a target written at one granularity must
     // never be overwritten at another (two truncation schemes would
@@ -302,7 +283,7 @@ object WindowReload {
 
     // Partitions this reload produced — a dir listing of the new tree,
     // bounded by the window's partition count, not data size.
-    val written = legacyEntries(fs, new Path(p, tree)).map(_._1)
+    val written = partitionsOf(fs, new Path(p, tree))
     // New manifest: out-of-window partitions keep their old tree
     // (re-referenced, never copied); every in-window partition resolves
     // to the new tree — or to nothing, which IS the reference's DELETE
@@ -310,16 +291,18 @@ object WindowReload {
     val newEntries = entries.filterNot { case (d, _) => intersects(d) } ++
       written.map(_ -> tree)
     import spark.implicits._
-    val v = AtomicPublish.publish(spark, s"$targetPath/$ManifestBase", Seq(
+    val mbase = s"$targetPath/$ManifestBase"
+    val token = java.util.UUID.randomUUID().toString
+    val v = AtomicPublish.publishAs(spark, mbase, Seq(
       ManifestDs -> newEntries
         .map { case (d, t) => (java.sql.Date.valueOf(d), t) }
-        .toDF("part_date", "tree")), retain = 2)
+        .toDF("part_date", "tree")), retain = 2, op = None, token = token,
+      first = false).get
     // write-through prime: the committing statement holds the manifest
-    // it just published — later reads must not re-derive it as a job
-    cacheKey(spark, s"$targetPath/$ManifestBase", v).foreach { k =>
-      if (manifestCache.size > 1024) manifestCache.clear()
-      manifestCache.put(k, newEntries)
-    }
+    // it just published and the token it sealed it with — later reads
+    // must not re-derive it as a job
+    if (manifestCache.size > 1024) manifestCache.clear()
+    manifestCache.put(cacheKey(mbase, v, token), newEntries)
 
     gcTrees(spark, fs, p)
   }
@@ -336,7 +319,7 @@ object WindowReload {
   private def readEntries(spark: SparkSession, target: String,
                           entries: Seq[(LocalDate, String)]): DataFrame =
     entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (tree, parts) =>
-      val root = if (tree.isEmpty) target else s"$target/$tree"
+      val root = s"$target/$tree"
       val dirs = parts.map { case (d, _) => s"$root/$PartCol=$d" }
       val paths: Seq[String] =
         if (dirs.size > DriverListMaxDirs) dirs
@@ -356,8 +339,7 @@ object WindowReload {
 
   /** Drop trees no retained manifest version references, sparing trees
     * younger than the grace period (a concurrent reload stages its tree
-    * before its manifest commit). The legacy "" tree (the target root)
-    * is never collected — its files are inert once de-referenced.
+    * before its manifest commit).
     */
   private def gcTrees(spark: SparkSession,
                       fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
@@ -387,7 +369,4 @@ object WindowReload {
       .withColumn("run_date", lit(java.sql.Date.valueOf(runDate)))
       .write.mode("overwrite").partitionBy("run_date").parquet(targetPath)
   }
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    FsUtil.exists(spark, path)
 }

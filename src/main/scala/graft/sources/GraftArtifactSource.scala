@@ -74,21 +74,14 @@ class GraftArtifactSource extends TableProvider with DataSourceRegister {
         // a COW table's version payload is its manifest; the DATA schema
         // comes from the table meta AT THE RESOLVED VERSION (so a
         // version-pinned read of a later-renamed column sees that
-        // version's names, consistently with the scan's column mapping)
-        // or, for legacy tables, the pool files the manifest references
+        // version's names, consistently with the scan's column mapping);
+        // a pruned version fails here
         val base = options.get("base")
         val v = Option(options.get("version")).map(_.toLong)
           .getOrElse(graft.io.AtomicPublish.committed(spark, base))
-        graft.io.CowTable.metaAt(spark, base, v)
-          .orElse(graft.io.CowTable.meta(spark, base)) match {
-          case Some(m) =>
-            DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          case None =>
-            val files = spark.read.parquet(resolveDir(options))
-              .select("file").collect().map(_.getString(0))
-            require(files.nonEmpty, "empty cow table")
-            spark.read.parquet(files.head).schema
-        }
+        require(v >= 0, s"no committed version under $base")
+        DataType.fromJson(graft.io.CowTable.metaAt(spark, base, v).schemaJson)
+          .asInstanceOf[StructType]
       } else spark.read.parquet(resolveDir(options)).schema
     if (changeFeed(options))
       data.add(ArtifactScan.ChangeTypeCol, StringType)
@@ -214,11 +207,8 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     if (!cow) Map.empty
     else {
       val spark = SparkSession.active
-      val v = "/v(\\d+)/manifest$".r.findFirstMatchIn(dir)
-        .map(_.group(1).toLong)
-      v.flatMap(graft.io.CowTable.metaAt(spark, base, _))
-        .orElse(graft.io.CowTable.meta(spark, base))
-        .map(_.physMap).getOrElse(Map.empty)
+      val v = "/v(\\d+)/manifest$".r.findFirstMatchIn(dir).get.group(1).toLong
+      graft.io.CowTable.metaAt(spark, base, v).physMap
     }
 
   private def physName(n: String): String = physRename.getOrElse(n, n)
@@ -334,17 +324,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     * the large-manifest path (small ones serve from CowTable's cache). */
   private def readManifestTriples(dir: String): Seq[(String, String, Long)] = {
     val m = SparkSession.active.read.parquet(dir)
-    // mirror CowTable.pad: each vector column is substituted
-    // independently when absent — a legacy manifest can carry `dv`
-    // without `dvRows` (pad tolerates that shape on the API path,
-    // so the DSv2 path must too)
-    val dvC =
-      if (m.columns.contains("dv")) m("dv")
-      else org.apache.spark.sql.functions.lit("")
-    val dvRowsC =
-      if (m.columns.contains("dvRows")) m("dvRows")
-      else org.apache.spark.sql.functions.lit(0L)
-    val withDv = m.select(m("file"), dvC.as("dv"), dvRowsC.as("dvRows"))
+      .select("file", "dv", "dvRows")
     // re-root stored paths to the CURRENT base (mirrors CowTable's
     // read-time re-rooting: basenames are the durable identity, so
     // a renamed/relocated table serves unchanged). Normalized with
@@ -356,7 +336,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     def re(s: String): String =
       if (s == null || s.isEmpty) s
       else pool + s.substring(s.lastIndexOf('/'))
-    withDv.collect()
+    m.collect()
       .map(r => (re(r.getString(0)), re(r.getString(1)), r.getLong(2)))
       .toSeq.sortBy(_._1)
   }
@@ -780,8 +760,7 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
       }
       committed.filter(_ < v).lastOption match {
         case None
-          if graft.io.CowTable.metaAt(spark, base, v)
-            .forall(_.physMap.isEmpty) =>
+          if graft.io.CowTable.metaAt(spark, base, v).physMap.isEmpty =>
           // bootstrap from the earliest retained version: the snapshot
           // IS its immutable pool files (DVs subtracted by the reader),
           // so serve them in place — a copy under the checkpoint would
@@ -974,20 +953,16 @@ private[sources] class ArtifactReaderFactory(required: StructType,
 
   /** The row positions `file`'s deletion vector voids: every `(file,
     * pos)` row of the vector's parts that names this file. Vector
-    * content references files by BASENAME (relocatable tables); legacy
-    * vectors stored the full write-time path — both match (a
-    * legacy-vectored table cannot have moved, so its write-time path IS
-    * the current one). */
+    * content references files by BASENAME, so a relocated table's
+    * vectors still match. */
   private def deletedPositions(parts: Seq[String],
                                file: String): java.util.HashSet[java.lang.Long] = {
     val dv = readDv.getOrElse(sys.error(
       s"graft-artifact: $file has a deletion vector but the scan built no vector reader"))
     val base = UTF8String.fromString(file.substring(file.lastIndexOf('/') + 1))
-    val full = UTF8String.fromString(file)
     val set = new java.util.HashSet[java.lang.Long]()
     parts.foreach(part => dv(partitioned(part, InternalRow.empty)).foreach { r =>
-      val f = r.getUTF8String(0)
-      if (f == base || f == full) set.add(r.getLong(1))
+      if (r.getUTF8String(0) == base) set.add(r.getLong(1))
     })
     set
   }

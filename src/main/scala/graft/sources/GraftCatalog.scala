@@ -348,7 +348,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     val dst = basePath(newIdent).getOrElse(sys.error(
       s"cannot resolve rename target $newIdent: use an absolute path or " +
         s"set spark.sql.catalog.$catalogName.warehouse"))
-    CowTable.requireRelocatable(spark, src)
     val sp = new org.apache.hadoop.fs.Path(src)
     val dp = new org.apache.hadoop.fs.Path(dst)
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1523,8 +1522,6 @@ private[sources] class CowSqlTable(base: String,
     v
   }
   private def tableMeta = CowTable.metaAt(spark, base, resolvedVersion)
-    .orElse(CowTable.meta(spark, base)).getOrElse(
-      sys.error(s"no cow-table meta under $base"))
   private def requireWritable(): Unit =
     require(pinned.isEmpty,
       s"$name is a time-travel snapshot (VERSION/TIMESTAMP AS OF): " +

@@ -20,9 +20,9 @@ class AtomicPublishSpec extends SparkSpec {
     assert(v0 === 0L)
     assert(AtomicPublish.committed(spark, base) === 0L)
 
-    // simulate a legacy-writer crash: v1 gets ONE of the two datasets
-    // and no _PUBLISHED marker — exactly the window a sequential
-    // overwrite write leaves open
+    // simulate a crash of a writer that bypassed the stage: v1 gets ONE
+    // of the two datasets and no _PUBLISHED marker — exactly the window
+    // a sequential overwrite write leaves open
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "nk")
       .write.mode("overwrite").parquet(s"$base/v1/dim")
     assert(AtomicPublish.committed(spark, base) === 0L,
@@ -39,7 +39,7 @@ class AtomicPublishSpec extends SparkSpec {
     assert(v1 === 2L)
     assert(AtomicPublish.read(spark, base, "dim").count() === 3L)
     assert(AtomicPublish.read(spark, base, "fact").count() === 3L)
-    // superseded v0 pruned AND the unsealed legacy garbage collected:
+    // superseded v0 pruned AND the unsealed partial write collected:
     // storage stays O(1) versions
     assert(!new java.io.File(s"$base/v0").exists())
     assert(!new java.io.File(s"$base/v1").exists(),
@@ -158,18 +158,67 @@ class AtomicPublishSpec extends SparkSpec {
     assert(AtomicPublish.settledHead(spark, base) === 1L)
   }
 
-  test("pointer loss recovers from the newest _PUBLISHED version") {
-    val base = Files.createTempDirectory("atomic_pub2").toString + "/star"
-    AtomicPublish.publish(spark, base, Seq("d" -> Seq(1).toDF("x")))
-    AtomicPublish.publish(spark, base, Seq("d" -> Seq(1, 2).toDF("x")))
-    assert(AtomicPublish.committed(spark, base) === 1L)
-    // lose EVERY pointer artifact: commit markers and the legacy file
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$base/_commits"))
-    new java.io.File(s"$base/_committed").delete()
-    assert(AtomicPublish.committed(spark, base) === 1L,
-      "must recover the newest sealed version, not restart")
-    assert(AtomicPublish.read(spark, base, "d").count() === 2L)
+  test("a first version held between its claim and its marker is " +
+    "invisible; a racing CREATE TABLE is refused") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val root = Files.createTempDirectory("atomic_first").toString
+    val base = s"$root/t"
+    val claimed = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val heldCreate = new CountDownLatch(1)
+    val releaseCreate = new CountDownLatch(1)
+    // hold the first writer that claims under this base
+    AtomicPublish.afterClaim = (b, _) =>
+      if (b == base) {
+        claimed.countDown()
+        release.await(120, TimeUnit.SECONDS)
+      }
+    try {
+      var heldV = -1L
+      val held = new Thread(() => heldV = AtomicPublish.publish(spark, base,
+        Seq("d" -> Seq(1, 2).toDF("x"))))
+      held.start()
+      assert(claimed.await(120, TimeUnit.SECONDS), "the held writer never claimed")
+      assert(new java.io.File(s"$base/v0/_PUBLISHED").exists())
+      assert(AtomicPublish.committed(spark, base) === -1L,
+        "a sealed but unmarked first version must not be committed")
+      assert(!AtomicPublish.exists(spark, base))
+      assert(AtomicPublish.versions(spark, base).isEmpty)
+      intercept[IllegalArgumentException](AtomicPublish.read(spark, base, "d"))
+      release.countDown()
+      held.join(120000)
+      assert(heldV === 0L && AtomicPublish.committed(spark, base) === 0L)
+      assert(AtomicPublish.read(spark, base, "d").count() === 2L)
+
+      // two CREATE TABLEs racing: the second is refused while the first
+      // still sits between its v0 claim and its marker
+      val table = s"$root/cow"
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, nm STRING")
+      AtomicPublish.afterClaim = (b, _) =>
+        if (b == table) {
+          heldCreate.countDown()
+          releaseCreate.await(120, TimeUnit.SECONDS)
+        }
+      var created = -1L
+      val creator = new Thread(() =>
+        created = graft.io.CowTable.createEmpty(spark, table, schema, "id"))
+      creator.start()
+      assert(heldCreate.await(120, TimeUnit.SECONDS), "the creator never claimed")
+      val e = intercept[IllegalArgumentException] {
+        graft.io.CowTable.createEmpty(spark, table, schema, "id")
+      }
+      assert(e.getMessage.contains("cow table already exists"))
+      releaseCreate.countDown()
+      creator.join(120000)
+      assert(created === 0L)
+      assert(AtomicPublish.versions(spark, table) === Seq(0L))
+      assert(graft.io.CowTable.read(spark, table).columns.toSeq === Seq("id", "nm"))
+    } finally {
+      release.countDown()
+      releaseCreate.countDown()
+      AtomicPublish.afterClaim = (_, _) => ()
+    }
   }
 
   test("a claimed-but-never-committed orphan is invisible and collected") {
@@ -196,23 +245,6 @@ class AtomicPublishSpec extends SparkSpec {
     assert(!orphan.exists(), "the orphan directory must be collected")
     assert(AtomicPublish.isOrphan(spark, base, 1L),
       "the tombstone must mark the id as a skipped orphan")
-  }
-
-  test("a legacy _committed pointer layout stays readable") {
-    val base = Files.createTempDirectory("atomic_legacy").toString + "/t"
-    AtomicPublish.publish(spark, base, Seq("d" -> Seq(1, 2, 3).toDF("x")))
-    // rewrite the layout as the old protocol left it: binary long
-    // pointer file, no _commits markers
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$base/_commits"))
-    val out = new java.io.DataOutputStream(
-      new java.io.FileOutputStream(s"$base/_committed"))
-    try out.writeLong(0L) finally out.close()
-    assert(AtomicPublish.committed(spark, base) === 0L)
-    assert(AtomicPublish.read(spark, base, "d").count() === 3L)
-    // a publish on top of the legacy layout advances past the pointer
-    val v = AtomicPublish.publish(spark, base, Seq("d" -> Seq(1).toDF("x")))
-    assert(v === 1L && AtomicPublish.committed(spark, base) === 1L)
   }
 
   test("retention window keeps history readable; pruning stays bounded") {

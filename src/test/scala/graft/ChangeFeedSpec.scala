@@ -196,7 +196,7 @@ object ChangeFeedSpec {
     val to = CowTable.entriesAtVersion(spark, base, toV)
     val from = CowTable.entriesAtVersion(spark, base, fromV)
     val (toIds, fromIds) = (to.map(id).toSet, from.map(id).toSet)
-    val m = CowTable.metaAt(spark, base, toV).get
+    val m = CowTable.metaAt(spark, base, toV)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     val cols = schema.fieldNames.toSeq
     val ks = CowTable.splitKeys(key)

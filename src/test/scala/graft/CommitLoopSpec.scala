@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.io.{AtomicPublish, CowTable}
+import graft.io.{AtomicPublish, CowTable, VersionNotPublishedException}
 
 /** The cow commit loop under deterministic interleavings: a competing
   * commit lands inside a writer's attempt, right after the attempt
@@ -134,5 +134,44 @@ class CommitLoopSpec extends SparkSpec {
       "only the rival commits")
     assert(!ids(base).contains(-1L) &&
       CowTable.read(spark, base).filter($"amt" < 0).isEmpty)
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).toSeq
+
+  test("a replayed batch whose parent a rival prunes commits nothing and " +
+    "keeps the stream's stamp") {
+    val base = Files.createTempDirectory("loop_replay").toString + "/t"
+    CowTable.exactlyOnceMerge(spark, base, rows(1 to 10), "id", "s", 0L)
+    CowTable.exactlyOnceMerge(spark, base, rows(Seq(11)), "id", "s", 1L)
+    val (parent, v, tries) = raced(base, 101, 1, cold = true)(
+      CowTable.exactlyOnceMerge(spark, base,
+        rows(Seq(5, 11)).withColumn("nm", lit("replayed")), "id", "s", 1L))
+    assert(!AtomicPublish.isCommitted(spark, base, parent),
+      "the rival must prune the parent")
+    assert((v, tries) === ((parent + 1, 2)),
+      "the replay must retry once and commit nothing after the rival")
+    assert(AtomicPublish.committed(spark, base) === parent + 1)
+    assert(CowTable.lastTxn(spark, base, "s") === 1L)
+    assert(ids(base) === ((1 to 11) :+ 101).map(_.toLong).toSet)
+    assert(CowTable.read(spark, base).filter($"nm" === "replayed").isEmpty,
+      "a replayed batch must not be applied again")
+  }
+
+  test("a version pruned by retention fails every reader with " +
+    "VersionNotPublishedException") {
+    val base = Files.createTempDirectory("loop_pruned").toString + "/t"
+    CowTable.create(spark, base, rows(1 to 20), "id", numFiles = 2)
+    CowTable.append(spark, base, rows(Seq(21)), retain = 1)
+    assert(!AtomicPublish.isCommitted(spark, base, 0L))
+    intercept[VersionNotPublishedException](CowTable.metaAt(spark, base, 0L))
+    intercept[VersionNotPublishedException](CowTable.readAt(spark, base, 0L))
+    val e = intercept[Exception] {
+      spark.read.format("graft-artifact").option("base", base)
+        .option("cow", "true").option("version", "0").load().count()
+    }
+    assert(causes(e).exists(_.isInstanceOf[VersionNotPublishedException]),
+      s"a pinned read of a pruned version must not fall back: $e")
+    assert(CowTable.metaAt(spark, base, 1L).key === "id")
   }
 }

@@ -304,15 +304,6 @@ class CowDvSpec extends SparkSpec {
       CowTable.dvDelete(spark, s"$wh/dv_moved", col("id") % 11 === 0)
       assert(CowTable.read(spark, s"$wh/dv_moved")
         .filter(col("id") % 11 === 0 || col("id") % 7 === 0).count() === 0L)
-
-      // a LEGACY vector (no _RELOC marker) still refuses relocation
-      val dv0 = CowTable.manifest(spark, s"$wh/dv_moved")
-        .map(_.dv).filter(_.nonEmpty).head
-      new java.io.File(dv0, "_RELOC").delete()
-      val e = intercept[Exception] {
-        spark.sql("ALTER TABLE graft.dv_moved RENAME TO dv_again")
-      }
-      assert(e.getMessage.contains("LEGACY deletion vector"))
     } finally {
       spark.conf.unset("spark.sql.catalog.graft.warehouse")
     }

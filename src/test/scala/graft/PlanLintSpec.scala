@@ -117,6 +117,30 @@ class PlanLintSpec extends SparkSpec {
       s"io/ classifies failures by message text: ${byMessage.mkString(", ")}")
   }
 
+  /** The storage layer reads one table layout: the commit markers, the
+    * sealed versions and basename-addressed vectors that current writers
+    * produce. No fallback for an older layout may come back. */
+  test("io/ and sources/ read one layout: no _committed pointer, no " +
+    "_RELOC marker, no legacy branch") {
+    import scala.jdk.CollectionConverters._
+    val files = Seq("src/main/scala/graft/io", "src/main/scala/graft/sources")
+      .flatMap(d => java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+        .iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val lines = files.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .map { case (l, i) => (s"${p.getFileName}:${i + 1}", l) }
+    }
+    val layouts = lines.collect {
+      case (at, l) if l.contains("_committed") || l.contains("_RELOC") => at
+    }
+    assert(layouts.isEmpty, s"older-layout markers: ${layouts.mkString(", ")}")
+    val legacy = lines.collect {
+      case (at, l) if l.toLowerCase.contains("legacy") &&
+        !l.contains("PARQUET_WRITE_LEGACY_FORMAT") => at
+    }
+    assert(legacy.isEmpty, s"legacy mentions: ${legacy.mkString(", ")}")
+  }
+
   test("no unlisted query plans a cartesian or nested-loop join") {
     val offenders = SparkEntry.queries
       .filterNot(q => eager(q._1) || allowedNlj(q._1))

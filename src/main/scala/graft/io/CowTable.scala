@@ -4,14 +4,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Copy-on-write ROW-LEVEL operations — MERGE (upsert+delete), predicate
+/** ROW-LEVEL operations — MERGE (upsert+delete), predicate
   * DELETE, file compaction (OPTIMIZE) and VACUUM — over a manifest-based
   * versioned table. This is the lakehouse answer to the reference's
   * row-level UPDATE/DELETE statements (PostgreSQL rewrites pages inside
   * a transaction, e.g. the dimension upserts in
   * `/root/reference/data-pipeline/src/fill_dm_table.py`): on an
-  * immutable object store there is no in-place page write, so the unit
-  * of rewrite must be the FILE, and the version must be METADATA.
+  * immutable object store there is no in-place page write, so a data
+  * FILE is written once and never changed, and the version is METADATA.
   *
   * Layout under `base/`:
   *   - `files/<token>-<i>.parquet` — immutable pooled data files, written
@@ -21,13 +21,17 @@ import org.apache.spark.sql.functions._
   *     key min/max. Committing a version = committing a manifest.
   *
   * Consequences at 100 TB:
-  *   - a MERGE touching 0.1% of keys rewrites only the files whose
-  *     key range intersects the source keys — found by a DISTRIBUTED
+  *   - ONE row-level delete ([[deleteAt]]): [[merge]], [[deleteWhere]]
+  *     and SQL `UPDATE`/`DELETE` ([[applyDelta]]) delete by (file, row
+  *     position) — a deletion vector, or the file's removal once it
+  *     holds no live row — and write new rows as new pool files. Only
+  *     [[compact]] and SQL `MERGE` ([[replaceFiles]]) rewrite files.
+  *   - a MERGE touching 0.1% of keys scans only the files whose key
+  *     range intersects the source keys — found by a DISTRIBUTED
   *     interval-bucket join of source keys against the manifest kept
   *     as a DataFrame (no broadcast, no driver materialization, no
-  *     file-count ceiling) — and REFERENCES every other file unchanged
-  *     in the new manifest via anti-join. Merge cost is O(affected
-  *     files + source), not O(table).
+  *     file-count ceiling). Merge cost is O(affected files + source),
+  *     not O(table).
   *   - serializability comes from ONE commit loop, [[commitChange]],
   *     that every writer goes through: an attempt computed against
   *     parent version P returns only what it changes, and the loop
@@ -38,7 +42,7 @@ import org.apache.spark.sql.functions._
   *     anomaly plain `publish` would allow). The losing attempt's
   *     deletion vector is deleted at once; its pool files are garbage,
   *     reclaimed by [[vacuum]].
-  *   - compaction is the same COW discipline applied to layout health:
+  *   - compaction repays the vectors and keeps the layout healthy:
   *     bin-pack undersized neighbors (by manifest row counts alone)
   *     into full files, reference the rest — the small-files problem
   *     cured without a table rewrite.
@@ -70,14 +74,13 @@ import org.apache.spark.sql.functions._
   * back to the key, and then it refuses a key that addresses more live
   * rows than the statement matched.
   *
-  * Two merge-on-read extensions complete the row-level story:
-  *   - DELETION VECTORS ([[dvDelete]]): a scattered DELETE (GDPR purge,
-  *     every-Nth-key retention) touching every file would make
-  *     copy-on-write rewrite the whole table. A DV delete instead
-  *     writes only the (file, row position) pairs of the doomed rows —
-  *     O(deleted rows) bytes — and the new manifest points each
-  *     affected file at its cumulative vector; NO data file is
-  *     rewritten. Reads subtract the vectors (anti-join on position,
+  * Two more pieces complete the row-level story:
+  *   - DELETION VECTORS: a delete — even one scattered across every
+  *     file (GDPR purge, every-Nth-key retention) — writes only the
+  *     (file, row position) pairs of the doomed rows — O(deleted rows)
+  *     bytes — and the new manifest points each affected file at its
+  *     cumulative vector; NO data file is rewritten. Reads subtract the
+  *     vectors (anti-join on position,
   *     broadcast whenever the manifest's dvRows total proves it small);
   *     [[compact]] materializes them back to clean files. The same
   *     design as Delta deletion vectors / Iceberg position deletes.
@@ -267,14 +270,16 @@ object CowTable {
     * sorted by the given expression (a Morton code for OPTIMIZE ZORDER)
     * instead of the clustering key — the key stays the row identity and
     * the manifest still records its per-file ranges (which may then
-    * overlap; stats columns carry the skipping value). */
+    * overlap; stats columns carry the skipping value). `gathered` writes
+    * ONE file from a materialized frame in one task: no range shuffle,
+    * so no shuffle job. */
   /** Per-row CHECK-constraint enforcement fused into a write's own
     * projection — one pass, codegen'd, no extra job: the first column's
     * value is routed through `assert_true(pred OR pred IS NULL)` (SQL
     * CHECK semantics: UNKNOWN passes), so a violating row fails the
     * STATEMENT with the constraint's name before anything commits —
     * the Delta invariant-checker contract. Rewrite paths (compact,
-    * zorder, delete survivors) skip the wrap: their rows were validated
+    * zorder) skip the wrap: their rows were validated
     * when first written. */
   private def withChecks(df: DataFrame,
                          checks: Seq[(String, String)]): DataFrame =
@@ -391,7 +396,8 @@ object CowTable {
                         layout: Option[Column] = None,
                         checks: Seq[(String, String)] = Nil,
                         gens: Seq[(String, org.apache.spark.sql.types.DataType, String)] = Nil,
-                        idNotNull: Option[String] = None
+                        idNotNull: Option[String] = None,
+                        gathered: Boolean = false
                        ): Seq[Entry] = {
     // a NULL identity value reaching a non-append write path means the
     // row was never assigned: only INSERT/append mints identity values
@@ -417,6 +423,8 @@ object CowTable {
     val parted = layout match {
       case Some(z) => df.repartitionByRange(math.max(1, numFiles), z)
         .sortWithinPartitions(z)
+      case None if gathered => df.coalesce(1)
+        .sortWithinPartitions(ks.head, ks.tail: _*)
       case None => df.repartitionByRange(math.max(1, numFiles), ks.map(col): _*)
         .sortWithinPartitions(ks.head, ks.tail: _*)
     }
@@ -626,12 +634,12 @@ object CowTable {
     * containment as a post-condition, and the manifest never leaves the
     * executors. Entries spanning pathologically many buckets (possible
     * only after heavy uncompacted range overlap) are kept as candidates
-    * unconditionally — spurious candidates cost a rewrite, never
+    * unconditionally — spurious candidates cost a scan, never
     * correctness; [[compact]] restores tight ranges. */
   private def intervalCandidates(mDf: DataFrame, keys: DataFrame): DataFrame =
     bucketCandidates(mDf, col("kmin"), col("kmax"),
       keys.select(col(keys.columns.head).cast("long").as("_gf_kb"),
-        col(keys.columns.head).cast("long").as("_gf_kx")).distinct(),
+        col(keys.columns.head).cast("long").as("_gf_kx")),
       exact = (kx, lo, hi) => kx >= lo && kx <= hi,
       exactLo = col("kmin"), exactHi = col("kmax"))
 
@@ -643,7 +651,7 @@ object CowTable {
     * instead of collapsing into one), with EXACT natural-string
     * containment against each file's stored min/max as the
     * post-condition. Files without the key's stats entry are kept
-    * unconditionally — spurious candidates cost a rewrite, never
+    * unconditionally — spurious candidates cost a scan, never
     * correctness. */
   private def stringCandidates(mDf: DataFrame, keys: DataFrame,
                                key: String): DataFrame = {
@@ -675,7 +683,6 @@ object CowTable {
     bucketCandidates(mDf.filter(sLo.isNotNull && sHi.isNotNull),
       encOf(sLo), encOf(sHi),
       keys.select(col(keys.columns.head).cast("string").as("_gf_kx"))
-        .distinct()
         .withColumn("_gf_kb", encOf(col("_gf_kx"))),
       exact = (kx, lo, hi) => kx >= lo && kx <= hi,
       exactLo = sLo, exactHi = sHi)
@@ -742,7 +749,7 @@ object CowTable {
     * and the manifest never leaves the executors. Entries spanning
     * pathologically many buckets (possible only after heavy uncompacted
     * range overlap) are kept as candidates unconditionally — spurious
-    * candidates cost a rewrite, never correctness; [[compact]] restores
+    * candidates cost a scan, never correctness; [[compact]] restores
     * tight ranges. */
   private def bucketCandidates(mDf: DataFrame, loC: Column, hiC: Column,
                                keys: DataFrame,
@@ -841,7 +848,9 @@ object CowTable {
       .select(ManifestCols.map(col): _*)
     val narrow = b.filter(col("_gfb_hi") - col("_gfb_lo") <= 4096)
       .withColumn("_gfb", explode(sequence(col("_gfb_lo"), col("_gfb_hi"))))
-    val kDf = keys.withColumn("_gfb", bucketOf(col("_gf_kb")))
+    // the shuffled join pays per key row, so dedup the keys first (the
+    // broadcast probe above pays one hash lookup per key row)
+    val kDf = keys.distinct().withColumn("_gfb", bucketOf(col("_gf_kb")))
     narrow.join(kDf, Seq("_gfb"))
       .where(exact(col("_gf_kx"), col("_gf_xlo"), col("_gf_xhi")))
       .select(ManifestCols.map(col): _*)
@@ -937,6 +946,55 @@ object CowTable {
           .isin(es.map(e => baseName(e.file)): _*))
     }
     writeVector(spark, base, old.foldLeft(hits)(_ unionByName _))
+  }
+
+  /** How many of `hits` (`file`, `pos`) fall in each file, in ONE job:
+    * each task counts its rows and the driver adds the per-task maps —
+    * no shuffle stage, which costs a `groupBy` a second job. */
+  private def perFileOf(hits: DataFrame): Map[String, Long] = {
+    import hits.sparkSession.implicits._
+    hits.select("file").as[String].mapPartitions { files =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      files.foreach(f => n(f) = n.getOrElse(f, 0L) + 1L)
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** The one row-level delete, as an [[Edit]]: the live rows `hits`
+    * (`file`, `pos`) of the parent entries `cand`, `perFile` of them per
+    * file. A file losing every live row (`rows − dvRows`) leaves the
+    * manifest; the rest point at one [[cumulativeVector]]. */
+  private def deleteAt(spark: SparkSession, base: String, cand: Seq[Entry],
+                       hits: DataFrame, perFile: Map[String, Long]): Edit = {
+    val (emptied, kept) = cand.filter(e => perFile.contains(e.file))
+      .partition(e => perFile(e.file) == e.rows - e.dvRows)
+    val gone = emptied.map(_.file)
+    val vector =
+      if (kept.isEmpty) None
+      else Some(NewVector(cumulativeVector(spark, base, kept,
+        if (gone.isEmpty) hits else hits.filter(!col("file").isin(gone: _*))),
+        perFile -- gone))
+    Edit(removed = gone.toSet, vector = vector)
+  }
+
+  /** The live rows of `p` whose FULL key tuple `ks` equals a row of
+    * `keys` (`_gfk_0`, `_gfk_1`, … in the key columns' types): the
+    * candidates of the leading-key discovery ([[keyCandidates]]) narrowed
+    * by the tail hull ([[tailMayIntersect]]), and the rows of one lineage
+    * scan of them, left-semi joined on the tuple, as (`file`, `pos`,
+    * `_gfk_*`). None (and no scan) when nothing is a candidate. */
+  private def livePositions(spark: SparkSession, p: Snapshot, ks: Seq[String],
+                            keys: DataFrame): Option[(Seq[Entry], DataFrame)] = {
+    val gfk = ks.indices.map(i => s"_gfk_$i")
+    def dtOf(k: String) = p.schema(k).dataType
+    val cand = collectEntries(keyCandidates(p, keys, ks.head)
+      .filter(tailMayIntersect(tailBoundsOf(keys, ks,
+        k => gfk(ks.indexOf(k)), dtOf, p.meta.phys)))) // footprint-bounded
+    Option.when(cand.nonEmpty)((cand, scanEntries(spark, cand, lineage = true,
+        schema = p.schema, colMap = p.colMap)
+      .select(col("_gf_file").as("file") +: col("_gf_pos").as("pos") +:
+        ks.zip(gfk).map { case (k, g) => col(k).cast(dtOf(k)).as(g) }: _*)
+      .join(keys.select(gfk.map(col): _*), gfk, "left_semi")))
   }
 
   /** Live rows of `entries`: the raw pool scan minus each file's
@@ -1358,11 +1416,13 @@ object CowTable {
     }
 
   /** MERGE: `source` carries full-width rows plus a boolean `_delete`
-    * column (absent ⇒ all upserts). Matched keys are replaced by their
-    * source row (or dropped when `_delete`), unmatched upserts are
-    * inserted. Only files whose key range intersects a source key are
-    * rewritten; each attempt of [[commitChange]] removes them and adds
-    * their rewrite, and a lost commit recomputes against the new head.
+    * column (absent ⇒ all upserts). Every live row matching a source row
+    * on the FULL key tuple is deleted by position ([[livePositions]],
+    * [[deleteAt]]) — vectored, or its file removed once it holds no
+    * live row — and the upserts land in one new pool file; no live row
+    * is read and written back. Each attempt of [[commitChange]] finds
+    * the matches against its own parent, so a lost commit recomputes
+    * against the new head.
     *
     * `beforeCommit` is a test seam (fires once per attempt, before the
     * CAS) — production callers leave the default no-op.
@@ -1373,8 +1433,8 @@ object CowTable {
             txn: Option[(String, Long)] = None): Long = {
     val src = (if (source.columns.contains("_delete")) source
                else source.withColumn("_delete", lit(false)))
-      // LAZY: evaluated once across retries and file scans — the first
-      // attempt's discovery (a full shuffle over the source keys)
+      // LAZY: evaluated once across retries and scans — the first
+      // attempt's discovery (a parallel pass over the source keys)
       // materializes it, so no separate eager-checkpoint job is paid
       .localCheckpoint(eager = false)
     commitChange(spark, base, "MERGE", retain) { p =>
@@ -1383,13 +1443,6 @@ object CowTable {
       // parent pruned under the read retries instead of reading no stamp
       if (txn.exists { case (s, b) => stampOf(p, s) >= b }) Unchanged
       else {
-        // the manifest stays a DataFrame end to end: discovery is the
-        // distributed interval-bucket join (no broadcast, no SafeRows
-        // ceiling — a 100k-file table merges the same way an 8-file one
-        // does) and the untouched files are carried into the new manifest
-        // by [[carryOver]], never enumerated on the driver. Only the
-        // AFFECTED entries — the merge's own rewrite footprint, which must
-        // be listed to be scanned at all — are collected.
         // ADDITIVE schema evolution: a source carrying columns the table
         // lacks widens the schema — old pool files stay untouched and
         // read back NULL for the new columns (the scan is meta-schema
@@ -1421,45 +1474,29 @@ object CowTable {
                        else m2.colMap :+ (f.name -> p0),
               physUsed = (m2.physUsed :+ p0).distinct)
           }.copy(schemaJson = evolved.json))
-        val mergeMap = evolvedMeta.getOrElse(parentMeta).physMap
+        // every live row a source row matches, on the full key tuple —
+        // replaced (an upsert) or dropped (`_delete`) alike
         val ks = splitKeys(key)
-        def colDt(name: String): org.apache.spark.sql.types.DataType =
-          ts.fields.find(_.name == name).map(_.dataType)
-            .getOrElse(src.schema(name).dataType)
-        val kDt = colDt(ks.head)
-        val srcKeys = src.select(col(ks.head).cast(kDt).as("_gf_k")).distinct()
-        // leading-range candidates, narrowed by the source's TAIL-column
-        // hull: for a low-cardinality leading key (the SCD2 grain) the
-        // leading ranges admit every file holding a touched user — the
-        // tail stats cut the rewrite to the files whose tail range can
-        // actually hold a matched tuple
-        // ONE evaluation of the discovery join: the footprint is collected
-        // (it must be, to be scanned) and everything downstream — the
-        // rewrite scan and the untouched carry-over — works off the local
-        // list, so no localCheckpoint job pins a second copy
-        val affected = collectEntries(discoverCandidates(p.frame, srcKeys,
-          mergeMap.getOrElse(ks.head, ks.head), kDt)
-          .filter(tailMayIntersect(tailBoundsOf(src, ks, identity, colDt,
-            k => mergeMap.getOrElse(k, k))))) // merge-footprint bounded
-        val upserts = src.filter(!col("_delete")).drop("_delete")
-        val survivors =
-          if (affected.isEmpty) upserts
-          // DV-aware: a rewritten file's vectored-out rows must not
-          // resurrect, so affected files are read through their vectors.
-          // The row identity is the FULL key tuple: only rows matching a
-          // source row on every key column are replaced.
-          else scanEntries(spark, affected, schema = evolved,
-            colMap = mergeMap)
-            .join(src.select(ks.map(k => col(k).cast(colDt(k)).as(k)): _*)
-              .distinct(), ks, "left_anti")
-            .unionByName(upserts, allowMissingColumns = false)
-        val newEntries = writePool(spark, base, survivors, key,
-          math.max(1, affected.size), parentMeta.statsCols, colMap = mergeMap,
+        val matched = livePositions(spark, p, ks,
+          src.select(ks.zipWithIndex.map { case (k, i) =>
+            col(k).cast(ts(k).dataType).as(s"_gfk_$i")
+          }: _*))
+        // the upserts before any vector, so a CHECK or identity refusal
+        // fails the statement with nothing else written; one task gathers
+        // them from the checkpoint discovery materialized (an empty table
+        // has no discovery, and the task computes the source itself)
+        val newEntries = writePool(spark, base,
+          src.filter(!col("_delete")).drop("_delete"), key, numFiles = 1,
+          parentMeta.statsCols, colMap = evolvedMeta.getOrElse(parentMeta).physMap,
           checks = parentMeta.checks, gens = gensOf(parentMeta),
-          idNotNull = identityOf(parentMeta).map(_._1))
+          idNotNull = identityOf(parentMeta).map(_._1), gathered = true)
+        val deleted = matched.fold(Edit()) { case (cand, rows) =>
+          val hits = rows.select("file", "pos")
+            .localCheckpoint(eager = false) // one scan: counts + vector
+          deleteAt(spark, base, cand, hits, perFileOf(hits))
+        }
         beforeCommit()
-        Edit(removed = affected.map(_.file).toSet, added = newEntries,
-          meta = evolvedMeta, txn = txn)
+        deleted.copy(added = newEntries, meta = evolvedMeta, txn = txn)
       }
     }
   }
@@ -1506,49 +1543,20 @@ object CowTable {
     }
   }
 
-  /** DELETE WHERE: rewrites only the files that CONTAIN a matching row,
-    * referencing the rest. Discovery is PRUNED from the manifest before
-    * any data is read: [[StatsPrune]] translates the predicate into a
-    * manifest-level may-contain filter over the per-file kmin/kmax and
-    * the declared stats columns, so a range-correlated delete (a date
-    * window on a time-clustered table, a tenant on a tenant-keyed one)
-    * scans only the files whose statistics admit a match — at 100 TB
-    * the difference between a surgical delete and a full-table read.
-    * `onDiscovery(candidates, total)` reports the prune (a test seam /
-    * observability hook). */
+  /** DELETE WHERE: deletes the live rows `pred` holds TRUE for by
+    * position ([[deleteAt]]); a NULL-evaluating row survives, as in SQL.
+    * Discovery is PRUNED from the manifest before any data is read:
+    * [[StatsPrune]] translates the predicate into a manifest-level
+    * may-contain filter over the per-file kmin/kmax and the declared
+    * stats columns, so a range-correlated delete (a date window on a
+    * time-clustered table) scans only the files whose statistics admit
+    * a match. `onDiscovery(candidates, total)` reports the prune (a test
+    * seam / observability hook); `key` is unused. Returns the committed
+    * version (the parent when nothing matched). */
   def deleteWhere(spark: SparkSession, base: String, pred: Column,
                   key: String, retain: Int = 1,
                   onDiscovery: (Long, Long) => Unit = (_, _) => ()): Long =
-    commitChange(spark, base, "DELETE", retain) { p =>
-      val cm = p.colMap
-      val keyName = splitKeys(p.meta.key).head
-      val sk = p.schema.fields.find(_.name == keyName)
-        .exists(f => isStringKey(f.dataType))
-      val cand = collectEntries(
-        p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
-      onDiscovery(cand.size.toLong,
-        p.cached.map(_.size.toLong).getOrElse(p.frame.count()))
-      // empty when the stats prove nothing matches
-      val hit =
-        if (cand.isEmpty) Set.empty[String]
-        else scanEntries(spark, cand, lineage = true, schema = p.schema,
-          colMap = cm)
-          .filter(pred).select(col("_gf_file"))
-          .distinct().collect().map(_.getString(0)).toSet // candidate-bounded
-      if (hit.isEmpty) Unchanged
-      else {
-        // SQL DELETE semantics: a row is deleted iff the predicate is
-        // TRUE — a NULL-evaluating row (e.g. an evolution-null column)
-        // SURVIVES; a bare `!pred` would silently drop it
-        val hitEntries = cand.filter(e => hit(e.file))
-        val survivors = scanEntries(spark, hitEntries, schema = p.schema,
-          colMap = cm)
-          .filter(!coalesce(pred, lit(false)))
-        Edit(removed = hitEntries.map(_.file).toSet,
-          added = writePool(spark, base, survivors, key, hit.size,
-            p.meta.statsCols, colMap = cm))
-      }
-    }
+    deleteMatching(spark, base, pred, retain, Some(onDiscovery))
 
   /** OPTIMIZE: bin-pack adjacent (by key range) undersized files into
     * ~`targetRows` files. Files already at target — and any group of
@@ -1722,17 +1730,16 @@ object CowTable {
       }
     }
 
-  /** DELETE by DELETION VECTOR (merge-on-read): writes only the (file,
-    * row position) pairs of the matching LIVE rows — O(deleted rows)
-    * bytes, ZERO data files rewritten — and points each affected file's
-    * manifest entry at its new cumulative vector. The inverse trade of
-    * [[deleteWhere]]: a delete scattered across every file costs a
-    * table rewrite copy-on-write but only its own row count here;
-    * [[compact]] repays the read-side debt by materializing vectors.
-    * Returns the committed version (the parent when nothing matched).
-    */
+  /** [[deleteWhere]] without its discovery report: the same body, so
+    * the same vectors, removed files and jobs. */
   def dvDelete(spark: SparkSession, base: String, pred: Column,
                retain: Int = 1): Long =
+    deleteMatching(spark, base, pred, retain, None)
+
+  /** The body of [[deleteWhere]] and [[dvDelete]]. */
+  private def deleteMatching(spark: SparkSession, base: String, pred: Column,
+                             retain: Int,
+                             onDiscovery: Option[(Long, Long) => Unit]): Long =
     commitChange(spark, base, "DELETE", retain) { p =>
       val cm = p.colMap
       val keyName = splitKeys(p.meta.key).head
@@ -1742,19 +1749,19 @@ object CowTable {
       // matching row are scanned for positions
       val cand = collectEntries(
         p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
+      onDiscovery.foreach(_(cand.size.toLong,
+        p.cached.map(_.size.toLong).getOrElse(p.frame.count())))
       if (cand.isEmpty) Unchanged // stats prove nothing matches
       else {
+        // `filter` keeps TRUE rows only: a NULL-evaluating row survives
         val hits = scanEntries(spark, cand, lineage = true,
           schema = p.schema, colMap = cm)
           .filter(pred)
           .select(col("_gf_file").as("file"), col("_gf_pos").as("pos"))
           .localCheckpoint() // evaluated once: counts, union, write
-        val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-          .toMap // cand-bounded
+        val perFile = perFileOf(hits) // cand-bounded
         if (perFile.isEmpty) Unchanged // no-op: nothing matches
-        else Edit(vector = Some(NewVector(cumulativeVector(spark, base,
-          cand.filter(e => perFile.contains(e.file)), hits), perFile)))
+        else deleteAt(spark, base, cand, hits, perFile)
       }
     }
 
@@ -1828,14 +1835,15 @@ object CowTable {
   /** CHANGE DATA FEED: the row-level diff between two committed
     * versions, served from commit structure ([[changeSet]]) — never a
     * two-snapshot scan. When every changed row is on one side (an
-    * `append` or SQL `INSERT`: inserts only; a [[dvDelete]] or SQL
-    * `DELETE`: deletes only) the rows are read and tagged, with no
-    * join. Otherwise (`merge`, [[deleteWhere]], SQL `UPDATE`/`MERGE`,
+    * `append` or SQL `INSERT`: inserts only; a [[deleteWhere]],
+    * [[dvDelete]] or SQL `DELETE`: deletes only) the rows are read and
+    * tagged, with no join. Otherwise ([[merge]], SQL `UPDATE`/`MERGE`,
     * [[restore]]) the two sides full-outer-join on the key: a key on
-    * both sides is an `update`, and a row co-located in a rewritten
-    * file but itself untouched compares struct-equal and drops out as
-    * a no-op. Cost is O(rows of the rewritten files + rows a vector
-    * change names): a vector change reads its file's named rows only.
+    * both sides is an `update`, and a row co-located in a file SQL
+    * `MERGE` rewrote but itself untouched compares struct-equal and
+    * drops out as a no-op. Cost is O(rows of the added and removed
+    * files + rows a vector change names): a vector change reads its
+    * file's named rows only.
     * A layout-only version diffed against its parent reads nothing.
     *
     * Output: the data columns (post-image; pre-image for deletes) plus
@@ -1966,28 +1974,28 @@ object CowTable {
   case class Positions(scanVersion: Long, rows: DataFrame,
                        perFile: Map[String, Long])
 
-  /** MERGE-ON-READ delta commit: apply a set of DELETES (as
-    * deletion-vector entries — zero data files rewritten) plus a set of
-    * INSERT rows (new pool files — nothing read) in ONE committed
-    * version. This is the commit half of the SQL delta-based `UPDATE` /
-    * row-level `DELETE` ([[graft.sources.GraftCatalog]]): Spark's
-    * rewrite identifies each row by its position (`_file`, `_pos`) plus
-    * its clustering key, an UPDATE arrives as delete+insert, and this
-    * method turns the two sets into vectors + appends.
+  /** MERGE-ON-READ delta commit: apply a set of DELETES (by position,
+    * [[deleteAt]] — zero data files rewritten) plus a set of INSERT rows
+    * (new pool files — nothing read) in ONE committed version. This is
+    * the commit half of the SQL delta-based `UPDATE` / row-level
+    * `DELETE` ([[graft.sources.GraftCatalog]]): Spark's rewrite
+    * identifies each row by its position (`_file`, `_pos`) plus its
+    * clustering key, an UPDATE arrives as delete+insert, and this method
+    * turns the two sets into vectors, removed files and appends.
     *
     * With `positions`, while the head is still the version the
-    * statement scanned, the staged positions are unioned with each
-    * touched file's old vector and committed as they are — pool files
-    * are immutable and the scan subtracted every vector, so each names
-    * one live row; nothing is looked up again. Once any commit has
-    * landed after the scan (that attempt and every retry), or without
-    * `positions` (the API callers), `deleteKeys` is the delete set: the
-    * keys' live rows are REDISCOVERED against the parent of each
-    * [[commitChange]] attempt, and a key tuple addressing more live
-    * rows than it has delete actions is refused as not unique. A
-    * per-file split would be wrong: a concurrent key update can leave a
-    * staged row's file in the manifest with that row vectored and its
-    * replacement in another file.
+    * statement scanned, the staged positions are committed as they are
+    * — pool files are immutable and the scan subtracted every vector,
+    * so each names one live row; nothing is looked up again. Once any
+    * commit has landed after the scan (that attempt and every retry), or
+    * without `positions` (the API callers), `deleteKeys` is the delete
+    * set: the keys' live rows are REDISCOVERED against the parent of
+    * each [[commitChange]] attempt ([[livePositions]], as [[merge]]
+    * finds its matches), and a key tuple addressing more live rows than
+    * it has delete actions is refused as not unique. A per-file split
+    * would be wrong: a concurrent key update can leave a staged row's
+    * file in the manifest with that row vectored and its replacement in
+    * another file.
     *
     * Cost: O(inserts) write + O(deleted rows) vector bytes; the key path
     * adds a scan of the files that may hold a deleted key.
@@ -2014,14 +2022,13 @@ object CowTable {
     def dtOf(k: String): org.apache.spark.sql.types.DataType =
       tblSchema.fields.find(_.name == k).map(_.dataType)
         .getOrElse(org.apache.spark.sql.types.LongType)
-    val kDt = dtOf(ks.head)
     // the delete-key frame carries the FULL key tuple: by name for a
     // composite key (Spark's rowIdSchema), positionally for a
     // single-column key
     val gfk = ks.indices.map(i => s"_gfk_$i")
     val keyedCols: Seq[Column] =
       if (ks.size == 1)
-        Seq(col(deleteKeys.columns.head).cast(kDt).as(gfk.head))
+        Seq(col(deleteKeys.columns.head).cast(dtOf(ks.head)).as(gfk.head))
       else ks.zipWithIndex.map { case (k, i) =>
         require(deleteKeys.columns.contains(k),
           s"delete-key frame is missing key column `$k` of composite " +
@@ -2040,20 +2047,14 @@ object CowTable {
     // positions know their delete count from the writers' reports; the
     // key path's count() also materializes the checkpoint
     val anyDeletes = positions.fold(keyActions.count() > 0)(_.perFile.nonEmpty)
-    lazy val keys = keyActions.select(col(gfk.head)).distinct()
-    // the delete set's tail-column hull — same discovery narrowing as
-    // [[merge]] (position rediscovery scans only files that can hold a
-    // deleted tuple)
-    lazy val tailBounds =
-      tailBoundsOf(keyActions, ks, k => gfk(ks.indexOf(k)), dtOf, m.phys)
     // pure no-op delta (nothing deleted, nothing inserted): nothing
     // to write, nothing to commit — the parent version IS the result
     // (a txn-stamped no-op still commits, to record its batch id)
     if (!anyDeletes && newEntries.isEmpty && txn.isEmpty)
       return AtomicPublish.committed(spark, base)
     commitChange(spark, base, op, retain) { p =>
-      val vector: Option[NewVector] =
-        if (!anyDeletes) None
+      val deleted =
+        if (!anyDeletes) Edit()
         else if (positions.exists(_.scanVersion == p.version)) {
           // the head is the scanned snapshot: every staged position
           // names a live row of a file still in this manifest
@@ -2067,30 +2068,15 @@ object CowTable {
             s"staged delete positions name files missing from " +
               s"v${p.version} of $base: " +
               s"${pos.perFile.keySet -- touched.map(_.file)}")
-          Some(NewVector(cumulativeVector(spark, base, touched, pos.rows),
-            pos.perFile))
+          deleteAt(spark, base, touched, pos.rows, pos.perFile)
         }
-        else {
-          val cand = collectEntries(discoverCandidates(p.frame, keys,
-            m.phys(ks.head), kDt).filter(tailMayIntersect(tailBounds)))
-          if (cand.isEmpty) None
-          else {
-            // positions of the doomed LIVE rows (the scan subtracts each
-            // file's existing vector, so already-deleted rows never
-            // duplicate into the new cumulative vector)
+        else livePositions(spark, p, ks, keyActions) match {
+          case Some((cand, rows)) =>
             // lazy: the row-identity guard below materializes the
             // checkpoint as part of its own (required) job, so the
             // position scan runs once without paying a separate
             // eager-checkpoint job
-            val hitRows = scanEntries(spark, cand, lineage = true,
-              schema = p.schema, colMap = m.physMap)
-              .withColumns(ks.zipWithIndex.map { case (k, i) =>
-                gfk(i) -> col(k).cast(dtOf(k))
-              }.toMap)
-              .join(keyActions.select(gfk.map(col): _*), gfk, "left_semi")
-              .select(col("_gf_file").as("file") +: col("_gf_pos").as("pos")
-                +: gfk.map(col): _*)
-              .localCheckpoint(eager = false)
+            val hitRows = rows.localCheckpoint(eager = false)
             // ROW-IDENTITY GUARD: this path deletes by key tuple, so a
             // tuple matching MORE live rows than it has delete actions
             // would silently vector out rows the statement never
@@ -2113,20 +2099,15 @@ object CowTable {
                 "merge by key) before deleting by key"
             })
             val hits = hitRows.select(col("file"), col("pos"))
-            val perFile = hits.groupBy("file").agg(count(lit(1)).as("n"))
-              .collect().map(r => r.getString(0) -> r.getLong(1))
-              .toMap // candidate-file-count bounded
-            if (perFile.isEmpty) None
-            else Some(NewVector(cumulativeVector(spark, base,
-              cand.filter(e => perFile.contains(e.file)), hits), perFile))
-          }
+            deleteAt(spark, base, cand, hits, perFileOf(hits))
+          case None => Edit()
         }
       beforeCommit() // test seam (fires once per attempt, before the CAS)
       // deletes that hit nothing and no inserts: an identical manifest —
       // the parent is the result (dvDelete's no-op contract) instead of
       // an empty version
-      if (vector.isEmpty && newEntries.isEmpty && txn.isEmpty) Unchanged
-      else Edit(added = newEntries, vector = vector, txn = txn)
+      if (deleted == Edit() && newEntries.isEmpty && txn.isEmpty) Unchanged
+      else deleted.copy(added = newEntries, txn = txn)
     }
   }
 
@@ -2340,8 +2321,8 @@ object CowTable {
     * Spark's runtime group filtering prunes the target scan to the files
     * holding a matched row, the rewrite reads exactly those groups
     * (through their deletion vectors), and this method publishes
-    * replacement pool files for them — the same copy-on-write shape as
-    * the API [[merge]], driven from ANSI SQL.
+    * replacement pool files for them. The table's one copy-on-write
+    * row writer: the API [[merge]] deletes by position instead.
     *
     * Conflict discipline: the rewrite's row set was derived from a
     * DISCOVERY JOIN against the snapshot `scanVersion` — not just from
@@ -2504,7 +2485,7 @@ object CowTable {
   /** The full row-level lifecycle on one table: create → MERGE →
     * DELETE WHERE (drops the inserted 'I' rows) → compact → vacuum.
     * In-band invariants: compaction must shrink the file count while
-    * vacuum must reclaim the superseded rewrites, and the final
+    * vacuum must reclaim the files it superseded, and the final
     * snapshot is read back through the compacted manifest. */
   def lifecycleCheck(spark: SparkSession, dir: String): DataFrame =
     graft.Memo(spark, "cow_lifecycle", dir, "cow_life") {
@@ -2550,10 +2531,10 @@ object CowTable {
     * predicate into a manifest filter, so discovery reads only the
     * head-of-timeline files (in-band require: strictly fewer files
     * scanned than the manifest lists — the 100 TB contract that a date
-    * purge is NOT a full-table read), the delete rewrites only files
-    * actually containing matches, and the snapshot is aggregated back
-    * through the new manifest. The oracle replays the delete
-    * relationally. */
+    * purge is NOT a full-table read), the delete vectors or removes
+    * only files actually containing matches, and the snapshot is
+    * aggregated back through the new manifest. The oracle replays the
+    * delete relationally. */
   def deleteCheck(spark: SparkSession, dir: String): DataFrame =
     graft.Memo(spark, "cow_delete", dir, "cow_delete") {
       val base = FsUtil.stateDir("cow_delete", dir)
@@ -2623,9 +2604,9 @@ object CowTable {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** DELETION-VECTOR end-to-end: two cumulative DV deletes — the first
-    * scattered across EVERY file (`k % 13`), the worst case that would
-    * force copy-on-write to rewrite the whole table — with an in-band
-    * invariant that ZERO data files were rewritten; then the snapshot is
+    * scattered across EVERY file (`k % 13`), the worst case for a
+    * file-rewriting delete — with an in-band invariant that ZERO data
+    * files were rewritten; then the snapshot is
     * aggregated THROUGH the vectors, compaction materializes them
     * (invariant: no vector survives), vacuum reclaims the superseded
     * pool, and the post-compaction aggregate must equal the
@@ -2724,13 +2705,13 @@ object CowTable {
   /** CDC REPLAY COMPLETENESS: a consumer that starts from the v0
     * snapshot ([[readAt]]) and folds [[changesSince]] version by version
     * — delete the deleted keys, upsert the insert/update images — must
-    * reproduce the final table EXACTLY, across all three write paths
-    * (copy-on-write MERGE, deletion-vector delete, copy-on-write
+    * reproduce the final table EXACTLY, across the three API row
+    * writers (MERGE: position deletes plus an upsert file; [[dvDelete]];
     * DELETE WHERE). The in-band require compares the folded snapshot's
     * aggregate to the direct read bit-for-bit; the oracle replays the
     * same history relationally. This is the contract a downstream CDC
     * consumer (a replica, a search index, a cache) actually needs: no
-    * missed row, no double-applied row, vectors and rewrites included.
+    * missed row, no double-applied row, vectors and new files included.
     */
   def cdfReplayCheck(spark: SparkSession, dir: String): DataFrame =
     graft.Memo(spark, "cow_cdf_replay", dir, "cow_cdf") {
@@ -2739,11 +2720,11 @@ object CowTable {
       val v0 = create(spark, base, graft.Tables.orders(spark, dir),
         "o_orderkey", numFiles = 8, retain = 8)
       merge(spark, base, rangeLocalBatch(spark, dir),
-        "o_orderkey", retain = 8) // v1: COW merge
+        "o_orderkey", retain = 8) // v1: merge
       dvDelete(spark, base, col("o_orderkey") % 19 === 7,
-        retain = 8) // v2: merge-on-read delete
+        retain = 8) // v2: vector delete
       deleteWhere(spark, base, col("o_orderstatus") === "I",
-        "o_orderkey", retain = 8) // v3: COW delete (drops the inserts)
+        "o_orderkey", retain = 8) // v3: delete (drops the inserts)
 
       val feed = changesSince(spark, base, v0, "o_orderkey")
         .localCheckpoint() // one computation, sliced per version below

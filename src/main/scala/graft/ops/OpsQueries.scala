@@ -338,8 +338,8 @@ object OpsQueries {
     "io_formats" -> ((s, dir) => graft.io.Formats.roundtrip(s, dir)),
     // small-file compaction: fragment → rebalance-rewrite → invariants
     "compact_roundtrip" -> ((s, dir) => graft.io.Compact.roundtrip(s, dir)),
-    // copy-on-write MERGE (upsert+delete+insert) over the manifest table:
-    // only key-range-affected files rewrite, the rest are referenced
+    // MERGE (upsert+delete+insert) over the manifest table: matched rows
+    // are deleted by position, the rest of the files are referenced
     "cow_merge" -> ((s, dir) => graft.io.CowTable.mergeCheck(s, dir)),
     // full row-level lifecycle: MERGE → DELETE WHERE → compact → vacuum,
     // final snapshot read through the compacted manifest
@@ -361,7 +361,7 @@ object OpsQueries {
     // commits make checkpoint replays no-ops (replay proven in-band)
     "stream_cow_merge" -> ((s, dir) => graft.streaming.CowStream.mergeCheck(s, dir)),
     // CDC replay completeness: v0 snapshot + folded change feed ==
-    // final table, across COW merge, DV delete, and COW delete
+    // final table, across merge, vector delete and delete where
     "cow_cdf_replay" -> ((s, dir) => graft.io.CowTable.cdfReplayCheck(s, dir)),
     // VARCHAR natural keys (the reference's dimension identities):
     // string clustering key with bucketed discovery + stats pruning

@@ -26,14 +26,14 @@ import graft.io.{AtomicPublish, CowTable, LocalParquet}
   * by the clustering-key columns, so:
   *
   *   - a DELETE action is a doomed (file, position) → committed as
-  *     deletion-vector entries (O(deleted rows) bytes, ZERO data files
-  *     rewritten);
+  *     deletion-vector entries, or the file's removal once it holds no
+  *     live row (O(deleted rows) bytes, ZERO data files rewritten);
   *   - an INSERT action is a new row → staged once, committed as new
   *     pool files (nothing read);
   *   - an UPDATE is represented as DELETE + INSERT
-  *     (`representUpdateAsDeleteAndInsert`), which is exactly the
-  *     copy-row-forward semantics the API [[graft.io.CowTable.merge]]
-  *     has.
+  *     (`representUpdateAsDeleteAndInsert`), which is exactly how the
+  *     API [[graft.io.CowTable.merge]] commits: position deletes plus
+  *     new pool files.
   *
   * Executors stage actions as parquet under `base/.delta-<query>`,
   * encoded by Spark's own `ParquetWriteSupport` (so every Catalyst type
@@ -121,13 +121,13 @@ private[sources] class CowDeltaWrite(base: String, info: LogicalWriteInfo,
   override def description(): String = s"cow-delta write to $base"
 }
 
-/** GROUP-BASED `MERGE INTO` — the copy-on-write half of the SQL
-  * row-level surface. A delta MERGE's write is O(delta), but Spark 4.1
-  * runtime-prunes target files only for group-based plans
+/** GROUP-BASED `MERGE INTO` — the table's only copy-on-write row
+  * writer (the API [[graft.io.CowTable.merge]] deletes by position). A
+  * delta MERGE's write is O(delta), but Spark 4.1 runtime-prunes target
+  * files only for group-based plans
   * (`RowLevelOperationRuntimeGroupFiltering` matches `ReplaceData`, not
   * `WriteDelta`), so the delta MERGE read the WHOLE table. This
-  * operation takes the group route instead, the same shape as the API
-  * [[graft.io.CowTable.merge]]:
+  * operation takes the group route instead:
   *
   *   1. the target scan declares `_file` as its runtime filter
   *     attribute; Spark's own rule plans a dynamic subquery

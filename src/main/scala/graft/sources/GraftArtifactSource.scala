@@ -528,16 +528,17 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
   * complete), classified from commit structure by
   * [[graft.io.CowTable.changeSet]]:
   *   - a version whose changed rows are all inserts (`append`, SQL
-  *     `INSERT`) or all deletes ([[graft.io.CowTable.dvDelete]], SQL
-  *     `DELETE`) is served IN PLACE: its partitions read the pool files
-  *     (whole, or only the rows its vector change names), and
+  *     `INSERT`) or all deletes ([[graft.io.CowTable.deleteWhere]],
+  *     [[graft.io.CowTable.dvDelete]], SQL `DELETE`) is served IN
+  *     PLACE: its partitions read the pool files (whole, or only
+  *     the rows its vector change names), and
   *     `_change_type` and `_commit_version` ride in as constant
   *     partition values. Planning launches no job and writes nothing;
   *     a replay re-derives the same partitions, since pool files and
   *     vectors are immutable;
-  *   - a version with both sides (`merge`, `deleteWhere`, SQL
-  *     `UPDATE`/`MERGE`, `restore`) is key-joined over its changed rows
-  *     only ([[graft.io.CowTable.changesOf]]) and materialized ONCE
+  *   - a version with both sides (`merge`, SQL `UPDATE`/`MERGE`,
+  *     `restore`) is key-joined over its changed rows only
+  *     ([[graft.io.CowTable.changesOf]]) and materialized ONCE
   *     under the stream's checkpoint (`_graft_cdf/`), so a replayed
   *     batch re-serves identical files instead of recomputing.
   * A table with column mapping keeps the materialized path for every

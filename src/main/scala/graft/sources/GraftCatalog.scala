@@ -36,8 +36,8 @@ import graft.io.{AtomicPublish, CowTable}
   * [[GraftArtifactSource]] scan (manifest-resolved, footer-pruned,
   * DV-aware); `DELETE FROM … WHERE` maps to [[CowTable.deleteWhere]]
   * via `SupportsDelete` when every conjunct converts (stats-pruned
-  * discovery and only matching files rewritten — a METADATA-routed
-  * delete, not a rewrite of the table); `INSERT INTO` maps to
+  * discovery, the matching rows deleted by position — a
+  * METADATA-routed delete that rewrites no file); `INSERT INTO` maps to
   * [[CowTable.append]] through the V1 write bridge (new pool files +
   * one manifest CAS commit, nothing rewritten); `MERGE INTO` rewrites
   * GROUP-BASED with runtime target-file pruning
@@ -444,7 +444,7 @@ object GraftCatalog {
 
   /** The registered check: the full SQL DML surface against one cow
     * table — `DELETE FROM … WHERE` (routed through `SupportsDelete` into
-    * the stats-pruned copy-on-write delete), `INSERT INTO … SELECT`
+    * the stats-pruned position delete), `INSERT INTO … SELECT`
     * (new pool files + one manifest CAS, nothing rewritten), and the
     * final aggregate SELECTed back through the catalog's DV-aware DSv2
     * scan. In-band require: the catalog read and the API read agree on
@@ -1628,7 +1628,7 @@ private[sources] class CowSqlTable(base: String,
 
   // ---- MERGE INTO / UPDATE / row-level DELETE ----------------------
   /** MERGE takes the GROUP-BASED route (runtime file pruning + whole-
-    * file copy-on-write, the API merge's shape); DELETE/UPDATE stay
+    * file copy-on-write); DELETE/UPDATE stay
     * delta-based (predicates push statically; scattered deletes land as
     * O(deleted rows) vectors). */
   override def newRowLevelOperationBuilder(

@@ -16,8 +16,8 @@ import graft.io.{AtomicPublish, CowTable, FsUtil}
   */
 object CdfStream {
 
-  /** The registered check: the cdf-replay history (COW merge → DV
-    * delete → COW delete, every version retained) consumed THROUGH the
+  /** The registered check: the cdf-replay history (merge → vector
+    * delete → delete where, every version retained) consumed THROUGH the
     * streaming source, folded version by version onto the v0 snapshot.
     * The fold must reproduce the final table bit-for-bit (in-band
     * require against the direct read — same contract as
@@ -32,11 +32,11 @@ object CdfStream {
       val v0 = CowTable.create(spark, base, graft.Tables.orders(spark, dir),
         "o_orderkey", numFiles = 8, retain = 8)
       CowTable.merge(spark, base, CowTable.rangeLocalBatch(spark, dir),
-        "o_orderkey", retain = 8) // v1: COW merge
+        "o_orderkey", retain = 8) // v1: merge
       CowTable.dvDelete(spark, base, col("o_orderkey") % 19 === 7,
-        retain = 8) // v2: merge-on-read delete
+        retain = 8) // v2: vector delete
       CowTable.deleteWhere(spark, base, col("o_orderstatus") === "I",
-        "o_orderkey", retain = 8) // v3: COW delete (drops the inserts)
+        "o_orderkey", retain = 8) // v3: delete (drops the inserts)
 
       val tbl = "cdf_feed_" +
         java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)

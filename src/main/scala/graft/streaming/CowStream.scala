@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.{AtomicPublish, CowTable, FsUtil}
 
-/** Exactly-once Structured Streaming MERGE into the copy-on-write table
+/** Exactly-once Structured Streaming MERGE into the cow table
   * — the lakehouse "stream upsert" pattern: foreachBatch folds each
   * micro-batch's per-key delta into the committed row set with
   * [[CowTable.exactlyOnceMerge]], whose (stream, batchId) txn stamp
@@ -19,7 +19,8 @@ import graft.io.{AtomicPublish, CowTable, FsUtil}
   *
   * Scale shape per batch: one map-side batch aggregate, one
   * manifest-pruned read of the current rows for the touched keys, and a
-  * merge that rewrites only the key-range-affected files. State lives
+  * merge that deletes the replaced rows by position and writes the
+  * upserts as one new file. State lives
   * in the table itself — nothing accumulates in executor memory.
   */
 object CowStream {

@@ -62,10 +62,13 @@ class ChangeFeedSpec extends SparkSpec {
     sameAtHead(base, "id", "dvDelete")
     CowTable.dvDelete(spark, base, col("id") % 5 === 0, retain = 50)
     sameAtHead(base, "id", "dvDelete growing a vector")
-    // a merge rewriting a vectored file
+    // a merge growing a file's vector, then a compaction rewriting the
+    // vectored files
     CowTable.merge(spark, base, orders(40, 44).withColumn("_delete", lit(false))
       .withColumn("v", lit(0.0)), "id", retain = 50)
     sameAtHead(base, "id", "merge over a vectored file")
+    CowTable.compact(spark, base, targetRows = 1L, key = "id", retain = 50)
+    sameAtHead(base, "id", "compact rewriting the vectored files")
 
     val head = AtomicPublish.committed(spark, base)
     same(base, v0, head, "id", "a multi-version span")
@@ -96,10 +99,11 @@ class ChangeFeedSpec extends SparkSpec {
   test("restore over a vector shrink and a removed file equals the " +
     "whole-file diff") {
     val base = table("cdf_restore")
-    val v1 = CowTable.dvDelete(spark, base, col("id") % 7 === 0, retain = 50)
-    // rewrites the first file: it is gone from every later version
-    CowTable.merge(spark, base, orders(1, 3).withColumn("v", lit(-1.0))
-      .withColumn("_delete", lit(false)), "id", retain = 50)
+    // vectors the low half's files only
+    val v1 = CowTable.dvDelete(spark, base, col("id") % 7 === 0 && col("id") <= 60,
+      retain = 50)
+    // rewrites the vectored files: they are gone from every later version
+    CowTable.compact(spark, base, targetRows = 1L, key = "id", retain = 50)
     CowTable.dvDelete(spark, base, col("id") % 5 === 0, retain = 50)
     val v4 = CowTable.restore(spark, base, v1, retain = 50)
     val cs = CowTable.changeSet(spark, base, v4 - 1, v4)

@@ -40,15 +40,69 @@ class CowDvSpec extends SparkSpec {
     val base = Files.createTempDirectory("cow_dvm").toString + "/t"
     CowTable.create(spark, base, table(100), "id", numFiles = 2)
     CowTable.dvDelete(spark, base, col("id") === 7L)
-    // merge touches key 3 -> rewrites the file that also held key 7
+    val before = CowTable.manifest(spark, base)
+    // merge touches key 3 -> vectors it in the file that also holds dead
+    // key 7, and writes its new image to a new file
     val src = Seq((3L, "u", 0.0, false)).toDF("id", "nm", "amt", "_delete")
     CowTable.merge(spark, base, src, "id")
     val got = CowTable.read(spark, base)
     assert(got.filter(col("id") === 7L).count() === 0L,
-      "the rewrite must read THROUGH the vector")
+      "the new vector must keep the old one's rows")
+    assert(got.filter(col("id") === 3L).select("nm").as[String].collect()
+      .toSeq === Seq("u"))
     assert(got.count() === 99L)
-    // the rewritten half is now vector-free; the untouched half keeps none
-    assert(CowTable.manifest(spark, base).forall(_.dvRows === 0L))
+    // the vectored file's cumulative vector holds 7 and 3; the other file
+    // keeps its (file, dv); the upsert is the one new file
+    val after = CowTable.manifest(spark, base)
+    val by = after.map(e => e.file -> e).toMap
+    val hit = before.filter(_.dvRows === 1L)
+    assert(hit.size === 1)
+    assert(by(hit.head.file).dvRows === 2L && by(hit.head.file).dv != hit.head.dv)
+    before.filterNot(_ == hit.head).foreach(e => assert(by(e.file) === e))
+    assert(after.size === 3)
+  }
+
+  test("a delete that empties a file removes it from the manifest: SQL " +
+    "DELETE with no WHERE, deleteWhere(true), a dvDelete") {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    def fresh(name: String) = {
+      val base = Files.createTempDirectory(name).toString + "/t"
+      CowTable.create(spark, base, table(100), "id", numFiles = 4, retain = 4)
+      base
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    /** No fully vectored entry is left, and the head's feed equals the
+      * whole-file diff. */
+    def check(base: String, what: String): Unit = {
+      assert(!CowTable.manifest(spark, base).exists(e => e.rows == e.dvRows),
+        s"$what left a fully vectored entry")
+      val v = AtomicPublish.committed(spark, base)
+      assert(rows(CowTable.changes(spark, base, v - 1, v, "id")) ===
+        rows(ChangeFeedSpec.reference(spark, base, v - 1, v, "id")), what)
+    }
+
+    val all = fresh("cow_empty_sql")
+    spark.sql(s"DELETE FROM graft.`$all`")
+    assert(CowTable.manifest(spark, all).isEmpty)
+    assert(CowTable.read(spark, all).count() === 0L)
+    check(all, "DELETE FROM with no WHERE")
+
+    val vectored = fresh("cow_empty_api")
+    CowTable.dvDelete(spark, vectored, col("id") % 10 === 0, retain = 4)
+    CowTable.deleteWhere(spark, vectored, lit(true), "id", retain = 4)
+    assert(CowTable.manifest(spark, vectored).isEmpty)
+    check(vectored, "deleteWhere(true) over vectored files")
+
+    val one = fresh("cow_empty_one")
+    val before = CowTable.manifest(spark, one)
+    val first = before.minBy(_.kmin)
+    CowTable.dvDelete(spark, one, col("id") <= first.kmax, retain = 4)
+    assert(CowTable.manifest(spark, one) === before.filterNot(_ == first),
+      "only the emptied file leaves; the others keep their (file, dv)")
+    assert(CowTable.read(spark, one).count() === 100L - first.rows)
+    check(one, "a dvDelete emptying one file")
   }
 
   test("compact materializes vectors; vacuum reclaims vector dirs") {

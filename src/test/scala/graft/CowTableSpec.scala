@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.io.{AtomicPublish, CowTable}
 
-/** Copy-on-write row-level operations: file-granular MERGE/DELETE,
-  * serializable commits under concurrent writers, compaction, vacuum.
+/** Row-level operations: MERGE/DELETE by position, serializable
+  * commits under concurrent writers, compaction, vacuum.
   */
 class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -15,26 +15,50 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def table(n: Int) =
     (1 to n).map(i => (i.toLong, s"name$i", i * 10.0)).toDF("id", "nm", "amt")
 
-  test("MERGE rewrites only key-range-affected files, references the rest") {
+  /** Runs `stmt` on the vector-free table at `base` with every pool
+    * file that holds no `touched` row moved aside, so a statement that
+    * reads one fails. Then each file holding `touched` rows must have
+    * exactly those rows vectored, and every other entry must keep its
+    * (file, dv). Returns the entries `stmt` added. */
+  private def deletesByPosition(base: String, touched: org.apache.spark.sql.Column)
+                               (stmt: => Unit): Seq[CowTable.Entry] = {
+    val before = CowTable.manifest(spark, base)
+    assert(before.forall(_.dv.isEmpty))
+    val hits = before.map(e =>
+      e.file -> spark.read.parquet(e.file).filter(touched).count())
+      .filter(_._2 > 0).toMap
+    val aside = before.filterNot(e => hits.contains(e.file))
+      .map(e => (new java.io.File(e.file), new java.io.File(e.file + ".aside")))
+    aside.foreach { case (f, a) => assert(f.renameTo(a)) }
+    try stmt finally aside.foreach { case (f, a) => a.renameTo(f) }
+    val after = CowTable.manifest(spark, base)
+    val by = after.map(e => e.file -> e).toMap
+    before.foreach { e =>
+      val now = by.getOrElse(e.file, fail(s"${e.file} left the manifest"))
+      assert((now.dv.nonEmpty, now.dvRows) === ((hits.contains(e.file),
+        hits.getOrElse(e.file, 0L))), s"${e.file}: vectored rows")
+      if (!hits.contains(e.file)) assert(now === e, "an untouched entry changed")
+    }
+    after.filterNot(e => before.exists(_.file == e.file))
+  }
+
+  test("MERGE deletes by position in the key-range-affected file only, " +
+    "references the rest") {
     val base = Files.createTempDirectory("cow").toString + "/t"
     CowTable.create(spark, base, table(1000), "id", numFiles = 8)
-    val before = CowTable.manifest(spark, base)
-    assert(before.size === 8)
+    assert(CowTable.manifest(spark, base).size === 8)
 
-    // source touches keys 1..5 only: one file's range
+    // source touches keys 1..5 only: one file's range. Ids 2 and 4 are
+    // vectored in it, the other 7 files are never read, and the upserts
+    // (2, 2000) are the one new file
     val src = Seq((2L, "upd2", 99.0, false), (4L, "x", 0.0, true),
       (2000L, "new", 1.0, false))
       .toDF("id", "nm", "amt", "_delete")
-    CowTable.merge(spark, base, src, "id")
-    val after = CowTable.manifest(spark, base)
-
-    val beforeFiles = before.map(_.file).toSet
-    val afterFiles = after.map(_.file).toSet
-    val referenced = afterFiles.intersect(beforeFiles)
-    assert(referenced.size === 7,
-      s"7 of 8 files must be referenced untouched, got ${referenced.size}")
-    // the referenced files' bytes were never rewritten (same pool paths)
-    referenced.foreach(f => assert(new java.io.File(f).exists()))
+    val added = deletesByPosition(base, col("id").isin(2L, 4L)) {
+      CowTable.merge(spark, base, src, "id")
+    }
+    assert(added.map(_.rows) === Seq(2L))
+    assert(CowTable.manifest(spark, base).size === 9)
 
     val got = CowTable.read(spark, base)
     val expect = table(1000)
@@ -78,18 +102,17 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(got.count() === 100L)
   }
 
-  test("DELETE WHERE rewrites only files containing matches") {
+  test("DELETE WHERE deletes by position in only the files containing " +
+    "matches") {
     val base = Files.createTempDirectory("cow_del").toString + "/t"
     CowTable.create(spark, base, table(1000), "id", numFiles = 8)
-    val before = CowTable.manifest(spark, base)
-    // nm is correlated with id, so matches live in one file's range
-    CowTable.deleteWhere(spark, base,
-      col("id") >= 1L && col("id") <= 50L, "id")
-    val after = CowTable.manifest(spark, base)
-    val referenced = after.map(_.file).toSet
-      .intersect(before.map(_.file).toSet)
-    assert(referenced.size === 7,
-      s"only the one containing file may rewrite, got ${8 - referenced.size}")
+    // the matches live in one file's key range: the other 7 are pruned
+    // from the manifest stats and never read
+    val pred = col("id") >= 1L && col("id") <= 50L
+    assert(deletesByPosition(base, pred) {
+      CowTable.deleteWhere(spark, base, pred, "id")
+    }.isEmpty, "a delete adds no file")
+    assert(CowTable.manifest(spark, base).count(_.dvRows > 0) === 1)
     assert(CowTable.read(spark, base).count() === 950L)
     assert(CowTable.read(spark, base)
       .filter(col("id") <= 50L).count() === 0L)
@@ -179,8 +202,14 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(after.count(e =>
       e.file.substring(e.file.lastIndexOf('/') + 1).startsWith("pool-")) === 70000,
       "every synthetic entry must be referenced untouched")
-    val kept = after.map(_.file).toSet.intersect(real.map(_.file).toSet)
-    assert(kept.size === 3, "3 of 4 real files referenced untouched")
+    // id 2 is vectored in its real file; the other 3 keep their (file, dv)
+    val by = after.map(e => e.file -> e).toMap
+    real.foreach { e =>
+      if (e.kmin <= 2L && e.kmax >= 2L)
+        assert(by(e.file).dvRows === 1L && by(e.file).dv.nonEmpty)
+      else assert(by(e.file) === e, "3 of 4 real files referenced untouched")
+    }
+    assert(after.size === 70005, "the upserts are the one new file")
     // point-read through the same interval index (a full read would try
     // to open the synthetic paths — they exist only as metadata here)
     val got = CowTable.readForKeys(spark, base,
@@ -234,14 +263,13 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("additive schema evolution: old files null-fill, every path agrees") {
     val base = Files.createTempDirectory("cow_evo").toString + "/t"
     CowTable.create(spark, base, table(100), "id", numFiles = 4, retain = 4)
-    val pre = CowTable.manifest(spark, base).map(_.file).toSet
     // the source adds `tag`; only ids 1..5 (one file's range) are touched
     val src = Seq((2L, "upd", 99.0, "T", false), (200L, "new", 1.0, "T", false))
       .toDF("id", "nm", "amt", "tag", "_delete")
-    CowTable.merge(spark, base, src, "id", retain = 4)
-
-    val kept = CowTable.manifest(spark, base).map(_.file).toSet.intersect(pre)
-    assert(kept.size === 3, "untouched files must not rewrite on evolution")
+    // evolution rewrites no file: id 2 is vectored, the upserts are new
+    assert(deletesByPosition(base, col("id") === 2L) {
+      CowTable.merge(spark, base, src, "id", retain = 4)
+    }.map(_.rows) === Seq(2L))
     val got = CowTable.read(spark, base)
     assert(got.columns.toSeq === Seq("id", "nm", "amt", "tag"))
     assert(got.filter(col("tag").isNotNull).count() === 2L)
@@ -338,9 +366,9 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val v0 = CowTable.create(spark, base, table(100), "id",
       numFiles = 2, retain = 10)
     Thread.sleep(5) // commit instants must strictly order across versions
-    val v1 = CowTable.merge(spark, base,
-      Seq((1L, "u1", 0.0, false)).toDF("id", "nm", "amt", "_delete"),
-      "id", retain = 10)
+    // compaction rewrites v0's two files into one
+    val v1 = CowTable.compact(spark, base, targetRows = 1000L, "id",
+      retain = 10)
     Thread.sleep(5)
     val v2 = CowTable.merge(spark, base,
       Seq((2L, "u2", 0.0, false)).toDF("id", "nm", "amt", "_delete"),
@@ -376,18 +404,19 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val users = (0 until 400).map(i => (f"user_$i%04d", i, i * 1.0))
       .toDF("user_name", "n", "v")
     CowTable.create(spark, base, users, "user_name", numFiles = 8)
-    val pre = CowTable.manifest(spark, base).map(_.file).toSet
 
     val batch = Seq(("user_0003", 3, 99.0, false),
       ("user_0007", 7, 99.0, false), ("user_0005", 5, 0.0, true),
       ("zz_new", 400, 1.0, false))
       .toDF("user_name", "n", "v", "_delete")
-    CowTable.merge(spark, base, batch, "user_name")
-    val referenced = CowTable.manifest(spark, base).map(_.file).toSet
-      .intersect(pre)
-    assert(referenced.size === 7,
-      s"string discovery must touch only the low-range file, kept " +
-        s"${referenced.size}/8")
+    // string discovery reads only the low-range file (the other 7 are
+    // unreadable while the merge runs) and vectors its 3 matches
+    val touched = col("user_name").isin("user_0003", "user_0005", "user_0007")
+    assert(deletesByPosition(base, touched) {
+      CowTable.merge(spark, base, batch, "user_name")
+    }.map(_.rows) === Seq(3L))
+    assert(CowTable.manifest(spark, base).count(_.dvRows > 0) === 1,
+      "string discovery must touch only the low-range file")
     val got = CowTable.read(spark, base)
     assert(got.count() === 400L) // 400 - 1 delete + 1 insert
     assert(got.filter(col("user_name") === "user_0003")
@@ -550,18 +579,18 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (f"user_${i / 4}%04d", (i % 4).toLong, i * 1.0))
       .toDF("user_name", "version", "v")
     CowTable.create(spark, base, df, "user_name,version", numFiles = 4)
-    val pre = CowTable.manifest(spark, base).map(_.file).toSet
 
-    // range-local merge: names in the lowest quarter only
+    // range-local merge: names in the lowest quarter only; the other 3
+    // files are unreadable while it runs
     val batch = (0 until 25).map(i =>
       (f"user_${i}%04d", 1L, -1.0, false))
       .toDF("user_name", "version", "v", "_delete")
-    CowTable.merge(spark, base, batch, "user_name,version")
-    val kept = CowTable.manifest(spark, base).map(_.file).toSet
-      .intersect(pre)
-    assert(kept.size === 3,
-      s"string-leading composite discovery must be range-local: " +
-        s"kept ${kept.size}/4")
+    deletesByPosition(base,
+      col("user_name") <= "user_0024" && col("version") === 1L) {
+      CowTable.merge(spark, base, batch, "user_name,version")
+    }
+    assert(CowTable.manifest(spark, base).count(_.dvRows > 0) === 1,
+      "string-leading composite discovery must be range-local")
     // exactly one version of each touched name updated
     assert(CowTable.read(spark, base).filter(col("v") === -1.0)
       .count() === 25L)
@@ -594,26 +623,29 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE discovery intersects tail-column bounds: a low-cardinality " +
-    "leading key (SCD2 grain) still rewrites only the tail-range files") {
+    "leading key (SCD2 grain) still reads only the tail-range files") {
     val base = Files.createTempDirectory("cow_tailm").toString + "/t"
     // 4 users × 200 versions each: the LEADING key admits every file a
     // touched user appears in, so leading-range discovery alone would
-    // rewrite the whole table for any all-users batch
+    // scan the whole table for any all-users batch
     val df = (1 to 800).map(i => (i.toLong % 4, i.toLong, s"v$i"))
       .toDF("user_id", "seq", "payload")
     CowTable.create(spark, base, df, "user_id,seq", numFiles = 8)
-    val pre = CowTable.manifest(spark, base).map(_.file).toSet
 
     // every user, LOW seq only: the tail hull [1, 160] must confine the
-    // rewrite to the head-of-sequence files of each user
+    // scan to the head-of-sequence files of each user — the high-seq
+    // files are unreadable while the merge runs
     val src = df.filter(col("seq") <= 160L)
       .withColumn("payload", concat(lit("U"), col("payload")))
       .withColumn("_delete", lit(false))
-    CowTable.merge(spark, base, src, "user_id,seq")
-    val kept = CowTable.manifest(spark, base).map(_.file).toSet.intersect(pre)
-    assert(kept.size >= 3,
+    val added = deletesByPosition(base, col("seq") <= 160L) {
+      CowTable.merge(spark, base, src, "user_id,seq")
+    }
+    val kept = CowTable.manifest(spark, base)
+      .count(e => e.dv.isEmpty && !added.contains(e))
+    assert(kept >= 3,
       s"tail-bound narrowing must keep the high-seq files untouched: " +
-        s"kept ${kept.size}/8")
+        s"kept $kept/8")
 
     val got = CowTable.read(spark, base)
     assert(got.count() === 800L)

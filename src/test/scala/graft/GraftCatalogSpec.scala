@@ -508,10 +508,9 @@ class GraftCatalogSpec extends SparkSpec {
     val v0 = CowTable.create(spark, base, table(100), "id",
       numFiles = 4, retain = 10)
     Thread.sleep(5) // instants must strictly order
-    CowTable.merge(spark, base,
-      Seq((1L, "u", 0.0, false)).toDF("id", "nm", "amt", "_delete"),
-      "id", retain = 10)
-    val v1 = graft.io.AtomicPublish.committed(spark, base)
+    // compaction rewrites v0's four files into one
+    val v1 = CowTable.compact(spark, base, targetRows = 1000L, "id",
+      retain = 10)
     val cutoff = graft.io.AtomicPublish.commitInstant(spark, base, v1).get
     val r = spark.sql(s"CALL graft.vacuum(`table` => '$base', " +
       s"older_than_ms => ${cutoff}L)").head()
@@ -559,29 +558,40 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("applyDelta rediscovers key positions across a competing rewrite") {
-    val base = Files.createTempDirectory("gcat_race").toString + "/t"
-    CowTable.create(spark, base, table(100), "id", numFiles = 4)
     // the delta deletes ids 5 and 55; between its position discovery and
-    // its CAS, a competing MERGE rewrites the file holding id 5 (updates
-    // ids 1-10), so the first attempt's vector points at a DEAD file —
-    // carrying those positions would silently miss the delete
-    var fired = false
-    CowTable.applyDelta(spark, base,
-      Seq(5L, 55L).toDF("id"),
-      inserts = Some(Seq((200L, "ins", 1.0)).toDF("id", "nm", "amt")),
-      beforeCommit = () => if (!fired) {
-        fired = true
-        CowTable.merge(spark, base,
-          table(100).filter(col("id") <= 10)
-            .withColumn("amt", col("amt") + 1000.0), "id")
-      })
-    val got = CowTable.read(spark, base)
-    assert(got.count() === 99L) // 100 - 2 + 1
-    assert(got.filter(col("id").isin(5L, 55L)).count() === 0L,
-      "both deletes must land even though id 5's file was rewritten")
-    assert(got.filter(col("id") === 7).head().getDouble(2) === 1070.0,
-      "the competing merge's update must survive")
-    assert(got.filter(col("id") === 200).count() === 1L)
+    // its CAS a rival commits, so the first attempt's positions are
+    // stale: a MERGE (updates ids 1-10) vectors id 5 and writes its new
+    // image to a new file; a COMPACT rewrites every file, so the
+    // positions point at DEAD files. Carrying them would silently miss
+    // the delete
+    Seq("merge", "compact").foreach { rival =>
+      val base = Files.createTempDirectory("gcat_race").toString + "/t"
+      CowTable.create(spark, base, table(100), "id", numFiles = 4)
+      val v0Files = CowTable.manifest(spark, base).map(_.file).toSet
+      var fired = false
+      CowTable.applyDelta(spark, base,
+        Seq(5L, 55L).toDF("id"),
+        inserts = Some(Seq((200L, "ins", 1.0)).toDF("id", "nm", "amt")),
+        beforeCommit = () => if (!fired) {
+          fired = true
+          if (rival == "merge")
+            CowTable.merge(spark, base,
+              table(100).filter(col("id") <= 10)
+                .withColumn("amt", col("amt") + 1000.0), "id")
+          else CowTable.compact(spark, base, targetRows = 1000L, "id")
+        })
+      if (rival == "compact")
+        assert(CowTable.manifest(spark, base).forall(e => !v0Files(e.file)),
+          "the compaction must have rewritten every file the first attempt saw")
+      val got = CowTable.read(spark, base)
+      assert(got.count() === 99L, rival) // 100 - 2 + 1
+      assert(got.filter(col("id").isin(5L, 55L)).count() === 0L,
+        s"$rival: both deletes must land even though id 5 moved")
+      assert(got.filter(col("id") === 7).head().getDouble(2) ===
+        (if (rival == "merge") 1070.0 else 70.0),
+        s"$rival: the competing commit's rows must survive")
+      assert(got.filter(col("id") === 200).count() === 1L, rival)
+    }
   }
 
   test("SQL UPDATE on a duplicate-key table changes only its match") {
@@ -616,13 +626,14 @@ class GraftCatalogSpec extends SparkSpec {
     assert(fired, "the statement never reached its commit")
   }
 
-  test("SQL DELETE and UPDATE racing a merge that rewrites a staged row's " +
-    "file fall back to keys: both changes land") {
+  test("SQL DELETE and UPDATE racing a merge of a staged row's key fall " +
+    "back to keys: both changes land") {
     Seq("DELETE", "UPDATE").foreach { stmt =>
       val base = Files.createTempDirectory("gcat_fbm").toString + "/t"
       CowTable.create(spark, base, table(100), "id", numFiles = 4)
-      // the statement addresses ids 5 and 55; the merge rewrites the
-      // file holding id 5, so its staged position names a dead file
+      // the statement addresses ids 5 and 55; the merge vectors id 5 and
+      // writes its new image to another file, so the staged position
+      // names a dead row
       racing(CowTable.merge(spark, base,
         table(100).filter(col("id") <= 10)
           .withColumn("amt", col("amt") + 1000.0), "id")) {

@@ -79,29 +79,38 @@ class PlanLintSpec extends SparkSpec {
     assert(bare.isEmpty, s"unaudited broadcast() hints: ${bare.mkString(", ")}")
   }
 
+  /** A source file's code lines (comment lines dropped), each with its
+    * 0-based line index. */
+  private def code(p: java.nio.file.Path): Seq[(String, Int)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.toSeq
+      .filterNot { case (l, _) =>
+        l.trim.startsWith("*") || l.trim.startsWith("//") ||
+          l.trim.startsWith("/**")
+      }
+  }
+
+  /** The top-level `def` of an object that holds code line `i`. */
+  private def owner(lines: Seq[(String, Int)], i: Int): String = {
+    val TopDef = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    lines.takeWhile(_._2 < i).reverse.collectFirst {
+      case (TopDef(name), _) => name
+    }.getOrElse("?")
+  }
+
   /** Every cow writer commits through `CowTable.commitChange`: one CAS
     * publish site, no hand-written retry loop beside it, and failures in
     * the storage layer told apart by type, never by message text. */
   test("CAS publishes only through CowTable.commitChange; io/ never " +
     "classifies a failure by message") {
     import scala.jdk.CollectionConverters._
-    def code(p: java.nio.file.Path): Seq[(String, Int)] =
-      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.toSeq
-        .filterNot { case (l, _) =>
-          l.trim.startsWith("*") || l.trim.startsWith("//") ||
-            l.trim.startsWith("/**")
-        }
     val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    val TopDef = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
     val publishers = main.flatMap { p =>
       val lines = code(p)
       lines.collect {
         case (l, i) if l.contains("tryPublish(") && !l.contains("def tryPublish") =>
-          val owner = lines.takeWhile(_._2 < i).reverse.collectFirst {
-            case (TopDef(name), _) => name
-          }
-          s"${p.getFileName}:${owner.getOrElse("?")}"
+          s"${p.getFileName}:${owner(lines, i)}"
       }
     }
     assert(publishers === List("CowTable.scala:commitChange"),
@@ -115,6 +124,25 @@ class PlanLintSpec extends SparkSpec {
     }
     assert(byMessage.isEmpty,
       s"io/ classifies failures by message text: ${byMessage.mkString(", ")}")
+  }
+
+  /** Every row-level writer deletes by position (`CowTable.deleteAt`):
+    * none reads live rows and writes them back past a key anti-join, so
+    * the table's only anti-joins subtract deletion vectors in a scan and
+    * drop removed entries from a carried-over manifest. */
+  test("CowTable anti-joins only in scanEntries and carryOver") {
+    import scala.jdk.CollectionConverters._
+    val cow = java.nio.file.Paths.get("src/main/scala/graft/io/CowTable.scala")
+    val banner = java.nio.file.Files.readAllLines(cow).asScala
+      .indexWhere(_.contains("Registered checks"))
+    assert(banner > 0, "no Registered checks banner in CowTable.scala")
+    val lines = code(cow).takeWhile(_._2 < banner)
+    val owners = lines.collect {
+      case (l, i) if l.contains("\"left_anti\"") => owner(lines, i)
+    }
+    assert(owners.nonEmpty && owners.toSet === Set("scanEntries", "carryOver"),
+      s"left_anti in ${owners.mkString(", ")}: a row-level writer must " +
+        "delete through deleteAt, not rewrite its survivors")
   }
 
   /** The storage layer reads one table layout: the commit markers, the

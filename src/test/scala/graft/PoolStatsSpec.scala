@@ -90,10 +90,10 @@ class PoolStatsSpec extends SparkSpec {
       wide(95, 105).withColumn("s", lit("merged"))
         .union(wide(1000, 1003)).withColumn("_delete", col("id") === 100L),
       "id", retain = 30)
-    assert(checkHead(base, "merge") > 0)
+    assert(checkHead(base, "merge") === 1) // the upserts' one file
     CowTable.deleteWhere(spark, base, col("id") % 5 === 0 && col("id") < 150,
       "id", retain = 30)
-    assert(checkHead(base, "deleteWhere") > 0)
+    assert(checkHead(base, "deleteWhere") === 0) // deletes write no pool file
     CowTable.dvDelete(spark, base, col("id") % 9 === 4, retain = 30)
     CowTable.compact(spark, base, targetRows = 1000, key = "id", retain = 30)
     assert(checkHead(base, "compact") > 0)
@@ -232,22 +232,26 @@ class PoolStatsSpec extends SparkSpec {
       statsCols = Seq("d"))
     val src = wide(101, 110)
     val append = jobsOf(CowTable.append(spark, base, src, retain = 10))
-    val upd = wide(5, 6).withColumn("_delete", lit(false))
-    val merge = jobsOf(CowTable.merge(spark, base, upd, "id", retain = 10))
+    // compaction of a vector-free table: its scan reads no vector
     val compact = jobsOf(
       CowTable.compact(spark, base, targetRows = 1000, key = "id", retain = 10))
-    assert((append, merge, compact) === ((2, 8, 2)),
+    val upd = wide(5, 6).withColumn("_delete", lit(false))
+    val merge = jobsOf(CowTable.merge(spark, base, upd, "id", retain = 10))
+    assert((append, merge, compact) === ((2, 7, 2)),
       "a cow write's Spark job count moved: a stats re-read (or another " +
         "extra scan) crept back into the write path")
     // the commit loop resolves its parent lazily: a vector delete, a
     // metadata-only ALTER and a restore pay no job for what they skip
     val dv = jobsOf(CowTable.dvDelete(spark, base, col("id") % 10 === 3,
       retain = 10))
+    // deleteWhere is dvDelete's body: the same vector commit, no rewrite
+    val dw = jobsOf(CowTable.deleteWhere(spark, base, col("id") % 10 === 7,
+      "id", retain = 10))
     val add = jobsOf(CowTable.addColumns(spark, base,
       Seq(org.apache.spark.sql.types.StructField("extra",
         org.apache.spark.sql.types.IntegerType)), retain = 10))
     val restore = jobsOf(CowTable.restore(spark, base, 0L, retain = 10))
-    assert((dv, add, restore) === ((4, 0, 0)),
+    assert((dv, dw, add, restore) === ((4, 4, 0, 0)),
       "a commit's Spark job count moved: the commit loop resolved " +
         "something its writer did not need")
   }

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   * Layout under `base/`:
   *   - `files/<token>-<i>.parquet` — immutable pooled data files, written
   *     once, never modified, shared across versions;
+  *   - `files/<token>-dv` — a deletion vector: one parquet file of
+  *     (file basename, row position) rows, written and read on the
+  *     driver by [[writeVector]] and [[vectorPositions]] alone;
   *   - `v<N>/manifest` — an [[AtomicPublish]] version whose ONLY payload
   *     is the manifest: one row per data file with its row count and
   *     key min/max. Committing a version = committing a manifest.
@@ -80,8 +83,9 @@ import org.apache.spark.sql.functions._
   *     (file, row position) pairs of the doomed rows — O(deleted rows)
   *     bytes — and the new manifest points each affected file at its
   *     cumulative vector; NO data file is rewritten. Reads subtract the
-  *     vectors (anti-join on position,
-  *     broadcast whenever the manifest's dvRows total proves it small);
+  *     positions each entry's vector voids ([[voided]]): the API scan
+  *     by an anti-join on position, broadcast whenever the manifest's
+  *     dvRows total proves it small, the SQL scan per partition;
   *     [[compact]] materializes them back to clean files. The same
   *     design as Delta deletion vectors / Iceberg position deletes.
   *   - CHANGE DATA FEED ([[changes]]): the row-level diff between two
@@ -868,113 +872,93 @@ object CowTable {
 
   private def baseName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
-  /** The fixed schema of a deletion vector's (file, pos) parts. */
-  private val VectorSchema = "file STRING, pos BIGINT"
+  /** A deletion vector is ONE parquet file, `files/<token>-dv`, of
+    * (file BASENAME, pos) rows: basenames, so the vector (and the table)
+    * survives a rename, copy or move. Only [[writeVector]] and
+    * [[vectorPositions]] touch it; everything else sees positions. */
+  private val VectorSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
 
-  /** The (file, pos) rows of the deletion vectors `dvd` references,
-    * restricted PER VECTOR FILE to the entries that point at THAT
-    * vector. A global `file IN (all dvd files)` over all vector files
-    * is not enough: after successive [[dvDelete]]s an OLDER shared
-    * vector still referenced by an unaffected entry can hold stale
-    * rows for a file that has since moved to a newer cumulative vector
-    * — those rows pass a global IN filter, silently exceeding the
-    * manifest's dvRows total (breaking the proven broadcast bound) and
-    * duplicating positions into any new cumulative vector built from
-    * the result. The per-vector basename filter makes the scanned row
-    * count EXACTLY the manifest's dvRows sum.
-    *
-    * Vector CONTENT references files by BASENAME (the durable identity
-    * — what makes a live-DV table relocatable); rows are matched by
-    * basename and emitted re-rooted to the entries' CURRENT full paths,
-    * so callers join against the live manifest's file column. Each
-    * vector is read with its fixed schema (no schema-inference job) and
-    * filtered by an `isin` over its entries' basenames (no join). */
-  private def vectorRows(spark: SparkSession, dvd: Seq[Entry]): DataFrame =
-    dvd.groupBy(_.dv).map { case (path, es) =>
-      val current = es.map(e => baseName(e.file) -> e.file).toMap
-      val b = regexp_extract(col("file"), "[^/]+$", 0)
-      spark.read.schema(VectorSchema).parquet(path)
-        .filter(b.isin(current.keys.toSeq: _*))
-        .select(element_at(typedLit(current), b).as("file"), col("pos"))
-    }.reduce(_ unionByName _)
-
-  /** Each file's positions in deletion vector `dv`, by file BASENAME —
-    * read on the driver ([[LocalParquet.foreachRow]]), so it launches no
-    * job. A vector holds O(deleted rows) positions. */
-  private def vectorPositions(spark: SparkSession,
-                              dv: String): Map[String, Set[Long]] = {
-    val by = scala.collection.mutable.Map.empty[String, Set[Long]]
-    LocalParquet.foreachRow(spark, new Path(dv),
-      org.apache.spark.sql.types.StructType.fromDDL(VectorSchema)) { r =>
-      val f = baseName(r.getUTF8String(0).toString)
-      by(f) = by.getOrElse(f, Set.empty[Long]) + r.getLong(1)
-    }
-    by.toMap
-  }
-
-  /** Stage-and-commit a deletion vector: `rows` carries (file, pos)
-    * with CURRENT full paths; content is written with BASENAME refs so
-    * the vector — and therefore the table — survives a rename/copy/move.
-    * Returns the vector's pool path. */
+  /** Stage a deletion vector of `byFile`'s positions (keyed by CURRENT
+    * full path) as one pool file, written on the driver
+    * ([[LocalParquet.write]], no job). Like every staged pool file it
+    * is unreferenced until its commit lands. Returns its pool path. */
   private def writeVector(spark: SparkSession, base: String,
-                          rows: DataFrame): String = {
-    val fs = fsOf(spark, base)
-    val token = java.util.UUID.randomUUID().toString
-    val tmp = new Path(base, s".dv-$token")
-    rows.select(regexp_extract(col("file"), "[^/]+$", 0).as("file"),
-      col("pos")).write.mode("overwrite").parquet(tmp.toString)
-    val dst = new Path(base, s"files/$token-dv")
-    fs.mkdirs(new Path(base, "files"))
-    require(fs.rename(tmp, dst), s"dv move failed: $tmp -> $dst")
+                          byFile: Map[String, Array[Long]]): String = {
+    val dst = new Path(base, s"files/${java.util.UUID.randomUUID()}-dv")
+    LocalParquet.write(spark, dst, VectorSchema, byFile.iterator.flatMap {
+      case (f, ps) =>
+        val b = org.apache.spark.unsafe.types.UTF8String.fromString(baseName(f))
+        ps.iterator.map(p => org.apache.spark.sql.catalyst.InternalRow(b, p))
+    })
     norm(dst.toString)
   }
 
-  /** Write the cumulative deletion vector of a vector commit: `hits`
-    * carries (file, pos) of newly deleted LIVE rows and `touched` the
-    * parent entries of those files. The vector holds the new positions
-    * plus each touched file's old ones, so it replaces their vectors
-    * ([[commitChange]] points each touched entry at it). Returns its pool
-    * path. */
-  private def cumulativeVector(spark: SparkSession, base: String,
-                               touched: Seq[Entry], hits: DataFrame): String = {
-    // the touched files' old positions: [[writeVector]] keeps only
-    // basenames, so each old vector is filtered by basename (no join)
-    // and read with its fixed schema (no schema-inference job)
-    val old = touched.filter(_.dv.nonEmpty).groupBy(_.dv).toSeq.map {
-      case (path, es) => spark.read.schema(VectorSchema).parquet(path)
-        .filter(regexp_extract(col("file"), "[^/]+$", 0)
-          .isin(es.map(e => baseName(e.file)): _*))
+  /** Each file's sorted positions in deletion vector `dv`, by file
+    * BASENAME: one driver-side open of its file
+    * ([[LocalParquet.foreachRow]]), no listing, no job. A vector holds
+    * O(deleted rows) positions. */
+  private def vectorPositions(spark: SparkSession,
+                              dv: String): Map[String, Array[Long]] = {
+    val by = scala.collection.mutable.HashMap.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    LocalParquet.foreachRow(spark, new Path(dv), VectorSchema) { r =>
+      by.getOrElseUpdate(r.getUTF8String(0).toString,
+        new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
     }
-    writeVector(spark, base, old.foldLeft(hits)(_ unionByName _))
+    by.map { case (f, b) => f -> b.result().sorted }.toMap
   }
 
-  /** How many of `hits` (`file`, `pos`) fall in each file, in ONE job:
-    * each task counts its rows and the driver adds the per-task maps —
-    * no shuffle stage, which costs a `groupBy` a second job. */
-  private def perFileOf(hits: DataFrame): Map[String, Long] = {
+  /** The sorted row positions each (file, dv) pair's vector voids, by
+    * file; vector-free files are absent. A file's positions are its
+    * vector's rows under ITS OWN basename: a vector an untouched entry
+    * still shares also holds the old rows of files that have since
+    * moved to a newer vector, and this lookup never sees them, so
+    * every file's count is exactly its entry's dvRows. Each distinct
+    * vector is read once. */
+  private[graft] def voided(spark: SparkSession,
+                            files: Seq[(String, String)]): Map[String, Array[Long]] = {
+    val vectors = files.map(_._2).filter(_.nonEmpty).distinct
+      .map(dv => dv -> vectorPositions(spark, dv)).toMap
+    files.collect { case (f, dv) if dv.nonEmpty =>
+      f -> vectors(dv).getOrElse(baseName(f), Array.emptyLongArray)
+    }.toMap
+  }
+
+  /** Each file's positions among `hits` (`file`, `pos`), in ONE job:
+    * each task gathers its rows' positions per file and the driver
+    * concatenates the per-task arrays — no shuffle stage, which costs a
+    * `groupBy` a second job. */
+  private def positionsOf(hits: DataFrame): Map[String, Array[Long]] = {
     import hits.sparkSession.implicits._
-    hits.select("file").as[String].mapPartitions { files =>
-      val n = scala.collection.mutable.HashMap.empty[String, Long]
-      files.foreach(f => n(f) = n.getOrElse(f, 0L) + 1L)
-      n.iterator
-    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    hits.select("file", "pos").as[(String, Long)].mapPartitions { rows =>
+      val by = scala.collection.mutable.HashMap.empty[String,
+        scala.collection.mutable.ArrayBuilder.ofLong]
+      rows.foreach { case (f, p) =>
+        by.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuilder.ofLong) += p
+      }
+      by.iterator.map { case (f, b) => (f, b.result()) }
+    }.collect().groupMapReduce(_._1)(_._2)(_ ++ _)
   }
 
-  /** The one row-level delete, as an [[Edit]]: the live rows `hits`
-    * (`file`, `pos`) of the parent entries `cand`, `perFile` of them per
-    * file. A file losing every live row (`rows − dvRows`) leaves the
-    * manifest; the rest point at one [[cumulativeVector]]. */
+  /** The one row-level delete, as an [[Edit]]: `byFile` holds the newly
+    * deleted live positions of the parent entries `cand`, by file. A
+    * file losing every live row (`rows − dvRows`) leaves the manifest.
+    * The rest point at one new vector ([[writeVector]]) holding each
+    * kept file's old positions ([[voided]]) plus its new ones, so it
+    * replaces their vectors ([[commitChange]] points each kept entry at
+    * it). No job: the positions are already on the driver. */
   private def deleteAt(spark: SparkSession, base: String, cand: Seq[Entry],
-                       hits: DataFrame, perFile: Map[String, Long]): Edit = {
-    val (emptied, kept) = cand.filter(e => perFile.contains(e.file))
-      .partition(e => perFile(e.file) == e.rows - e.dvRows)
-    val gone = emptied.map(_.file)
-    val vector =
-      if (kept.isEmpty) None
-      else Some(NewVector(cumulativeVector(spark, base, kept,
-        if (gone.isEmpty) hits else hits.filter(!col("file").isin(gone: _*))),
-        perFile -- gone))
-    Edit(removed = gone.toSet, vector = vector)
+                       byFile: Map[String, Array[Long]]): Edit = {
+    val (emptied, kept) = cand.filter(e => byFile.contains(e.file))
+      .partition(e => byFile(e.file).length == e.rows - e.dvRows)
+    val old = voided(spark, kept.map(e => e.file -> e.dv))
+      .withDefaultValue(Array.emptyLongArray)
+    val vector = Option.when(kept.nonEmpty)(NewVector(
+      writeVector(spark, base,
+        kept.map(e => e.file -> (old(e.file) ++ byFile(e.file)).sorted).toMap),
+      kept.map(e => e.file -> byFile(e.file).length.toLong).toMap))
+    Edit(removed = emptied.map(_.file).toSet, vector = vector)
   }
 
   /** The live rows of `p` whose FULL key tuple `ks` equals a row of
@@ -998,13 +982,12 @@ object CowTable {
   }
 
   /** Live rows of `entries`: the raw pool scan minus each file's
-    * deletion vector. The anti-join side is broadcast exactly when the
-    * manifest's own dvRows total proves it bounded — metadata, not a
-    * guess ([[vectorRows]] restricts per vector file, so the bound is
-    * exact even after successive deletes). With `lineage` the (file,
-    * position) address columns are kept for callers that need to write
-    * vectors or discover files. `schema` (the table meta's, made
-    * nullable) makes the scan SCHEMA-EVOLUTION-aware: pool files
+    * voided positions ([[voided]]), anti-joined as a local frame of
+    * (file, pos) — exactly the manifest's dvRows total, so it is
+    * broadcast whenever that total proves it bounded. With `lineage` the
+    * (file, position) address columns are kept for callers that find
+    * positions to delete or files to discover. `schema` (the table
+    * meta's, made nullable) makes the scan SCHEMA-EVOLUTION-aware: pool files
     * written before a column was added simply yield NULL for it — a
     * footer-inferred read of a mixed-schema file list would silently
     * adopt one file's footer. */
@@ -1029,7 +1012,9 @@ object CowTable {
     val live =
       if (dvd.isEmpty) raw
       else {
-        val dv = vectorRows(spark, dvd)
+        import spark.implicits._
+        val dv = voided(spark, dvd.map(e => e.file -> e.dv)).toSeq
+          .flatMap { case (f, ps) => ps.map(f -> _) }.toDF("file", "pos")
         raw.join(graft.Bcast.ifBounded(dv, dvd.map(_.dvRows).sum),
           raw("_gf_file") === dv("file") && raw("_gf_pos") === dv("pos"),
           "left_anti")
@@ -1270,7 +1255,7 @@ object CowTable {
     def colMap: Map[String, String] = meta.physMap
   }
 
-  /** A deletion vector one attempt wrote ([[cumulativeVector]]) and how
+  /** A deletion vector one attempt wrote ([[deleteAt]]) and how
     * many rows it newly deletes from each pool file it covers. */
   private case class NewVector(path: String, perFile: Map[String, Long])
 
@@ -1361,7 +1346,7 @@ object CowTable {
       case None =>
         change match {
           case Edit(_, _, Some(dv), _, _) =>
-            fsOf(spark, base).delete(new Path(dv.path), true)
+            fsOf(spark, base).delete(new Path(dv.path), false)
           case _ => ()
         }
         commitChange(spark, base, op, retain)(attempt)
@@ -1491,9 +1476,7 @@ object CowTable {
           checks = parentMeta.checks, gens = gensOf(parentMeta),
           idNotNull = identityOf(parentMeta).map(_._1), gathered = true)
         val deleted = matched.fold(Edit()) { case (cand, rows) =>
-          val hits = rows.select("file", "pos")
-            .localCheckpoint(eager = false) // one scan: counts + vector
-          deleteAt(spark, base, cand, hits, perFileOf(hits))
+          deleteAt(spark, base, cand, positionsOf(rows))
         }
         beforeCommit()
         deleted.copy(added = newEntries, meta = evolvedMeta, txn = txn)
@@ -1682,7 +1665,7 @@ object CowTable {
     val doomed = fs.listStatus(pool).toSeq
       .filter(st => !referenced.contains(norm(st.getPath.toString)) &&
         now - st.getModificationTime >= graceMs)
-    doomed.foreach(st => fs.delete(st.getPath, true)) // dv entries are dirs
+    doomed.foreach(st => fs.delete(st.getPath, false)) // every entry is a file
     doomed.size
   }
 
@@ -1754,14 +1737,12 @@ object CowTable {
       if (cand.isEmpty) Unchanged // stats prove nothing matches
       else {
         // `filter` keeps TRUE rows only: a NULL-evaluating row survives
-        val hits = scanEntries(spark, cand, lineage = true,
+        val byFile = positionsOf(scanEntries(spark, cand, lineage = true,
           schema = p.schema, colMap = cm)
           .filter(pred)
-          .select(col("_gf_file").as("file"), col("_gf_pos").as("pos"))
-          .localCheckpoint() // evaluated once: counts, union, write
-        val perFile = perFileOf(hits) // cand-bounded
-        if (perFile.isEmpty) Unchanged // no-op: nothing matches
-        else deleteAt(spark, base, cand, hits, perFile)
+          .select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
+        if (byFile.isEmpty) Unchanged // no-op: nothing matches
+        else deleteAt(spark, base, cand, byFile)
       }
     }
 
@@ -1812,23 +1793,23 @@ object CowTable {
     if (layoutOnly) return ChangeSet(Nil, Nil, probe)
     val fromBy = from.map(e => e.file -> e).toMap
     val toFiles = to.map(_.file).toSet
-    val vectors = scala.collection.mutable.Map.empty[String, Map[String, Set[Long]]]
-    def voided(e: Entry): Set[Long] =
-      if (e.dv.isEmpty) Set.empty
-      else vectors.getOrElseUpdate(e.dv, vectorPositions(spark, e.dv))
-        .getOrElse(baseName(e.file), Set.empty)
-    val moved = to.flatMap(t => fromBy.get(t.file).filter(_.dv != t.dv).map {
-      f => (f, t, voided(f), voided(t))
-    })
+    val moved = to.flatMap(t => fromBy.get(t.file).filter(_.dv != t.dv)
+      .map((_, t)))
+    def positions(es: Seq[Entry]) = voided(spark, es.map(e => e.file -> e.dv))
+      .withDefaultValue(Array.emptyLongArray)
+    val (was, is) = (positions(moved.map(_._1)), positions(moved.map(_._2)))
     def whole(es: Seq[Entry]) =
       es.filter(e => e.rows > e.dvRows).map(ChangePart(_, None))
-    def at(e: Entry, ps: Set[Long]) =
-      if (ps.isEmpty) None else Some(ChangePart(e, Some(ps.toArray.sorted)))
+    // the sorted positions in `a` and not in `b`, still sorted
+    def minus(a: Array[Long], b: Array[Long]) =
+      a.filter(java.util.Arrays.binarySearch(b, _) < 0)
+    def at(e: Entry, ps: Array[Long]) =
+      Option.when(ps.nonEmpty)(ChangePart(e, Some(ps)))
     ChangeSet(
       whole(from.filterNot(e => toFiles(e.file))) ++
-        moved.flatMap { case (f, _, was, is) => at(f, is -- was) },
+        moved.flatMap { case (f, _) => at(f, minus(is(f.file), was(f.file))) },
       whole(to.filterNot(e => fromBy.contains(e.file))) ++
-        moved.flatMap { case (_, t, was, is) => at(t, was -- is) },
+        moved.flatMap { case (_, t) => at(t, minus(was(t.file), is(t.file))) },
       probe)
   }
 
@@ -1968,11 +1949,9 @@ object CowTable {
     }
   }
 
-  /** Deletes addressed by POSITION: the (`file`, `pos`) rows a
-    * row-level scan of committed version `scanVersion` staged, and how
-    * many per file. */
-  case class Positions(scanVersion: Long, rows: DataFrame,
-                       perFile: Map[String, Long])
+  /** Deletes addressed by POSITION: the row positions a row-level scan
+    * of committed version `scanVersion` staged, by file. */
+  case class Positions(scanVersion: Long, byFile: Map[String, Array[Long]])
 
   /** MERGE-ON-READ delta commit: apply a set of DELETES (by position,
     * [[deleteAt]] — zero data files rewritten) plus a set of INSERT rows
@@ -2046,7 +2025,7 @@ object CowTable {
       .localCheckpoint(eager = false)
     // positions know their delete count from the writers' reports; the
     // key path's count() also materializes the checkpoint
-    val anyDeletes = positions.fold(keyActions.count() > 0)(_.perFile.nonEmpty)
+    val anyDeletes = positions.fold(keyActions.count() > 0)(_.byFile.nonEmpty)
     // pure no-op delta (nothing deleted, nothing inserted): nothing
     // to write, nothing to commit — the parent version IS the result
     // (a txn-stamped no-op still commits, to record its batch id)
@@ -2060,15 +2039,15 @@ object CowTable {
           // names a live row of a file still in this manifest
           val pos = positions.get
           val touched = p.cached match {
-            case Some(es) => es.filter(e => pos.perFile.contains(e.file))
+            case Some(es) => es.filter(e => pos.byFile.contains(e.file))
             case None => collectEntries(p.frame.join(
-              pos.perFile.keys.toSeq.toDF("file"), Seq("file")))
+              pos.byFile.keys.toSeq.toDF("file"), Seq("file")))
           }
-          require(touched.size == pos.perFile.size,
+          require(touched.size == pos.byFile.size,
             s"staged delete positions name files missing from " +
               s"v${p.version} of $base: " +
-              s"${pos.perFile.keySet -- touched.map(_.file)}")
-          deleteAt(spark, base, touched, pos.rows, pos.perFile)
+              s"${pos.byFile.keySet -- touched.map(_.file)}")
+          deleteAt(spark, base, touched, pos.byFile)
         }
         else livePositions(spark, p, ks, keyActions) match {
           case Some((cand, rows)) =>
@@ -2098,8 +2077,7 @@ object CowTable {
                 "statement never matched; deduplicate the table (or " +
                 "merge by key) before deleting by key"
             })
-            val hits = hitRows.select(col("file"), col("pos"))
-            deleteAt(spark, base, cand, hits, perFileOf(hits))
+            deleteAt(spark, base, cand, positionsOf(hitRows))
           case None => Edit()
         }
       beforeCommit() // test seam (fires once per attempt, before the CAS)

@@ -54,13 +54,13 @@ object LocalParquet {
     collect(plan).filter(_.size <= MaxRows).map((plan.schema, _))
   }
 
-  /** Write `rows` as one parquet file at `file`, encoded exactly as
-    * Spark's parquet sink would (same WriteSupport, same schema
-    * metadata, snappy). */
+  /** Write `rows`, which the caller already holds on the driver, as one
+    * parquet file at `file`, encoded exactly as Spark's parquet sink
+    * would (same WriteSupport, same schema metadata, snappy). */
   def write(spark: SparkSession, file: Path, schema: StructType,
-            rows: Seq[InternalRow]): Unit = {
+            rows: IterableOnce[InternalRow]): Unit = {
     val w = writer(file, schema, writeConf(spark))
-    try rows.foreach(w.write) finally w.close()
+    try rows.iterator.foreach(w.write) finally w.close()
   }
 
   /** The session's Hadoop conf plus the keys [[ParquetWriteSupport]]'s
@@ -84,27 +84,23 @@ object LocalParquet {
     conf
   }
 
-  /** Feed `f` every row of the parquet parts under directory `dir`,
-    * projected to `schema` and decoded on the driver by Spark's own
-    * parquet reader — the read twin of [[write]], for small metadata
-    * datasets such as deletion vectors. Launches no job. The reader
-    * reuses its row object, so `f` must copy what it keeps. */
-  def foreachRow(spark: SparkSession, dir: Path, schema: StructType)(
+  /** Feed `f` every row of the parquet file `file`, projected to
+    * `schema` and decoded on the driver by Spark's own parquet reader —
+    * the read twin of [[write]], for small metadata files such as
+    * deletion vectors. One open, no listing, no job. The reader reuses
+    * its row object, so `f` must copy what it keeps. */
+  def foreachRow(spark: SparkSession, file: Path, schema: StructType)(
       f: InternalRow => Unit): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
       schema, new StructType(), schema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
-    dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
-      .foreach { p =>
-        val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(p),
-          0L, Long.MaxValue))
-        try rows.foreach(f) finally rows match {
-          case c: AutoCloseable => c.close()
-          case _ => ()
-        }
-      }
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file),
+      0L, Long.MaxValue))
+    try rows.foreach(f) finally rows match {
+      case c: AutoCloseable => c.close()
+      case _ => ()
+    }
   }
 
   /** An open snappy parquet writer of `schema` rows at `file`, with a

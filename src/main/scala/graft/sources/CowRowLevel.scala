@@ -40,7 +40,7 @@ import graft.io.{AtomicPublish, CowTable, LocalParquet}
   * the table holds stages and reads back exactly) with
   * task-attempt-unique file names (only COMMITTED tasks' files are
   * read — a retried task's partial file is never picked up), and each
-  * task reports how many positions it staged per file. The driver
+  * task reports the positions it deleted, by file. The driver
   * commit turns them into one [[graft.io.CowTable.applyDelta]] version.
   * While the table's head is still the version the scan read, the
   * staged positions are unioned into each file's vector as they are —
@@ -300,11 +300,11 @@ private[sources] class CowReplaceTaskWriter(staging: String,
 
 /** Per-task staged files, listed EXPLICITLY (never by directory scan):
   * a failed/retried task attempt's partial files are simply never
-  * referenced. `deleteCounts` is the number of staged delete positions
-  * per pool file, so the commit needs no job to count them. */
+  * referenced. `deleted` holds the task's deleted row positions
+  * by pool file, so the commit needs no job to count or read them. */
 private[sources] case class CowDeltaMessage(insertFiles: Seq[String],
                                             deleteFiles: Seq[String],
-                                            deleteCounts: Map[String, Long])
+                                            deleted: Map[String, Array[Long]])
   extends WriterCommitMessage
 
 private[graft] object CowDeltaBatchWrite {
@@ -325,7 +325,8 @@ private[sources] class CowDeltaBatchWrite(base: String,
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory =
     new CowDeltaWriterFactory(staging, dataSchema, rowIdSchema,
-      if (op.byPosition) Some(rowIdSchema.fieldIndex(ArtifactScan.FileCol))
+      if (op.byPosition) Some((rowIdSchema.fieldIndex(ArtifactScan.FileCol),
+        rowIdSchema.fieldIndex(ArtifactScan.PosCol)))
       else None,
       new SerializableConfiguration(LocalParquet.writeConf(SparkSession.active)))
 
@@ -334,14 +335,15 @@ private[sources] class CowDeltaBatchWrite(base: String,
     val msgs = messages.collect { case m: CowDeltaMessage => m }
     val ins = msgs.flatMap(_.insertFiles).toSeq
     val dels = msgs.flatMap(_.deleteFiles).toSeq
-    val perFile = msgs.toSeq.flatMap(_.deleteCounts)
-      .groupMapReduce(_._1)(_._2)(_ + _)
+    val byFile = msgs.toSeq.flatMap(_.deleted)
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
     try {
       CowDeltaBatchWrite.afterStage(base)
       if (ins.nonEmpty || dels.nonEmpty) {
         val inserts =
           if (ins.isEmpty) None
           else Some(spark.read.schema(dataSchema).parquet(ins: _*))
+        // the staged row ids: the key path reads their keys
         val staged = {
           val schema = StructType(rowIdSchema.fields.map(_.copy(nullable = true)))
           if (dels.isEmpty)
@@ -352,9 +354,7 @@ private[sources] class CowDeltaBatchWrite(base: String,
         val (keys, positions) =
           if (!op.byPosition) (staged, None)
           else (staged.drop(ArtifactScan.FileCol, ArtifactScan.PosCol),
-            op.scanVersion.map(v => CowTable.Positions(v,
-              staged.select(col(ArtifactScan.FileCol).as("file"),
-                col(ArtifactScan.PosCol).as("pos")), perFile)))
+            op.scanVersion.map(CowTable.Positions(_, byFile)))
         CowTable.applyDelta(spark, base, keys, inserts,
           op = op.command().toString, // DELETE / UPDATE, as issued
           positions = positions)
@@ -376,11 +376,11 @@ private[sources] class CowDeltaBatchWrite(base: String,
 private[sources] class CowDeltaWriterFactory(staging: String,
                                              dataSchema: StructType,
                                              rowIdSchema: StructType,
-                                             fileOrd: Option[Int],
+                                             posOrds: Option[(Int, Int)],
                                              conf: SerializableConfiguration)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new CowDeltaTaskWriter(staging, dataSchema, rowIdSchema, fileOrd, conf,
+    new CowDeltaTaskWriter(staging, dataSchema, rowIdSchema, posOrds, conf,
       partitionId, taskId)
 }
 
@@ -388,20 +388,21 @@ private[sources] class CowDeltaWriterFactory(staging: String,
   * task-attempt-unique parquet files through Spark's own
   * `ParquetWriteSupport` ([[graft.io.LocalParquet.writer]]; no Spark
   * write job inside a write job), opened lazily so a task with no
-  * actions stages nothing. Deleted positions are counted per file (the
-  * row id's `_file`, at `fileOrd` when rows are addressed by position)
-  * as they stream past. */
+  * actions stages nothing. When rows are addressed by position, each
+  * deleted row id's (`_file`, `_pos`), at `posOrds`, is gathered per
+  * file as it streams past. */
 private[sources] class CowDeltaTaskWriter(staging: String,
                                           dataSchema: StructType,
                                           rowIdSchema: StructType,
-                                          fileOrd: Option[Int],
+                                          posOrds: Option[(Int, Int)],
                                           conf: SerializableConfiguration,
                                           partitionId: Int, taskId: Long)
   extends DeltaWriter[InternalRow] {
 
   private val insertPath = s"$staging/inserts/part-$partitionId-$taskId.parquet"
   private val deletePath = s"$staging/deletes/part-$partitionId-$taskId.parquet"
-  private val deleteCounts = scala.collection.mutable.HashMap.empty[String, Long]
+  private val deleted = scala.collection.mutable.HashMap.empty[String,
+    scala.collection.mutable.ArrayBuilder.ofLong]
   private var insertWriter: ParquetWriter[InternalRow] = _
   private var deleteWriter: ParquetWriter[InternalRow] = _
 
@@ -415,9 +416,9 @@ private[sources] class CowDeltaTaskWriter(staging: String,
     if (deleteWriter == null)
       deleteWriter = LocalParquet.writer(new Path(deletePath), rowIdSchema, conf.value)
     deleteWriter.write(id)
-    fileOrd.foreach { o =>
-      val f = id.getUTF8String(o).toString
-      deleteCounts(f) = deleteCounts.getOrElse(f, 0L) + 1L
+    posOrds.foreach { case (f, p) =>
+      deleted.getOrElseUpdate(id.getUTF8String(f).toString,
+        new scala.collection.mutable.ArrayBuilder.ofLong) += id.getLong(p)
     }
   }
 
@@ -433,7 +434,7 @@ private[sources] class CowDeltaTaskWriter(staging: String,
               else Seq.empty
     val del = if (deleteWriter != null) { deleteWriter.close(); Seq(deletePath) }
               else Seq.empty
-    CowDeltaMessage(ins, del, deleteCounts.toMap)
+    CowDeltaMessage(ins, del, deleted.map { case (f, b) => f -> b.result() }.toMap)
   }
 
   override def abort(): Unit = close()

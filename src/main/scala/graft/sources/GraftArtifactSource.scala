@@ -171,14 +171,13 @@ private[sources] class ArtifactScanBuilder(base: String, dataset: String,
       dir, full, required, pushed, skipChangeCommits)
 }
 
-/** One pool file; `dvParts` are the parquet parts of the deletion-vector
-  * directory the manifest points this file at (listed once per
-  * directory on the driver) — the reader subtracts those row positions
-  * (merge-on-read). A change-feed part served in place may instead
-  * `keep` only the rows at its sorted positions, and carries its
+/** One pool file; `drop` are the sorted row positions its deletion
+  * vector voids, looked up at planning for this file alone — the reader
+  * skips them (merge-on-read). A change-feed part served in place may
+  * instead `keep` only the rows at its sorted positions, and carries its
   * `change` (change type, commit version) as constant columns. */
 private[sources] case class ArtifactPartition(path: String,
-                                              dvParts: Seq[String] = Nil,
+                                              drop: Array[Long] = Array.emptyLongArray,
                                               keep: Option[Array[Long]] = None,
                                               change: Option[(String, Long)] = None)
   extends InputPartition
@@ -450,7 +449,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     ArtifactReaderFactory(
       StructType(required.fields.map(f => f.copy(name = physName(f.name)))),
       required.fieldNames.indices.filter(i => isVirtual(required(i).name)).toSet,
-      pushedPhys.toSeq, vectored = keptFiles.exists(_.dv.nonEmpty))
+      pushedPhys.toSeq)
 
   override def description(): String =
     s"graft-artifact $dir pushed=[${pushed.mkString(", ")}] " +
@@ -511,7 +510,7 @@ private[sources] class ArtifactMicroBatchStream(base: String, dataset: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Set.empty, Nil, vectored = false)
+    ArtifactReaderFactory(required, Set.empty, Nil)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -647,9 +646,8 @@ private[sources] class CdfMicroBatchStream(base: String, key: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     val inPlace = ArtifactReaderFactory(required,
       required.fieldNames.indices.filter(i => cdfCols(required(i).name)).toSet,
-      Nil, vectored = true)
-    val materialized = ArtifactReaderFactory(required, Set.empty, Nil,
-      vectored = false)
+      Nil)
+    val materialized = ArtifactReaderFactory(required, Set.empty, Nil)
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
         (if (p.asInstanceOf[ArtifactPartition].change.isDefined) inPlace
@@ -796,7 +794,7 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ArtifactReaderFactory(required, Set.empty, Nil, vectored = true)
+    ArtifactReaderFactory(required, Set.empty, Nil)
 
   /** Batches at or below the committed offset are never replanned —
     * reclaim their materialized directories (a long-lived subscriber's
@@ -848,12 +846,15 @@ private[sources] object ArtifactScan {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .map(_.toString)
 
-  /** One partition per (file, deletion-vector directory), each
-    * directory's parquet parts listed once. */
+  /** One partition per (file, deletion vector) pair, carrying the
+    * positions that vector voids in that file
+    * ([[graft.io.CowTable.voided]]: each vector read once, on the
+    * driver). */
   def partitions(files: Seq[(String, String)]): Seq[ArtifactPartition] = {
-    val parts = files.map(_._2).filter(_.nonEmpty).distinct
-      .map(dv => dv -> parquetParts(new Path(dv))).toMap
-    files.map { case (f, dv) => ArtifactPartition(f, parts.getOrElse(dv, Nil)) }
+    val voided = graft.io.CowTable.voided(SparkSession.active, files)
+    files.map { case (f, _) =>
+      ArtifactPartition(f, voided.getOrElse(f, Array.emptyLongArray))
+    }
   }
 
   /** Change parts served in place from their pool files: a whole part
@@ -926,9 +927,9 @@ private[sources] object ArtifactScan {
 
 /** Spark's own parquet reader (`ParquetFileFormat`, vectorized where
   * the schema allows) serving every `graft-artifact` partition. The read
-  * functions are built ONCE per scan on the driver — building broadcasts
+  * function is built ONCE per scan on the driver — building broadcasts
   * a fresh session Hadoop conf, so executors see the driver's
-  * filesystem settings — and each partition applies them to its file:
+  * filesystem settings — and each partition applies it to its file:
   *
   *   - the data read projects the PHYSICAL required columns plus Spark's
   *     row-index column, with the pushed filters as row-group
@@ -938,40 +939,23 @@ private[sources] object ArtifactScan {
   *     in as constant partition values — `_file` the file, and for a
   *     change-feed part served in place `_change_type` and
   *     `_commit_version` its change;
-  *   - a partition that `keep`s positions serves only those rows;
-  *   - with `vectored`, a second read of `(file, pos)` serves the
-  *     deletion-vector parts. Positions are Spark's row index, which
-  *     stays the file position however many row groups the pushed
-  *     filters skip, so vectored files keep their pushdown. */
+  *   - a partition that `keep`s positions serves only those rows, and
+  *     one that has positions to `drop` skips them. Positions are
+  *     Spark's row index, which stays the file position however many
+  *     row groups the pushed filters skip, so vectored files keep their
+  *     pushdown. */
 private[sources] class ArtifactReaderFactory(required: StructType,
                                              virtual: Set[Int],
                                              constants: Seq[String],
-                                             read: ArtifactReaderFactory.Read,
-                                             readDv: Option[ArtifactReaderFactory.Read])
+                                             read: ArtifactReaderFactory.Read)
   extends PartitionReaderFactory {
 
   import ArtifactReaderFactory._
 
-  /** The row positions `file`'s deletion vector voids: every `(file,
-    * pos)` row of the vector's parts that names this file. Vector
-    * content references files by BASENAME, so a relocated table's
-    * vectors still match. */
-  private def deletedPositions(parts: Seq[String],
-                               file: String): java.util.HashSet[java.lang.Long] = {
-    val dv = readDv.getOrElse(sys.error(
-      s"graft-artifact: $file has a deletion vector but the scan built no vector reader"))
-    val base = UTF8String.fromString(file.substring(file.lastIndexOf('/') + 1))
-    val set = new java.util.HashSet[java.lang.Long]()
-    parts.foreach(part => dv(partitioned(part, InternalRow.empty)).foreach { r =>
-      if (r.getUTF8String(0) == base) set.add(r.getLong(1))
-    })
-    set
-  }
-
   /** Applies the scan's read to this partition's file. A read row is
     * the data fields, the row index, then the constant columns; rows
-    * outside the partition's `keep` positions or named by the file's
-    * deletion vector are dropped, and the rest are projected to
+    * outside the partition's `keep` positions or among its `drop`
+    * positions are skipped, and the rest are projected to
     * `required` (`_pos` is the row index). */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArtifactPartition]
@@ -995,11 +979,9 @@ private[sources] class ArtifactReaderFactory(required: StructType,
     val kept = part.keep.fold(rows)(k =>
       rows.filter(r => java.util.Arrays.binarySearch(k, r.getLong(nData)) >= 0))
     val live =
-      if (part.dvParts.isEmpty) kept
-      else {
-        val deleted = deletedPositions(part.dvParts, part.path)
-        kept.filter(r => !deleted.contains(r.getLong(nData)))
-      }
+      if (part.drop.isEmpty) kept
+      else kept.filter(r =>
+        java.util.Arrays.binarySearch(part.drop, r.getLong(nData)) < 0)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = live.hasNext && {
@@ -1023,28 +1005,21 @@ private[sources] object ArtifactReaderFactory {
     * names; `virtual` are the positions of `required`'s metadata
     * columns (`_file`, `_pos`, and a change-feed part's `_change_type`
     * and `_commit_version`), every other field is data. */
-  def apply(required: StructType, virtual: Set[Int], filters: Seq[Filter],
-            vectored: Boolean): ArtifactReaderFactory = {
+  def apply(required: StructType, virtual: Set[Int],
+            filters: Seq[Filter]): ArtifactReaderFactory = {
     val data = StructType(required.fields.indices.filterNot(virtual)
       .map(required(_)))
     val rowIndex = StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
       LongType)
     val constants = StructType(virtual.toSeq.sorted.map(required(_))
       .filter(_.name != ArtifactScan.PosCol).map(_.copy(nullable = false)))
-    val dv = StructType(Seq(StructField("file", StringType),
-      StructField("pos", LongType)))
-    new ArtifactReaderFactory(required, virtual, constants.fieldNames.toSeq,
-      build(data.add(rowIndex), constants, filters),
-      if (vectored) Some(build(dv, new StructType(), Nil)) else None)
-  }
-
-  private def build(schema: StructType, partitionSchema: StructType,
-                    filters: Seq[Filter]): Read = {
     val spark = SparkSession.active
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-      partitionSchema, schema, filters,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    val schema = data.add(rowIndex)
+    new ArtifactReaderFactory(required, virtual, constants.fieldNames.toSeq,
+      new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        constants, schema, filters,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf()))
   }
 
   /** The whole of `path` as one split. */

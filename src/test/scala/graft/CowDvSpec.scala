@@ -105,6 +105,77 @@ class CowDvSpec extends SparkSpec {
     check(one, "a dvDelete emptying one file")
   }
 
+  test("a vector an untouched file still shares serves each entry exactly " +
+    "its dvRows positions, through API and SQL deletes and a merge") {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    val base = Files.createTempDirectory("cow_dvshared").toString + "/t"
+    val v0 = CowTable.create(spark, base, table(200), "id", numFiles = 2,
+      retain = 10)
+    val Seq(a, b) = CowTable.manifest(spark, base).sortBy(_.kmin)
+    val inA = col("id") <= a.kmax
+    // the rows every version should hold, recomputed from the statements
+    var model = (1 to 200).map(i => (i.toLong, s"name$i", i * 10.0))
+    val want = scala.collection.mutable.Map(v0 -> model.toSet)
+    def step(v: Long, keep: ((Long, String, Double)) => Boolean,
+             upserts: Seq[(Long, String, Double)] = Nil): Unit = {
+      model = model.filter(keep) ++ upserts
+      want(v) = model.toSet
+    }
+    def entry(f: String) = CowTable.manifest(spark, base).find(_.file == f).get
+    // 1. one vector over A and B
+    step(CowTable.dvDelete(spark, base, col("id") % 10 === 0, retain = 10),
+      _._1 % 10 != 0)
+    val shared = entry(b.file).dv
+    assert(entry(a.file).dv === shared)
+    // 2. only A again: B keeps the older vector, which still holds A's
+    // old rows
+    step(CowTable.dvDelete(spark, base, inA && col("id") % 10 === 1,
+      retain = 10), r => !(r._1 <= a.kmax && r._1 % 10 == 1))
+    assert(entry(b.file).dv === shared && entry(a.file).dv != shared)
+    // 3. a SQL DELETE and an API merge touch A again
+    spark.sql(s"DELETE FROM graft.`$base` WHERE id <= ${a.kmax} AND id % 10 = 2")
+    step(AtomicPublish.committed(spark, base),
+      r => !(r._1 <= a.kmax && r._1 % 10 == 2))
+    step(CowTable.merge(spark, base,
+      Seq((3L, "u", 0.0, false), (13L, "x", 0.0, true))
+        .toDF("id", "nm", "amt", "_delete"), "id", retain = 10),
+      r => r._1 != 3L && r._1 != 13L, Seq((3L, "u", 0.0)))
+    assert(entry(b.file).dv === shared)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "nm", "amt").as[(Long, String, Double)].collect()
+    def changeRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    val versions = AtomicPublish.versions(spark, base)
+    assert(versions === want.keys.toSeq.sorted)
+    versions.foreach { v =>
+      CowTable.entriesAtVersion(spark, base, v).filter(_.dv.nonEmpty).foreach { e =>
+        assert(new java.io.File(e.dv).isFile, s"v$v: ${e.dv} is not one file")
+        val ps = spark.read.parquet(e.dv)
+          .filter(col("file") === e.file.substring(e.file.lastIndexOf('/') + 1))
+          .select("pos").as[Long].collect()
+        assert(ps.length === e.dvRows && ps.distinct.length === ps.length,
+          s"v$v: ${e.file} has ${ps.length} positions " +
+            s"(${ps.distinct.length} distinct) for dvRows ${e.dvRows}")
+      }
+      val sql = spark.read.format("graft-artifact").option("base", base)
+        .option("cow", "true").option("version", v.toString).load()
+      Seq("readAt" -> CowTable.readAt(spark, base, v), "SQL scan" -> sql)
+        .foreach { case (path, df) =>
+          val got = rows(df)
+          assert(got.length === want(v).size && got.toSet === want(v),
+            s"$path of v$v")
+        }
+      versions.filter(_ < v).lastOption.foreach { p =>
+        assert(changeRows(CowTable.changes(spark, base, p, v, "id")) ===
+          changeRows(ChangeFeedSpec.reference(spark, base, p, v, "id")),
+          s"changes v$p -> v$v")
+      }
+    }
+    assert(rows(CowTable.read(spark, base)).toSet === want(versions.last))
+  }
+
   test("compact materializes vectors; vacuum reclaims vector dirs") {
     val base = Files.createTempDirectory("cow_dvc").toString + "/t"
     CowTable.create(spark, base, table(1000), "id", numFiles = 4)
@@ -118,7 +189,7 @@ class CowDvSpec extends SparkSpec {
     assert(CowTable.vacuum(spark, base) > 0)
     val pool = new java.io.File(s"$base/files")
     assert(!pool.listFiles().exists(_.getName.endsWith("-dv")),
-      "vacuum must reclaim unreferenced vector directories")
+      "vacuum must reclaim unreferenced vector files")
   }
 
   test("DSv2 cow scan serves a vectored manifest merge-on-read") {

@@ -145,6 +145,40 @@ class PlanLintSpec extends SparkSpec {
         "delete through deleteAt, not rewrite its survivors")
   }
 
+  /** The deletion-vector format is known by one module: `io/CowTable`
+    * writes a vector ([[graft.io.CowTable]]'s `writeVector`) and reads
+    * it (`vectorPositions`), and every other reader, the SQL scan
+    * included, gets positions. */
+  test("one deletion-vector codec: only writeVector and vectorPositions " +
+    "touch a vector file; sources/ sees positions only") {
+    import scala.jdk.CollectionConverters._
+    def sourcesUnder(dir: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    val parts = sourcesUnder("src/main/scala/graft/sources").flatMap { p =>
+      code(p).collect {
+        case (l, i) if Seq("dvParts", "deletedPositions", "vectored")
+          .exists(l.contains) => s"${p.getFileName}:${i + 1}"
+      }
+    }
+    assert(parts.isEmpty,
+      s"sources/ handles vector parts: ${parts.mkString(", ")}")
+    val cow = code(java.nio.file.Paths.get(
+      "src/main/scala/graft/io/CowTable.scala"))
+    val owners = cow.collect {
+      case (l, i) if l.contains("VectorSchema") &&
+        !l.contains("val VectorSchema") => owner(cow, i)
+    }
+    assert(owners.toSet === Set("writeVector", "vectorPositions"),
+      s"VectorSchema used in ${owners.mkString(", ")}")
+    val staged = sourcesUnder("src/main").flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains(".dv-") => s"${p.getFileName}:${i + 1}"
+      }
+    }
+    assert(staged.isEmpty,
+      s"a vector staged in a temp directory: ${staged.mkString(", ")}")
+  }
+
   /** The storage layer reads one table layout: the commit markers, the
     * sealed versions and basename-addressed vectors that current writers
     * produce. No fallback for an older layout may come back. */

@@ -2,8 +2,11 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 import graft.dq.DqSuite
 import graft.io.WindowReload
 import graft.pipeline.{Bronze, Pipeline, Silver, Star}
@@ -17,6 +20,15 @@ import graft.pipeline.{Bronze, Pipeline, Silver, Star}
   *   build fan out without recomputing the source join) → gold dims +
   *   fact (`fn_dm_data_load`) → DQ checks appended to a results dataset
   *   (`fn_dq_checks_load`) → row-count report (`final_report.py:22-43`).
+  *
+  * The dims are closed domains (Bronze derives each natural key from a
+  * small modulus or enum), so the star is built around the driver: the
+  * four dims come from one aggregate over silver and one read of the
+  * previous version, are upserted on the driver ([[upsertDims]]) and
+  * published as local frames without a job, and the fact resolves its
+  * foreign keys by lookup in them ([[Star.factWithKeys]]) — one scan and
+  * one write, no join and no shuffle. Every job a run launches carries
+  * its phase's description (`runner: <phase>`).
   *
   * Audit columns (F13): silver carries `processed_at`, gold `created_dt`,
   * results `run_date` — the reference's CURRENT_TIMESTAMP/CURRENT_DATE
@@ -60,107 +72,134 @@ object PipelineRunner {
     spark.stop()
   }
 
-  /** Label the jobs of one runner phase (guide §1.5) — the description
-    * propagates to broadcast/subquery jobs through the SQL execution
-    * thread pool, so per-phase wall attribution works in any profiler. */
-  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(s"runner: $name")
-    try body finally spark.sparkContext.setJobDescription(null)
-  }
+  /** Label the jobs of one runner phase (`runner: <name>`). */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T =
+    JobLabel(spark, s"runner: $name")(body)
 
   def run(spark: SparkSession, sfDir: String, wh: String,
           start: LocalDate, end: LocalDate): Unit = {
-    // 1. silver: cleanse + idempotent window reload (fn_etl_data_load)
-    val cleansed = Silver.cleanse(Bronze(spark, sfDir), Some(start), Some(end))
-      .withColumn("processed_at", runTs(spark))
+    // 1. silver: cleanse + idempotent window reload (fn_etl_data_load);
+    //    the memoized bronze frame materializes its join here
+    val cleansed = phase(spark, "bronze") {
+      Silver.cleanse(Bronze(spark, sfDir), Some(start), Some(end))
+        .withColumn("processed_at", runTs(spark))
+    }
     phase(spark, "silver-reload") {
       WindowReload.reload(spark, s"$wh/silver", cleansed, start, end)
     }
     // drop the audit column and the reload's partition key (eff_part) —
     // both are storage-side, not part of the silver contract
-    val silver = WindowReload.read(spark, s"$wh/silver")
-      .drop("processed_at", "eff_part")
-    phase(spark, "silver-count") {
-      println(s"[runner] silver rows processed: " +
-        s"${WindowReload.countRows(spark, s"$wh/silver")}")
+    val silver = phase(spark, "silver-read") {
+      WindowReload.read(spark, s"$wh/silver").drop("processed_at", "eff_part")
     }
+    // nothing writes silver after this point: one census serves both
+    // report lines
+    val silverRows = phase(spark, "silver-count") {
+      WindowReload.countRows(spark, s"$wh/silver")
+    }
+    println(s"[runner] silver rows processed: $silverRows")
 
     // 2. gold: dims + fact published as ONE ATOMIC VERSION (the
     //    reference runs `fn_dm_data_load` inside a single PG transaction,
     //    `fill_dm_table.py:18-23`; AtomicPublish restores that
     //    all-or-nothing contract on parquet — a crash between dataset
-    //    writes leaves readers on the previous version). Dims are
-    //    GROW-ONLY across runs (M2, `ON CONFLICT (nk) DO NOTHING` +
-    //    SERIAL): existing surrogate ids are preserved, only new natural
-    //    keys get fresh ids — a rebuild would renumber ids and silently
-    //    re-key every previously-written fact row.
+    //    writes leaves readers on the previous version).
     val starBase = s"$wh/star"
-    val havePrev = graft.io.AtomicPublish.exists(spark, starBase)
-    val dims = Seq(
-      ("dim_customer", "customer_id", "customer_name", "user_name"),
-      ("dim_product", "product_id", "product_category", "product_category"),
-      ("dim_region", "region_id", "region_name", "region"),
-      ("dim_status", "status_id", "status_name", "customer_status"))
-    val dimFrames = dims.map { case (name, idCol, nkCol, srcCol) =>
-      phase(spark, s"dim-$name") {
-      val incoming = silver.select(col(srcCol).as(nkCol))
-      val merged =
-        if (havePrev) {
-          val existing = graft.io.AtomicPublish.read(spark, starBase, name)
-          val upserted = Star.upsertDim(
-            existing.select(idCol, nkCol), incoming, idCol, nkCol)
-          // keep each existing row's original created_dt (the reference's
-          // ON CONFLICT DO NOTHING leaves conflicting rows untouched);
-          // only genuinely new keys get today's date
-          upserted
-            .join(existing.select(col(nkCol), col("created_dt")), Seq(nkCol), "left")
-            .withColumn("created_dt", coalesce(col("created_dt"), runDate(spark)))
-        } else Star.dim(silver.select(col(srcCol)), srcCol, idCol, nkCol)
-          .withColumn("created_dt", runDate(spark))
-      // checkpoint: the frame must be FROZEN before the publish — it is
-      // read again by the fact build, and (in the upsert branch) its
-      // lineage points at the previous version dir, which the publish
-      // prunes after the swap
-      name -> merged.localCheckpoint(true)
-      }
-    }
-    val factFrame = Star.factWithDims(silver,
-      dims.zip(dimFrames).map { case ((_, idCol, nkCol, _), (_, dim)) =>
-        dim.select(idCol, nkCol)
-      })
+    val dims = phase(spark, "dim-build") { upsertDims(spark, silver, starBase) }
+    val factFrame = Star.factWithKeys(silver, dims.map(_._2.map(_.swap).toMap))
       .withColumn("created_dt", runDate(spark))
-    phase(spark, "star-publish") {
+    val published = phase(spark, "star-publish") {
       graft.io.AtomicPublish.publish(spark, starBase,
-        dimFrames :+ ("fact" -> factFrame))
+        Star.Dims.zip(dims).map { case (d, (frame, _)) => d.name -> frame } :+
+          ("fact" -> factFiles(spark, factFrame)))
     }
-    val fact = graft.io.AtomicPublish.read(spark, starBase, "fact")
 
     // 3. DQ checks appended to the results dataset (fn_dq_checks_load)
     val results = phase(spark, "dq") {
+      // the published fact, read with the schema it was written with
+      val fact = spark.read.schema(factFrame.schema)
+        .parquet(s"$starBase/v$published/fact")
       val r = DqSuite.run(spark, silver, fact.drop("created_dt"))
       WindowReload.reloadResults(spark, s"$wh/dq_check_results", r, end)
       r
     }
 
     // 4. final report (final_report.py:22-43): per-table row counts —
-    //    star members resolved through the committed manifest, every
+    //    star members of the version this run published, every
     //    count served from parquet footer metadata when the dataset is
     //    metadata-sized (zero jobs; the distributed count is the
     //    fallback for tables whose file census exceeds the bound)
     phase(spark, "report") {
-    def footerOr(dir: String, df: => org.apache.spark.sql.DataFrame): Long =
+    def footerOr(dir: String, df: => DataFrame): Long =
       graft.io.FsUtil.footerRows(spark, Seq(dir)).getOrElse(df.count())
-    println(s"[runner] silver: ${WindowReload.countRows(spark, s"$wh/silver")} rows")
+    println(s"[runner] silver: $silverRows rows")
     println(s"[runner] dq_check_results: " +
       s"${footerOr(s"$wh/dq_check_results", spark.read.parquet(s"$wh/dq_check_results"))} rows")
-    val v = graft.io.AtomicPublish.committed(spark, starBase)
-    (dims.map(_._1) :+ "fact").foreach { t =>
-      println(s"[runner] $t: ${footerOr(s"$starBase/v$v/$t",
-        graft.io.AtomicPublish.read(spark, starBase, t))} rows")
+    (Star.Dims.map(_.name) :+ "fact").foreach { t =>
+      println(s"[runner] $t: ${footerOr(s"$starBase/v$published/$t",
+        spark.read.parquet(s"$starBase/v$published/$t"))} rows")
     }
     val summary = results.filter(col("check_type") === "summary")
       .select("error_message").head().getString(0)
     println(s"[runner] DQ summary: $summary")
     }
   }
+
+  /** The four dims after this run's grow-only upsert (M2, `ON CONFLICT
+    * (nk) DO NOTHING` + SERIAL), built on the driver: each dim's keys
+    * come from one aggregate over silver ([[Star.dimKeys]]), the previous
+    * version's four dims from one read, and [[Star.upsertLocal]] keeps
+    * every existing id and its `created_dt` (a rebuild would renumber
+    * ids and silently re-key every previously-written fact row) while
+    * new keys get fresh ids and today's date. Each dim is returned as a
+    * local frame (`LocalRelation`), with its (id, key) pairs: the publish
+    * writes it on the driver and the fact looks its ids up, with no job.
+    * A local frame is frozen by construction, so nothing downstream reads
+    * the previous version the publish prunes.
+    */
+  private def upsertDims(spark: SparkSession, silver: DataFrame,
+                         starBase: String): Seq[(DataFrame, Seq[(Long, String)])] = {
+    val incoming = Star.dimKeys(silver)
+    val v = graft.io.AtomicPublish.committed(spark, starBase)
+    val previous = if (v < 0) Map.empty[Int, Array[Row]] else {
+      // one job for all four, read with their known schema (no
+      // schema-inference job)
+      Star.Dims.zipWithIndex.map { case (d, i) =>
+        spark.read.schema(dimSchema(d)).parquet(s"$starBase/v$v/${d.name}")
+          .select(lit(i), col(d.idCol), col(d.nkCol), col("created_dt"))
+      }.reduce(_.union(_)).collect().groupBy(_.getInt(0))
+    }
+    Star.Dims.zip(incoming).zipWithIndex.map { case ((d, keys), i) =>
+      val prev = previous.getOrElse(i, Array.empty[Row])
+      val ids = Star.upsertLocal(
+        prev.toSeq.map(r => (r.getLong(1), r.getString(2))), keys)
+      require(ids.size <= Bcast.SafeRows,
+        s"${d.name} grew past ${Bcast.SafeRows} keys; the runner builds " +
+          "its dims on the driver and cannot hold it")
+      val created = prev.map(r => r.getString(2) -> r.get(3)).toMap
+      val rows = ids.map { case (id, nk) => Row(id, nk, created.getOrElse(nk, null)) }
+      // created_dt stays the runDate column: the optimizer folds it into
+      // the local relation, so the frame stays local
+      val frame = spark.createDataFrame(rows.asJava, dimSchema(d))
+        .withColumn("created_dt", coalesce(col("created_dt"), runDate(spark)))
+      (frame, ids)
+    }
+  }
+
+  /** The fact is written straight from silver's scan, one file per scan
+    * split, and silver is a union of reload trees each split on its own.
+    * A narrow coalesce to one split per `spark.sql.files.maxPartitionBytes`
+    * of silver keeps a warehouse of small trees from publishing many small
+    * fact files; it is no shuffle, and at production size, where the
+    * scan's splits are already that large, it changes nothing. */
+  private def factFiles(spark: SparkSession, fact: DataFrame): DataFrame = {
+    val bytes = fact.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    fact.coalesce((bytes / split + 1).min(Int.MaxValue).toInt)
+  }
+
+  private def dimSchema(d: Star.DimDef): StructType = StructType(Seq(
+    StructField(d.idCol, LongType, nullable = false),
+    StructField(d.nkCol, StringType, nullable = false),
+    StructField("created_dt", DateType)))
 }

@@ -1,24 +1,32 @@
 package graft.dq
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Bcast, Tables}
+import org.apache.spark.sql.types.{Decimal, DecimalType, LongType, StructField, StructType}
+import graft.{Bcast, JobLabel, SparkOrder, Tables}
 
 /** The reference's DQ dashboard
   * (`/root/reference/data-pipeline/src/dq_dashboard.py:22-212`): five
   * analytical queries over the check-results log — overall summary with
   * FILTER aggregates, per-type rollup, recent-10 top-k, daily trend,
-  * critical top-5 — re-expressed as DataFrames, plus a driver-side text
-  * render of the same sections ([[render]]) whose exact bytes are
-  * digest-checked against a DuckDB twin ([[renderDigest]]).
+  * critical top-5. The four lookback sections are built on the driver
+  * from ONE bounded collect of the lookback rows ([[sections]]) — the
+  * operator-fusion shape, one scan for many outputs — and served both
+  * as small local frames (`dash_summary`, `dash_by_type`, `dash_trend`,
+  * `dash_critical5`) and as a text render ([[render]]) whose exact
+  * bytes are digest-checked against a DuckDB twin ([[renderDigest]]).
+  * Every job they launch is labelled `dashboard`.
   *
   * The reference queries an append-only `t_dq_check_results` log grown
   * across many runs and anchors its lookback at `CURRENT_DATE`. For a
   * deterministic, oracle-comparable equivalent we (a) synthesize a
   * multi-day history from the `events` table ([[history]]) and (b) anchor
   * the lookback at `max(execution_date)` instead of the wall clock —
-  * a scalar subquery, exactly the `MAX(execution_date)` latest-run idiom
-  * the reference itself uses (`run_data_quality_checks.py:43-46`, A4).
+  * the `MAX(execution_date)` latest-run idiom the reference itself uses
+  * (`run_data_quality_checks.py:43-46`, A4; a scalar subquery in the
+  * oracle, the driver's anchor over the collected rows here).
   *
   * Deviations (documented): `ORDER BY execution_date DESC` top-k queries
   * get a `check_id DESC` tiebreak — the reference's order is
@@ -69,51 +77,134 @@ object Dashboard {
       |  FROM events
       |)""".stripMargin
 
-  /** history rows within the last `days` days of the anchor
-    * (`max(execution_date)::DATE - days`), the reference's
-    * `execution_date >= CURRENT_DATE - INTERVAL 'n days'` (F10, P2).
-    */
-  private def lookback(h: DataFrame, days: Int): DataFrame = {
-    val th = h.agg(
-      date_sub(max(col("execution_date")).cast("date"), days).cast("timestamp").as("th"))
-    h.crossJoin(Bcast.ifBounded(th, Bcast.OneRow)).filter(col("execution_date") >= col("th")).drop("th")
-  }
-
   private def lookbackSql(days: Int): String =
     s"execution_date >= CAST((SELECT CAST(MAX(execution_date) AS DATE) - $days FROM dq_history) AS TIMESTAMP)"
 
-  private val successRate =
-    (count(when(col("status") === "passed", 1)).cast("double") * 100.0 /
-      nullif(count(lit(1)), lit(0)).cast("double")).cast("decimal(10,2)")
+  /** One lookback row, as the sections read it: `at` and `date` are its
+    * `execution_date` and that date as Spark returns them, `micros` and
+    * `day` the same two as epoch microseconds and days, which order
+    * them, and `shown` is `at` as Spark's `date_format` renders it. */
+  private final case class Check(id: Option[Long], checkType: String,
+                                 name: String, at: Any, date: Any,
+                                 status: String, error: String, micros: Long,
+                                 day: Int, shown: String)
 
-  private def nullif(c: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
-    when(c === v, lit(null)).otherwise(c)
+  /** The history rows within the last `days` days of the anchor
+    * (`max(execution_date)::DATE - days`), the reference's
+    * `execution_date >= CURRENT_DATE - INTERVAL 'n days'` (F10, P2),
+    * collected in ONE job: each task keeps only the rows within `days`
+    * of its OWN latest day — a superset of its share of the lookback,
+    * since no task's latest day is after the global one — and the
+    * driver applies the global anchor. What reaches the driver is
+    * bounded by the window, not by the history. Also returns the
+    * history columns' schema, so the section frames keep their types.
+    */
+  private def lookbackRows(spark: SparkSession, dir: String,
+                           days: Int): (StructType, Seq[Check]) =
+    JobLabel(spark, "dashboard") {
+      val at = col("execution_date")
+      val cols = history(spark, dir).select(col("check_id"), col("check_type"),
+        col("check_name"), at, to_date(at).as("check_date"), col("status"),
+        col("error_message"), unix_micros(at), unix_date(to_date(at)),
+        // second precision: java.sql.Timestamp.toString appends a
+        // Java-only fractional part (".0") no SQL engine reproduces, and
+        // the rendered report is digest-checked against a DuckDB twin
+        date_format(at, "yyyy-MM-dd HH:mm:ss"))
+      val kept = cols.mapPartitions(latestDays(_, days))(Encoders.row(cols.schema))
+        .collect()
+      val top = kept.map(_.getInt(8)).maxOption
+      val lb = kept.toSeq.filter(r => top.exists(r.getInt(8) >= _ - days)).map { r =>
+        Check(Option.when(!r.isNullAt(0))(r.getLong(0)), r.getString(1),
+          r.getString(2), r.get(3), r.get(4), r.getString(5), r.getString(6),
+          r.getLong(7), r.getInt(8), r.getString(9))
+      }
+      (StructType(cols.schema.take(7)), lb)
+    }
 
-  private def summaryFrom(lb: DataFrame): DataFrame =
-    lb.agg(
-      count(lit(1)).as("total_checks"),
-      count(when(col("status") === "passed", 1)).as("passed_checks"),
-      count(when(col("status") === "failed", 1)).as("failed_checks"),
-      count(when(col("status") === "error", 1)).as("error_checks"),
-      successRate.as("success_rate"))
+  /** A task's rows within `days` of its latest day (field 8, the epoch
+    * day; a row without one can never pass the anchor). The buffer is
+    * pruned whenever the latest day moves, so it holds one window. */
+  private def latestDays(rows: Iterator[Row], days: Int): Iterator[Row] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var top = Int.MinValue
+    rows.filterNot(_.isNullAt(8)).foreach { r =>
+      val d = r.getInt(8)
+      if (d > top) {
+        top = d
+        buf.filterInPlace(_.getInt(8) >= top - days)
+      }
+      if (d >= top - days) buf += r
+    }
+    buf.iterator
+  }
+
+  /** Check counts of a group of lookback rows. */
+  private final case class Tally(total: Long, passed: Long, failed: Long,
+                                 errors: Long) {
+    /** Percent passed as Spark computes `CAST(passed * 100.0 /
+      * NULLIF(total, 0) AS DECIMAL(10,2))` over doubles: NULL for an
+      * empty group, rounded half-up. */
+    def rate: java.math.BigDecimal =
+      if (total == 0) null
+      else {
+        val d = Decimal(passed.toDouble * 100.0 / total.toDouble)
+        if (d.changePrecision(10, 2)) d.toJavaBigDecimal else null
+      }
+  }
+
+  private def tally(cs: Seq[Check]): Tally =
+    Tally(cs.size, cs.count(_.status == "passed"), cs.count(_.status == "failed"),
+      cs.count(_.status == "error"))
+
+  /** The dashboard's four sections, all built on the driver from one
+    * collect of the lookback: overall summary with FILTER aggregates
+    * (`dq_dashboard.py:30-39`), per-type rollup (`:66-79`) and daily
+    * trend (`:120-131`) over the non-summary checks, and the critical
+    * top-n (`:147-157`), newest first with a `check_id DESC` tiebreak. */
+  private final case class Sections(schema: StructType, summary: Tally,
+                                    byType: Seq[(String, Tally)],
+                                    trend: Seq[(Any, Tally)],
+                                    critical: Seq[Check])
+
+  private def sections(spark: SparkSession, dir: String, days: Int,
+                       n: Int = 5): Sections = {
+    val (schema, lb) = lookbackRows(spark, dir, days)
+    // `check_type != 'summary'` is NULL, so false, for a NULL type
+    val typed = lb.filter(c => c.checkType != null && c.checkType != "summary")
+    val newestFirst = Ordering.by[Check, (Long, Option[Long])](c => (c.micros, c.id)).reverse
+    Sections(schema, tally(lb),
+      typed.groupBy(_.checkType).toSeq.sortBy(_._1)(SparkOrder.strings)
+        .map { case (t, cs) => t -> tally(cs) },
+      typed.groupBy(_.day).toSeq.sortBy(_._1)
+        .map { case (_, cs) => cs.head.date -> tally(cs) },
+      lb.filter(c => c.status == "failed" || c.status == "error")
+        .sorted(newestFirst).take(n))
+  }
+
+  private def local(spark: SparkSession, fields: Seq[StructField],
+                    rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
+  private def counts(names: String*): Seq[StructField] =
+    names.map(StructField(_, LongType, nullable = false))
+
+  private def rateField(name: String) = StructField(name, DecimalType(10, 2))
 
   /** Overall summary with FILTER aggregates (`dq_dashboard.py:30-39`). */
-  def summary(spark: SparkSession, dir: String, days: Int = 7): DataFrame =
-    summaryFrom(lookback(history(spark, dir), days))
-
-  private def byTypeFrom(lb: DataFrame): DataFrame =
-    lb.filter(col("check_type") =!= "summary")
-      .groupBy("check_type").agg(
-        count(lit(1)).as("total"),
-        count(when(col("status") === "passed", 1)).as("passed"),
-        count(when(col("status") === "failed", 1)).as("failed"),
-        count(when(col("status") === "error", 1)).as("errors"),
-        successRate.as("success_rate"))
-      .orderBy("check_type")
+  def summary(spark: SparkSession, dir: String, days: Int = 7): DataFrame = {
+    val s = sections(spark, dir, days).summary
+    local(spark, counts("total_checks", "passed_checks", "failed_checks",
+      "error_checks") :+ rateField("success_rate"),
+      Seq(Row(s.total, s.passed, s.failed, s.errors, s.rate)))
+  }
 
   /** Per-type rollup (`dq_dashboard.py:66-79`). */
-  def byType(spark: SparkSession, dir: String, days: Int = 7): DataFrame =
-    byTypeFrom(lookback(history(spark, dir), days))
+  def byType(spark: SparkSession, dir: String, days: Int = 7): DataFrame = {
+    val s = sections(spark, dir, days)
+    local(spark, s.schema("check_type") +: counts("total", "passed",
+      "failed", "errors") :+ rateField("success_rate"),
+      s.byType.map { case (t, c) => Row(t, c.total, c.passed, c.failed, c.errors, c.rate) })
+  }
 
   /** Recent-10 check results (`dq_dashboard.py:94-104`), deterministic
     * tiebreak on check_id.
@@ -125,27 +216,20 @@ object Dashboard {
       .select("check_name", "status", "execution_date", "error_message")
       .limit(n)
 
-  private def trendFrom(lb: DataFrame): DataFrame =
-    lb.filter(col("check_type") =!= "summary")
-      .groupBy(to_date(col("execution_date")).as("check_date")).agg(
-        count(lit(1)).as("total_checks"),
-        count(when(col("status") === "passed", 1)).as("passed_checks"),
-        successRate.as("daily_success_rate"))
-      .orderBy("check_date")
-
   /** Daily success-rate trend (`dq_dashboard.py:120-131`). */
-  def trend(spark: SparkSession, dir: String, days: Int = 7): DataFrame =
-    trendFrom(lookback(history(spark, dir), days))
-
-  private def criticalFrom(lb: DataFrame, n: Int): DataFrame =
-    lb.filter(col("status").isin("failed", "error"))
-      .orderBy(col("execution_date").desc, col("check_id").desc)
-      .select("check_name", "error_message", "execution_date")
-      .limit(n)
+  def trend(spark: SparkSession, dir: String, days: Int = 7): DataFrame = {
+    val s = sections(spark, dir, days)
+    local(spark, s.schema("check_date") +: counts("total_checks",
+      "passed_checks") :+ rateField("daily_success_rate"),
+      s.trend.map { case (d, c) => Row(d, c.total, c.passed, c.rate) })
+  }
 
   /** Critical issues top-5 (`dq_dashboard.py:147-157`). */
-  def critical(spark: SparkSession, dir: String, days: Int = 7, n: Int = 5): DataFrame =
-    criticalFrom(lookback(history(spark, dir), days), n)
+  def critical(spark: SparkSession, dir: String, days: Int = 7, n: Int = 5): DataFrame = {
+    val s = sections(spark, dir, days, n)
+    local(spark, Seq("check_name", "error_message", "execution_date").map(s.schema(_)),
+      s.critical.map(c => Row(c.name, c.error, c.at)))
+  }
 
   /** A4/O1 — latest-run selection via MAX scalar subquery + stable
     * check_id ordering (`run_data_quality_checks.py:40-48`), by run date.
@@ -167,56 +251,40 @@ object Dashboard {
 
   /** Driver-side text rendering (`dq_dashboard.py:47-63,88-92,...`):
     * summary with a pass/fail progress bar, per-type table, daily trend
-    * with arrows, critical issues — the reference's console dashboard.
-    * Only the five small aggregate results reach the driver.
+    * with arrows, critical issues — the reference's console dashboard,
+    * from the same [[sections]] the `dash_*` entries serve.
     */
   def render(spark: SparkSession, dir: String, days: Int = 7): String = {
-    // history + lookback computed ONCE for all four sections — the naive
-    // per-section calls would rescan the events table eight times
-    val lb = lookback(history(spark, dir), days).persist()
-    try renderFrom(lb, days)
-    finally lb.unpersist()
-  }
-
-  private def renderFrom(lb: DataFrame, days: Int): String = {
+    val s = sections(spark, dir, days)
     val sb = new StringBuilder
-    val sumRow = summaryFrom(lb).head()
-    val (total, passed, failed, errors) =
-      (sumRow.getLong(0), sumRow.getLong(1), sumRow.getLong(2), sumRow.getLong(3))
-    val rate = Option(sumRow.getDecimal(4)).fold("n/a")(_.toString)
+    val sum = s.summary
+    val rate = Option(sum.rate).fold("n/a")(_.toString)
     sb.append(s"Period: last $days days\n")
-    sb.append(s"Total checks: $total\nPassed: $passed ($rate%)\n")
-    sb.append(s"Failed: $failed\nErrors: $errors\n")
-    if (total > 0) {
+    sb.append(s"Total checks: ${sum.total}\nPassed: ${sum.passed} ($rate%)\n")
+    sb.append(s"Failed: ${sum.failed}\nErrors: ${sum.errors}\n")
+    if (sum.total > 0) {
       val width = 40
-      val p = (passed * width / total).toInt
-      val f = (failed * width / total).toInt
+      val p = (sum.passed * width / sum.total).toInt
+      val f = (sum.failed * width / sum.total).toInt
       sb.append("Progress: [" + "#" * p + "-" * f + " " * (width - p - f) + "]\n")
     }
     sb.append("\nBy check type:\n")
-    byTypeFrom(lb).collect().foreach { r =>
-      sb.append(f"  ${r.getString(0)}%-15s total=${r.getLong(1)}%-5d passed=${r.getLong(2)}%-5d failed=${r.getLong(3)}%-5d errors=${r.getLong(4)}%-5d ${r.getDecimal(5)}%s%%\n")
+    s.byType.foreach { case (t, c) =>
+      sb.append(f"  $t%-15s total=${c.total}%-5d passed=${c.passed}%-5d failed=${c.failed}%-5d errors=${c.errors}%-5d ${c.rate}%s%%\n")
     }
     sb.append("\nDaily trend:\n")
-    trendFrom(lb).collect().foreach { r =>
-      val rr = r.getDecimal(3)
+    s.trend.foreach { case (d, c) =>
+      val rr = c.rate
       val arrow =
         if (rr == null) "?"
         else if (rr.doubleValue >= 95) "up"
         else if (rr.doubleValue <= 80) "down" else "flat"
-      sb.append(s"  ${r.getDate(0)} checks=${r.getLong(1)} passed=${r.getLong(2)} rate=$rr% [$arrow]\n")
+      sb.append(s"  $d checks=${c.total} passed=${c.passed} rate=$rr% [$arrow]\n")
     }
     sb.append("\nCritical issues:\n")
-    // execution_date rendered via an explicit second-precision pattern:
-    // java.sql.Timestamp.toString appends a Java-only fractional part
-    // (".0") no SQL engine reproduces, and the rendered report is itself
-    // digest-checked against a DuckDB twin (dash_render)
-    criticalFrom(lb, 5)
-      .select(col("check_name"), col("error_message"),
-        date_format(col("execution_date"), "yyyy-MM-dd HH:mm:ss").as("ed"))
-      .collect().zipWithIndex.foreach { case (r, i) =>
-        sb.append(s"  ${i + 1}. ${r.getString(0)} (${r.getString(2)}) ${Option(r.getString(1)).getOrElse("")}\n")
-      }
+    s.critical.zipWithIndex.foreach { case (c, i) =>
+      sb.append(s"  ${i + 1}. ${c.name} (${c.shown}) ${Option(c.error).getOrElse("")}\n")
+    }
     sb.toString
   }
 
@@ -230,13 +298,9 @@ object Dashboard {
     * timestamp formatting included, is oracle-checked rather than
     * display-only.
     *
-    * NOTE: eager by design — invoking this runs [[render]]'s four
-    * bounded collects immediately (a few hundred rows of DQ log), unlike
-    * the other entries which stay lazy until the driver writes them. It
-    * also recomputes the sections that dash_summary/by_type/trend/
-    * critical5 compute as standalone queries: the digest must cover the
-    * text EXACTLY as a user would print it, so it cannot share their
-    * doublified output frames.
+    * NOTE: eager, like every lookback entry — invoking this runs
+    * [[render]]'s one bounded collect immediately (a few hundred rows of
+    * DQ log).
     */
   def renderDigest(spark: SparkSession, dir: String, days: Int = 7): DataFrame = {
     val text = render(spark, dir, days)

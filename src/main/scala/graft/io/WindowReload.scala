@@ -358,15 +358,15 @@ object WindowReload {
     * (`fn_dq_checks_load.sql:15-17`): delete results whose run date falls
     * in the window, insert this run's rows. Partitioned by `run_date`, so
     * the purge is a pure partition overwrite (no straddlers: the predicate
-    * is on the partition column itself).
+    * is on the partition column itself). Dynamic overwrite is set on this
+    * write alone; the caller's session keeps its own mode.
     */
   def reloadResults(spark: SparkSession,
                     targetPath: String,
                     results: DataFrame,
-                    runDate: LocalDate): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+                    runDate: LocalDate): Unit =
     results
       .withColumn("run_date", lit(java.sql.Date.valueOf(runDate)))
-      .write.mode("overwrite").partitionBy("run_date").parquet(targetPath)
-  }
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("run_date").parquet(targetPath)
 }

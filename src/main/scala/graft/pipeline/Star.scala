@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.Bcast
+import graft.{Bcast, SparkOrder}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,27 @@ import org.apache.spark.sql.functions._
   * The four dims are tiny, so Catalyst auto-broadcasts each join side
   * (`autoBroadcastJoinThreshold`) — the fact is never shuffled; the plan is
   * scan → 4 BroadcastHashJoins → project, all in one codegen stage.
+  *
+  * The runner (`PipelineRunner.run`) builds the same dims on the driver
+  * instead: [[dimKeys]] takes every dim's keys from one aggregate over
+  * silver, [[upsertLocal]] is the driver twin of [[dim]] and
+  * [[upsertDim]], and [[factWithKeys]] resolves the fact's foreign keys
+  * by hash lookup in those driver-held dims — a scan, a projection and a
+  * write, with no join, no shuffle and no broadcast job.
   */
 object Star {
+
+  /** A dim of the star: its dataset name, surrogate id column, natural
+    * key column, and the silver column the natural key comes from. */
+  final case class DimDef(name: String, idCol: String, nkCol: String, source: String)
+
+  /** The four dims, in the order [[factWithDims]] and [[factWithKeys]]
+    * take them. */
+  val Dims: Seq[DimDef] = Seq(
+    DimDef("dim_customer", "customer_id", "customer_name", "user_name"),
+    DimDef("dim_product", "product_id", "product_category", "product_category"),
+    DimDef("dim_region", "region_id", "region_name", "region"),
+    DimDef("dim_status", "status_id", "status_name", "customer_status"))
 
   /** One dimension: distinct natural keys with deterministic surrogate ids.
     * NULL natural keys are excluded — the reference dims declare the key
@@ -70,6 +89,45 @@ object Star {
         (col("mx") + row_number().over(Window.orderBy(col(nkCol)))).cast("long"))
       .select(col(idCol), col(nkCol))
     existing.select(col(idCol), col(nkCol)).union(assigned)
+  }
+
+  /** Every dim's distinct non-NULL natural keys (in [[Dims]] order) from
+    * ONE aggregate over silver: the four key columns are exploded into
+    * (dim, key) pairs and deduplicated together — one shuffle, not one
+    * per dim. The collect stops at `Dims.size × (SafeRows + 1)` pairs,
+    * so either every key reaches the driver or some dim shows more than
+    * `SafeRows` keys and the build fails here. In the runner the dims
+    * are closed domains by Bronze's construction (`user_name` is
+    * `'User ' || custkey % 100`: at most 100 keys).
+    */
+  def dimKeys(silver: DataFrame): Seq[Seq[String]] = {
+    val pairs = explode(array(Dims.zipWithIndex.map { case (d, i) =>
+      struct(lit(i).as("dim"), col(d.source).as("nk"))
+    }: _*))
+    val got = silver.select(pairs.as("p")).select("p.*")
+      .filter(col("nk").isNotNull).distinct()
+      .limit(Dims.size * (Bcast.SafeRows.toInt + 1)).collect()
+      .groupBy(_.getInt(0))
+    Dims.indices.map { i =>
+      val keys = got.getOrElse(i, Array.empty).map(_.getString(1)).toSeq
+      require(keys.size <= Bcast.SafeRows,
+        s"${Dims(i).name} has more than ${Bcast.SafeRows} natural keys; " +
+          "the runner builds its dims on the driver and cannot hold it")
+      keys
+    }
+  }
+
+  /** Driver-side twin of [[upsertDim]], and of [[dim]] when `existing`
+    * is empty: existing (id, key) pairs are kept as they are; each new
+    * distinct key gets `max(existing id, 0) + rank`, ranked in Spark's
+    * string order ([[SparkOrder.strings]]), exactly as the window does. */
+  def upsertLocal(existing: Seq[(Long, String)],
+                  incoming: Seq[String]): Seq[(Long, String)] = {
+    val known = existing.iterator.map(_._2).toSet
+    val fresh = incoming.iterator.filter(k => k != null && !known(k)).toSeq
+      .distinct.sorted(SparkOrder.strings)
+    val top = existing.iterator.map(_._1).maxOption.getOrElse(0L)
+    existing ++ fresh.zipWithIndex.map { case (k, i) => (top + i + 1, k) }
   }
 
   /** Driver-visible M2 incremental proof: build the customer dim from the
@@ -128,9 +186,11 @@ object Star {
     */
   def factWithDims(silver: DataFrame, dims: Seq[DataFrame]): DataFrame = {
     require(dims.size == 4, "expected customer, product, region, status dims")
-    // customer/product dims grow with the corpus — unhinted, so the
-    // stats/AQE path broadcasts them only while they actually fit;
-    // region/status are closed domains and keep the hint
+    // customer/product carry no proven bound here (any caller's dims) —
+    // unhinted, so the stats/AQE path broadcasts them only while they
+    // actually fit; region/status are closed domains and keep the hint.
+    // (The runner's dims are all closed domains by Bronze's
+    // construction; it resolves them with factWithKeys.)
     val c = Bcast.ifBounded(dims(0), Bcast.Linear)
     val p = Bcast.ifBounded(dims(1), Bcast.Linear)
     val r = Bcast.ifBounded(dims(2), Bcast.Domain)
@@ -140,13 +200,33 @@ object Star {
       .join(p, silver("product_category") === p("product_category"), "left")
       .join(r, silver("region") === r("region_name"), "left")
       .join(st, silver("customer_status") === st("status_name"), "left")
-      .select(
-        silver("id").as("fact_id"),
-        c("customer_id"), p("product_id"), r("region_id"), st("status_id"),
-        silver("age"), silver("salary"), silver("purchase_amount"),
-        silver("transaction_count"), silver("effective_from"),
-        silver("effective_to"), silver("current_flag"))
+      .select(factColumns(silver,
+        Seq(c("customer_id"), p("product_id"), r("region_id"), st("status_id"))): _*)
   }
+
+  /** Fact build against dims the driver holds, each a natural key →
+    * surrogate id map in [[Dims]] order (the runner's). Each foreign key
+    * is a hash lookup in one broadcast variable: the same LEFT equi-join
+    * on a unique key as [[factWithDims]] (a NULL or unknown key gives a
+    * NULL id), without a join, a shuffle or a broadcast-exchange job —
+    * the fact is one scan, projection and write.
+    */
+  def factWithKeys(silver: DataFrame, dims: Seq[Map[String, Long]]): DataFrame = {
+    require(dims.size == Dims.size, "expected customer, product, region, status dims")
+    val held = silver.sparkSession.sparkContext.broadcast(dims.toIndexedSeq)
+    val ids = Dims.zipWithIndex.map { case (d, i) =>
+      val id = udf((nk: String) => Option(nk).flatMap(held.value(i).get))
+      id(silver(d.source)).as(d.idCol)
+    }
+    silver.select(factColumns(silver, ids): _*)
+  }
+
+  /** The fact's columns: the source row id, the four foreign keys, then
+    * the measures and validity columns from silver. */
+  private def factColumns(silver: DataFrame, ids: Seq[Column]): Seq[Column] =
+    (silver("id").as("fact_id") +: ids) ++
+      Seq("age", "salary", "purchase_amount", "transaction_count",
+        "effective_from", "effective_to", "current_flag").map(silver(_))
 
   /** DuckDB oracle rendering of dims + fact over a `silver` CTE. */
   val sqlCte: String =

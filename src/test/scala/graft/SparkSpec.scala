@@ -11,16 +11,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Spark jobs started by `body`, counted between two marker jobs so
     * asynchronous listener delivery cannot blur the edges. */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobDescriptions(body).size
+
+  /** The description of every Spark job `body` starts ("" for a job
+    * without one), in start order, between the same two marker jobs. */
+  def jobDescriptions(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val marks = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.job.description") == "spec-mark")
-          marks.incrementAndGet()
-        else if (marks.get() == 1) jobs.incrementAndGet()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (desc == "spec-mark") marks.incrementAndGet()
+        else if (marks.get() == 1) jobs.add(desc)
+      }
     }
     def mark(n: Int): Unit = {
       sc.setJobDescription("spec-mark")
@@ -31,7 +36,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     sc.addSparkListener(l)
     try { mark(1); body; mark(2) } finally sc.removeSparkListener(l)
-    jobs.get()
+    jobs.toArray(Array.empty[String]).toSeq
   }
 }
 

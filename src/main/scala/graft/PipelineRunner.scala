@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 import graft.dq.DqSuite
-import graft.io.WindowReload
+import graft.io.{AtomicPublish, WindowReload}
 import graft.pipeline.{Bronze, Pipeline, Silver, Star}
 
 /** The reference's `main.py` end-to-end pipeline
@@ -109,16 +109,16 @@ object PipelineRunner {
     val factFrame = Star.factWithKeys(silver, dims.map(_._2.map(_.swap).toMap))
       .withColumn("created_dt", runDate(spark))
     val published = phase(spark, "star-publish") {
-      graft.io.AtomicPublish.publish(spark, starBase,
+      AtomicPublish.publish(spark, starBase,
         Star.Dims.zip(dims).map { case (d, (frame, _)) => d.name -> frame } :+
-          ("fact" -> factFiles(spark, factFrame)))
+          ("fact" -> factFrame))
     }
 
     // 3. DQ checks appended to the results dataset (fn_dq_checks_load)
     val results = phase(spark, "dq") {
       // the published fact, read with the schema it was written with
-      val fact = spark.read.schema(factFrame.schema)
-        .parquet(s"$starBase/v$published/fact")
+      val fact = AtomicPublish.readVersion(spark, starBase, "fact", published,
+        Some(factFrame.schema))
       val r = DqSuite.run(spark, silver, fact.drop("created_dt"))
       WindowReload.reloadResults(spark, s"$wh/dq_check_results", r, end)
       r
@@ -136,8 +136,8 @@ object PipelineRunner {
     println(s"[runner] dq_check_results: " +
       s"${footerOr(s"$wh/dq_check_results", spark.read.parquet(s"$wh/dq_check_results"))} rows")
     (Star.Dims.map(_.name) :+ "fact").foreach { t =>
-      println(s"[runner] $t: ${footerOr(s"$starBase/v$published/$t",
-        spark.read.parquet(s"$starBase/v$published/$t"))} rows")
+      println(s"[runner] $t: ${footerOr(AtomicPublish.memberDir(starBase, published, t),
+        AtomicPublish.readVersion(spark, starBase, t, published))} rows")
     }
     val summary = results.filter(col("check_type") === "summary")
       .select("error_message").head().getString(0)
@@ -160,12 +160,12 @@ object PipelineRunner {
   private def upsertDims(spark: SparkSession, silver: DataFrame,
                          starBase: String): Seq[(DataFrame, Seq[(Long, String)])] = {
     val incoming = Star.dimKeys(silver)
-    val v = graft.io.AtomicPublish.committed(spark, starBase)
+    val v = AtomicPublish.committed(spark, starBase)
     val previous = if (v < 0) Map.empty[Int, Array[Row]] else {
       // one job for all four, read with their known schema (no
       // schema-inference job)
       Star.Dims.zipWithIndex.map { case (d, i) =>
-        spark.read.schema(dimSchema(d)).parquet(s"$starBase/v$v/${d.name}")
+        AtomicPublish.readVersion(spark, starBase, d.name, v, Some(dimSchema(d)))
           .select(lit(i), col(d.idCol), col(d.nkCol), col("created_dt"))
       }.reduce(_.union(_)).collect().groupBy(_.getInt(0))
     }
@@ -184,18 +184,6 @@ object PipelineRunner {
         .withColumn("created_dt", coalesce(col("created_dt"), runDate(spark)))
       (frame, ids)
     }
-  }
-
-  /** The fact is written straight from silver's scan, one file per scan
-    * split, and silver is a union of reload trees each split on its own.
-    * A narrow coalesce to one split per `spark.sql.files.maxPartitionBytes`
-    * of silver keeps a warehouse of small trees from publishing many small
-    * fact files; it is no shuffle, and at production size, where the
-    * scan's splits are already that large, it changes nothing. */
-  private def factFiles(spark: SparkSession, fact: DataFrame): DataFrame = {
-    val bytes = fact.queryExecution.optimizedPlan.stats.sizeInBytes
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    fact.coalesce((bytes / split + 1).min(Int.MaxValue).toInt)
   }
 
   private def dimSchema(d: Star.DimDef): StructType = StructType(Seq(

@@ -2,7 +2,7 @@ package graft.dq
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Decimal, DecimalType, LongType, StructField, StructType}
 import graft.{Bcast, JobLabel, SparkOrder, Tables}
@@ -12,7 +12,8 @@ import graft.{Bcast, JobLabel, SparkOrder, Tables}
   * analytical queries over the check-results log — overall summary with
   * FILTER aggregates, per-type rollup, recent-10 top-k, daily trend,
   * critical top-5. The four lookback sections are built on the driver
-  * from ONE bounded collect of the lookback rows ([[sections]]) — the
+  * from ONE scan of the history whose tasks return per-type, per-day
+  * check counts and their newest failures ([[sections]]) — the
   * operator-fusion shape, one scan for many outputs — and served both
   * as small local frames (`dash_summary`, `dash_by_type`, `dash_trend`,
   * `dash_critical5`) and as a text render ([[render]]) whose exact
@@ -26,7 +27,7 @@ import graft.{Bcast, JobLabel, SparkOrder, Tables}
   * the lookback at `max(execution_date)` instead of the wall clock —
   * the `MAX(execution_date)` latest-run idiom the reference itself uses
   * (`run_data_quality_checks.py:43-46`, A4; a scalar subquery in the
-  * oracle, the driver's anchor over the collected rows here).
+  * oracle, the driver's anchor over the tasks' partial results here).
   *
   * Deviations (documented): `ORDER BY execution_date DESC` top-k queries
   * get a `check_id DESC` tiebreak — the reference's order is
@@ -80,67 +81,24 @@ object Dashboard {
   private def lookbackSql(days: Int): String =
     s"execution_date >= CAST((SELECT CAST(MAX(execution_date) AS DATE) - $days FROM dq_history) AS TIMESTAMP)"
 
-  /** One lookback row, as the sections read it: `at` and `date` are its
-    * `execution_date` and that date as Spark returns them, `micros` and
-    * `day` the same two as epoch microseconds and days, which order
-    * them, and `shown` is `at` as Spark's `date_format` renders it. */
-  private final case class Check(id: Option[Long], checkType: String,
-                                 name: String, at: Any, date: Any,
-                                 status: String, error: String, micros: Long,
-                                 day: Int, shown: String)
+  /** One lookback row, as the critical section reads it: `at` is its
+    * `execution_date` as Spark returns it, `micros` and `day` the same
+    * instant as epoch microseconds and its epoch day, which order it, and
+    * `shown` is `at` as Spark's `date_format` renders it. */
+  private final case class Check(id: Option[Long], name: String, at: Any,
+                                 error: String, micros: Long, day: Int,
+                                 shown: String)
 
-  /** The history rows within the last `days` days of the anchor
-    * (`max(execution_date)::DATE - days`), the reference's
-    * `execution_date >= CURRENT_DATE - INTERVAL 'n days'` (F10, P2),
-    * collected in ONE job: each task keeps only the rows within `days`
-    * of its OWN latest day — a superset of its share of the lookback,
-    * since no task's latest day is after the global one — and the
-    * driver applies the global anchor. What reaches the driver is
-    * bounded by the window, not by the history. Also returns the
-    * history columns' schema, so the section frames keep their types.
-    */
-  private def lookbackRows(spark: SparkSession, dir: String,
-                           days: Int): (StructType, Seq[Check]) =
-    JobLabel(spark, "dashboard") {
-      val at = col("execution_date")
-      val cols = history(spark, dir).select(col("check_id"), col("check_type"),
-        col("check_name"), at, to_date(at).as("check_date"), col("status"),
-        col("error_message"), unix_micros(at), unix_date(to_date(at)),
-        // second precision: java.sql.Timestamp.toString appends a
-        // Java-only fractional part (".0") no SQL engine reproduces, and
-        // the rendered report is digest-checked against a DuckDB twin
-        date_format(at, "yyyy-MM-dd HH:mm:ss"))
-      val kept = cols.mapPartitions(latestDays(_, days))(Encoders.row(cols.schema))
-        .collect()
-      val top = kept.map(_.getInt(8)).maxOption
-      val lb = kept.toSeq.filter(r => top.exists(r.getInt(8) >= _ - days)).map { r =>
-        Check(Option.when(!r.isNullAt(0))(r.getLong(0)), r.getString(1),
-          r.getString(2), r.get(3), r.get(4), r.getString(5), r.getString(6),
-          r.getLong(7), r.getInt(8), r.getString(9))
-      }
-      (StructType(cols.schema.take(7)), lb)
-    }
-
-  /** A task's rows within `days` of its latest day (field 8, the epoch
-    * day; a row without one can never pass the anchor). The buffer is
-    * pruned whenever the latest day moves, so it holds one window. */
-  private def latestDays(rows: Iterator[Row], days: Int): Iterator[Row] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var top = Int.MinValue
-    rows.filterNot(_.isNullAt(8)).foreach { r =>
-      val d = r.getInt(8)
-      if (d > top) {
-        top = d
-        buf.filterInPlace(_.getInt(8) >= top - days)
-      }
-      if (d >= top - days) buf += r
-    }
-    buf.iterator
-  }
+  /** Newest first, with the `check_id DESC` tiebreak (a NULL id last). */
+  private val newestFirst: Ordering[Check] =
+    Ordering.by[Check, (Long, Option[Long])](c => (c.micros, c.id)).reverse
 
   /** Check counts of a group of lookback rows. */
   private final case class Tally(total: Long, passed: Long, failed: Long,
                                  errors: Long) {
+    def +(o: Tally): Tally =
+      Tally(total + o.total, passed + o.passed, failed + o.failed, errors + o.errors)
+
     /** Percent passed as Spark computes `CAST(passed * 100.0 /
       * NULLIF(total, 0) AS DECIMAL(10,2))` over doubles: NULL for an
       * empty group, rounded half-up. */
@@ -152,34 +110,93 @@ object Dashboard {
       }
   }
 
-  private def tally(cs: Seq[Check]): Tally =
-    Tally(cs.size, cs.count(_.status == "passed"), cs.count(_.status == "failed"),
-      cs.count(_.status == "error"))
+  private val noChecks = Tally(0, 0, 0, 0)
 
-  /** The dashboard's four sections, all built on the driver from one
-    * collect of the lookback: overall summary with FILTER aggregates
-    * (`dq_dashboard.py:30-39`), per-type rollup (`:66-79`) and daily
-    * trend (`:120-131`) over the non-summary checks, and the critical
-    * top-n (`:147-157`), newest first with a `check_id DESC` tiebreak. */
+  private def tallyOf(status: String): Tally = status match {
+    case "passed" => Tally(1, 1, 0, 0)
+    case "failed" => Tally(1, 0, 1, 0)
+    case "error" => Tally(1, 0, 0, 1)
+    case _ => Tally(1, 0, 0, 0)
+  }
+
+  /** What one task returns of its history rows: its latest epoch day
+    * (`top`), the check counts per (check_type, day) of its rows within
+    * `days` of that day, each such day's date as Spark returns it, and
+    * its n newest failed/error rows. All of it is bounded by the check
+    * types, the window and n — not by how many rows the history holds. */
+  private final case class Partial(top: Int, tallies: Map[(String, Int), Tally],
+                                   dates: Map[Int, Any], newest: Seq[Check])
+
+  /** Fold one task's rows (the columns [[sections]] scans) into its
+    * [[Partial]]. A row without a day can never pass the anchor. */
+  private def partial(rows: Iterator[Row], days: Int, n: Int): Partial = {
+    val tallies = scala.collection.mutable.HashMap.empty[(String, Int), Tally]
+    val dates = scala.collection.mutable.HashMap.empty[Int, Any]
+    // a bounded heap whose head is the oldest of the n kept
+    val heap = scala.collection.mutable.PriorityQueue.empty[Check](newestFirst)
+    var top = Int.MinValue
+    rows.filterNot(_.isNullAt(6)).foreach { r =>
+      val day = r.getInt(6)
+      top = top max day
+      val key = (r.getString(1), day)
+      tallies(key) = tallies.getOrElse(key, noChecks) + tallyOf(r.getString(4))
+      dates.getOrElseUpdate(day, r.get(3))
+      if (r.getString(4) == "failed" || r.getString(4) == "error") {
+        val c = Check(Option.when(!r.isNullAt(0))(r.getLong(0)), r.getString(2),
+          r.get(7), r.getString(5), r.getLong(8), day, r.getString(9))
+        if (heap.size < n) heap += c
+        else if (n > 0 && newestFirst.lt(c, heap.head)) { heap.dequeue(); heap += c }
+      }
+    }
+    Partial(top, tallies.filter(_._1._2 >= top - days).toMap,
+      dates.filter(_._1 >= top - days).toMap, heap.toSeq)
+  }
+
+  /** The dashboard's four sections, all built on the driver: overall
+    * summary with FILTER aggregates (`dq_dashboard.py:30-39`), per-type
+    * rollup (`:66-79`) and daily trend (`:120-131`) over the non-summary
+    * checks, and the critical top-n (`:147-157`), newest first with a
+    * `check_id DESC` tiebreak. */
   private final case class Sections(schema: StructType, summary: Tally,
                                     byType: Seq[(String, Tally)],
                                     trend: Seq[(Any, Tally)],
                                     critical: Seq[Check])
 
+  /** The sections over the history rows within the last `days` days of
+    * the anchor (`max(execution_date)::DATE - days`), the reference's
+    * `execution_date >= CURRENT_DATE - INTERVAL 'n days'` (F10, P2), in
+    * ONE job: each task folds its rows into a [[Partial]], keeping only
+    * the days within `days` of its OWN latest day — a superset of its
+    * share of the lookback, since no task's latest day is after the
+    * global one — and the driver applies the global anchor to the
+    * partials. The top-n within the lookback is the top-n of the tasks'
+    * top-n rows that pass the anchor, since the lookback holds every row
+    * newer than any row it holds. Also returns the scanned columns'
+    * schema, so the section frames keep their types. */
   private def sections(spark: SparkSession, dir: String, days: Int,
-                       n: Int = 5): Sections = {
-    val (schema, lb) = lookbackRows(spark, dir, days)
-    // `check_type != 'summary'` is NULL, so false, for a NULL type
-    val typed = lb.filter(c => c.checkType != null && c.checkType != "summary")
-    val newestFirst = Ordering.by[Check, (Long, Option[Long])](c => (c.micros, c.id)).reverse
-    Sections(schema, tally(lb),
-      typed.groupBy(_.checkType).toSeq.sortBy(_._1)(SparkOrder.strings)
-        .map { case (t, cs) => t -> tally(cs) },
-      typed.groupBy(_.day).toSeq.sortBy(_._1)
-        .map { case (_, cs) => cs.head.date -> tally(cs) },
-      lb.filter(c => c.status == "failed" || c.status == "error")
-        .sorted(newestFirst).take(n))
-  }
+                       n: Int = 5): Sections =
+    JobLabel(spark, "dashboard") {
+      val at = col("execution_date")
+      val cols = history(spark, dir).select(col("check_id"), col("check_type"),
+        col("check_name"), to_date(at).as("check_date"), col("status"),
+        col("error_message"), unix_date(to_date(at)), at, unix_micros(at),
+        // second precision: java.sql.Timestamp.toString appends a
+        // Java-only fractional part (".0") no SQL engine reproduces, and
+        // the rendered report is digest-checked against a DuckDB twin
+        date_format(at, "yyyy-MM-dd HH:mm:ss"))
+      val parts = cols.rdd.mapPartitions(rows => Iterator(partial(rows, days, n))).collect()
+      val from = parts.map(_.top).maxOption.getOrElse(Int.MaxValue) - days
+      val window = parts.flatMap(_.tallies).filter(_._1._2 >= from).toSeq
+        .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      // `check_type != 'summary'` is NULL, so false, for a NULL type
+      val typed = window.filter { case ((t, _), _) => t != null && t != "summary" }
+      val date = parts.flatMap(_.dates).toMap
+      Sections(cols.schema, window.map(_._2).foldLeft(noChecks)(_ + _),
+        typed.groupMapReduce(_._1._1)(_._2)(_ + _).toSeq.sortBy(_._1)(SparkOrder.strings),
+        typed.groupMapReduce(_._1._2)(_._2)(_ + _).toSeq.sortBy(_._1)
+          .map { case (d, c) => date(d) -> c },
+        parts.flatMap(_.newest).filter(_.day >= from).sorted(newestFirst).take(n).toSeq)
+    }
 
   private def local(spark: SparkSession, fields: Seq[StructField],
                     rows: Seq[Row]): DataFrame =
@@ -299,8 +316,7 @@ object Dashboard {
     * display-only.
     *
     * NOTE: eager, like every lookback entry — invoking this runs
-    * [[render]]'s one bounded collect immediately (a few hundred rows of
-    * DQ log).
+    * [[render]]'s one history scan immediately.
     */
   def renderDigest(spark: SparkSession, dir: String, days: Int = 7): DataFrame = {
     val text = render(spark, dir, days)

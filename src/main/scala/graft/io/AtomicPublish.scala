@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A version that is not readable: pruned by retention, or never sealed.
   * Typed so a writer whose parent was pruned under it by a competing
@@ -243,19 +244,25 @@ object AtomicPublish {
   def read(spark: SparkSession, base: String, name: String): DataFrame = {
     val v = committed(spark, base)
     require(v >= 0, s"no committed version under $base")
-    spark.read.parquet(s"$base/v$v/$name")
+    spark.read.parquet(memberDir(base, v, name))
   }
 
   /** Time-travel read: dataset `name` AS OF `version`. Only versions a
     * `retain` window kept are readable; a pruned or never-sealed
     * version fails fast ([[VersionNotPublishedException]]) rather than
-    * returning a partial directory.
+    * returning a partial directory. A caller that knows the dataset's
+    * `schema` passes it, so the read infers none (no listing job).
     */
   def readVersion(spark: SparkSession, base: String, name: String,
-                  version: Long): DataFrame = {
+                  version: Long,
+                  schema: Option[StructType] = None): DataFrame = {
     seal(spark, base, version)
-    spark.read.parquet(s"$base/v$version/$name")
+    schema.fold(spark.read)(spark.read.schema).parquet(memberDir(base, version, name))
   }
+
+  /** The directory that holds dataset `name` of version `v` — for callers
+    * that read a member's files themselves (footer statistics). */
+  def memberDir(base: String, v: Long, name: String): String = s"$base/v$v/$name"
 
   /** All readable COMMITTED version ids under `base`, ascending. Sealed
     * orphans (claimed by a crashed writer, never committed) are excluded

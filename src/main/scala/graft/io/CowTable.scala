@@ -16,12 +16,11 @@ import org.apache.spark.sql.functions._
   * Layout under `base/`:
   *   - `files/<token>-<i>.parquet` — immutable pooled data files, written
   *     once, never modified, shared across versions;
-  *   - `files/<token>-dv` — a deletion vector: one parquet file of
-  *     (file basename, row position) rows, written and read on the
-  *     driver by [[writeVector]] and [[vectorPositions]] alone;
   *   - `v<N>/manifest` — an [[AtomicPublish]] version whose ONLY payload
-  *     is the manifest: one row per data file with its row count and
-  *     key min/max. Committing a version = committing a manifest.
+  *     is the manifest: one row per data file with its row count, key
+  *     min/max and its deletion vector inline (`dv`, a serialized roaring
+  *     bitmap of the file's deleted row positions; empty = none).
+  *     Committing a version = committing a manifest.
   *
   * Consequences at 100 TB:
   *   - ONE row-level delete ([[deleteAt]]): [[merge]], [[deleteWhere]]
@@ -43,8 +42,8 @@ import org.apache.spark.sql.functions._
   *     the attempt — forces a recompute against the new state, so no
   *     committed row change is ever silently dropped (the lost-update
   *     anomaly plain `publish` would allow). The losing attempt's
-  *     deletion vector is deleted at once; its pool files are garbage,
-  *     reclaimed by [[vacuum]].
+  *     pool files are garbage, reclaimed by [[vacuum]]; its deletion
+  *     vectors were never written anywhere but its own manifest.
   *   - compaction repays the vectors and keeps the layout healthy:
   *     bin-pack undersized neighbors (by manifest row counts alone)
   *     into full files, reference the rest — the small-files problem
@@ -79,15 +78,16 @@ import org.apache.spark.sql.functions._
   *
   * Two more pieces complete the row-level story:
   *   - DELETION VECTORS: a delete — even one scattered across every
-  *     file (GDPR purge, every-Nth-key retention) — writes only the
-  *     (file, row position) pairs of the doomed rows — O(deleted rows)
-  *     bytes — and the new manifest points each affected file at its
-  *     cumulative vector; NO data file is rewritten. Reads subtract the
-  *     positions each entry's vector voids ([[voided]]): the API scan
-  *     by an anti-join on position, broadcast whenever the manifest's
-  *     dvRows total proves it small, the SQL scan per partition;
-  *     [[compact]] materializes them back to clean files. The same
-  *     design as Delta deletion vectors / Iceberg position deletes.
+  *     file (GDPR purge, every-Nth-key retention) — writes NO file: the
+  *     new manifest carries each affected file's cumulative vector
+  *     inline, a roaring bitmap of its deleted row positions
+  *     ([[encodeVector]]), with `dvRows` its cardinality. Reads decode
+  *     each entry's own bytes ([[voided]], [[decodeVector]]) and
+  *     subtract the positions: the API scan by an anti-join on
+  *     position, broadcast whenever the manifest's dvRows total proves
+  *     it small, the SQL scan per partition; [[compact]] materializes
+  *     them back to clean files. The same design as Delta deletion
+  *     vectors, always inlined in the log.
   *   - CHANGE DATA FEED ([[changes]]): the row-level diff between two
   *     committed versions, served from commit structure — never a
   *     two-snapshot scan. [[changeSet]] classifies each pool file by
@@ -121,10 +121,23 @@ class ConcurrentWriteException(message: String)
 
 object CowTable {
 
+  /** One pool file of a version. `dv` is its deletion vector inline
+    * ([[encodeVector]]; empty = none), `dvRows` its cardinality. Entries
+    * compare `dv` by content: an array's own `==` is identity. */
   case class Entry(file: String, rows: Long, kmin: Long, kmax: Long,
-                   dv: String = "", dvRows: Long = 0L,
+                   dv: Array[Byte] = Array.emptyByteArray, dvRows: Long = 0L,
                    smin: Map[String, String] = Map.empty,
-                   smax: Map[String, String] = Map.empty)
+                   smax: Map[String, String] = Map.empty) {
+    override def equals(o: Any): Boolean = o match {
+      case e: Entry => java.util.Arrays.equals(dv, e.dv) &&
+        (file, rows, kmin, kmax, dvRows, smin, smax) ==
+          (e.file, e.rows, e.kmin, e.kmax, e.dvRows, e.smin, e.smax)
+      case _ => false
+    }
+    override def hashCode: Int = (file, rows, kmin, kmax, dvRows).##
+    /** The (file, dv, dvRows) triple [[voided]] decodes. */
+    def triple: (String, Array[Byte], Long) = (file, dv, dvRows)
+  }
 
   /** Table-level metadata carried in every version's payload: the data
     * schema (so an EMPTIED table still reads back with the right
@@ -452,12 +465,12 @@ object CowTable {
       else map(sCols.flatMap(c =>
         Seq(lit(ph(c)), agg(col(ph(c))).cast("string"))): _*)
     try {
-      val stats = StatsWrite.parquet(
+      val stats = phase(spark, "pool write")(StatsWrite.parquet(
         parted.select(df.columns.map(c => col(c).as(ph(c))).toIndexedSeq: _*),
         tmp.toString,
         Seq(count(lit(1)), min(ke), max(ke), statsMap(min), statsMap(max),
           count(when(ks.map(k => col(ph(k)).isNull).reduce(_ || _) ||
-            ke.isNull, 1))))
+            ke.isNull, 1)))))
         // a write of no rows still leaves one zero-row file (Spark's
         // first task always writes one); it holds nothing to reference
         .filter { case (_, r) => r.getLong(0) > 0L }
@@ -490,20 +503,17 @@ object CowTable {
     entries.toDF().select(ManifestCols.map(col): _*)
   }
 
-  /** RE-ROOT stored paths to the CURRENT base: every pool file and
-    * vector lives under `base/files/<globally-unique-name>`, so the
-    * basename is the durable identity and the prefix is just where the
-    * table happens to live — re-deriving it at read time makes the
-    * table RELOCATABLE (`ALTER TABLE … RENAME TO`, a directory move, a
-    * mount change) without rewriting any retained manifest. Idempotent
-    * for tables that never moved. */
+  /** RE-ROOT stored paths to the CURRENT base: every pool file lives
+    * under `base/files/<globally-unique-name>`, so the basename is the
+    * durable identity and the prefix is just where the table happens to
+    * live — re-deriving it at read time makes the table RELOCATABLE
+    * (`ALTER TABLE … RENAME TO`, a directory move, a mount change)
+    * without rewriting any retained manifest. Idempotent for tables
+    * that never moved. */
   private def reroot(df: DataFrame, base: String): DataFrame = {
     val pool = norm(new Path(base, "files").toString)
-    def re(c: Column): Column =
-      when(c.isNotNull && c =!= lit(""),
-        concat(lit(pool + "/"), regexp_extract(c, "[^/]+$", 0)))
-        .otherwise(c)
-    df.withColumn("file", re(col("file"))).withColumn("dv", re(col("dv")))
+    df.withColumn("file",
+      concat(lit(pool + "/"), regexp_extract(col("file"), "[^/]+$", 0)))
   }
 
   /** Collected-manifest cache. Every SQL statement reads the committed
@@ -547,9 +557,9 @@ object CowTable {
     * (re-rooted) form — the DSv2 scan's candidate list, from the cache
     * when the manifest is small; None = stay on the parquet read. */
   private[graft] def manifestTriples(spark: SparkSession, base: String,
-                                     version: Long): Option[Seq[(String, String, Long)]] =
+                                     version: Long): Option[Seq[(String, Array[Byte], Long)]] =
     new Snapshot(spark, base, version).cached
-      .map(_.map(e => (e.file, e.dv, e.dvRows)))
+      .map(_.map(_.triple))
 
   private def collectEntries(df: DataFrame): Seq[Entry] = {
     val spark = df.sparkSession
@@ -870,95 +880,78 @@ object CowTable {
       regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
     .withColumn("_gf_pos", col("_metadata.row_index"))
 
-  private def baseName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-
-  /** A deletion vector is ONE parquet file, `files/<token>-dv`, of
-    * (file BASENAME, pos) rows: basenames, so the vector (and the table)
-    * survives a rename, copy or move. Only [[writeVector]] and
-    * [[vectorPositions]] touch it; everything else sees positions. */
-  private val VectorSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
-
-  /** Stage a deletion vector of `byFile`'s positions (keyed by CURRENT
-    * full path) as one pool file, written on the driver
-    * ([[LocalParquet.write]], no job). Like every staged pool file it
-    * is unreferenced until its commit lands. Returns its pool path. */
-  private def writeVector(spark: SparkSession, base: String,
-                          byFile: Map[String, Array[Long]]): String = {
-    val dst = new Path(base, s"files/${java.util.UUID.randomUUID()}-dv")
-    LocalParquet.write(spark, dst, VectorSchema, byFile.iterator.flatMap {
-      case (f, ps) =>
-        val b = org.apache.spark.unsafe.types.UTF8String.fromString(baseName(f))
-        ps.iterator.map(p => org.apache.spark.sql.catalyst.InternalRow(b, p))
-    })
-    norm(dst.toString)
+  /** A deletion vector inline: `ps`, a file's sorted deleted row
+    * positions, as a portable roaring bitmap. This and [[decodeVector]]
+    * are the only code that knows the format; everything else sees
+    * positions. */
+  private def encodeVector(ps: Array[Long]): Array[Byte] = {
+    val b = org.roaringbitmap.longlong.Roaring64NavigableMap.bitmapOf(ps: _*)
+    b.runOptimize()
+    val out = new java.io.ByteArrayOutputStream()
+    b.serializePortable(new java.io.DataOutputStream(out)) // unbuffered
+    out.toByteArray
   }
 
-  /** Each file's sorted positions in deletion vector `dv`, by file
-    * BASENAME: one driver-side open of its file
-    * ([[LocalParquet.foreachRow]]), no listing, no job. A vector holds
-    * O(deleted rows) positions. */
-  private def vectorPositions(spark: SparkSession,
-                              dv: String): Map[String, Array[Long]] = {
-    val by = scala.collection.mutable.HashMap.empty[String,
-      scala.collection.mutable.ArrayBuilder.ofLong]
-    LocalParquet.foreachRow(spark, new Path(dv), VectorSchema) { r =>
-      by.getOrElseUpdate(r.getUTF8String(0).toString,
-        new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
-    }
-    by.map { case (f, b) => f -> b.result().sorted }.toMap
+  /** The sorted positions `dv` holds, checked against the entry's
+    * `dvRows` (bytes read from disk: a mismatch is a corrupt manifest). */
+  private def decodeVector(file: String, dv: Array[Byte],
+                           dvRows: Long): Array[Long] = {
+    val b = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+    b.deserializePortable(
+      new java.io.DataInputStream(new java.io.ByteArrayInputStream(dv)))
+    require(b.getLongCardinality == dvRows,
+      s"deletion vector of $file holds ${b.getLongCardinality} positions, " +
+        s"its manifest entry says $dvRows")
+    b.toArray
   }
 
-  /** The sorted row positions each (file, dv) pair's vector voids, by
-    * file; vector-free files are absent. A file's positions are its
-    * vector's rows under ITS OWN basename: a vector an untouched entry
-    * still shares also holds the old rows of files that have since
-    * moved to a newer vector, and this lookup never sees them, so
-    * every file's count is exactly its entry's dvRows. Each distinct
-    * vector is read once. */
-  private[graft] def voided(spark: SparkSession,
-                            files: Seq[(String, String)]): Map[String, Array[Long]] = {
-    val vectors = files.map(_._2).filter(_.nonEmpty).distinct
-      .map(dv => dv -> vectorPositions(spark, dv)).toMap
-    files.collect { case (f, dv) if dv.nonEmpty =>
-      f -> vectors(dv).getOrElse(baseName(f), Array.emptyLongArray)
+  /** The sorted row positions each (file, dv, dvRows) manifest triple's
+    * vector voids, by file; vector-free files are absent. No I/O: each
+    * vector is its entry's own bytes. */
+  private[graft] def voided(
+      files: Seq[(String, Array[Byte], Long)]): Map[String, Array[Long]] =
+    files.collect { case (f, dv, n) if dv.nonEmpty =>
+      f -> decodeVector(f, dv, n)
     }.toMap
-  }
+
+  /** Runs `body` with its Spark jobs described `cow: <name>`: the
+    * phases (discovery, lineage scan, positions, pool write, commit) of
+    * the row-level writers. */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T =
+    graft.JobLabel(spark, s"cow: $name")(body)
 
   /** Each file's positions among `hits` (`file`, `pos`), in ONE job:
     * each task gathers its rows' positions per file and the driver
     * concatenates the per-task arrays — no shuffle stage, which costs a
     * `groupBy` a second job. */
-  private def positionsOf(hits: DataFrame): Map[String, Array[Long]] = {
-    import hits.sparkSession.implicits._
-    hits.select("file", "pos").as[(String, Long)].mapPartitions { rows =>
-      val by = scala.collection.mutable.HashMap.empty[String,
-        scala.collection.mutable.ArrayBuilder.ofLong]
-      rows.foreach { case (f, p) =>
-        by.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuilder.ofLong) += p
-      }
-      by.iterator.map { case (f, b) => (f, b.result()) }
-    }.collect().groupMapReduce(_._1)(_._2)(_ ++ _)
-  }
+  private def positionsOf(hits: DataFrame): Map[String, Array[Long]] =
+    phase(hits.sparkSession, "positions") {
+      import hits.sparkSession.implicits._
+      hits.select("file", "pos").as[(String, Long)].mapPartitions { rows =>
+        val by = scala.collection.mutable.HashMap.empty[String,
+          scala.collection.mutable.ArrayBuilder.ofLong]
+        rows.foreach { case (f, p) =>
+          by.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuilder.ofLong) += p
+        }
+        by.iterator.map { case (f, b) => (f, b.result()) }
+      }.collect().groupMapReduce(_._1)(_._2)(_ ++ _)
+    }
 
   /** The one row-level delete, as an [[Edit]]: `byFile` holds the newly
     * deleted live positions of the parent entries `cand`, by file. A
     * file losing every live row (`rows − dvRows`) leaves the manifest.
-    * The rest point at one new vector ([[writeVector]]) holding each
-    * kept file's old positions ([[voided]]) plus its new ones, so it
-    * replaces their vectors ([[commitChange]] points each kept entry at
-    * it). No job: the positions are already on the driver. */
-  private def deleteAt(spark: SparkSession, base: String, cand: Seq[Entry],
+    * Each kept file gets a new inline vector ([[encodeVector]]) of its
+    * old positions ([[voided]]) plus its new ones. No job and no I/O:
+    * the positions are already on the driver. */
+  private def deleteAt(cand: Seq[Entry],
                        byFile: Map[String, Array[Long]]): Edit = {
     val (emptied, kept) = cand.filter(e => byFile.contains(e.file))
       .partition(e => byFile(e.file).length == e.rows - e.dvRows)
-    val old = voided(spark, kept.map(e => e.file -> e.dv))
-      .withDefaultValue(Array.emptyLongArray)
-    val vector = Option.when(kept.nonEmpty)(NewVector(
-      writeVector(spark, base,
-        kept.map(e => e.file -> (old(e.file) ++ byFile(e.file)).sorted).toMap),
-      kept.map(e => e.file -> byFile(e.file).length.toLong).toMap))
-    Edit(removed = emptied.map(_.file).toSet, vector = vector)
+    val old = voided(kept.map(_.triple)).withDefaultValue(Array.emptyLongArray)
+    Edit(removed = emptied.map(_.file).toSet, vectors = kept.map { e =>
+      val ps = (old(e.file) ++ byFile(e.file)).sorted
+      e.file -> NewVector(encodeVector(ps), ps.length.toLong)
+    }.toMap)
   }
 
   /** The live rows of `p` whose FULL key tuple `ks` equals a row of
@@ -971,9 +964,9 @@ object CowTable {
                             keys: DataFrame): Option[(Seq[Entry], DataFrame)] = {
     val gfk = ks.indices.map(i => s"_gfk_$i")
     def dtOf(k: String) = p.schema(k).dataType
-    val cand = collectEntries(keyCandidates(p, keys, ks.head)
-      .filter(tailMayIntersect(tailBoundsOf(keys, ks,
-        k => gfk(ks.indexOf(k)), dtOf, p.meta.phys)))) // footprint-bounded
+    val cand = phase(spark, "discovery")(collectEntries(
+      keyCandidates(p, keys, ks.head).filter(tailMayIntersect(tailBoundsOf(
+        keys, ks, k => gfk(ks.indexOf(k)), dtOf, p.meta.phys))))) // footprint-bounded
     Option.when(cand.nonEmpty)((cand, scanEntries(spark, cand, lineage = true,
         schema = p.schema, colMap = p.colMap)
       .select(col("_gf_file").as("file") +: col("_gf_pos").as("pos") +:
@@ -1013,7 +1006,7 @@ object CowTable {
       if (dvd.isEmpty) raw
       else {
         import spark.implicits._
-        val dv = voided(spark, dvd.map(e => e.file -> e.dv)).toSeq
+        val dv = voided(dvd.map(_.triple)).toSeq
           .flatMap { case (f, ps) => ps.map(f -> _) }.toDF("file", "pos")
         raw.join(graft.Bcast.ifBounded(dv, dvd.map(_.dvRows).sum),
           raw("_gf_file") === dv("file") && raw("_gf_pos") === dv("pos"),
@@ -1255,9 +1248,9 @@ object CowTable {
     def colMap: Map[String, String] = meta.physMap
   }
 
-  /** A deletion vector one attempt wrote ([[deleteAt]]) and how
-    * many rows it newly deletes from each pool file it covers. */
-  private case class NewVector(path: String, perFile: Map[String, Long])
+  /** A pool file's new inline deletion vector ([[deleteAt]]) and its
+    * cardinality, the entry's new `dvRows`. */
+  private case class NewVector(dv: Array[Byte], dvRows: Long)
 
   /** What one commit attempt changes against its parent. */
   private sealed trait Change
@@ -1265,12 +1258,12 @@ object CowTable {
   /** Nothing: the statement's result is the parent version. */
   private case object Unchanged extends Change
 
-  /** The parent's entries without the `removed` files, with `vector`
-    * applied to the files it covers, plus `added`. `meta` replaces the
+  /** The parent's entries without the `removed` files, each file in
+    * `vectors` under its new vector, plus `added`. `meta` replaces the
     * parent's meta; `txn` stamps the commit. */
   private case class Edit(removed: Set[String] = Set.empty,
                           added: Seq[Entry] = Nil,
-                          vector: Option[NewVector] = None,
+                          vectors: Map[String, NewVector] = Map.empty,
                           meta: Option[Meta] = None,
                           txn: Option[(String, Long)] = None) extends Change
 
@@ -1294,8 +1287,7 @@ object CowTable {
     * idempotence marker), publishes at exactly parent + 1 and primes the
     * new version's caches. A lost CAS re-runs `attempt` against the new
     * head, so no committed change is ever silently dropped; the lost
-    * attempt's deletion vector is deleted at once, its pool files are
-    * left to [[vacuum]].
+    * attempt's pool files are left to [[vacuum]].
     *
     * A PRUNE RACE is a conflict too: with `retain = 1` the winner's commit
     * prunes the parent out from under the loser's reads, which then fail
@@ -1325,11 +1317,9 @@ object CowTable {
       v.foreach(prime(base, _, token, entries, meta, txns))
       v
     }
-    var change: Change = Unchanged
     val committed =
       try {
-        change = attempt(p)
-        change match {
+        attempt(p) match {
           case Unchanged => Some(parent)
           case e: Edit =>
             val (manifest, entries) = carryOver(spark, p, e)
@@ -1343,18 +1333,12 @@ object CowTable {
       }
     committed match {
       case Some(v) => v
-      case None =>
-        change match {
-          case Edit(_, _, Some(dv), _, _) =>
-            fsOf(spark, base).delete(new Path(dv.path), false)
-          case _ => ()
-        }
-        commitChange(spark, base, op, retain)(attempt)
+      case None => commitChange(spark, base, op, retain)(attempt)
     }
   }
 
-  /** The parent's entries under `e`: the removed files dropped, the new
-    * vector applied to the files it covers, the added entries appended.
+  /** The parent's entries under `e`: the removed files dropped, each
+    * vectored file under its new vector, the added entries appended.
     * A cached entry list makes this a driver pass and the result an
     * entry list (which primes the new version's cache); a manifest too
     * large to cache is carried by joins, never enumerated on the
@@ -1365,8 +1349,8 @@ object CowTable {
     p.cached match {
       case Some(es) =>
         val all = es.filterNot(x => e.removed.contains(x.file)).map(x =>
-          e.vector.flatMap(v => v.perFile.get(x.file).map(n =>
-            x.copy(dv = v.path, dvRows = x.dvRows + n))).getOrElse(x)) ++
+          e.vectors.get(x.file).fold(x)(v =>
+            x.copy(dv = v.dv, dvRows = v.dvRows))) ++
           e.added
         (entriesDf(spark, all), Some(all))
       case None =>
@@ -1374,14 +1358,14 @@ object CowTable {
           if (e.removed.isEmpty) p.frame
           else p.frame.join(e.removed.toSeq.toDF("file"), Seq("file"),
             "left_anti")
-        val vectored = e.vector.fold(kept) { v =>
-          kept.join(v.perFile.toSeq.toDF("file", "_gf_n"), Seq("file"), "left")
-            .withColumn("dv",
-              when(col("_gf_n").isNotNull, lit(v.path)).otherwise(col("dv")))
-            .withColumn("dvRows",
-              col("dvRows") + coalesce(col("_gf_n"), lit(0L)))
+        val vectored =
+          if (e.vectors.isEmpty) kept
+          else kept.join(e.vectors.toSeq.map { case (f, v) =>
+              (f, v.dv, v.dvRows)
+            }.toDF("file", "_gf_dv", "_gf_n"), Seq("file"), "left")
+            .withColumn("dv", coalesce(col("_gf_dv"), col("dv")))
+            .withColumn("dvRows", coalesce(col("_gf_n"), col("dvRows")))
             .select(ManifestCols.map(col): _*)
-        }
         (if (e.added.isEmpty) vectored
          else vectored.unionByName(entriesDf(spark, e.added)), None)
     }
@@ -1422,7 +1406,7 @@ object CowTable {
       // attempt's discovery (a parallel pass over the source keys)
       // materializes it, so no separate eager-checkpoint job is paid
       .localCheckpoint(eager = false)
-    commitChange(spark, base, "MERGE", retain) { p =>
+    phase(spark, "commit")(commitChange(spark, base, "MERGE", retain) { p =>
       // a replayed batch — the parent already carries its stream's stamp
       // at or past it — changes nothing; read inside the attempt, so a
       // parent pruned under the read retries instead of reading no stamp
@@ -1476,12 +1460,12 @@ object CowTable {
           checks = parentMeta.checks, gens = gensOf(parentMeta),
           idNotNull = identityOf(parentMeta).map(_._1), gathered = true)
         val deleted = matched.fold(Edit()) { case (cand, rows) =>
-          deleteAt(spark, base, cand, positionsOf(rows))
+          deleteAt(cand, positionsOf(rows))
         }
         beforeCommit()
         deleted.copy(added = newEntries, meta = evolvedMeta, txn = txn)
       }
-    }
+    })
   }
 
   /** INSERT-style append: `df` becomes `numFiles` new pool files added
@@ -1658,7 +1642,7 @@ object CowTable {
     val fs = fsOf(spark, base)
     val referenced = AtomicPublish.versions(spark, base)
       .flatMap(v => entriesAt(spark, base, v)
-        .flatMap(e => Seq(e.file, e.dv).filter(_.nonEmpty))).toSet
+        .map(_.file)).toSet
     val pool = new Path(base, "files")
     if (!fs.exists(pool)) return 0
     val now = System.currentTimeMillis()
@@ -1723,17 +1707,20 @@ object CowTable {
   private def deleteMatching(spark: SparkSession, base: String, pred: Column,
                              retain: Int,
                              onDiscovery: Option[(Long, Long) => Unit]): Long =
-    commitChange(spark, base, "DELETE", retain) { p =>
+    phase(spark, "commit")(commitChange(spark, base, "DELETE", retain) { p =>
       val cm = p.colMap
       val keyName = splitKeys(p.meta.key).head
       val sk = p.schema.fields.find(_.name == keyName)
         .exists(f => isStringKey(f.dataType))
       // stats-pruned discovery: only files whose statistics admit a
       // matching row are scanned for positions
-      val cand = collectEntries(
-        p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
-      onDiscovery.foreach(_(cand.size.toLong,
-        p.cached.map(_.size.toLong).getOrElse(p.frame.count())))
+      val cand = phase(spark, "discovery") {
+        val c = collectEntries(
+          p.frame.filter(StatsPrune.mayContain(pred, keyName, sk, cm)))
+        onDiscovery.foreach(_(c.size.toLong,
+          p.cached.map(_.size.toLong).getOrElse(p.frame.count())))
+        c
+      }
       if (cand.isEmpty) Unchanged // stats prove nothing matches
       else {
         // `filter` keeps TRUE rows only: a NULL-evaluating row survives
@@ -1742,9 +1729,9 @@ object CowTable {
           .filter(pred)
           .select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
         if (byFile.isEmpty) Unchanged // no-op: nothing matches
-        else deleteAt(spark, base, cand, byFile)
+        else deleteAt(cand, byFile)
       }
-    }
+    })
 
   /** One side's share of a version pair's changed rows in one pool
     * file: every live row of `entry` (under its own vector) when
@@ -1774,7 +1761,8 @@ object CowTable {
     *   - a file in both whose vector differs: the rows at positions in
     *     the new vector but not the old are pre-images (deletes), those
     *     in the old but not the new are post-images (a `restore`
-    *     revives them). Both vectors are read on the driver.
+    *     revives them). Vectors are compared by content and decoded
+    *     on the driver.
     * A LAYOUT-ONLY version (`COMPACT` / `ZORDER`, which rewrite live
     * rows and nothing else) against the committed version just before
     * it changes no row: both sides are empty. */
@@ -1789,14 +1777,16 @@ object CowTable {
     val from = if (layoutOnly) Nil else entriesAt(spark, base, fromV)
     val probe = (to ++ from).headOption
       .getOrElse(sys.error(s"changes: no entries in either version of $base"))
-      .copy(dv = "", dvRows = 0L)
+      .copy(dv = Array.emptyByteArray, dvRows = 0L)
     if (layoutOnly) return ChangeSet(Nil, Nil, probe)
     val fromBy = from.map(e => e.file -> e).toMap
     val toFiles = to.map(_.file).toSet
-    val moved = to.flatMap(t => fromBy.get(t.file).filter(_.dv != t.dv)
-      .map((_, t)))
-    def positions(es: Seq[Entry]) = voided(spark, es.map(e => e.file -> e.dv))
-      .withDefaultValue(Array.emptyLongArray)
+    // by content: a restore between two deletes can give one file two
+    // different vectors of equal cardinality
+    val moved = to.flatMap(t => fromBy.get(t.file)
+      .filterNot(f => java.util.Arrays.equals(f.dv, t.dv)).map((_, t)))
+    def positions(es: Seq[Entry]) =
+      voided(es.map(_.triple)).withDefaultValue(Array.emptyLongArray)
     val (was, is) = (positions(moved.map(_._1)), positions(moved.map(_._2)))
     def whole(es: Seq[Entry]) =
       es.filter(e => e.rows > e.dvRows).map(ChangePart(_, None))
@@ -1866,7 +1856,8 @@ object CowTable {
         import spark.implicits._
         val keep = ps.flatMap(p => p.positions.get.toSeq.map(p.entry.file -> _))
           .toDF("_gf_file", "_gf_pos")
-        scanEntries(spark, ps.map(_.entry.copy(dv = "", dvRows = 0L)),
+        scanEntries(spark, ps.map(_.entry.copy(dv = Array.emptyByteArray,
+            dvRows = 0L)),
           lineage = true, schema = schema, colMap = cm)
           .join(graft.Bcast.ifBounded(keep, ps.map(_.positions.get.length.toLong).sum),
             Seq("_gf_file", "_gf_pos"), "left_semi")
@@ -1984,110 +1975,112 @@ object CowTable {
                  txn: Option[(String, Long)] = None,
                  beforeCommit: () => Unit = () => (),
                  op: String = "WRITE DELTA",
-                 positions: Option[Positions] = None): Long = {
-    import spark.implicits._
-    val m = meta(spark, base).getOrElse(sys.error(
-      s"no table meta under $base — applyDelta needs a created cow table"))
-    val key = m.key
-    // inserts become pool files ONCE — only the manifest CAS retries
-    val newEntries = inserts.map { df =>
-      writePool(spark, base, df, key, numFiles = 1, m.statsCols,
-        colMap = m.physMap, checks = m.checks, gens = gensOf(m),
-        idNotNull = identityOf(m).map(_._1))
-    }.getOrElse(Seq.empty)
-    val ks = splitKeys(key)
-    val tblSchema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def dtOf(k: String): org.apache.spark.sql.types.DataType =
-      tblSchema.fields.find(_.name == k).map(_.dataType)
-        .getOrElse(org.apache.spark.sql.types.LongType)
-    // the delete-key frame carries the FULL key tuple: by name for a
-    // composite key (Spark's rowIdSchema), positionally for a
-    // single-column key
-    val gfk = ks.indices.map(i => s"_gfk_$i")
-    val keyedCols: Seq[Column] =
-      if (ks.size == 1)
-        Seq(col(deleteKeys.columns.head).cast(dtOf(ks.head)).as(gfk.head))
-      else ks.zipWithIndex.map { case (k, i) =>
-        require(deleteKeys.columns.contains(k),
-          s"delete-key frame is missing key column `$k` of composite " +
-            s"key `$key` (has ${deleteKeys.columns.mkString(", ")})")
-        col(k).cast(dtOf(k)).as(gfk(i))
-      }
-    // per-key-TUPLE delete-ACTION counts: Spark emits one delete action
-    // per target ROW, so for a key-unique table every tuple carries
-    // count 1, and an UPDATE touching all n duplicates carries n.
-    // LAZY, like everything the key path needs: a position commit never
-    // evaluates it. The checkpoint is evaluated once across retries.
-    lazy val keyActions = deleteKeys
-      .select(keyedCols: _*)
-      .groupBy(gfk.map(col): _*).agg(count(lit(1)).as("_gf_actions"))
-      .localCheckpoint(eager = false)
-    // positions know their delete count from the writers' reports; the
-    // key path's count() also materializes the checkpoint
-    val anyDeletes = positions.fold(keyActions.count() > 0)(_.byFile.nonEmpty)
-    // pure no-op delta (nothing deleted, nothing inserted): nothing
-    // to write, nothing to commit — the parent version IS the result
-    // (a txn-stamped no-op still commits, to record its batch id)
-    if (!anyDeletes && newEntries.isEmpty && txn.isEmpty)
-      return AtomicPublish.committed(spark, base)
-    commitChange(spark, base, op, retain) { p =>
-      val deleted =
-        if (!anyDeletes) Edit()
-        else if (positions.exists(_.scanVersion == p.version)) {
-          // the head is the scanned snapshot: every staged position
-          // names a live row of a file still in this manifest
-          val pos = positions.get
-          val touched = p.cached match {
-            case Some(es) => es.filter(e => pos.byFile.contains(e.file))
-            case None => collectEntries(p.frame.join(
-              pos.byFile.keys.toSeq.toDF("file"), Seq("file")))
+                 positions: Option[Positions] = None): Long =
+    phase(spark, "commit") {
+      import spark.implicits._
+      val m = meta(spark, base).getOrElse(sys.error(
+        s"no table meta under $base — applyDelta needs a created cow table"))
+      val key = m.key
+      // inserts become pool files ONCE — only the manifest CAS retries
+      val newEntries = inserts.map { df =>
+        writePool(spark, base, df, key, numFiles = 1, m.statsCols,
+          colMap = m.physMap, checks = m.checks, gens = gensOf(m),
+          idNotNull = identityOf(m).map(_._1))
+      }.getOrElse(Seq.empty)
+      val ks = splitKeys(key)
+      val tblSchema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      def dtOf(k: String): org.apache.spark.sql.types.DataType =
+        tblSchema.fields.find(_.name == k).map(_.dataType)
+          .getOrElse(org.apache.spark.sql.types.LongType)
+      // the delete-key frame carries the FULL key tuple: by name for a
+      // composite key (Spark's rowIdSchema), positionally for a
+      // single-column key
+      val gfk = ks.indices.map(i => s"_gfk_$i")
+      val keyedCols: Seq[Column] =
+        if (ks.size == 1)
+          Seq(col(deleteKeys.columns.head).cast(dtOf(ks.head)).as(gfk.head))
+        else ks.zipWithIndex.map { case (k, i) =>
+          require(deleteKeys.columns.contains(k),
+            s"delete-key frame is missing key column `$k` of composite " +
+              s"key `$key` (has ${deleteKeys.columns.mkString(", ")})")
+          col(k).cast(dtOf(k)).as(gfk(i))
+        }
+      // per-key-TUPLE delete-ACTION counts: Spark emits one delete action
+      // per target ROW, so for a key-unique table every tuple carries
+      // count 1, and an UPDATE touching all n duplicates carries n.
+      // LAZY, like everything the key path needs: a position commit never
+      // evaluates it. The checkpoint is evaluated once across retries.
+      lazy val keyActions = deleteKeys
+        .select(keyedCols: _*)
+        .groupBy(gfk.map(col): _*).agg(count(lit(1)).as("_gf_actions"))
+        .localCheckpoint(eager = false)
+      // positions know their delete count from the writers' reports; the
+      // key path's count() also materializes the checkpoint
+      val anyDeletes = positions.fold(
+        phase(spark, "discovery")(keyActions.count()) > 0)(_.byFile.nonEmpty)
+      // pure no-op delta (nothing deleted, nothing inserted): nothing
+      // to write, nothing to commit — the parent version IS the result
+      // (a txn-stamped no-op still commits, to record its batch id)
+      if (!anyDeletes && newEntries.isEmpty && txn.isEmpty)
+        AtomicPublish.committed(spark, base)
+      else commitChange(spark, base, op, retain) { p =>
+        val deleted =
+          if (!anyDeletes) Edit()
+          else if (positions.exists(_.scanVersion == p.version)) {
+            // the head is the scanned snapshot: every staged position
+            // names a live row of a file still in this manifest
+            val pos = positions.get
+            val touched = p.cached match {
+              case Some(es) => es.filter(e => pos.byFile.contains(e.file))
+              case None => collectEntries(p.frame.join(
+                pos.byFile.keys.toSeq.toDF("file"), Seq("file")))
+            }
+            require(touched.size == pos.byFile.size,
+              s"staged delete positions name files missing from " +
+                s"v${p.version} of $base: " +
+                s"${pos.byFile.keySet -- touched.map(_.file)}")
+            deleteAt(touched, pos.byFile)
           }
-          require(touched.size == pos.byFile.size,
-            s"staged delete positions name files missing from " +
-              s"v${p.version} of $base: " +
-              s"${pos.byFile.keySet -- touched.map(_.file)}")
-          deleteAt(spark, base, touched, pos.byFile)
-        }
-        else livePositions(spark, p, ks, keyActions) match {
-          case Some((cand, rows)) =>
-            // lazy: the row-identity guard below materializes the
-            // checkpoint as part of its own (required) job, so the
-            // position scan runs once without paying a separate
-            // eager-checkpoint job
-            val hitRows = rows.localCheckpoint(eager = false)
-            // ROW-IDENTITY GUARD: this path deletes by key tuple, so a
-            // tuple matching MORE live rows than it has delete actions
-            // would silently vector out rows the statement never
-            // touched (the duplicate-key UPDATE data-loss anomaly).
-            // Refuse — the table violates the clustering-key-as-row-
-            // identity contract the key path requires.
-            val over = hitRows.groupBy(gfk.map(col): _*)
-              .agg(count(lit(1)).as("n"))
-              .join(keyActions, gfk)
-              .filter(col("n") > col("_gf_actions"))
-              .limit(1).collect()
-            require(over.isEmpty, {
-              val r = over.head
-              val tuple = gfk.indices.map(r.get).mkString("(", ", ", ")")
-              s"clustering key `$key` is not unique under $base: key " +
-                s"$tuple has ${r.getLong(gfk.size)} live rows but only " +
-                s"${r.getLong(gfk.size + 1)} delete action(s) address " +
-                "it — a key-identified delete would drop rows the " +
-                "statement never matched; deduplicate the table (or " +
-                "merge by key) before deleting by key"
-            })
-            deleteAt(spark, base, cand, positionsOf(hitRows))
-          case None => Edit()
-        }
-      beforeCommit() // test seam (fires once per attempt, before the CAS)
-      // deletes that hit nothing and no inserts: an identical manifest —
-      // the parent is the result (dvDelete's no-op contract) instead of
-      // an empty version
-      if (deleted == Edit() && newEntries.isEmpty && txn.isEmpty) Unchanged
-      else deleted.copy(added = newEntries, txn = txn)
+          else livePositions(spark, p, ks, keyActions) match {
+            case Some((cand, rows)) =>
+              // lazy: the row-identity guard below materializes the
+              // checkpoint as part of its own (required) job, so the
+              // position scan runs once without paying a separate
+              // eager-checkpoint job
+              val hitRows = rows.localCheckpoint(eager = false)
+              // ROW-IDENTITY GUARD: this path deletes by key tuple, so a
+              // tuple matching MORE live rows than it has delete actions
+              // would silently vector out rows the statement never
+              // touched (the duplicate-key UPDATE data-loss anomaly).
+              // Refuse — the table violates the clustering-key-as-row-
+              // identity contract the key path requires.
+              val over = phase(spark, "lineage scan")(hitRows
+                .groupBy(gfk.map(col): _*).agg(count(lit(1)).as("n"))
+                .join(keyActions, gfk)
+                .filter(col("n") > col("_gf_actions"))
+                .limit(1).collect())
+              require(over.isEmpty, {
+                val r = over.head
+                val tuple = gfk.indices.map(r.get).mkString("(", ", ", ")")
+                s"clustering key `$key` is not unique under $base: key " +
+                  s"$tuple has ${r.getLong(gfk.size)} live rows but only " +
+                  s"${r.getLong(gfk.size + 1)} delete action(s) address " +
+                  "it — a key-identified delete would drop rows the " +
+                  "statement never matched; deduplicate the table (or " +
+                  "merge by key) before deleting by key"
+              })
+              deleteAt(cand, positionsOf(hitRows))
+            case None => Edit()
+          }
+        beforeCommit() // test seam (fires once per attempt, before the CAS)
+        // deletes that hit nothing and no inserts: an identical manifest —
+        // the parent is the result (dvDelete's no-op contract) instead of
+        // an empty version
+        if (deleted == Edit() && newEntries.isEmpty && txn.isEmpty) Unchanged
+        else deleted.copy(added = newEntries, txn = txn)
+      }
     }
-  }
 
   /** DDL-style ADDITIVE schema evolution: widen the committed data
     * schema by `fields` (forced nullable — existing pool files are NOT
@@ -2317,7 +2310,7 @@ object CowTable {
     * manifest vector and all.
     */
   def replaceFiles(spark: SparkSession, base: String,
-                   replaced: Seq[(String, String)], rows: DataFrame,
+                   replaced: Seq[(String, Array[Byte])], rows: DataFrame,
                    retain: Int = 1, scanVersion: Option[Long] = None,
                    opName: String = "REPLACE FILES"): Long = {
     import spark.implicits._
@@ -2349,7 +2342,8 @@ object CowTable {
             "the statement against the new snapshot"))
       val live = p.cached match {
         case Some(es) =>
-          es.count(e => replacedDv.get(e.file).contains(e.dv)).toLong
+          es.count(e => replacedDv.get(e.file)
+            .exists(java.util.Arrays.equals(_, e.dv))).toLong
         case None => p.frame.join(replacedDf, Seq("file"))
           .filter(col("dv") === col("_gf_dv")).count()
       }
@@ -2620,7 +2614,7 @@ object CowTable {
       require(m2.forall(_.dvRows == 0L),
         "compact must materialize every deletion vector")
       require(vacuum(spark, base) > 0,
-        "vacuum must reclaim superseded files and vectors")
+        "vacuum must reclaim the superseded files")
       val materialized = statusAgg(read(spark, base))
       require(materialized.collect().toSeq == onRead,
         "merge-on-read and materialized snapshots must agree")

@@ -82,6 +82,21 @@ object FsUtil {
     }
   }
 
+  /** The Spark schema of parquet file `file`, read driver-side from its
+    * footer — the one footer Spark's own schema inference reads for a
+    * dataset whose files share a schema, without that inference's job. */
+  def footerSchema(spark: SparkSession,
+                   file: Path): org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file, in.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally in.close()
+  }
+
   /** Crash-safe replace for datasets whose content is NOT rebuildable
     * from source (grow-only dims carry id history): write to `<path>.tmp`,
     * swap the old dir to `<path>.bak`, promote tmp, drop the backup. A

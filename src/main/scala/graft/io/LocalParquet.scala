@@ -5,12 +5,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -82,25 +80,6 @@ object LocalParquet {
     conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     conf
-  }
-
-  /** Feed `f` every row of the parquet file `file`, projected to
-    * `schema` and decoded on the driver by Spark's own parquet reader —
-    * the read twin of [[write]], for small metadata files such as
-    * deletion vectors. One open, no listing, no job. The reader reuses
-    * its row object, so `f` must copy what it keeps. */
-  def foreachRow(spark: SparkSession, file: Path, schema: StructType)(
-      f: InternalRow => Unit): Unit = {
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-      schema, new StructType(), schema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file),
-      0L, Long.MaxValue))
-    try rows.foreach(f) finally rows match {
-      case c: AutoCloseable => c.close()
-      case _ => ()
-    }
   }
 
   /** An open snappy parquet writer of `schema` rows at `file`, with a

@@ -316,25 +316,30 @@ object WindowReload {
     * partition table needs. */
   private val DriverListMaxDirs = 64
 
+  /** The committed partitions as one frame, a union of their trees.
+    * Each tree is one reload's write, so one footer ([[FsUtil.footerSchema]])
+    * gives its schema, plus `eff_part` as the DATE Spark's partition
+    * inference reads it as: the read starts no schema-inference job. */
   private def readEntries(spark: SparkSession, target: String,
                           entries: Seq[(LocalDate, String)]): DataFrame =
     entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (tree, parts) =>
       val root = s"$target/$tree"
       val dirs = parts.map { case (d, _) => s"$root/$PartCol=$d" }
-      val paths: Seq[String] =
-        if (dirs.size > DriverListMaxDirs) dirs
-        else {
-          val fs = new Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val files = dirs.flatMap { d =>
-            fs.listStatus(new Path(d)).toSeq.map(_.getPath)
-              .filter(f => f.getName.endsWith(".parquet") &&
-                !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-              .map(_.toString)
-          }
-          if (files.isEmpty) dirs else files // empty: let Spark report it
-        }
-      spark.read.option("basePath", root).parquet(paths: _*)
+      val fs = new Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def filesIn(d: String): Seq[Path] =
+        fs.listStatus(new Path(d)).toSeq.map(_.getPath)
+          .filter(f => f.getName.endsWith(".parquet") &&
+            !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      val files = if (dirs.size > DriverListMaxDirs) Nil else dirs.flatMap(filesIn)
+      val sample = files.headOption
+        .orElse(dirs.iterator.map(filesIn).collectFirst { case f +: _ => f })
+      // no file at all: let Spark report it
+      val reader = sample.fold(spark.read)(f =>
+        spark.read.schema(FsUtil.footerSchema(spark, f)
+          .add(PartCol, org.apache.spark.sql.types.DateType)))
+      reader.option("basePath", root)
+        .parquet((if (files.isEmpty) dirs else files.map(_.toString)): _*)
     }.reduce(_.unionByName(_))
 
   /** Drop trees no retained manifest version references, sparing trees

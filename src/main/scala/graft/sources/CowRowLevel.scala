@@ -242,7 +242,7 @@ private[sources] class CowReplaceBatchWrite(base: String,
         else spark.read.schema(
           StructType(stagedSchema.fields.map(_.copy(nullable = true))))
           .parquet(staged: _*)
-      CowTable.replaceFiles(spark, base, replaced,
+      CowTable.replaceFiles(spark, base, replaced.map(t => (t._1, t._2)),
         rows.select(tableCols.map(col): _*), scanVersion = op.scanVersion,
         opName = "MERGE")
       ()

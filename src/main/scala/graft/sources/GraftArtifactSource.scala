@@ -270,10 +270,10 @@ private[sources] class ArtifactScan(base: String, dataset: String,
   }
 
   /** The files this scan will actually read — post footer pruning AND
-    * post runtime filtering — with each file's deletion vector. The
-    * group-based row-level commit replaces exactly this set. */
-  private[sources] def resolvedFiles: Seq[(String, String)] =
-    keptFiles.map(k => (k.path, k.dv))
+    * post runtime filtering — as (file, dv, dvRows) manifest triples.
+    * The group-based row-level commit replaces exactly this set. */
+  private[sources] def resolvedFiles: Seq[(String, Array[Byte], Long)] =
+    keptFiles.map(k => (k.path, k.dv, k.dvRows))
       .filter(f => runtimeKept.forall(_.contains(f._1)))
 
   /** Streaming over the COMMIT LOG: each committed [[graft.io.AtomicPublish]]
@@ -313,7 +313,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     * pushed filter MAY match some row group (per-column min/max). For a
     * COW table the candidate list is the committed MANIFEST's file set
     * (pool files shared across versions), not a directory listing, and
-    * each file carries its deletion-vector pointer — the reader
+    * each file carries its inline deletion vector — the reader
     * subtracts the vectored positions, so merge-on-read tables serve
     * directly (deletes only SHRINK a file's matches, so footer pruning
     * stays conservative unchanged). The same footer pass accumulates
@@ -321,7 +321,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     * pruning statistics [[estimateStatistics]] hands Catalyst. */
   /** The manifest's (file, dv, dvRows) via a distributed parquet read —
     * the large-manifest path (small ones serve from CowTable's cache). */
-  private def readManifestTriples(dir: String): Seq[(String, String, Long)] = {
+  private def readManifestTriples(dir: String): Seq[(String, Array[Byte], Long)] = {
     val m = SparkSession.active.read.parquet(dir)
       .select("file", "dv", "dvRows")
     // re-root stored paths to the CURRENT base (mirrors CowTable's
@@ -332,15 +332,13 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     // same file two ways and break the group-MERGE commit's
     // replaceFiles join on `file`.
     val pool = new Path(new Path(base), "files").toUri.getPath
-    def re(s: String): String =
-      if (s == null || s.isEmpty) s
-      else pool + s.substring(s.lastIndexOf('/'))
+    def re(s: String): String = pool + s.substring(s.lastIndexOf('/'))
     m.collect()
-      .map(r => (re(r.getString(0)), re(r.getString(1)), r.getLong(2)))
+      .map(r => (re(r.getString(0)), r.getAs[Array[Byte]](1), r.getLong(2)))
       .toSeq.sortBy(_._1)
   }
 
-  private lazy val (allFiles, keptFiles): (Seq[(String, String)], Seq[ArtifactScan.Kept]) = {
+  private lazy val (allFiles, keptFiles): (Seq[String], Seq[ArtifactScan.Kept]) = {
     val p = new Path(dir)
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
@@ -360,7 +358,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
       }
       else fs.listStatus(p).toSeq.map(_.getPath)
         .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .map(f => (f.toString, "", 0L)).sortBy(_._1)
+        .map(f => (f.toString, Array.emptyByteArray, 0L)).sortBy(_._1)
     // footer reads are independent I/O — a sequential pass over a
     // 100k-file table costs minutes of driver wall; a bounded pool
     // keeps it tens of seconds (the order of `kept` is restored from
@@ -370,7 +368,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
     // touching an uninitialized lazy while this thread awaits inside
     // keptFiles' own initializer would deadlock.
     val pushedP = pushedPhys
-    def evalOne(f: String, dv: String, dvRows: Long): Option[ArtifactScan.Kept] = {
+    def evalOne(f: String, dv: Array[Byte], dvRows: Long): Option[ArtifactScan.Kept] = {
       val in = ParquetFileReader.open(
         HadoopInputFile.fromPath(new Path(f), conf))
       try {
@@ -389,7 +387,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
           }
         }
         if (!mayMatch) None
-        else Some(ArtifactScan.Kept(f, dv,
+        else Some(ArtifactScan.Kept(f, dv, dvRows,
           rows = math.max(0L, blocks.map(_.getRowCount).sum - dvRows),
           // UNCOMPRESSED page bytes, not on-disk: sizeInBytes gates
           // broadcast decisions against an IN-MEMORY threshold, and a
@@ -409,7 +407,7 @@ private[sources] class ArtifactScan(base: String, dataset: String,
           scala.concurrent.Future(evalOne(f, dv, dvRows))
         }), scala.concurrent.duration.Duration.Inf).flatten
     } finally pool.shutdown()
-    (files.map(t => (t._1, t._2)), kept)
+    (files.map(_._1), kept)
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -766,7 +764,7 @@ private[sources] class TableFeedMicroBatchStream(base: String, key: String,
           // be O(table) storage for nothing. A replay re-resolves the
           // same entries (fail-fast if retention pruned them).
           ArtifactScan.partitions(graft.io.CowTable
-            .entriesAtVersion(spark, base, v).map(en => (en.file, en.dv)))
+            .entriesAtVersion(spark, base, v).map(_.triple))
         case None => // mapped-table bootstrap: materialize once
           materialized(graft.io.CowTable.readAt(spark, base, v))
         case Some(p) if !sealedOut =>
@@ -834,10 +832,11 @@ private[sources] object ArtifactScan {
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
 
-  /** A file surviving footer pruning, with the statistics the prune
-    * pass read for free: LIVE rows (footer row count minus the
-    * manifest's deletion-vector count) and compressed bytes. */
-  case class Kept(path: String, dv: String, rows: Long, bytes: Long)
+  /** A file surviving footer pruning with its manifest vector (`dv`,
+    * `dvRows`), and the statistics the prune pass read for free: LIVE
+    * rows (footer row count minus `dvRows`) and compressed bytes. */
+  case class Kept(path: String, dv: Array[Byte], dvRows: Long, rows: Long,
+                  bytes: Long)
 
   /** The parquet parts of directory `dir`. */
   def parquetParts(dir: Path): Seq[String] =
@@ -846,13 +845,13 @@ private[sources] object ArtifactScan {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .map(_.toString)
 
-  /** One partition per (file, deletion vector) pair, carrying the
-    * positions that vector voids in that file
-    * ([[graft.io.CowTable.voided]]: each vector read once, on the
-    * driver). */
-  def partitions(files: Seq[(String, String)]): Seq[ArtifactPartition] = {
-    val voided = graft.io.CowTable.voided(SparkSession.active, files)
-    files.map { case (f, _) =>
+  /** One partition per (file, dv, dvRows) manifest triple, carrying
+    * the positions that file's vector voids
+    * ([[graft.io.CowTable.voided]]: decoded from the manifest row, no
+    * file read). */
+  def partitions(files: Seq[(String, Array[Byte], Long)]): Seq[ArtifactPartition] = {
+    val voided = graft.io.CowTable.voided(files)
+    files.map { case (f, _, _) =>
       ArtifactPartition(f, voided.getOrElse(f, Array.emptyLongArray))
     }
   }
@@ -863,7 +862,7 @@ private[sources] object ArtifactScan {
   def changePartitions(parts: Seq[graft.io.CowTable.ChangePart],
                        change: Option[(String, Long)]): Seq[ArtifactPartition] = {
     val (whole, at) = parts.partition(_.positions.isEmpty)
-    partitions(whole.map(p => (p.entry.file, p.entry.dv)))
+    partitions(whole.map(_.entry.triple))
       .map(_.copy(change = change)) ++
       at.map(p => ArtifactPartition(p.entry.file, keep = p.positions,
         change = change))

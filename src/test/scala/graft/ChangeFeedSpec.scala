@@ -116,6 +116,59 @@ class ChangeFeedSpec extends SparkSpec {
     sameAtHead(base, "id", "restore to no vector at all")
   }
 
+  test("a restore between two deletes gives one file two vectors of equal " +
+    "dvRows: replaceFiles, SQL MERGE and changes compare their content") {
+    val base = table("cdf_same_n", numFiles = 2)
+    val file = CowTable.manifest(spark, base).minBy(_.kmin).file
+    def entry() = CowTable.manifest(spark, base).find(_.file == file).get
+    val v1 = CowTable.dvDelete(spark, base, col("id") === 3L, retain = 50)
+    val first = CowTable.dvDelete(spark, base, col("id").isin(5L, 7L),
+      retain = 50)
+    val planned = entry() // vectored to {3, 5, 7}
+    /** Back to {3}, then {3, 9, 11}: as many positions, other rows. */
+    def reshape(): Unit = {
+      CowTable.restore(spark, base, v1, retain = 50)
+      CowTable.dvDelete(spark, base, col("id").isin(9L, 11L), retain = 50)
+    }
+    /** `stmt` with [[reshape]] landing inside its first commit attempt. */
+    def raced(stmt: => Unit): Unit = {
+      var fired = false
+      CowTable.afterParent = (b, _) => if (b == base && !fired) {
+        fired = true
+        reshape()
+      }
+      try stmt finally CowTable.afterParent = (_, _) => ()
+    }
+
+    val e = intercept[graft.io.ConcurrentWriteException] {
+      raced(CowTable.replaceFiles(spark, base, Seq(planned.file -> planned.dv),
+        orders(3, 3), retain = 50))
+    }
+    assert(e.getMessage.contains("1 of 1 replaced files"))
+    val reshaped = entry()
+    assert(reshaped.dvRows === planned.dvRows &&
+      !java.util.Arrays.equals(reshaped.dv, planned.dv))
+    same(base, first, AtomicPublish.committed(spark, base), "id",
+      "a span from {3, 5, 7} to {3, 9, 11}")
+    sameAtHead(base, "id", "the second delete after the restore")
+
+    CowTable.restore(spark, base, first, retain = 50)
+    Seq((1L, 0.5)).toDF("id", "nv").createOrReplaceTempView("cdf_same_n_src")
+    val sqlErr = intercept[Exception](raced(spark.sql(
+      s"""MERGE INTO graft.`$base` t USING cdf_same_n_src s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET v = s.nv""".stripMargin)))
+    assert(Iterator.iterate[Throwable](sqlErr)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(_.isInstanceOf[graft.io.ConcurrentWriteException]),
+      s"SQL MERGE: $sqlErr")
+
+    // planned against the head, from a copy of its bytes: it commits
+    val head = AtomicPublish.committed(spark, base)
+    CowTable.replaceFiles(spark, base, Seq(file -> entry().dv.clone()),
+      orders(3, 3), retain = 50)
+    assert(AtomicPublish.committed(spark, base) === head + 1)
+  }
+
   test("compact and zorder equal the whole-file diff, alone and in a span") {
     val base = table("cdf_compact", numFiles = 6)
     val v1 = CowTable.dvDelete(spark, base, col("id") % 7 === 0, retain = 50)
@@ -196,7 +249,7 @@ object ChangeFeedSpec {
     * pairs drop out as no-ops. */
   def reference(spark: SparkSession, base: String, fromV: Long, toV: Long,
                 key: String): DataFrame = {
-    def id(e: CowTable.Entry) = (e.file, e.dv)
+    def id(e: CowTable.Entry) = (e.file, e.dv.toSeq)
     val to = CowTable.entriesAtVersion(spark, base, toV)
     val from = CowTable.entriesAtVersion(spark, base, fromV)
     val (toIds, fromIds) = (to.map(id).toSet, from.map(id).toSet)
@@ -212,10 +265,11 @@ object ChangeFeedSpec {
           .withColumn("_p", col("_metadata.row_index"))
         val live =
           if (e.dv.isEmpty) raw
-          else raw.join(spark.read.parquet(e.dv)
-            .filter(regexp_extract(col("file"), "[^/]+$", 0) ===
-              e.file.substring(e.file.lastIndexOf('/') + 1))
-            .select(col("pos").as("_p")), Seq("_p"), "left_anti")
+          else {
+            import spark.implicits._
+            raw.join(CowTable.voided(Seq((e.file, e.dv, e.dvRows)))(e.file)
+              .toSeq.toDF("_p"), Seq("_p"), "left_anti")
+          }
         live.select(cols.map(c => col(m.phys(c)).as(c)): _*)
       }.reduceOption(_ unionByName _)
         .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](),

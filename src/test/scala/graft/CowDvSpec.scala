@@ -57,7 +57,8 @@ class CowDvSpec extends SparkSpec {
     val by = after.map(e => e.file -> e).toMap
     val hit = before.filter(_.dvRows === 1L)
     assert(hit.size === 1)
-    assert(by(hit.head.file).dvRows === 2L && by(hit.head.file).dv != hit.head.dv)
+    assert(by(hit.head.file).dvRows === 2L &&
+      !java.util.Arrays.equals(by(hit.head.file).dv, hit.head.dv))
     before.filterNot(_ == hit.head).foreach(e => assert(by(e.file) === e))
     assert(after.size === 3)
   }
@@ -105,8 +106,8 @@ class CowDvSpec extends SparkSpec {
     check(one, "a dvDelete emptying one file")
   }
 
-  test("a vector an untouched file still shares serves each entry exactly " +
-    "its dvRows positions, through API and SQL deletes and a merge") {
+  test("each entry's inline vector decodes to exactly its dvRows distinct " +
+    "positions, through API and SQL deletes and a merge") {
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.GraftCatalog].getName)
     val base = Files.createTempDirectory("cow_dvshared").toString + "/t"
@@ -123,16 +124,17 @@ class CowDvSpec extends SparkSpec {
       want(v) = model.toSet
     }
     def entry(f: String) = CowTable.manifest(spark, base).find(_.file == f).get
-    // 1. one vector over A and B
+    // 1. one statement vectors A and B
     step(CowTable.dvDelete(spark, base, col("id") % 10 === 0, retain = 10),
       _._1 % 10 != 0)
-    val shared = entry(b.file).dv
-    assert(entry(a.file).dv === shared)
-    // 2. only A again: B keeps the older vector, which still holds A's
-    // old rows
+    val bOnce = entry(b.file)
+    val aOnce = entry(a.file)
+    assert(aOnce.dvRows > 0 && bOnce.dvRows > 0)
+    // 2. only A again: B's entry is untouched
     step(CowTable.dvDelete(spark, base, inA && col("id") % 10 === 1,
       retain = 10), r => !(r._1 <= a.kmax && r._1 % 10 == 1))
-    assert(entry(b.file).dv === shared && entry(a.file).dv != shared)
+    assert(entry(b.file) === bOnce &&
+      !java.util.Arrays.equals(entry(a.file).dv, aOnce.dv))
     // 3. a SQL DELETE and an API merge touch A again
     spark.sql(s"DELETE FROM graft.`$base` WHERE id <= ${a.kmax} AND id % 10 = 2")
     step(AtomicPublish.committed(spark, base),
@@ -141,7 +143,7 @@ class CowDvSpec extends SparkSpec {
       Seq((3L, "u", 0.0, false), (13L, "x", 0.0, true))
         .toDF("id", "nm", "amt", "_delete"), "id", retain = 10),
       r => r._1 != 3L && r._1 != 13L, Seq((3L, "u", 0.0)))
-    assert(entry(b.file).dv === shared)
+    assert(entry(b.file) === bOnce)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "nm", "amt").as[(Long, String, Double)].collect()
@@ -151,11 +153,9 @@ class CowDvSpec extends SparkSpec {
     assert(versions === want.keys.toSeq.sorted)
     versions.foreach { v =>
       CowTable.entriesAtVersion(spark, base, v).filter(_.dv.nonEmpty).foreach { e =>
-        assert(new java.io.File(e.dv).isFile, s"v$v: ${e.dv} is not one file")
-        val ps = spark.read.parquet(e.dv)
-          .filter(col("file") === e.file.substring(e.file.lastIndexOf('/') + 1))
-          .select("pos").as[Long].collect()
-        assert(ps.length === e.dvRows && ps.distinct.length === ps.length,
+        val ps = CowTable.voided(Seq((e.file, e.dv, e.dvRows)))(e.file)
+        assert(ps.length === e.dvRows && ps.distinct.length === ps.length &&
+          ps.forall(p => p >= 0 && p < e.rows),
           s"v$v: ${e.file} has ${ps.length} positions " +
             s"(${ps.distinct.length} distinct) for dvRows ${e.dvRows}")
       }
@@ -176,20 +176,24 @@ class CowDvSpec extends SparkSpec {
     assert(rows(CowTable.read(spark, base)).toSet === want(versions.last))
   }
 
-  test("compact materializes vectors; vacuum reclaims vector dirs") {
+  test("compact materializes vectors; the pool never holds a vector file") {
     val base = Files.createTempDirectory("cow_dvc").toString + "/t"
     CowTable.create(spark, base, table(1000), "id", numFiles = 4)
+    // the local file system keeps a `.crc` beside each file
+    def pool = new java.io.File(s"$base/files").list()
+      .filterNot(_.endsWith(".crc")).toSet
+    val data = pool
     CowTable.dvDelete(spark, base, col("id") % 7 === 0)
+    assert(pool === data, "a delete writes no pool file")
     val onRead = CowTable.read(spark, base).orderBy("id").collect()
     // target holds each file its own group: only the DV clause rewrites
     CowTable.compact(spark, base, targetRows = 1L, "id")
     val m = CowTable.manifest(spark, base)
     assert(m.forall(_.dvRows === 0L), "compact must materialize vectors")
     assert(CowTable.read(spark, base).orderBy("id").collect() === onRead)
-    assert(CowTable.vacuum(spark, base) > 0)
-    val pool = new java.io.File(s"$base/files")
-    assert(!pool.listFiles().exists(_.getName.endsWith("-dv")),
-      "vacuum must reclaim unreferenced vector files")
+    assert(CowTable.vacuum(spark, base) === data.size,
+      "vacuum reclaims the compacted-away files")
+    assert(!pool.exists(_.endsWith("-dv")), "a vector file in the pool")
   }
 
   test("DSv2 cow scan serves a vectored manifest merge-on-read") {

@@ -183,7 +183,7 @@ class CowTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       lit(100L).as("rows"),
       (col("id") * 1000 + 1000000L).as("kmin"),
       (col("id") * 1000 + 1000500L).as("kmax"),
-      lit("").as("dv"), lit(0L).as("dvRows"),
+      lit(Array.emptyByteArray).as("dv"), lit(0L).as("dvRows"),
       typedlit(Map.empty[String, String]).as("smin"),
       typedlit(Map.empty[String, String]).as("smax"))
     val big = spark.read.parquet(s"$base/v0/manifest").unionByName(synthetic)

@@ -723,25 +723,29 @@ class GraftCatalogSpec extends SparkSpec {
       "no-op DML must short-circuit to the parent version")
   }
 
-  test("a losing delta attempt's deletion vector is reclaimed on retry, " +
-    "not orphaned until vacuum") {
+  test("a losing delta attempt stages no vector file: its retry commits " +
+    "the vectors inline") {
     val base = Files.createTempDirectory("gcat_dvorph").toString + "/t"
     CowTable.create(spark, base, table(100), "id", numFiles = 4)
-    var fired = false
+    // the local file system keeps a `.crc` beside each file
+    def pool = new java.io.File(s"$base/files").list()
+      .filterNot(_.endsWith(".crc")).toSet
+    val before = pool
+    var attempts = 0
     CowTable.applyDelta(spark, base, Seq(5L, 55L).toDF("id"),
       inserts = None,
-      beforeCommit = () => if (!fired) {
-        fired = true // competing append bumps the version: CAS loses once
-        CowTable.append(spark, base, Seq((300L, "x", 1.0))
-          .toDF("id", "nm", "amt"))
+      beforeCommit = () => {
+        attempts += 1
+        // competing append bumps the version: CAS loses once
+        if (attempts == 1) CowTable.append(spark, base,
+          Seq((300L, "x", 1.0)).toDF("id", "nm", "amt"))
       })
+    assert(attempts === 2)
     assert(CowTable.read(spark, base).count() === 99L) // 100 - 2 + 1
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvDirs = fs.listStatus(new org.apache.hadoop.fs.Path(base, "files"))
-      .map(_.getPath.getName).filter(_.endsWith("-dv"))
-    assert(dvDirs.length === 1,
-      s"the losing attempt's vector must be deleted on retry, got $dvDirs")
+    assert(CowTable.manifest(spark, base).map(_.dvRows).sum === 2L)
+    // the append's one file is the pool's only new file
+    assert((pool -- before).size === 1 && !pool.exists(_.endsWith("-dv")),
+      s"pool files added: ${pool -- before}")
   }
 
   test("an unknown procedure is an analyzer resolution error") {

@@ -146,11 +146,11 @@ class PlanLintSpec extends SparkSpec {
   }
 
   /** The deletion-vector format is known by one module: `io/CowTable`
-    * writes a vector ([[graft.io.CowTable]]'s `writeVector`) and reads
-    * it (`vectorPositions`), and every other reader, the SQL scan
+    * encodes a vector ([[graft.io.CowTable]]'s `encodeVector`) and
+    * decodes it (`decodeVector`), and every other reader, the SQL scan
     * included, gets positions. */
-  test("one deletion-vector codec: only writeVector and vectorPositions " +
-    "touch a vector file; sources/ sees positions only") {
+  test("one deletion-vector codec: only encodeVector and decodeVector " +
+    "name org.roaringbitmap; sources/ sees positions only") {
     import scala.jdk.CollectionConverters._
     def sourcesUnder(dir: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -162,25 +162,19 @@ class PlanLintSpec extends SparkSpec {
     }
     assert(parts.isEmpty,
       s"sources/ handles vector parts: ${parts.mkString(", ")}")
-    val cow = code(java.nio.file.Paths.get(
-      "src/main/scala/graft/io/CowTable.scala"))
-    val owners = cow.collect {
-      case (l, i) if l.contains("VectorSchema") &&
-        !l.contains("val VectorSchema") => owner(cow, i)
-    }
-    assert(owners.toSet === Set("writeVector", "vectorPositions"),
-      s"VectorSchema used in ${owners.mkString(", ")}")
-    val staged = sourcesUnder("src/main").flatMap { p =>
-      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (l, i) if l.contains(".dv-") => s"${p.getFileName}:${i + 1}"
+    val cowPath = java.nio.file.Paths.get("src/main/scala/graft/io/CowTable.scala")
+    val codec = sourcesUnder("src/main").flatMap { p =>
+      val lines = code(p)
+      lines.collect { case (l, i) if l.contains("org.roaringbitmap") =>
+        if (p.endsWith(cowPath)) owner(lines, i) else s"${p.getFileName}:${i + 1}"
       }
     }
-    assert(staged.isEmpty,
-      s"a vector staged in a temp directory: ${staged.mkString(", ")}")
+    assert(codec.toSet === Set("encodeVector", "decodeVector"),
+      s"org.roaringbitmap named in ${codec.mkString(", ")}")
   }
 
   /** The storage layer reads one table layout: the commit markers, the
-    * sealed versions and basename-addressed vectors that current writers
+    * sealed versions and inline vectors that current writers
     * produce. No fallback for an older layout may come back. */
   test("io/ and sources/ read one layout: no _committed pointer, no " +
     "_RELOC marker, no legacy branch") {

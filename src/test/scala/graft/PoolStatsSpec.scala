@@ -256,6 +256,29 @@ class PoolStatsSpec extends SparkSpec {
         "something its writer did not need")
   }
 
+  test("every job of merge, deleteWhere, dvDelete and applyDelta carries " +
+    "its cow phase label") {
+    val base = Files.createTempDirectory("pstats_labels").toString + "/t"
+    CowTable.create(spark, base, wide(1, 100), "id", numFiles = 4, retain = 10,
+      statsCols = Seq("d"))
+    val statements = Seq(
+      "merge" -> jobDescriptions(CowTable.merge(spark, base,
+        wide(5, 6).withColumn("_delete", lit(false)), "id", retain = 10)),
+      "deleteWhere" -> jobDescriptions(CowTable.deleteWhere(spark, base,
+        col("id") % 10 === 7, "id", retain = 10)),
+      "dvDelete" -> jobDescriptions(CowTable.dvDelete(spark, base,
+        col("id") % 10 === 3, retain = 10)),
+      "applyDelta" -> jobDescriptions(CowTable.applyDelta(spark, base,
+        Seq(11L, 12L).toDF("id"), inserts = Some(wide(200, 201)),
+        retain = 10)))
+    statements.foreach { case (what, jobs) =>
+      assert(jobs.nonEmpty && jobs.forall(_.startsWith("cow: ")),
+        s"$what: ${jobs.mkString(" | ")}")
+    }
+    assert(statements.head._2.toSet ===
+      Set("cow: discovery", "cow: positions", "cow: pool write"))
+  }
+
   test("job budget: SQL DELETE and UPDATE commit their staged positions " +
     "without a second scan") {
     val base = Files.createTempDirectory("pstats_sqljobs").toString + "/t"

@@ -184,4 +184,24 @@ class WindowReloadSpec extends SparkSpec {
     assert(auto === explicit,
       s"granularity estimation must not add a job (auto=$auto explicit=$explicit)")
   }
+
+  test("a two-tree read takes its schema from the footers: Spark's inferred " +
+    "schema, no job") {
+    val target = Files.createTempDirectory("wr_schema").toFile.getAbsolutePath + "/t"
+    WindowReload.reload(spark, target,
+      df((1, "2023-01-05", "2023-01-20"), (2, "2023-01-07", "2023-01-09")),
+      jan1, jan31, granularity = Some(WindowReload.Day))
+    WindowReload.reload(spark, target,
+      df((3, "2023-02-02", "2023-02-10")),
+      LocalDate.parse("2023-02-01"), LocalDate.parse("2023-02-28"))
+    val trees = new java.io.File(s"$target/trees").listFiles()
+      .filter(_.isDirectory).map(_.getAbsolutePath).sorted.toSeq
+    assert(trees.size === 2)
+    val inferred = trees.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    var read: DataFrame = null
+    assert(jobsOf { read = WindowReload.read(spark, target) } === 0)
+    assert(read.schema === inferred.schema)
+    assert(snapshot(target) === Set((1, "2023-01-05", "2023-01-20"),
+      (2, "2023-01-07", "2023-01-09"), (3, "2023-02-02", "2023-02-10")))
+  }
 }
